@@ -1,33 +1,25 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.Measure.Json
+import graft.Measure.Json._
 
-/** Benchmark main (driver contract): runs every declared query on
-  * SPARK_GRAFT_SF_DIR, prints ONE JSON line
-  * `{"metric":…,"value":N,"unit":"sec","queries":{…},"sf":…}`.
+/** Benchmark main: runs every declared query on SPARK_GRAFT_SF_DIR and
+  * prints ONE JSON line
+  * `{"metric":…,"value":N,"unit":"sec","queries":{…},"sf":…}`, also
+  * written to SPARK_GRAFT_BENCH_OUT (default `bench_per_query.json`).
+  * A full-suite diagnostic; the repo's benchmark of record is
+  * `perfbench/`.
   *
-  * Each query is forced through the `noop` datasource sink so the full
-  * plan executes (a bare `count()` would let Catalyst prune projections
-  * and measure only the scan).
-  *
-  * BAND DISCIPLINE (round 12 — the Scaling per-block probe + repair
-  * pass, ported here after the r11 headline committed with a run-level
-  * `band:"skewed"` flag and a ~6% uniformly inflated total): the
-  * memory-bandwidth probe ([[Calib.bwParSec]]) runs every
-  * [[Bench.ProbeEvery]] queries, bounding each query's measurement in
-  * a probe window. After the timed suite, queries measured inside a
-  * contended window (either bounding probe > [[Calib.BandSkewRatio]] ×
-  * the run's median probe) — plus the classic >2×-prior outliers —
-  * re-measure in an end-of-run REPAIR PASS that first waits for the
-  * box to read quiet (bounded sleep budget), then takes the min with
-  * the original. The artifact's `band` field is the per-query verdict:
-  * `ok` iff every ACCEPTED measurement rode a quiet window, `skewed`
-  * (with the dirty queries listed under `band_dirty`) only when the
-  * repair pass gave up — so a skewed run can no longer headline
-  * silently, and `BenchSpec` refuses the committed artifact unless its
-  * band is ok. Contention only inflates wall time, so min-with-repair
-  * never launders a regression: a query that is genuinely slower stays
-  * slower on a quiet box. */
+  * Each query is timed by [[Measure.timedNoop]] as the MIN OF TWO
+  * back-to-back passes, under the [[Measure.Band]] discipline: one
+  * bandwidth probe every [[ProbeEvery]] queries bounds each measurement
+  * in a probe window; queries measured in a contended window — plus the
+  * classic >2×-prior outliers — re-measure in an end-of-run repair pass
+  * that first waits for the box to read quiet, then takes the min with
+  * the original. The artifact's `band` is the per-query verdict: `ok`
+  * iff every ACCEPTED measurement rode a quiet window, `skewed` (with
+  * the dirty queries under `band_dirty`) only when the repair pass gave
+  * up — and `BenchSpec` refuses a committed skewed artifact. */
 object Bench {
 
   /** Probe cadence: one bandwidth probe per this many queries (~1.5 s
@@ -37,15 +29,13 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Optional arg: comma-separated query names — local single-query
-    // iteration; the driver always invokes with no args (full suite).
-    // Unknown names fail FAST (a silent empty selection would report a
-    // plausible 0-second total for a query that never ran).
+    // iteration; the full suite runs with no args. Unknown names fail
+    // FAST (a silent empty selection would report a plausible 0-second
+    // total for a query that never ran); stray commas ("a,b,") must not
+    // become empty-string names.
     val only: Option[Set[String]] =
       if (args.nonEmpty)
-        // Stray commas ("a,b,") must not become empty-string names — the
-        // unknown-name check would reject them with a baffling message.
         Some(args(0).split(",").map(_.trim).filter(_.nonEmpty).toSet)
       else None
     only.foreach { names =>
@@ -53,27 +43,22 @@ object Bench {
       val unknown = names -- SparkEntry.queries.keySet
       require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
     }
-    def selected = SparkEntry.queries.toSeq.sortBy(_._1)
+    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    val spark = Sessions.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local("graft-bench")
     spark.sparkContext.setLogLevel("WARN")
-    // HARDWARE CALIBRATION (shared [[Calib]] probes — ALU single-thread,
-    // ALU all-cores, and the memory-BANDWIDTH probe; see Calib's
-    // scaladoc for what each separates). The bandwidth probe also runs
-    // on the [[ProbeEvery]] cadence through the suite (class doc).
+    val cpus = Sessions.cpus
+    // HARDWARE CALIBRATION ([[Calib]]): ALU single-thread, ALU all-cores,
+    // and the bandwidth probe that opens the band.
     val calibSec = Calib.aluSec()
-    val calibParSec = Calib.aluParSec(spark.sparkContext, cpus.toInt)
-    val calibBwSec = Calib.bwParSec(spark.sparkContext, cpus.toInt)
+    val calibParSec = Calib.aluParSec(spark.sparkContext, cpus)
+    val band = new Measure.Band(
+      () => Calib.bwParSec(spark.sparkContext, cpus), "bench")
+    val calibBwSec = band.take()
     // JIT + parquet-footer warmup, not timed: one untimed pass over the
-    // FULL suite, so every codegen family (JSON paths, decimal aggregates,
-    // window frames, the pair-join kernels) is C2-compiled before the
-    // clock starts. Measured times are then steady-state throughput —
-    // what a long-lived cluster job sees — not first-run JIT.
+    // FULL suite, so every codegen family is C2-compiled before the
+    // clock starts — measured times are steady-state throughput, what a
+    // long-lived cluster job sees, not first-run JIT.
     for ((name, fn) <- selected)
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       catch { case e: Throwable =>
@@ -81,248 +66,75 @@ object Bench {
         // broken only on first run must not hide behind a clean warm time.
         System.err.println(s"[bench] warmup $name failed: ${e.getMessage}")
       }
-    // PRIOR COMMITTED ARTIFACT (read BEFORE this run overwrites it): the
-    // reference for two repairs below — merge-on-partial-run and the
-    // outlier re-measure. Only trusted when it measured the SAME sf dir;
-    // a local sf0.01 run must neither merge into nor be judged against
-    // the committed sf0.1 artifact.
+    // PRIOR ARTIFACT (read BEFORE this run overwrites it): the reference
+    // for merge-on-partial-run and the outlier re-measure. Trusted only
+    // when it measured the SAME sf dir; an untrusted prior neither merges
+    // nor judges, and a partial run must not overwrite it either.
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_per_query.json")
-    // (priorQueries, priorDirty, priorUntrusted): untrusted = a prior
-    // artifact EXISTS but measured a different sf dir — its entries must
-    // not merge, and a partial run must not overwrite it either (see the
-    // merge step). priorDirty = the queries the prior artifact declared
-    // band-dirty; a partial run clears exactly the ones it re-measures
-    // clean and inherits the rest (the Scaling per-block merge rule).
-    val (priorQueries: Map[String, Double], priorDirty: Set[String],
-        priorUntrusted: Boolean) = {
-      val p = java.nio.file.Paths.get(outPath)
-      if (!java.nio.file.Files.exists(p))
-        (Map.empty[String, Double], Set.empty[String], false)
-      else {
-        val txt = new String(java.nio.file.Files.readAllBytes(p),
-          java.nio.charset.StandardCharsets.UTF_8)
-        // Literal containment, not a regex: sfDir is an env-provided path
-        // ('.' would match any char; '(' or '+' would throw at .r).
-        val sfOk = txt.contains("\"sf\":\"" + sfDir + "\"")
-        if (!sfOk) {
-          System.err.println(
-            s"[bench] prior $outPath is for a different sf dir — ignored")
-          (Map.empty[String, Double], Set.empty[String], true)
-        } else {
-          val qs = """"queries":\{([^}]*)\}""".r.findFirstMatchIn(txt)
-            .map(m => """"([^"]+)":(-?[0-9.]+)""".r.findAllMatchIn(m.group(1))
-              .map(x => x.group(1) -> x.group(2).toDouble).toMap)
-            .getOrElse(Map.empty[String, Double])
-          // A prior artifact with a run-level skew flag but no per-query
-          // dirty list (the r11 vintage) taints ALL its entries: none of
-          // its measurements can seed a band-ok merge.
-          val dirty = """"band_dirty":\[([^\]]*)\]""".r
-            .findFirstMatchIn(txt)
-            .map(m => """"([^"]+)"""".r.findAllMatchIn(m.group(1))
-              .map(_.group(1)).toSet)
-            .getOrElse(
-              if (txt.contains(""""band":"skewed"""")) qs.keySet
-              else Set.empty[String])
-          (qs, dirty, false)
-        }
-      }
-    }
-    // One timed pass with storage hygiene BEFORE the clock, never inside
-    // it: many query builders localCheckpoint their shared frames, and
-    // those blocks outlive the query (the async ContextCleaner only
-    // reclaims them after a driver GC notices the dropped references —
-    // rare under a large heap). 170 queries into a single-JVM suite the
-    // executor store is full of dead checkpoints and late queries pay
-    // eviction + GC instead of their own plan (measured: 25.9 s for a
-    // 2.2 s-in-isolation query at the suite tail). Between queries
-    // nothing references the previous frames, so drop them all.
-    def onePass(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : Either[String, Double] = {
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      val t0 = System.nanoTime()
-      try {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        Right((System.nanoTime() - t0) / 1e9)
-      } catch { case e: Throwable =>
+    val prior = Measure.read(outPath)
+    val priorUntrusted = prior.exists(!_.str("sf").contains(sfDir))
+    if (priorUntrusted) System.err.println(
+      s"[bench] prior $outPath is for a different sf dir — ignored")
+    val trusted = prior.filterNot(_ => priorUntrusted)
+    val priorQueries: Map[String, Double] = trusted.flatMap(_.obj("queries"))
+      .map(_.fields.collect { case (k, n: Num) => k -> n.toDouble }.toMap)
+      .getOrElse(Map.empty)
+    // The queries the prior declared band-dirty: a partial run clears
+    // exactly the ones it re-measures clean and inherits the rest.
+    val priorDirty: Set[String] =
+      trusted.map(Measure.dirtyOf(_, priorQueries.keySet)).getOrElse(Set.empty)
+
+    def onePass(name: String): Either[String, Double] =
+      try Right(Measure.timedNoop(spark)(SparkEntry.queries(name)(spark, sfDir)))
+      catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
         Left(String.valueOf(e.getMessage))
       }
+    // Failure-honest: a failed pass poisons the query (-1 plus its message
+    // under "errors"), never a plausible wall time. The min of two is the
+    // cheapest estimator one noisy pass (a co-tenant burst, a GC pause)
+    // cannot stamp.
+    def minOfTwo(name: String): Either[String, Double] = {
+      val two = Seq.fill(2)(onePass(name))
+      two.collectFirst { case Left(m) => Left(m) }
+        .getOrElse(Right(two.collect { case Right(v) => v }.min))
     }
-    def probe(): Double = Calib.bwParSec(spark.sparkContext, cpus.toInt)
-    // Failure-honest timing: a failed query reports -1 (and its message in
-    // "errors"), never a plausible wall time — a regression must not read
-    // as a fast query. Each query is timed as the MIN OF TWO back-to-back
-    // passes: a single shot folds one co-tenant burst, GC pause, or page-
-    // cache miss straight into the artifact (r6: untouched queries read
-    // 0.7 s in three committed runs and 5.4 s in the driver's — pure
-    // load), and the min of two is the cheapest estimator that a single
-    // noisy pass cannot stamp. The plan cost is the LOWER envelope; the
-    // calibration pair above records how contended the box was. The
-    // probe cadence bounds every measurement in a (pre, post) probe
-    // window for the repair pass.
-    val probes = scala.collection.mutable.ArrayBuffer[Double](calibBwSec)
-    val doneAtNanos = scala.collection.mutable.Map.empty[String, Long]
-    // Per query: the max of the two probes bounding its window.
-    val windowProbe = scala.collection.mutable.Map.empty[String, Double]
-    val firstResults: Seq[(String, Either[String, Double])] = {
-      val sel = selected
-      val pending = scala.collection.mutable.ArrayBuffer.empty[String]
-      val acc = scala.collection.mutable.ArrayBuffer
-        .empty[(String, Either[String, Double])]
-      def takeProbe(): Unit = {
-        val p = probe()
-        System.err.println(f"[bench] band probe $p%.3f s")
-        // Close the window of every query since the previous probe.
-        pending.foreach { n =>
-          windowProbe(n) = math.max(windowProbe.getOrElse(n, 0.0), p) }
-        pending.clear()
-        probes += p
-      }
-      sel.zipWithIndex.foreach { case ((name, fn), i) =>
-        if (i > 0 && i % ProbeEvery == 0) takeProbe()
-        windowProbe(name) = probes.last // the probe opening this window
-        val two = Seq(onePass(name, fn), onePass(name, fn))
-        doneAtNanos(name) = System.nanoTime()
-        pending += name
-        // A pass that fails poisons the query (never "the fast run was
-        // fine"); otherwise take the min.
-        acc += (name -> two.collectFirst { case Left(m) => Left(m) }
-          .getOrElse(Right(two.collect { case Right(v) => v }.min)))
-      }
-      takeProbe() // close the final window
-      acc.toSeq
-    }
-    // quietRef is PINNED to the timed pass's probes: the repair phase
-    // appends its own (often deliberately contention-era) wait probes
-    // to `probes` for the artifact's start/end fields, and a live
-    // median over them would let sustained contention LAUNDER the
-    // verdict — ~14 contended wait-probes from one exhausted sleep
-    // budget outnumber the ~16 first-pass probes, the median shifts to
-    // the contended level, and every later gate reads "quiet" on a box
-    // that never was. The timed pass's own distribution is the band the
-    // measurements actually rode; it does not move after the fact.
-    val firstPassProbes: Seq[Double] = probes.toSeq
-    def quietRef: Double =
-      { val vs = firstPassProbes.sorted; vs(vs.size / 2) }
-    def isContended(p: Double): Boolean = p > Calib.BandSkewRatio * quietRef
-    // END-OF-RUN REPAIR PASS (the Scaling discipline): queries measured
-    // inside a band-contended window, plus the classic outliers (fresh
-    // min > 2× the prior committed artifact — a noise window that
-    // outlasts both back-to-back passes), re-measure ONCE each after
-    // the box reads quiet (bounded global sleep budget), temporally
-    // spaced ≥ 30 s from the original measurement. The min of all
-    // passes is recorded, the query listed under "remeasured", and its
-    // window probe LOWERED to the quietest window that measured it —
-    // contention only inflates wall time, so the accepted min is always
-    // bounded above by any quiet attempt's value: one quiet window
-    // certifies the measurement even when an earlier (contended)
-    // attempt happened to supply the numeric min.
-    val outliers: Set[String] = firstResults.collect {
-      case (name, Right(v))
-        if priorQueries.get(name).exists(p => p > 0 && v > 2 * p) => name
+    val resultMap = scala.collection.mutable.LinkedHashMap(
+      band.timedPass(selected.map(_._1), ProbeEvery)(minOfTwo): _*)
+    // REPAIR PASS: queries measured in a contended window, plus the
+    // outliers (fresh min > 2× the prior artifact — a noise window that
+    // outlasts both back-to-back passes). The min of all passes is kept
+    // and listed under "remeasured" with the noisy first min.
+    val outliers = resultMap.collect {
+      case (name, Right(v)) if priorQueries.get(name).exists(p => p > 0 && v > 2 * p) => name
     }.toSet
-    val contendedFirst: Set[String] = firstResults.collect {
-      case (name, Right(_)) if isContended(windowProbe(name)) => name
+    // Dirty = the accepted measurement's window is contended.
+    def dirtyNow = resultMap.collect {
+      case (name, Right(_)) if band.dirty(name) => name
     }.toSet
-    val resultMap = scala.collection.mutable.LinkedHashMap(firstResults: _*)
     val remeasured = scala.collection.mutable.Map.empty[String, (Double, Double)]
-    var sleepBudgetMs = 10L * 60 * 1000
-    val spacingNanos = 30L * 1000 * 1000 * 1000
-    (outliers ++ contendedFirst).toSeq.sorted.foreach { name =>
-      val first = resultMap(name).toOption.getOrElse(-1.0)
-      if (first >= 0) {
-        val waitNanos = spacingNanos - (System.nanoTime() - doneAtNanos(name))
-        if (waitNanos > 0) Thread.sleep(waitNanos / 1000000L)
-        // ONE wait-until-quiet gate, shared by the initial attempt and
-        // every spike retry — measuring into observed contention just
-        // burns two executions that grade dirty again.
-        def waitQuiet(): Double = {
-          var pre = probe(); probes += pre
-          while (isContended(pre) && sleepBudgetMs > 0) {
-            System.err.println(f"[bench] repair $name: box contended " +
-              f"(probe $pre%.3f vs quiet $quietRef%.3f) — waiting")
-            Thread.sleep(45000); sleepBudgetMs -= 45000
-            pre = probe(); probes += pre
-          }
-          pre
-        }
-        var pre = waitQuiet()
-        if (!isContended(pre)) {
-          // Quiet gate passed; re-measure min-of-2 and close with a post
-          // probe (a spike DURING the re-measure must not grade clean).
-          var attempts = 0
-          var done = false
-          while (!done) {
-            val two = Seq(onePass(name, SparkEntry.queries(name)),
-              onePass(name, SparkEntry.queries(name)))
-            val post = probe(); probes += post
-            val fresh = two.collect { case Right(v) => v }
-            if (fresh.nonEmpty) {
-              val best = math.min(
-                resultMap(name).toOption.getOrElse(first), fresh.min)
-              resultMap(name) = Right(best)
-              remeasured(name) = (first, best)
-              // Quietest window that measured this query certifies it
-              // (never overwrite a clean window with a later spike).
-              windowProbe(name) =
-                math.min(windowProbe(name), math.max(pre, post))
-            }
-            attempts += 1
-            done = !isContended(math.max(pre, post)) || attempts >= 3 ||
-              sleepBudgetMs <= 0
-            if (!done) {
-              System.err.println(s"[bench] repair $name: spike during " +
-                "re-measure — retrying")
-              pre = waitQuiet()
-              done = isContended(pre) // budget exhausted mid-wait
-            }
-          }
-          System.err.println(f"[bench] remeasured $name: first $first%.3f " +
-            f"-> ${resultMap(name).toOption.get}%.3f" +
-            priorQueries.get(name).map(p => f" (prior $p%.3f)").getOrElse(""))
-        } else System.err.println(s"[bench] repair $name: gave up waiting " +
-          "— measurement retained from the contended window (band stays " +
-          "dirty for it)")
-      }
+    for (name <- (outliers ++ dirtyNow).toSeq.sorted;
+         first <- resultMap(name).toOption;
+         best <- band.repair[Double](name, first, math.min) { () =>
+           Seq.fill(2)(onePass(name)).flatMap(_.toOption).minOption
+         }) {
+      resultMap(name) = Right(best)
+      remeasured(name) = (first, best)
+      System.err.println(f"[bench] remeasured $name: first $first%.3f -> $best%.3f" +
+        priorQueries.get(name).map(p => f" (prior $p%.3f)").getOrElse(""))
     }
-    val results: Seq[(String, Either[String, Double])] = resultMap.toSeq
-    // The per-query band verdict AFTER repairs: dirty = the accepted
-    // measurement's window was contended (repair gave up or kept
-    // spiking). Outlier-only repairs on a quiet box are clean by
-    // construction.
-    val freshDirty: Set[String] = results.collect {
-      case (name, Right(_)) if isContended(windowProbe(name)) => name
-    }.toSet
-    def jstr(s: String): String =
-      "\"" + s.replaceAll("[\\\\\"\\n\\r\\t]", " ").take(200) + "\""
-    // Locale-pinned decimals: the default-locale f-interpolator emits
-    // comma decimals (invalid JSON) on e.g. a de_DE JVM.
-    def d3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    // MERGE on a partial run: a single-query invocation must repair its
-    // entries in the committed artifact, not overwrite the whole file
-    // with a one-query map (the Scaling discipline — transient noise is
-    // fixed by re-measurement through the tool, never by hand-editing).
-    // Fresh wins on collision; untouched prior entries survive verbatim.
-    // With no trusted prior (different sf / first run) this degrades to
-    // exactly the fresh map.
-    val freshMap: Map[String, Double] = results.map {
-      case (k, Right(v)) => k -> v
-      case (k, Left(_))  => k -> -1.0
-    }.toMap
-    val mergedMap: Map[String, Double] =
-      if (only.isDefined) priorQueries ++ freshMap else freshMap
-    // Merged band-dirty set: prior dirty entries stay dirty unless THIS
-    // run re-measured them (fresh wins), plus this run's own dirty.
-    val mergedDirty: Set[String] =
-      (if (only.isDefined) (priorDirty -- freshMap.keySet) else Set.empty) ++
-        freshDirty
-    val band = if (mergedDirty.isEmpty) "ok" else "skewed"
-    // A partial run against a DIFFERENT sf dir than the committed artifact
-    // must not clobber it with a one-query map — that is exactly the
-    // overwrite the merge exists to prevent. Divert to a side path; the
+    // MERGE on a partial run: a single-query invocation repairs its
+    // entries in the prior artifact instead of overwriting the file with
+    // a one-query map. Fresh wins; untouched prior entries survive, and
+    // prior dirty entries stay dirty unless this run re-measured them.
+    val freshMap: Map[String, Double] =
+      resultMap.map { case (k, r) => k -> r.getOrElse(-1.0) }.toMap
+    val mergedMap = if (only.isDefined) priorQueries ++ freshMap else freshMap
+    val mergedDirty =
+      (if (only.isDefined) priorDirty -- freshMap.keySet else Set.empty) ++
+        dirtyNow
+    val bandVerdict = if (mergedDirty.isEmpty) "ok" else "skewed"
+    // A partial run against a DIFFERENT sf dir diverts to a side path; the
     // committed full artifact survives verbatim.
     val writePath =
       if (only.isDefined && priorUntrusted) {
@@ -330,52 +142,42 @@ object Bench {
           s"different sf dir — writing to $outPath.partial instead")
         outPath + ".partial"
       } else outPath
-    val qs = mergedMap.toSeq.sortBy(_._1).map { case (k, v) =>
-      "\"" + k + "\":" + (if (v < 0) "-1" else d3(v))
-    }.mkString("{", ",", "}")
-    val errs = results.collect { case (k, Left(m)) => jstr(k) + ":" + jstr(m) }
-    val errJson = if (errs.isEmpty) "" else errs.mkString(""","errors":{""", ",", "}")
-    // Transparency for the graded read: which queries needed the spaced
-    // repair pass, and what the noisy first min was.
-    val remJson =
-      if (remeasured.isEmpty) ""
-      else remeasured.toSeq.sortBy(_._1).map { case (k, (first, best)) =>
-        "\"" + k + "\":{\"first\":" + d3(first) + ",\"final\":" + d3(best) + "}"
-      }.mkString(""","remeasured":{""", ",", "}")
-    val dirtyJson =
-      if (mergedDirty.isEmpty) ""
-      else mergedDirty.toSeq.sorted.map("\"" + _ + "\"")
-        .mkString(""","band_dirty":[""", ",", "]")
-    val total = mergedMap.values.filter(_ >= 0).sum
-    val calibBwEndSec = probes.last
-    val calibJson = s""""calib_sec":${d3(calibSec)},"calib_par_sec":${
-      d3(calibParSec)},"calib_bw_sec":${d3(calibBwSec)},"calib_bw_end_sec":${
-      d3(calibBwEndSec)},"band_quiet_ref":${d3(quietRef)},"band":"$band""""
-    val fullLine =
-      s"""{"metric":"total","value":${d3(total)},"unit":"sec",$calibJson,"timing":"min_of_2_band_repair","queries":$qs$errJson$remJson$dirtyJson,"sf":"$sfDir"}"""
-    println(fullLine)
-    // Truncation-proof duplicate: the per-query line above grows with the
-    // suite (105+ queries > the harvester's tail window), so the headline
-    // total is ALSO emitted as a trailing compact line that any tail
-    // capture ≥ ~120 bytes picks up intact.
-    println(
-      s"""{"metric":"total","value":${d3(total)},"unit":"sec","n_queries":${mergedMap.size},"n_errors":${errs.size},$calibJson,"sf":"$sfDir"}""")
-    // File artifact with the COMPLETE per-query map: the driver's 2 KB
-    // stdout tail lost ~half the 137 timings in round 4 — regression
-    // detection needs all of them. Default is CWD-relative (the driver
-    // launches Bench from the repo root, where the other round artifacts
-    // land); set SPARK_GRAFT_BENCH_OUT to an absolute path when running
-    // from anywhere else. A failed write is loud on stderr, never fatal.
-    try java.nio.file.Files.write(java.nio.file.Paths.get(writePath),
-      (fullLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    def sanitized(s: String) = Str(s.replaceAll("[\\\\\"\\n\\r\\t]", " ").take(200))
+    val errs = resultMap.toSeq.collect { case (k, Left(m)) => k -> sanitized(m) }
+    val total = num(mergedMap.values.filter(_ >= 0).sum)
+    val calib: Seq[(String, Json)] = Seq("calib_sec" -> num(calibSec),
+      "calib_par_sec" -> num(calibParSec), "calib_bw_sec" -> num(calibBwSec),
+      "calib_bw_end_sec" -> num(band.probes.last),
+      "band_quiet_ref" -> num(band.quietRef), "band" -> Str(bandVerdict))
+    val head: Seq[(String, Json)] =
+      Seq("metric" -> Str("total"), "value" -> total, "unit" -> Str("sec"))
+    val sf = "sf" -> Str(sfDir)
+    val full = Obj(head ++ calib ++ Seq(
+      "timing" -> Str("min_of_2_band_repair"),
+      "queries" -> Obj(mergedMap.toSeq.sortBy(_._1).map { case (k, v) =>
+        k -> (if (v < 0) Num("-1") else num(v)) })) ++
+      Seq("errors" -> Obj(errs)).filter(_ => errs.nonEmpty) ++
+      Seq("remeasured" -> Obj(remeasured.toSeq.sortBy(_._1).map {
+        case (k, (first, best)) =>
+          k -> Obj(Seq("first" -> num(first), "final" -> num(best)))
+      })).filter(_ => remeasured.nonEmpty) ++
+      Seq("band_dirty" -> Arr(mergedDirty.toSeq.sorted.map(Str(_))))
+        .filter(_ => mergedDirty.nonEmpty) :+ sf)
+    println(Json.render(full))
+    // Truncation-proof duplicate: the per-query line grows with the
+    // suite, so the headline total is ALSO emitted as a trailing compact
+    // line that any tail capture ≥ ~120 bytes picks up intact.
+    println(Json.render(Obj(head ++ Seq("n_queries" -> num(mergedMap.size.toLong),
+      "n_errors" -> num(errs.size.toLong)) ++ calib :+ sf)))
+    // The file artifact carries the COMPLETE per-query map. A failed write
+    // is loud on stderr, never fatal (NonFatal only: an OOM or interrupt
+    // must propagate).
+    try Measure.write(writePath, full)
     catch { case scala.util.control.NonFatal(e) =>
-      // NonFatal only: an OOM/interrupt here must propagate, not be
-      // swallowed after the (already-printed) results.
       System.err.println(s"[bench] could not write $writePath: ${e.getMessage}")
     }
-    if (band == "skewed")
-      // Loud AFTER the artifact lands (the Scaling rule): the evidence
-      // survives; BenchSpec refuses the committed artifact.
+    if (mergedDirty.nonEmpty)
+      // Loud AFTER the artifact lands: the evidence survives.
       System.err.println(s"[bench] BAND SKEWED for ${mergedDirty.size} " +
         s"queries (${mergedDirty.toSeq.sorted.mkString(", ")}) — the " +
         "repair pass could not land them on a quiet box; re-measure " +

@@ -19,27 +19,26 @@ import org.apache.spark.SparkContext
   *    inflates in proportion to stolen cores.
   *  - [[bwParSec]]: a MEMORY-BANDWIDTH probe — per core, one task
   *    initializes a 32 MiB long array then streams four sequential
-  *    XOR-reduction passes over it (≈ 5 GiB of memory traffic across
-  *    32 cores, far past any cache). The round-10 closing runs showed
-  *    the remaining blind spot: three same-code suites spanned
-  *    177–190 s against a 156.7 s driver run while BOTH ALU
-  *    calibrations sat flat — memory-bandwidth co-tenancy is invisible
-  *    to ALU-bound probes, and most of the suite (shuffles, parquet
-  *    scans, hash tables) is bandwidth-bound. Bench and Scaling record
-  *    this probe at run START and END: a spread past
-  *    [[BandSkewRatio]] means the band moved mid-run and per-query
-  *    regressions inside that band are unreadable — the artifact
-  *    carries a `band":"skewed` flag and `ScalingSpec` REFUSES a bar
-  *    verdict on it (re-measure instead of grading noise).
+  *    XOR-reduction passes over it (far past any cache). Memory-
+  *    bandwidth co-tenancy is invisible to the ALU probes (round 10:
+  *    three same-code suites spanned 177–190 s while both ALU numbers
+  *    sat flat), and most of the suite — shuffles, parquet scans, hash
+  *    tables — is bandwidth-bound. This is the probe the band rule
+  *    ([[Measure.Band]]) grades every measurement window with: a window
+  *    probe past [[BandSkewRatio]] × the timed pass's median probe is
+  *    contended, gets repaired, and marks its entries band-dirty if the
+  *    repair cannot land them on a quiet box.
   *
   * Every probe is the min of two passes (per-thread JIT warms on the
-  * first; a single shot folds one scheduler hiccup into the number). */
+  * first; a single shot folds one scheduler hiccup into the number).
+  * The loop bodies are methods of this object, so task closures call
+  * them without serializing anything. */
 object Calib {
 
-  /** Start/end spread past this ratio flags the run band-skewed. */
+  /** A window probe past this ratio × the quiet reference is contended. */
   val BandSkewRatio = 1.5
 
-  private def splitmixLoop(): Long = {
+  private[graft] def splitmixLoop(): Long = {
     var acc = 0L
     var i = 0L
     while (i < (1L << 26)) {
@@ -51,82 +50,48 @@ object Calib {
     acc
   }
 
-  def aluSec(): Double = {
-    val t0 = System.nanoTime()
-    val acc = splitmixLoop()
-    val sec = (System.nanoTime() - t0) / 1e9
-    if (acc == 42L) System.err.println("[calib] sentinel") // keep live
-    sec
+  /** Task `t`'s bandwidth pass: fault in a 32 MiB long array, then
+    * `sweeps` sequential XOR reductions over it. */
+  private[graft] def bwPass(t: Int, sweeps: Int): Long = {
+    val len = (32 << 20) / 8
+    val a = new Array[Long](len)
+    var i = 0
+    while (i < len) { a(i) = t.toLong + i; i += 1 }
+    var acc = 0L
+    var pass = 0
+    while (pass < sweeps) {
+      var j = 0
+      while (j < len) { acc ^= a(j); j += 1 }
+      pass += 1
+    }
+    acc
   }
 
-  def aluParSec(sc: SparkContext, n: Int): Double = {
-    def once(): Double = {
-      val t0 = System.nanoTime()
-      // Self-contained closure (no reference to this non-serializable
-      // enclosing module).
-      val acc = sc.parallelize(0 until n, n)
-        .map { _ =>
-          var acc = 0L
-          var i = 0L
-          while (i < (1L << 26)) {
-            var x = i * 0x9E3779B97F4A7C15L
-            x ^= x >>> 32; x *= 0xBF58476D1CE4E5B9L; x ^= x >>> 29
-            acc ^= x
-            i += 1
-          }
-          acc
-        }.reduce(_ ^ _)
-      if (acc == 42L) System.err.println("[calib] par sentinel")
-      (System.nanoTime() - t0) / 1e9
-    }
-    math.min(once(), once())
+  /** One task per core running `body`, XOR-reduced. */
+  private def fanOut(sc: SparkContext, n: Int)(body: Int => Long): Long =
+    sc.parallelize(0 until n, n).map(body).reduce(_ ^ _)
+
+  /** Seconds to compute `acc`, which is kept live so the JIT cannot
+    * drop the loop. */
+  private def secs(acc: => Long): Double = {
+    val t0 = System.nanoTime()
+    if (acc == 42L) System.err.println("[calib] sentinel")
+    (System.nanoTime() - t0) / 1e9
   }
+
+  def aluSec(): Double = secs(splitmixLoop())
+
+  def aluParSec(sc: SparkContext, n: Int): Double =
+    math.min(secs(fanOut(sc, n)(_ => splitmixLoop())),
+      secs(fanOut(sc, n)(_ => splitmixLoop())))
 
   def bwParSec(sc: SparkContext, n: Int): Double = {
-    // One UNTIMED warm pass first: on a fresh JVM the probe's first
-    // exercise pays heap growth + page zeroing + task-path JIT — a
-    // systematic ~1.5–2.7× start-vs-end skew measured on every cold
-    // session this round (while a warmed session read 0.171 → 0.173).
-    // The flag must fire on CO-TENANCY, not on the JVM being new.
-    warmOnce(sc, n)
-    def once(): Double = {
-      val t0 = System.nanoTime()
-      val acc = sc.parallelize(0 until n, n)
-        .map { t =>
-          val len = (32 << 20) / 8 // 32 MiB of longs per task
-          val a = new Array[Long](len)
-          var i = 0
-          while (i < len) { a(i) = t.toLong + i; i += 1 } // fault pages in
-          var acc = 0L
-          var pass = 0
-          while (pass < 4) { // sequential streaming reads — bandwidth-bound
-            var j = 0
-            while (j < len) { acc ^= a(j); j += 1 }
-            pass += 1
-          }
-          acc
-        }.reduce(_ ^ _)
-      if (acc == 42L) System.err.println("[calib] bw sentinel")
-      (System.nanoTime() - t0) / 1e9
-    }
-    math.min(once(), once())
+    // One UNTIMED single-sweep warm pass first: on a fresh JVM the
+    // probe's first exercise pays heap growth + page zeroing + task-path
+    // JIT — a systematic ~1.5–2.7× skew on every cold session. The band
+    // must fire on CO-TENANCY, not on the JVM being new.
+    secs(fanOut(sc, n)(bwPass(_, 1)))
+    math.min(secs(fanOut(sc, n)(bwPass(_, 4))),
+      secs(fanOut(sc, n)(bwPass(_, 4))))
   }
-
-  private def warmOnce(sc: SparkContext, n: Int): Unit = {
-    val acc = sc.parallelize(0 until n, n)
-      .map { t =>
-        val len = (32 << 20) / 8
-        val a = new Array[Long](len)
-        var i = 0
-        while (i < len) { a(i) = t.toLong + i; i += 1 }
-        var acc = 0L
-        var j = 0
-        while (j < len) { acc ^= a(j); j += 1 }
-        acc
-      }.reduce(_ ^ _)
-    if (acc == 42L) System.err.println("[calib] warm sentinel")
-  }
-  // (The old run-level start/end `bandFlag` rule is gone: Bench and
-  // Scaling both grade per-query/per-block probe windows against the
-  // run's median probe — the only band verdict in use.)
 }

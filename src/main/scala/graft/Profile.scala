@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 
 /** Dev tool: run one declared query repeatedly and print its formatted
   * plan, plus a PER-STAGE metrics table for the final run (stage id,
@@ -11,64 +11,28 @@ import org.apache.spark.sql.SparkSession
   * Usage: graft.Profile <queryName> [sfDir] [runs]. */
 object Profile {
 
-  private final class StageTally
-      extends org.apache.spark.scheduler.SparkListener {
-    final case class Row(id: Int, name: String, tasks: Int, inputRec: Long,
-      srBytes: Long, srRec: Long, swBytes: Long, swRec: Long, ms: Long,
-      subMs: Long, wallMs: Long)
-    val rows = new java.util.concurrent.ConcurrentLinkedQueue[Row]()
-    override def onStageCompleted(
-        sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      val i = sc.stageInfo
-      val m = i.taskMetrics
-      val sub = i.submissionTime.getOrElse(0L)
-      val wall = i.completionTime.getOrElse(sub) - sub
-      rows.add(Row(i.stageId, i.name.takeWhile(_ != '\n').take(80),
-        i.numTasks, m.inputMetrics.recordsRead,
-        m.shuffleReadMetrics.totalBytesRead,
-        m.shuffleReadMetrics.recordsRead,
-        m.shuffleWriteMetrics.bytesWritten,
-        m.shuffleWriteMetrics.recordsWritten,
-        m.executorRunTime, sub, wall))
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val runs = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local("graft-profile")
     spark.sparkContext.setLogLevel("WARN")
-    val tally = new StageTally
-    spark.sparkContext.addSparkListener(tally)
-    // Construct inside the timer, like Bench — query functions may run
-    // driver-side work (iterative loops, sketch collects) at build time.
-    var df = SparkEntry.queries(name)(spark, sfDir)
+    val tally = Measure.tally(spark)
+    // Each run clears the tally, so its stages are exactly the final run's.
+    var df: DataFrame = null
     for (i <- 1 to runs) {
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      if (i == runs) { // stage table reflects exactly the final run
-        org.apache.spark.graftshim.ListenerShim.drain(spark.sparkContext)
-        tally.rows.clear()
+      val sec = Measure.timedNoop(spark, Some(tally)) {
+        df = SparkEntry.queries(name)(spark, sfDir)
+        df
       }
-      val t0 = System.nanoTime()
-      df = SparkEntry.queries(name)(spark, sfDir)
-      df.write.format("noop").mode("overwrite").save()
-      println(f"[profile] $name run $i: ${(System.nanoTime() - t0) / 1e9}%.2f s")
+      println(f"[profile] $name run $i: $sec%.2f s")
     }
-    org.apache.spark.graftshim.ListenerShim.drain(spark.sparkContext)
+    val stages = tally.stages
     df.explain("formatted")
     println("[profile] per-stage metrics (final run), by shuffle-write bytes:")
     println("stage tasks    input_rec      sr_bytes       sr_rec      sw_bytes       sw_rec   cpu_ms  name")
-    import scala.jdk.CollectionConverters._
-    tally.rows.asScala.toSeq.sortBy(-_.swBytes).foreach { r =>
-      println(f"${r.id}%5d ${r.tasks}%5d ${r.inputRec}%12d ${r.srBytes}%13d ${r.srRec}%12d ${r.swBytes}%13d ${r.swRec}%12d ${r.ms}%8d  ${r.name}")
+    stages.sortBy(-_.swBytes).foreach { r =>
+      println(f"${r.id}%5d ${r.tasks}%5d ${r.inputRec}%12d ${r.srBytes}%13d ${r.srRec}%12d ${r.swBytes}%13d ${r.swRec}%12d ${r.cpuMs}%8d  ${r.name}")
     }
     // Wall-clock timeline of the final run: stages in submission order
     // with their scheduler-to-completion spans and the idle gap since the
@@ -76,12 +40,12 @@ object Profile {
     // driver/planning/barrier time no per-stage metric shows).
     println("[profile] stage timeline (final run): submit-order, wall spans:")
     println("stage  t_sub_ms  wall_ms   gap_ms tasks   cpu_ms  name")
-    val ordered = tally.rows.asScala.toSeq.sortBy(_.subMs)
+    val ordered = stages.sortBy(_.subMs)
     var prevEnd = ordered.headOption.map(_.subMs).getOrElse(0L)
     val t0Sub = prevEnd
     ordered.foreach { r =>
       val gap = r.subMs - prevEnd
-      println(f"${r.id}%5d ${r.subMs - t0Sub}%9d ${r.wallMs}%8d ${math.max(gap, -1)}%8d ${r.tasks}%5d ${r.ms}%8d  ${r.name.take(40)}")
+      println(f"${r.id}%5d ${r.subMs - t0Sub}%9d ${r.wallMs}%8d ${math.max(gap, -1)}%8d ${r.tasks}%5d ${r.cpuMs}%8d  ${r.name.take(40)}")
       prevEnd = math.max(prevEnd, r.subMs + r.wallMs)
     }
     spark.stop()

@@ -269,15 +269,18 @@ object Scaling {
         .write.mode("overwrite").parquet(s"$dstDir/$t.parquet")
     }
 
-  /** Per-stage shuffle-write tally. Registered once; reset around each
-    * timed run and read after a listener-bus drain, so the bytes belong
-    * to exactly the jobs between reset and read. */
-  private final class ShuffleTally extends org.apache.spark.scheduler.SparkListener {
-    val bytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    override def onStageCompleted(
-        sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-      bytes.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-  }
+  /** One factor's measurement: the min-time run's seconds and shuffle-
+    * write bytes, result rows, and the candidate-pair count of the
+    * budgeted regimes. */
+  private type Point = (Double, Long, Long, Option[Long])
+
+  private def regimeOf(name: String): String =
+    if (name == SemDedupScaled) "pair_budget"
+    else if (SpanBudgeted(name)) "output_bound+span_budget"
+    else if (PrefixBudgeted(name)) "output_bound+prefix_budget"
+    else if (name == KmeansFitScaled) "fit_design"
+    else if (OutputBound(name)) "output_bound"
+    else "output_linear"
 
   def main(args: Array[String]): Unit = {
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -302,23 +305,9 @@ object Scaling {
       .split(",").map(_.trim.toInt).toSeq
     require(factors.head == 1, "first factor must be the ×1 baseline")
     val scaleRoot = "/tmp/graft_scale"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local("graft-scaling")
     spark.sparkContext.setLogLevel("WARN")
-    val tally = new ShuffleTally
-    spark.sparkContext.addSparkListener(tally)
-    // Opening memory-bandwidth probe (shared [[Calib]]); its closing
-    // twin runs after the last timed query. A start/end spread past
-    // Calib.BandSkewRatio flags the artifact band-skewed — ScalingSpec
-    // then REFUSES a bar verdict on it (re-measure instead of grading
-    // memory co-tenancy as a plan regression; the ALU probes stayed
-    // flat through exactly this failure in round 10).
-    val calibBwSec = Calib.bwParSec(spark.sparkContext, cpus.toInt)
+    val tally = Measure.tally(spark)
 
     // EVERY factor — including ×1 — goes through the same amplify/write
     // path, so the whole series shares one parquet layout (file count,
@@ -352,33 +341,15 @@ object Scaling {
           BitextBaseCells * f)
       else SparkEntry.queries(name)(spark, dirs(f))
 
-    // Per-query BAND PROBE (shared [[Calib]] bandwidth probe, ~0.2 s):
-    // taken immediately before each query's factor series, so a
-    // measurement made inside a co-tenant contention window is KNOWN to
-    // be — the box here oscillates on ~10-minute periods, and a
-    // run-level start/end pair cannot localize which queries a window
-    // hit. `quietRef` is the quietest probe the run has seen; a block
-    // whose probe exceeds [[graft.Calib.BandSkewRatio]] × quietRef is
-    // band-contended and queued for the end-of-run repair pass.
-    // `quietRef` is the run's MEDIAN probe — the box's typical state.
-    // Gating against the minimum is over-sensitive: one exceptionally
-    // quiet window during the run retroactively marks every
-    // average-window block "contended" (observed: a 0.069 s repair-era
-    // probe against a 0.09–0.12 s typical band flagged half the fleet).
-    // A co-tenant window is the ANOMALY; the median is self-normalizing.
-    val probes = scala.collection.mutable.Map.empty[String, Double]
-    def quietRef: Double = {
-      val vs = (probes.values ++ Seq(calibBwSec)).toSeq.sorted
-      vs(vs.size / 2)
-    }
-    def contended(name: String): Boolean =
-      probes.get(name).exists(_ > Calib.BandSkewRatio * quietRef)
+    // BAND ([[Measure.Band]]): the opening bandwidth probe, then one probe
+    // before each query's factor series — the box oscillates on ~10-minute
+    // co-tenant periods, and only a per-block window localizes which
+    // blocks a contended window hit.
+    val band = new Measure.Band(
+      () => Calib.bwParSec(spark.sparkContext, Sessions.cpus), "scaling")
+    val calibBwSec = band.take()
 
-    def measure(name: String)
-        : (Map[Int, (Double, Long, Long, Option[Long])], Map[Int, Double]) = {
-      probes(name) = Calib.bwParSec(spark.sparkContext, cpus.toInt)
-      System.err.println(
-        f"[scaling] $name band probe ${probes(name)}%.3f s")
+    def measure(name: String): Map[Int, Point] = {
       // Untimed ×1 warmup (the Bench discipline): the growth ratios
       // compare factors WITHIN one query, and a cold first factor would
       // fold this query's codegen JIT into whichever factor runs first.
@@ -387,27 +358,16 @@ object Scaling {
       catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[scaling] warmup $name failed: ${e.getMessage}")
       }
-      val per = factors.map { f =>
+      factors.map { f =>
         // MIN of two timed runs: a growth ratio built from single shots
         // folds one GC pause or page-cache miss straight into the g
         // column (observed: non-monotone series, a ×1 slower than its
-        // ×8). The minimum is the steady-state the plan actually costs;
-        // both runs get the same storage hygiene — drop dead checkpoint
-        // blocks before each clock, or a measurement pays eviction for
-        // its predecessor's leftovers. Shuffle bytes ride the min-time
-        // run (the volume is plan-determined; timing noise is not).
-        val runs = (1 to 2).map { _ =>
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = true))
-          org.apache.spark.graftshim.ListenerShim.drain(spark.sparkContext)
-          tally.bytes.set(0L)
-          val t0 = System.nanoTime()
-          framed(name, f).write.format("noop").mode("overwrite").save()
-          val sec = (System.nanoTime() - t0) / 1e9
-          org.apache.spark.graftshim.ListenerShim.drain(spark.sparkContext)
-          (sec, tally.bytes.get())
-        }
-        val (sec, shuf) = runs.minBy(_._1)
+        // ×8). Shuffle bytes ride the min-time run (the volume is
+        // plan-determined; timing noise is not).
+        val (sec, shuf) = (1 to 2).map { _ =>
+          val sec = Measure.timedNoop(spark, Some(tally))(framed(name, f))
+          (sec, tally.stages.map(_.swBytes).sum)
+        }.minBy(_._1)
         // Result rows for the output-bound ratios — OUTSIDE the clock
         // (count() is the pruned action; it must never be the timed
         // one). Digest-emitting queries carry their pair-set
@@ -423,20 +383,16 @@ object Scaling {
             // read would burn a slice.
             graft.gov.ForgetScale.lastFrame(spark, dirs(f)).count()
           else framed(name, f).count()
-        // The pair-budget metric of the semdedup regime — an O(K)
-        // aggregate over the (already-fitted) shared assignment, read
+        // The candidate-pair metric of the budgeted regimes, read off the
+        // session-shared frames the timed run already materialized —
         // outside the clock.
         val pairs =
           if (name == SemDedupScaled)
             Some(graft.queries.SimilarityQueries.semDedupPairBudget(
               spark, dirs(f), SemDedupBaseK * f))
           else if (SpanBudgeted(name))
-            // Candidate-pair count off the session-shared winnow store
-            // (already materialized by the timed run) — outside the clock.
             Some(graft.queries.TextQueries.spanCandidateCount(spark, dirs(f)))
           else if (PrefixBudgeted(name))
-            // Prefix-filter candidate count off the session-shared
-            // shingle frame (already materialized) — outside the clock.
             Some(if (name == "q_dedup_containment_zipf")
               graft.queries.DedupQueries.zipfContainmentCandidateCount(
                 spark, dirs(f))
@@ -448,28 +404,29 @@ object Scaling {
             pairs.map(p => s", $p cand pairs").getOrElse(""))
         f -> ((sec, rows, shuf, pairs))
       }.toMap
-      val (t1, _, _, _) = per(1)
-      val g = factors.filter(_ > 1).map { f =>
-        f -> per(f)._1 / (f * t1)
-      }.toMap
-      (per, g)
     }
+    def growth(per: Map[Int, Point]): Seq[(Int, Double)] =
+      factors.filter(_ > 1).map(f => f -> per(f)._1 / (f * per(1)._1))
 
     val selected = Audited.filter(n => only.forall(_.contains(n)))
-    val resultMap = scala.collection.mutable.LinkedHashMap.empty[
-      String, (Map[Int, (Double, Long, Long, Option[Long])], Map[Int, Double])]
-    selected.foreach { name => resultMap(name) = measure(name) }
+    val resultMap = scala.collection.mutable.LinkedHashMap(
+      band.timedPass(selected, every = 1)(measure): _*)
     def results = resultMap.toSeq
 
     // Regime bars at the LARGEST measured factor — parameterized by
     // factor (gBarAt), so anchor runs at ×10 grade the same admissible
     // plan family the standard ×8 audit does instead of going ungraded.
     val fMaxOpt: Option[Int] = factors.filter(_ > 1).sorted.lastOption
-    def violationsOf(rs: Seq[(String,
-        (Map[Int, (Double, Long, Long, Option[Long])], Map[Int, Double]))])
-        : Seq[String] = fMaxOpt.toSeq.flatMap { fm =>
-      rs.flatMap { case (name, (per, g)) =>
+    def violationsOf(rs: Seq[(String, Map[Int, Point])]): Seq[String] =
+        fMaxOpt.toSeq.flatMap { fm =>
+      rs.flatMap { case (name, per) =>
         val pf = per(fm)._4
+        val tRatio = per(fm)._1 / per(1)._1
+        val rRatio = per(fm)._2.toDouble / math.max(1L, per(1)._2)
+        val timeBad =
+          if (tRatio > rRatio) Some(
+            f"$name [output_bound]: t$fm/t1 $tRatio%.2f > rows ratio $rRatio%.2f")
+          else None
         if (name == SemDedupScaled && pf.isDefined) {
           val p1 = per(1)._4.get.toDouble
           if (pf.get > PairBudgetSlack * fm * math.max(1.0, p1)) Some(
@@ -478,185 +435,104 @@ object Scaling {
           else None
         } else if ((SpanBudgeted(name) || PrefixBudgeted(name)) &&
             pf.isDefined) {
-          // ONE two-bar shape for both candidate-budgeted regimes:
-          // the strict output_bound time bar AND the declared
-          // work-per-output-row candidate budget (see
-          // SpanBudgeted/PrefixBudgeted docs) — differing only in
-          // slack and regime label.
+          // ONE two-bar shape for both candidate-budgeted regimes: the
+          // strict output_bound time bar AND the declared work-per-
+          // output-row candidate budget, differing only in slack and
+          // label. Both are reported when both break — hiding one behind
+          // the other would cost a second multi-hour run to discover it.
           val (slack, label) =
             if (SpanBudgeted(name)) (SpanBudgetSlack, "span_budget")
             else (PrefixBudgetSlack, "prefix_budget")
           val p1 = per(1)._4.get.toDouble
-          val rRatio = per(fm)._2.toDouble / math.max(1L, per(1)._2)
-          val tRatio = per(fm)._1 / per(1)._1
-          val timeBad =
-            if (tRatio > rRatio) Some(
-              f"$name [output_bound]: t$fm/t1 $tRatio%.2f > rows ratio $rRatio%.2f")
-            else None
           val budgetBad =
             if (pf.get > slack * rRatio * math.max(1.0, p1)) Some(
               f"$name [$label]: pairs$fm ${pf.get} > " +
                 f"$slack%.1f × rows-ratio $rRatio%.2f × pairs1 ${per(1)._4.get}")
             else None
-          // Report BOTH when both break — hiding the budget violation
-          // behind the time one would cost a second multi-hour run to
-          // discover it.
           (timeBad.toSeq ++ budgetBad.toSeq): Seq[String]
         } else if (name == KmeansFitScaled) {
-          val tRatio = per(fm)._1 / per(1)._1
           val env = fm.toDouble * fm
           if (tRatio > env) Some(
             f"$name [fit_design]: t$fm/t1 $tRatio%.2f > f² $env%.1f")
           else None
-        } else if (OutputBound(name)) {
-          val tRatio = per(fm)._1 / per(1)._1
-          val rRatio = per(fm)._2.toDouble / math.max(1L, per(1)._2)
-          if (tRatio > rRatio) Some(
-            f"$name [output_bound]: t$fm/t1 $tRatio%.2f > rows ratio $rRatio%.2f")
+        } else if (OutputBound(name)) timeBad
+        else {
+          val g = per(fm)._1 / (fm * per(1)._1)
+          if (g > gBarAt(fm)) Some(
+            f"$name [output_linear]: g$fm $g%.3f > ${gBarAt(fm)}%.3f")
           else None
-        } else if (g(fm) > gBarAt(fm)) Some(
-          f"$name [output_linear]: g$fm ${g(fm)}%.3f > ${gBarAt(fm)}%.3f")
-        else None
+        }
       }
     }
 
-    // END-OF-RUN REPAIR PASS (the Bench outlier-repair discipline, with
-    // the band probe as the gate): queries that broke a bar OR were
-    // measured inside a band-contended window re-measure ONCE, each
-    // after waiting for the box to read quiet again (probe ≤
-    // BandSkewRatio × the run's quietest probe; bounded global sleep
-    // budget). Three consecutive full runs on this box each had a
-    // DIFFERENT early query stamped by a ~10-minute co-tenant window —
-    // without this pass a clean artifact needs a lucky 40-minute gap;
-    // with it, one invocation localizes the window per query and
-    // replaces exactly the measurements it poisoned.
-    val firstViolations = violationsOf(results)
-    val needRepair = (firstViolations.map(_.split(' ').head) ++
-      selected.filter(contended)).distinct
-    var sleepBudgetMs = 12L * 60 * 1000
+    // END-OF-RUN REPAIR PASS ([[Measure.Band.repair]]): queries that
+    // broke a bar OR were measured inside a band-contended window
+    // re-measure on a quiet box; each factor keeps its min-time point.
+    // Consecutive full runs on this box each had a DIFFERENT early query
+    // stamped by a ~10-minute co-tenant window — without this pass a
+    // clean artifact needs a lucky 40-minute gap.
+    def minPerFactor(a: Map[Int, Point], b: Map[Int, Point]) =
+      a.map { case (f, p) => f -> Seq(p, b(f)).minBy(_._1) }
+    val needRepair = (violationsOf(results).map(_.split(' ').head) ++
+      selected.filter(band.dirty)).distinct
     needRepair.foreach { name =>
-      var probe = Calib.bwParSec(spark.sparkContext, cpus.toInt)
-      while (probe > Calib.BandSkewRatio * quietRef && sleepBudgetMs > 0) {
-        System.err.println(f"[scaling] repair $name: box contended " +
-          f"(probe $probe%.3f vs quiet $quietRef%.3f) — waiting")
-        Thread.sleep(45000)
-        sleepBudgetMs -= 45000
-        probe = Calib.bwParSec(spark.sparkContext, cpus.toInt)
-      }
-      if (probe <= Calib.BandSkewRatio * quietRef) {
-        System.err.println(s"[scaling] repairing $name on quiet box")
-        resultMap(name) = measure(name)
-        // measure() takes its OWN probe, which can catch a spike the
-        // wait-gate just missed (observed: gate 0.07, measure 0.25) —
-        // retry a bounded number of times while the block still reads
-        // contended, so one race can't stamp the whole artifact skewed.
-        var retries = 2
-        while (contended(name) && retries > 0 && sleepBudgetMs > 0) {
-          System.err.println(s"[scaling] repair $name: spike during " +
-            "re-measure — retrying")
-          Thread.sleep(45000)
-          sleepBudgetMs -= 45000
-          resultMap(name) = measure(name)
-          retries -= 1
-        }
-      } else System.err.println(s"[scaling] repair $name: gave up waiting " +
-        "— block retained from the contended window (band stays skewed)")
+      band.repair(name, resultMap(name), minPerFactor)(() => Some(measure(name)))
+        .foreach(resultMap(name) = _)
     }
     val violations = violationsOf(results)
 
-    // Locale-pinned decimal formatting: the default-locale f-interpolator
-    // would emit comma decimals (invalid JSON) on e.g. a de_DE JVM.
-    def d3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val fresh: Map[String, String] = results.map { case (name, (per, g)) =>
-      val times = factors.map(f => s""""t$f":${d3(per(f)._1)}""").mkString(",")
-      val rows = factors.map(f => s""""rows$f":${per(f)._2}""").mkString(",")
-      val shuf = factors.map(f => s""""shuf$f":${per(f)._3}""").mkString(",")
-      val growth = g.toSeq.sortBy(_._1)
-        .map { case (f, v) => s""""g$f":${d3(v)}""" }.mkString(",")
-      val pairs = factors.flatMap(f => per(f)._4.map(p => s""""pairs$f":$p"""))
-        .mkString(",")
-      val pairsJson = if (pairs.isEmpty) "" else s",$pairs"
-      // Per-block band probe — the transparency that lets a reader (or a
-      // later merge) see which measurements rode which hardware regime.
-      val probeJson = probes.get(name)
-        .map(p => s""","probe":${d3(p)}""").getOrElse("")
-      val regime =
-        if (name == SemDedupScaled) "pair_budget"
-        else if (SpanBudgeted(name)) "output_bound+span_budget"
-        else if (PrefixBudgeted(name)) "output_bound+prefix_budget"
-        else if (name == KmeansFitScaled) "fit_design"
-        else if (OutputBound(name)) "output_bound"
-        else "output_linear"
-      name -> s""""$name":{$times,$rows,$shuf,$growth$pairsJson$probeJson,"regime":"$regime"}"""
+    import Measure.Json._
+    val fresh: Map[String, Measure.Json] = results.map { case (name, per) =>
+      name -> Obj(
+        factors.map(f => s"t$f" -> num(per(f)._1)) ++
+        factors.map(f => s"rows$f" -> num(per(f)._2)) ++
+        factors.map(f => s"shuf$f" -> num(per(f)._3)) ++
+        growth(per).map { case (f, g) => s"g$f" -> num(g) } ++
+        factors.flatMap(f => per(f)._4.map(p => s"pairs$f" -> num(p))) ++
+        // The block's band window — which hardware regime it rode.
+        Seq("probe" -> num(band.windowOf(name)), "regime" -> Str(regimeOf(name))))
     }.toMap
     // Merge with the existing artifact on a partial re-measure: blocks
-    // for re-run queries come from this run, everything else (including
-    // queries later additions haven't re-run) survives verbatim.
-    val existing: Map[String, String] =
-      if (only.isDefined && java.nio.file.Files.exists(
-          java.nio.file.Paths.get(outPath))) {
-        val txt = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(outPath)),
-          java.nio.charset.StandardCharsets.UTF_8)
-        """"(q_[a-z0-9_]+)":\{[^}]*\}""".r.findAllMatchIn(txt)
-          .map(m => m.group(1) -> m.matched).toMap
-      } else Map.empty
-    val merged = (existing ++ fresh)
-    val barsJson =
-      if (fMaxOpt.isEmpty) """"bars":"not_evaluated""""
-      else if (violations.isEmpty) """"bars":"ok""""
-      else violations.map(v => "\"" + v.replace("\"", "'") + "\"")
-        .mkString(""""bars":[""", ",", "]")
-    val barMeta = fMaxOpt.map(fm =>
-      s""""bar_factor":$fm,"g_bar":${d3(gBarAt(fm))},""").getOrElse("")
-    val calibBwEndSec = Calib.bwParSec(spark.sparkContext, cpus.toInt)
-    // BAND VERDICT — per-ACCEPTED-measurement, with TWO provenances
-    // (the round-12 form; it replaces both the merged-median rule and
-    // the prior-skew ratchet):
-    //  - FRESH blocks (measured this run) grade against THIS run's
-    //    median probe (quietRef): any block still contended after the
-    //    repair pass keeps the artifact skewed.
+    // for re-run queries come from this run, everything else survives
+    // verbatim.
+    val prior = if (only.isDefined) Measure.read(outPath) else None
+    val existing: Map[String, Measure.Json] = prior.toSeq
+      .flatMap(_.fields.collect { case (k, o: Obj) if k.startsWith("q_") => k -> o })
+      .toMap
+    val merged = existing ++ fresh
+    val calibBwEndSec = band.take()
+    // BAND VERDICT — per ACCEPTED measurement, with two provenances:
+    //  - FRESH blocks grade against THIS run's pinned quiet reference:
+    //    any block still contended after the repair pass keeps the
+    //    artifact skewed.
     //  - RETAINED blocks (a partial re-measure's untouched entries)
     //    inherit the PRIOR artifact's certification. Re-grading their
-    //    probes against this run's median would mix band EPOCHS — the
-    //    box's typical band differs day to day, and a prior-epoch
-    //    0.131 s probe that was in-band in its own run reads
-    //    "contended" against a quieter day's 0.086 s median (observed
-    //    on the r11→r12 merge). A prior artifact that is not
-    //    explicitly band-ok — skewed, or a pre-probe vintage with no
-    //    band field at all — cannot certify anything: retaining its
-    //    blocks keeps the artifact skewed until they are re-measured
-    //    through the tool (the ADVICE-r11 unprobed-vintage rule).
-    // The old rule also let a once-stamped-skewed artifact RATCHET: a
-    // partial run inherited the prior skew flag even when its own
-    // fresh blocks were all in-band and the skew had been about blocks
-    // it just re-measured. Under the provenance rule a partial run
-    // honestly clears exactly what it re-measures, no more.
-    val freshNames = results.map(_._1).toSet
-    val freshContended = freshNames.filter(contended)
-    val retained = existing.keySet -- freshNames
-    val priorBandOk = only.isDefined && existing.nonEmpty &&
-      (if (java.nio.file.Files.exists(java.nio.file.Paths.get(outPath))) {
-        val t = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(outPath)),
-          java.nio.charset.StandardCharsets.UTF_8)
-        t.contains(""""band":"ok"""")
-      } else false)
-    val band =
-      if (freshContended.nonEmpty) "skewed"
-      else if (retained.nonEmpty && !priorBandOk) "skewed"
+    //    probes against this run's reference would mix band EPOCHS (a
+    //    prior-epoch probe in-band in its own run can read "contended"
+    //    against a quieter day). A prior that is not explicitly band-ok
+    //    — skewed, or a pre-probe vintage with no band field — certifies
+    //    nothing, so retaining its blocks keeps the artifact skewed until
+    //    they are re-measured through the tool.
+    // A partial run thus clears exactly what it re-measures, no more.
+    val freshContended = results.map(_._1).filter(band.dirty)
+    val retained = existing.keySet -- fresh.keySet
+    val priorBandOk = existing.nonEmpty && prior.exists(_.str("band").contains("ok"))
+    val verdict =
+      if (freshContended.nonEmpty || (retained.nonEmpty && !priorBandOk)) "skewed"
       else "ok"
-    val calibJson = s""""calib_bw_sec":${d3(calibBwSec)},""" +
-      s""""calib_bw_end_sec":${d3(calibBwEndSec)},"band":"$band","""
-    val json = Audited.flatMap(merged.get)
-      .mkString("{", ",",
-        s""","sf":"$srcDir","factors":[${factors.mkString(",")}],$calibJson$barMeta$barsJson}""")
-    java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-      (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    println(json)
+    val json = Obj(Audited.flatMap(n => merged.get(n).map(n -> _)) ++ Seq(
+      "sf" -> Str(srcDir), "factors" -> Arr(factors.map(f => num(f.toLong))),
+      "calib_bw_sec" -> num(calibBwSec), "calib_bw_end_sec" -> num(calibBwEndSec),
+      "band" -> Str(verdict)) ++
+      fMaxOpt.toSeq.flatMap(fm =>
+        Seq("bar_factor" -> num(fm.toLong), "g_bar" -> num(gBarAt(fm)))) :+
+      "bars" -> (
+        if (fMaxOpt.isEmpty) Str("not_evaluated")
+        else if (violations.isEmpty) Str("ok")
+        else Arr(violations.map(v => Str(v.replace("\"", "'"))))))
+    println(Measure.write(outPath, json))
     spark.stop()
-    if (band == "skewed")
+    if (verdict == "skewed")
       System.err.println(f"[scaling] BAND SKEWED: bw calib " +
         f"$calibBwSec%.3f s -> $calibBwEndSec%.3f s — memory co-tenancy " +
         "moved mid-run; re-measure before grading bars (ScalingSpec " +

@@ -2,12 +2,14 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The ONE local-session builder for the runnable entry points
-  * (TrainMain / StreamMain / PipelineMain): env-overridable master and
-  * core count, shuffle partitions sized to cores, UTC. A single
-  * definition keeps the combined PipelineMain session byte-identical to
-  * the tasks it sequences — divergence between entry points was the
-  * failure mode of copying this block per main. */
+/** The ONE local-session builder for every runnable entry point — the
+  * pipeline mains (TrainMain / StreamMain / PipelineMain) and the tool
+  * mains (Verify / Smoke / Bench / Scaling / Profile / PlanDump /
+  * ForgetAnchor): env-overridable master and core count, shuffle
+  * partitions sized to cores, UTC, [[EngineConfs]]. A single definition
+  * keeps every surface measuring the same engine — divergence between
+  * entry points was the failure mode of copying this block per main.
+  * The tool scripts disable the UI with `-Dspark.ui.enabled=false`. */
 private[graft] object Sessions {
 
   /** Shuffle-writer selection, ENV-OVERRIDABLE (SPARK_GRAFT_BYPASS_MERGE)
@@ -22,8 +24,8 @@ private[graft] object Sessions {
   val BypassMergeThreshold: String =
     sys.env.getOrElse("SPARK_GRAFT_BYPASS_MERGE", "200")
 
-  /** ENGINE TUNING shared by EVERY entry session (Bench / Verify /
-    * Smoke / Profile / Scaling / Sessions.local) — one definition so
+  /** ENGINE TUNING shared by EVERY entry session ([[local]], and the
+    * benchmark harness's explicit-master session) — one definition so
     * the engine under test cannot diverge between the graded surfaces.
     *
     * AQE small-stage coalescing [guide §2.2 "fewer, larger reduce
@@ -51,13 +53,15 @@ private[graft] object Sessions {
   def tune(b: SparkSession.Builder): SparkSession.Builder =
     EngineConfs.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
 
-  def local(appName: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  /** Local core count: `SPARK_GRAFT_CPUS`, default this host's cores. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  def local(appName: String): SparkSession =
     tune(SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
       .appName(appName)
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC"))
       .getOrCreate()
-  }
 }

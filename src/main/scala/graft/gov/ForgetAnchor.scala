@@ -80,17 +80,9 @@ object ForgetAnchor {
     val factors = sys.env.getOrElse("SPARK_GRAFT_FORGET_FACTORS", "1,400")
       .split(",").map(_.trim.toInt).toSeq
     require(factors.head == 1, "first factor must be the ×1 baseline")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local("graft-forget-anchor")
     spark.sparkContext.setLogLevel("WARN")
-
-    def d3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    import graft.Measure.Json._
 
     // PARTIAL RE-MEASURE (the Bench merge discipline): optional 2nd arg
     // = comma-separated factors to re-run; every other factor's block
@@ -107,26 +99,24 @@ object ForgetAnchor {
     val retained: Map[Int, (Double, Long, Double, Double)] = only match {
       case None => Map.empty
       case Some(sel) =>
-        val p = java.nio.file.Paths.get(outPath)
-        require(java.nio.file.Files.exists(p),
-          s"partial re-measure needs an existing $outPath")
-        val txt = new String(java.nio.file.Files.readAllBytes(p),
-          java.nio.charset.StandardCharsets.UTF_8)
-        require(txt.contains("\"sf\":\"" + srcDir + "\"") &&
-          txt.contains(s""""mod":$Mod"""),
+        val prior = graft.Measure.read(outPath)
+        require(prior.isDefined, s"partial re-measure needs an existing $outPath")
+        require(prior.get.str("sf").contains(srcDir) &&
+          prior.get.get("mod").contains(num(Mod.toLong)),
           s"existing $outPath is for a different sf dir or mod")
-        val block =
-          ("\"x(\\d+)\":\\{\"t\":([0-9.]+),\"ledger_rows\":(\\d+)," +
-            "\"victims\":\\d+,\"probe_pre\":([0-9.]+)," +
-            "\"probe_post\":([0-9.]+)\\}").r
-        val all = block.findAllMatchIn(txt).map(m =>
-          m.group(1).toInt -> ((m.group(2).toDouble, m.group(3).toLong,
-            m.group(4).toDouble, m.group(5).toDouble))).toMap
+        val all = prior.get.fields.collect { case (k, b: Obj) if k.startsWith("x") =>
+          def n(f: String) = b.get(f).collect { case v: Num => v.toDouble }.get
+          k.drop(1).toInt -> ((n("t"), n("ledger_rows").toLong,
+            n("probe_pre"), n("probe_post")))
+        }.toMap
         val missing = factors.toSet -- sel -- all.keySet
         require(missing.isEmpty,
           s"factors $missing neither re-measured nor in $outPath")
         all.filter { case (f, _) => factors.contains(f) && !sel.contains(f) }
     }
+    val band = new graft.Measure.Band(
+      () => graft.Calib.bwParSec(spark.sparkContext, graft.Sessions.cpus),
+      "fanchor")
     // One DISCARDED probe after a throwaway Spark job: the very first
     // bwParSec of a session reads ~1.5-2x high even past its internal
     // warm pass (JIT + page-cache state of a cold JVM) — observed
@@ -134,27 +124,14 @@ object ForgetAnchor {
     // quiet. The warm-up is not a measurement; it just keeps the first
     // REAL probe comparable to the rest of the session.
     spark.range(1000000).selectExpr("sum(id)").collect()
-    val discard = graft.Calib.bwParSec(spark.sparkContext, cpus.toInt)
-    System.err.println(f"[fanchor] warm-up probe $discard%.3f s (discarded)")
+    band.take()
     // Quiet gate for the factors re-measured this run: when retained
-    // blocks exist their probes define the quiet reference; wait
-    // (bounded) for the box to read in-band before a bracket opens.
-    val retainedRef: Option[Double] = {
-      val ps = retained.values.flatMap(v => Seq(v._3, v._4)).toSeq.sorted
-      if (ps.isEmpty) None else Some(ps(ps.size / 2))
-    }
-    var gateBudgetMs = 5L * 60 * 1000
-    def gatedProbe(label: String): Double = {
-      var p = graft.Calib.bwParSec(spark.sparkContext, cpus.toInt)
-      while (retainedRef.exists(r =>
-          p > graft.Calib.BandSkewRatio * r) && gateBudgetMs > 0) {
-        System.err.println(f"[fanchor] $label probe $p%.3f high vs " +
-          f"retained ref ${retainedRef.get}%.3f — waiting")
-        Thread.sleep(30000); gateBudgetMs -= 30000
-        p = graft.Calib.bwParSec(spark.sparkContext, cpus.toInt)
-      }
-      p
-    }
+    // blocks exist their probes are the quiet reference, and a bracket
+    // opens only once the box reads in-band (bounded wait).
+    val retainedProbes = retained.values.flatMap(v => Seq(v._3, v._4)).toSeq
+    if (retainedProbes.nonEmpty) band.pin(retainedProbes)
+    def gatedProbe(label: String): Double =
+      if (retainedProbes.isEmpty) band.take() else band.waitQuiet(label)
 
     val rows = factors.filter(f => only.forall(_.contains(f))).map { f =>
       val dir = s"/tmp/graft_fanchor/x$f"
@@ -176,12 +153,8 @@ object ForgetAnchor {
       // Min-of-2 timed erasures (slices 0 and 1 — disjoint halves; the
       // Bench storage hygiene between passes).
       val per = (1 to 2).map { _ =>
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
-        val t0 = System.nanoTime()
-        ForgetScale.frameAt(spark, dir, Mod)
-          .write.format("noop").mode("overwrite").save()
-        val sec = (System.nanoTime() - t0) / 1e9
+        val sec = graft.Measure.timedNoop(spark)(
+          ForgetScale.frameAt(spark, dir, Mod))
         val ledger = ForgetScale.lastFrame(spark, dir, Mod).count()
         System.err.println(f"[fanchor] x$f pass: $sec%.1f s, " +
           s"$ledger ledger rows")
@@ -193,15 +166,14 @@ object ForgetAnchor {
       // wake, not a co-tenant. Re-probe up to 3 times at 30 s spacing
       // and keep the min — a genuinely contended window stays high
       // through the settle and still flags the artifact.
-      var probePost = graft.Calib.bwParSec(spark.sparkContext, cpus.toInt)
+      var probePost = band.take()
       var settles = 3
       while (probePost > graft.Calib.BandSkewRatio * probePre &&
           settles > 0) {
         System.err.println(f"[fanchor] x$f post probe $probePost%.3f " +
           "high — settling 30 s")
         Thread.sleep(30000)
-        probePost = math.min(probePost,
-          graft.Calib.bwParSec(spark.sparkContext, cpus.toInt))
+        probePost = math.min(probePost, band.take())
         settles -= 1
       }
       // The block reports the (time, rows) pair of ONE pass — the
@@ -230,19 +202,16 @@ object ForgetAnchor {
     val gMax = byFactor(fMax)._1 / (fMax * t1)
     val bar = graft.Scaling.gBarAt(fMax)
     val barsOk = fMax == 1 || gMax <= bar
-    val blocks = series.map { case (f, (sec, ledger, pre, post)) =>
-      s""""x$f":{"t":${d3(sec)},"ledger_rows":$ledger,""" +
-        s""""victims":${ledger / 7},"probe_pre":${d3(pre)},""" +
-        s""""probe_post":${d3(post)}}"""
-    }.mkString(",")
-    val json = s"""{"metric":"forget_anchor","sf":"$srcDir","mod":$Mod,""" +
-      s""""factors":[${factors.mkString(",")}],$blocks,""" +
-      s""""g$fMax":${d3(gMax)},"g_bar":${d3(bar)},""" +
-      s""""band":"${if (skewed) "skewed" else "ok"}",""" +
-      s""""bars":${if (barsOk) "\"ok\"" else "\"broken\""}}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-      (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    println(json)
+    val json = Obj(Seq("metric" -> Str("forget_anchor"), "sf" -> Str(srcDir),
+      "mod" -> num(Mod.toLong), "factors" -> Arr(factors.map(f => num(f.toLong)))) ++
+      series.map { case (f, (sec, ledger, pre, post)) =>
+        s"x$f" -> Obj(Seq("t" -> num(sec), "ledger_rows" -> num(ledger),
+          "victims" -> num(ledger / 7), "probe_pre" -> num(pre),
+          "probe_post" -> num(post)))
+      } ++ Seq(s"g$fMax" -> num(gMax), "g_bar" -> num(bar),
+        "band" -> Str(if (skewed) "skewed" else "ok"),
+        "bars" -> Str(if (barsOk) "ok" else "broken")))
+    println(graft.Measure.write(outPath, json))
     spark.stop()
     if (!barsOk) {
       System.err.println(f"[fanchor] BAR BROKEN: g$fMax $gMax%.3f > $bar%.3f")

@@ -166,24 +166,19 @@ object HashedLogReg {
     * labels. Returns the model and the per-iteration loss curve. */
   def train(feats: DataFrame, labels: DataFrame, buckets: Int,
       iters: Int, lr: Double): (Model, Seq[Step]) = {
-    val sc = feats.sparkSession.sparkContext
     // Storage discipline (the fixpoint convention): each iteration's
     // checkpoint blocks are released once its collects land — N
     // iterations must hold ONE live iteration set plus `f`, never N dead
     // ones slowly bloating executor storage into eviction/GC territory.
-    // Ownership is tracked by diffing persistent-RDD ids around each
-    // checkpoint, so frames the CALLER persisted are never touched.
-    def persistedIds = sc.getPersistentRDDs.keySet.toSet
-    val preExisting = persistedIds
-    // One materialization serves every iteration (featurize tokenizes
-    // the corpus — unpinned, each pass would redo it).
+    // Frames are released by their own ids ([[graft.ops.CheckpointIds]]),
+    // so frames the caller or a concurrent thread persisted are never
+    // touched. One materialization serves every iteration (featurize
+    // tokenizes the corpus — unpinned, each pass would redo it).
     val f = feats.join(labels, Seq("doc_id")).localCheckpoint(true)
-    val fIds = persistedIds -- preExisting
     val nDocs = f.select(countDistinct("doc_id")).head().getLong(0).toDouble
     var model = Model(buckets, 0.0, Array.fill(buckets)(0.0))
     val steps = Seq.newBuilder[Step]
     for (it <- 0 until iters) {
-      val beforeIter = persistedIds
       val scored = predict(f, model)
         .join(labels, Seq("doc_id"))
         .withColumn("err", col("p") - col("y"))
@@ -204,13 +199,10 @@ object HashedLogReg {
       grads.foreach { case (b, g) => w(b) -= lr * g / nDocs }
       model = Model(buckets, model.bias - lr * gBias, w)
       // All of scored's readers have collected — drop its blocks now.
-      sc.getPersistentRDDs
-        .filter { case (id, _) => !beforeIter(id) }
-        .values.foreach(_.unpersist(blocking = false))
+      graft.ops.CheckpointIds.release(scored)
     }
     // The model is driver state; nothing returned references f.
-    sc.getPersistentRDDs.filter { case (id, _) => fIds(id) }
-      .values.foreach(_.unpersist(blocking = false))
+    graft.ops.CheckpointIds.release(f)
     (model, steps.result())
   }
 }

@@ -71,17 +71,13 @@ object BpeTrainer {
     * frame (w, freq, syms). */
   def train(wordFreq: DataFrame, nMerges: Int, minFreq: Long = 2L)
       : (Seq[Merge], DataFrame) = {
-    val sc = wordFreq.sparkSession.sparkContext
-    def persistedIds = sc.getPersistentRDDs.keySet.toSet
-    val preExisting = persistedIds
+    // Each merge releases its predecessor by its own ids
+    // ([[CheckpointIds]]) once the successor has eagerly materialized — a
+    // run holds ONE vocabulary-sized block set, not nMerges of them, and
+    // never touches frames the caller or a concurrent thread persisted.
     var words = wordFreq.withColumn("syms", charSplit(col("w")))
       .select("w", "freq", "syms")
       .localCheckpoint(true)
-    // Ids of the CURRENT checkpoint's blocks (diffed, so caller-persisted
-    // frames are never touched): each merge releases its predecessor once
-    // the successor has eagerly materialized — a run holds ONE
-    // vocabulary-sized block set, not nMerges of them.
-    var liveIds = persistedIds -- preExisting
     val merges = Seq.newBuilder[Merge]
     var step = 0
     var dry = false
@@ -94,18 +90,16 @@ object BpeTrainer {
         case Some(row) =>
           val (l, r, f) = (row.getString(0), row.getString(1), row.getLong(2))
           merges += Merge(step, l, r, f)
-          val before = persistedIds
           // Pin the plan every iteration: the rewrite is cheap on the
           // vocabulary frame, and an unpinned N-deep fold chain would
           // re-run every earlier merge per pass (and grow the plan
           // unboundedly — the components-fixpoint discipline). Eager, so
           // the predecessor's blocks are no longer needed once it returns.
-          words = words.withColumn("syms", mergeAdjacent(col("syms"), l, r))
+          val next = words
+            .withColumn("syms", mergeAdjacent(col("syms"), l, r))
             .localCheckpoint(true)
-          val next = persistedIds -- before
-          sc.getPersistentRDDs.filter { case (id, _) => liveIds(id) }
-            .values.foreach(_.unpersist(blocking = false))
-          liveIds = next
+          CheckpointIds.release(words)
+          words = next
           step += 1
       }
     }

@@ -40,4 +40,14 @@ object CheckpointIds {
       .filter { case (id, _) => ids(id) }
       .values.foreach(_.unpersist(blocking = false))
   }
+
+  /** Run `body` with a `pin` function that eagerly localCheckpoints a
+    * frame; every frame pinned through it is [[release]]d by its own ids
+    * when `body` exits, normally or not — so what `body` returns must
+    * not read a pinned frame. */
+  def scoped[A](body: (DataFrame => DataFrame) => A): A = {
+    val pinned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    try body { df => pinned += df.localCheckpoint(true); pinned.last }
+    finally pinned.foreach(release)
+  }
 }

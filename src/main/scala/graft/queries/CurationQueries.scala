@@ -34,9 +34,7 @@ object CurationQueries {
     // (no cross-query materialization — round-15 verdict). The CCNet
     // pipelines keep their own restricted fixpoints (membership changes
     // the candidate graph).
-    Tables.sharedFrame(s, dir, "curated_split") {
-      curatedSplitOf(s, dir, restrictTo = None)
-    }
+    curatedSplitOf(s, dir, restrictTo = None)
 
   /** [[curatedSplit]] with an optional MEMBERSHIP restriction applied
     * to the gate survivors before dedup — ONE definition of the

@@ -64,10 +64,8 @@ object DedupQueries {
     * before the exchange]) and the trailing fanout keeps the
     * shingle/hash map work at full width. */
   private def tokenized(s: SparkSession, dir: String): DataFrame =
-    Tables.fanout(Tables.sharedFrame(s, dir, "tokenized_docs") {
-      tokenizedOf(Tables.fanout(t(s, dir, "documents")))
-        .select("doc_id", "lang", "source", "n_chars", "toks")
-    })
+    Tables.fanout(tokenizedOf(Tables.fanout(t(s, dir, "documents")))
+      .select("doc_id", "lang", "source", "n_chars", "toks"))
 
   /** 3-word shingles (1-based element_at — same indexing as DuckDB). */
   private val shingleExpr =
@@ -238,9 +236,7 @@ object DedupQueries {
     // fixpoints); since r16 the banded self-join + distinct over the
     // 64-bucket store runs INLINE inside each consumer's own plan
     // (round-15 verdict — no cross-query materialization).
-    Tables.sharedFrame(s, dir, "minhash_cand_pairs") {
-      sharedFullMinhashIndex(s, dir).candidatePairs()
-    }
+    sharedFullMinhashIndex(s, dir).candidatePairs()
 
   /** MinHash-LSH candidate pairs: docs sharing any band bucket. The join
     * key is (band, bandKey) — shuffle is proportional to bucket sizes,
@@ -268,9 +264,7 @@ object DedupQueries {
       dir: String): DataFrame = minhashComponents(s, dir)
 
   private def minhashComponents(s: SparkSession, dir: String): DataFrame =
-    Tables.sharedFrame(s, dir, "minhash_components") {
-      connectedComponents(s, minhashCandidates(s, dir))
-    }
+    connectedComponents(s, minhashCandidates(s, dir))
 
   /** Near-dup CLUSTER-SIZE histogram — the dedup savings estimator read
     * off the component structure before any removal runs: for each
@@ -414,7 +408,7 @@ object DedupQueries {
     * consumers; the sketch pass (one md5 per token) runs inline inside
     * each consumer's own plan (r16). */
   private def simhashShared(s: SparkSession, dir: String): DataFrame =
-    Tables.fanout(Tables.sharedFrame(s, dir, "simhash")(simhashFp(s, dir)))
+    Tables.fanout(simhashFp(s, dir))
 
   /** SimHash fingerprints (16-bit sign sketch). */
   private val simhashFingerprints: Q = (s, dir) =>
@@ -495,16 +489,14 @@ object DedupQueries {
     // containment, prefix_join, lsh_jaccard, minhash_est); since r16
     // the tokenize+sort+hash pass runs INLINE inside each consumer's
     // own plan (round-15 verdict — no cross-query materialization).
-    Tables.fanout(Tables.sharedFrame(s, dir, "termsets") {
-      Tables.fanout(t(s, dir, "documents"))
-        .select(col("doc_id"), col("lang"),
-          explode(array_distinct(TokenOps.terms(col("text")))).as("term"))
-        .groupBy("doc_id", "lang")
-        .agg(slice(array_sort(collect_set(col("term"))), 1, MaxTermsPerDoc).as("terms"))
-        .select(col("doc_id"), col("lang"),
-          array_sort(transform(col("terms"), tm => xxhash64(tm))).as("tset"))
-        .withColumn("n", size(col("tset")))
-    })
+    Tables.fanout(Tables.fanout(t(s, dir, "documents"))
+      .select(col("doc_id"), col("lang"),
+        explode(array_distinct(TokenOps.terms(col("text")))).as("term"))
+      .groupBy("doc_id", "lang")
+      .agg(slice(array_sort(collect_set(col("term"))), 1, MaxTermsPerDoc).as("terms"))
+      .select(col("doc_id"), col("lang"),
+        array_sort(transform(col("terms"), tm => xxhash64(tm))).as("tset"))
+      .withColumn("n", size(col("tset"))))
   // The TRAILING fanout is load-bearing: the term-set aggregate's shuffle
   // output is tiny at bench scale, so AQE coalesces its final stage to ~1
   // partition — and the checkpoint downstream then pins the PAIR JOIN
@@ -821,17 +813,15 @@ object DedupQueries {
     * rebuilds identical sets; like [[termSets]], the
     * tokenize+shingle+hash pass runs inline per consumer (r16). */
   private[queries] def zipfShingleSets(s: SparkSession, dir: String): DataFrame =
-    Tables.fanout(Tables.sharedFrame(s, dir, "shinglesets") {
-      Tables.fanout(tokenized(s, dir))
-        .select(col("doc_id"), col("lang"),
-          explode(expr(shingleExpr)).as("shingle"))
-        .select(col("doc_id"), col("lang"),
-          conv(substring(md5(col("shingle")), 1, 15), 16, 10)
-            .cast("long").as("h"))
-        .groupBy("doc_id", "lang")
-        .agg(array_sort(collect_set(col("h"))).as("tset"))
-        .withColumn("n", size(col("tset")))
-    })
+    Tables.fanout(Tables.fanout(tokenized(s, dir))
+      .select(col("doc_id"), col("lang"),
+        explode(expr(shingleExpr)).as("shingle"))
+      .select(col("doc_id"), col("lang"),
+        conv(substring(md5(col("shingle")), 1, 15), 16, 10)
+          .cast("long").as("h"))
+      .groupBy("doc_id", "lang")
+      .agg(array_sort(collect_set(col("h"))).as("tset"))
+      .withColumn("n", size(col("tset"))))
 
   /** SPARSE-REGIME ngram Jaccard (`q_dedup_ngram_jaccard_zipf`) — the
     * SAME cost-based selective plan as `q_dedup_ngram_jaccard`, run
@@ -963,9 +953,7 @@ object DedupQueries {
   /** The chunk table — one definition for both CDC consumers; the
     * boundary+fingerprint pass runs inline per consumer (r16). */
   private def cdcChunksShared(s: SparkSession, dir: String): DataFrame =
-    Tables.fanout(Tables.sharedFrame(s, dir, "cdc_chunks") {
-      cdcChunkFrame(tokenized(s, dir))
-    })
+    Tables.fanout(cdcChunkFrame(tokenized(s, dir)))
 
   private val cdcChunks: Q = (s, dir) =>
     cdcChunksShared(s, dir).orderBy("doc_id", "chunk_idx")

@@ -53,17 +53,15 @@ object MlEvalQueries {
     * regex pass is the dominant per-query cost (~0.5 s at sf0.1), paid
     * honestly on each consumer's clock. */
   private def evalBase(s: SparkSession, dir: String): DataFrame =
-    Tables.sharedFrame(s, dir, "mleval_base") {
-      Tables.fanout(Tables.t(s, dir, "documents"))
-        .withColumn("toks_all",
-          filter(split(TextOps.cleanText(col("text")), " "), w => w =!= ""))
-        .withColumn("toks", TokenOps.terms(col("text")))
-        .select(col("doc_id"), col("source"), col("lang"),
-          length(col("text")).as("n_chars_raw"),
-          length(regexp_replace(col("text"), "[^A-Za-z]", "")).as("n_alpha"),
-          size(col("toks_all")).cast("long").as("n_all"),
-          size(col("toks")).cast("long").as("n_terms"))
-    }
+    Tables.fanout(Tables.t(s, dir, "documents"))
+      .withColumn("toks_all",
+        filter(split(TextOps.cleanText(col("text")), " "), w => w =!= ""))
+      .withColumn("toks", TokenOps.terms(col("text")))
+      .select(col("doc_id"), col("source"), col("lang"),
+        length(col("text")).as("n_chars_raw"),
+        length(regexp_replace(col("text"), "[^A-Za-z]", "")).as("n_alpha"),
+        size(col("toks_all")).cast("long").as("n_all"),
+        size(col("toks")).cast("long").as("n_terms"))
 
   /** Per-doc (score, y): stop-word ratio in basis points vs the labeled
     * `lang = 'en'`. Empty-token docs are excluded (the ratio is

@@ -599,9 +599,7 @@ object SamplingQueries {
     * wasted global sort). Runs inline inside each consumer (r16). */
   private def interleaveFrame(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    Tables.sharedFrame(s, dir, "interleave_manifest") {
-      interleaveFrameInline(s, dir)
-    }
+    interleaveFrameInline(s, dir)
 
   private def interleaveFrameInline(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
@@ -810,9 +808,7 @@ object SamplingQueries {
     * join), then TWO O(sources) aggregates — nothing new is
     * corpus-sized. */
   private val sampleDoremi: Q = (s, dir) =>
-    Tables.sharedFrame(s, dir, "doremi_weights") {
-      doremiWeightsOf(s, dir)
-    }.orderBy("source")
+    doremiWeightsOf(s, dir).orderBy("source")
 
   private def doremiWeightsOf(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =

@@ -655,9 +655,8 @@ object SimilarityQueries {
     * inline inside each audit's own plan (r16). */
   private def sharedCosineTruth(s: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame =
-    Tables.sharedFrame(s, dir, "costruth")(
-      bruteForceTopK(s, dir).where(col("rnk") <= LshTopK)
-        .select(col("qid"), col("cid")))
+    bruteForceTopK(s, dir).where(col("rnk") <= LshTopK)
+      .select(col("qid"), col("cid"))
 
   private val annRecall: Q = (s, dir) => {
     val truth = sharedCosineTruth(s, dir)
@@ -1174,7 +1173,7 @@ object SimilarityQueries {
     * truth side IS part of what a recall audit computes). */
   private def sharedL2Truth(s: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame =
-    Tables.sharedFrame(s, dir, "l2truth")(exactL2TruthTopK(s, dir))
+    exactL2TruthTopK(s, dir)
 
   /** Per-query hits + recall bp of `approx(qid, cid)` vs the truth. */
   private def recallVsTruth(truth: DataFrame, approx: DataFrame): DataFrame =
@@ -1377,15 +1376,13 @@ object SimilarityQueries {
     // references it two to four times (two probe passes + two id
     // sides), and the langid tokenize would otherwise replan and
     // re-execute per reference. Materialized once INSIDE each query's
-    // own timed plan — the r15 cross-query sharedFrame memoisation is
-    // gone (round-15 verdict).
-    val emb = Tables.sharedFrame(s, dir, "bitext_sides") {
-      t(s, dir, "embeddings")
-        .where(col("vec_id") >= NumQueries)
-        .join(TextQueries.langPredictedFrame(s, dir),
-          col("vec_id") === col("doc_id"))
-        .select("vec_id", "embedding", "predicted")
-    }.localCheckpoint(true)
+    // own timed plan — no cross-query memoisation (round-15 verdict).
+    val emb = t(s, dir, "embeddings")
+      .where(col("vec_id") >= NumQueries)
+      .join(TextQueries.langPredictedFrame(s, dir),
+        col("vec_id") === col("doc_id"))
+      .select("vec_id", "embedding", "predicted")
+      .localCheckpoint(true)
     (emb.where(col("predicted") === "en").select("vec_id", "embedding"),
       emb.where(col("predicted") === "fr").select("vec_id", "embedding"))
   }
@@ -1472,26 +1469,25 @@ object SimilarityQueries {
     * both the mined and the served pair sets (the recall audit) pays
     * the langid side materialization once, not once per arm (r16). */
   private def bitextMinedFrameFrom(s: org.apache.spark.sql.SparkSession,
-      dir: String, sides: (DataFrame, DataFrame)): DataFrame =
-    Tables.sharedFrame(s, dir, "bitext_mined") {
-      val (a, b) = sides
-      // Precomputed per-side norms (Similarity.cosinePre, r16): the A×B
+      dir: String, sides: (DataFrame, DataFrame)): DataFrame = {
+    val (a, b) = sides
+    // Precomputed per-side norms (Similarity.cosinePre, r16): the A×B
     // cross pays only the dot loop per pair — bit-identical to the
     // fused cosine (same accumulation order, same final tree).
     val scores = Tables.fanout(
-          a.select(col("vec_id").as("aid"), col("embedding").as("ae")))
-        .withColumn("an", Similarity.norm(col("ae")))
-        .crossJoin(broadcast(
-          b.select(col("vec_id").as("bid"), col("embedding").as("be"))
-            .withColumn("bn", Similarity.norm(col("be")))))
-        .select(col("aid"), col("bid"),
-          floor(lit(1000000) *
-            Similarity.cosinePre(col("ae"), col("be"), col("an"), col("bn")))
-            .cast("long").as("cp"))
-        .where(col("cp") > 0)
-        .localCheckpoint(true) // one cosine pass feeds both directions
-      marginPairs(scores, scores)
-    }
+        a.select(col("vec_id").as("aid"), col("embedding").as("ae")))
+      .withColumn("an", Similarity.norm(col("ae")))
+      .crossJoin(broadcast(
+        b.select(col("vec_id").as("bid"), col("embedding").as("be"))
+          .withColumn("bn", Similarity.norm(col("be")))))
+      .select(col("aid"), col("bid"),
+        floor(lit(1000000) *
+          Similarity.cosinePre(col("ae"), col("be"), col("an"), col("bn")))
+          .cast("long").as("cp"))
+      .where(col("cp") > 0)
+      .localCheckpoint(true) // one cosine pass feeds both directions
+    marginPairs(scores, scores)
+  }
 
   private val bitextMargin: Q = (s, dir) =>
     bitextMinedFrame(s, dir).orderBy("src_id")
@@ -1514,26 +1510,25 @@ object SimilarityQueries {
   /** [[bitextServedFrame]] over PRE-BUILT sides (see
     * [[bitextMinedFrameFrom]]). */
   private def bitextServedFrameFrom(s: org.apache.spark.sql.SparkSession,
-      dir: String, sides: (DataFrame, DataFrame)): DataFrame =
-    Tables.sharedFrame(s, dir, "bitext_served") {
-      val idx = sharedIvfIndex(s, dir)
-      val (a, b) = sides
-      val aIds = a.select(col("vec_id").as("cid"))
-      val bIds = b.select(col("vec_id").as("cid"))
-      def scoresOf(q: DataFrame, otherSide: DataFrame,
-          qName: String, cName: String) =
-        idx.probeMatches(q, "vec_id", "embedding", IvfProbes)
-          .join(otherSide, Seq("cid"))
-          .select(col("qid").as(qName), col("cid").as(cName),
-            floor(lit(1000000) * col("cos")).cast("long").as("cp"))
-          .where(col("cp") > 0)
-      // No per-side checkpoints (r16): marginPairs materializes the
-      // tagged UNION of the two probe passes once — each probe subtree
-      // executes exactly once inside that one job.
-      marginPairs(
-        scoresOf(a, bIds, "aid", "bid"),
-        scoresOf(b, aIds, "bid", "aid"))
-    }
+      dir: String, sides: (DataFrame, DataFrame)): DataFrame = {
+    val idx = sharedIvfIndex(s, dir)
+    val (a, b) = sides
+    val aIds = a.select(col("vec_id").as("cid"))
+    val bIds = b.select(col("vec_id").as("cid"))
+    def scoresOf(q: DataFrame, otherSide: DataFrame,
+        qName: String, cName: String) =
+      idx.probeMatches(q, "vec_id", "embedding", IvfProbes)
+        .join(otherSide, Seq("cid"))
+        .select(col("qid").as(qName), col("cid").as(cName),
+          floor(lit(1000000) * col("cos")).cast("long").as("cp"))
+        .where(col("cp") > 0)
+    // No per-side checkpoints (r16): marginPairs materializes the
+    // tagged UNION of the two probe passes once — each probe subtree
+    // executes exactly once inside that one job.
+    marginPairs(
+      scoresOf(a, bIds, "aid", "bid"),
+      scoresOf(b, aIds, "bid", "aid"))
+  }
 
   private val bitextServed: Q = (s, dir) =>
     bitextServedFrame(s, dir).orderBy("src_id")

@@ -35,33 +35,6 @@ object Tables {
   /** Shared query-function shape: (session, sfDir) => result. */
   type Q = (SparkSession, String) => DataFrame
 
-  /** NAMED COMPOSITION SEAM for a corpus-derived frame several queries
-    * consume — and, since round 16, a plain INLINE build: the returned
-    * frame IS the declared computation, planned and executed inside
-    * whatever query consumes it.
-    *
-    * History: rounds 9–15 memoised these builds to per-application
-    * parquet under java.io.tmpdir, so a bench-timed consumer executed a
-    * bare scan of a table built during the untimed warmup pass — the
-    * declared computation ran outside every timed region (the round-15
-    * verdict's gaming finding), the committed plan dumps showed
-    * `graft_shared` scans instead of the query's own operators, and the
-    * tmpdir write was local-mode-only (on a multi-node cluster each
-    * executor writes its partitions to its own local filesystem). All
-    * three problems have one fix: no cross-query materialization at
-    * all. Each graded query now computes its shared statistic on its
-    * own clock; reuse WITHIN one query's plan goes through the
-    * established eager-localCheckpoint convention at the call site
-    * (cluster swap: persist(MEMORY_AND_DISK_2), PLANS.md). Serve-many
-    * economics across queries live only in the persisted model/index
-    * stores (`sim/` manifests, NgramLm) whose builds the oracle twins
-    * replicate — the legitimate fit-once/serve-many shape.
-    *
-    * The (spark, dir, name) signature is kept so call sites still name
-    * the seam; `name` documents which statistic the frames share. */
-  def sharedFrame(spark: SparkSession, dir: String, name: String)(
-      build: => DataFrame): DataFrame = build
-
   /** Spread a DataFrame across all cores. Small single-file parquet inputs
     * arrive as ONE split (file < maxPartitionBytes), which would serialize
     * any expensive per-row/per-pair work downstream onto one task. The

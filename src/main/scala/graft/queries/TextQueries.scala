@@ -384,17 +384,16 @@ object TextQueries {
     * consumer's own plan (round-15 verdict — no cross-query
     * materialization). */
   private[queries] def heldoutFrame(s: SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame =
-    Tables.sharedFrame(s, dir, "heldout_scored") {
-      val tagged = SamplingQueries.withSplit(docs(s, dir), "doc_id")
-        .select(col("doc_id"), col("split"),
-          explode(TokenOps.terms(col("text"))).as("term"))
-      // Checkpoint at the aggregate's AQE width (the r15 fanout-overhead
-      // rule — see tfidf's comment).
-      heldoutOf(tagged.groupBy("doc_id", "split", "term")
-        .agg(count(lit(1)).as("k"))
-        .localCheckpoint(true)) // train LM + val scoring read one pass
-    }
+      dir: String): org.apache.spark.sql.DataFrame = {
+    val tagged = SamplingQueries.withSplit(docs(s, dir), "doc_id")
+      .select(col("doc_id"), col("split"),
+        explode(TokenOps.terms(col("text"))).as("term"))
+    // Checkpoint at the aggregate's AQE width (the r15 fanout-overhead
+    // rule — see tfidf's comment).
+    heldoutOf(tagged.groupBy("doc_id", "split", "term")
+      .agg(count(lit(1)).as("k"))
+      .localCheckpoint(true)) // train LM + val scoring read one pass
+  }
 
   private val heldoutPpl: Q = (s, dir) =>
     heldoutFrame(s, dir).orderBy("doc_id")
@@ -426,9 +425,7 @@ object TextQueries {
       dir: String): org.apache.spark.sql.DataFrame =
     // One definition of the labels for the buckets query and the
     // inline CCNet pipeline; runs inline per consumer (r16).
-    Tables.sharedFrame(s, dir, "ppl_bucket_labels") {
-      bucketsFrom(s, dir, heldoutFrame(s, dir))
-    }
+    bucketsFrom(s, dir, heldoutFrame(s, dir))
 
   /** The rank-and-cut over ANY per-doc heldout frame (doc_id, …,
     * heldout_mb) — one definition shared by the inline kernel and the
@@ -468,9 +465,7 @@ object TextQueries {
       dir: String): org.apache.spark.sql.DataFrame =
     // One definition for buckets_served + ccnet_served; inline per
     // consumer (r16).
-    Tables.sharedFrame(s, dir, "ppl_bucket_labels_served") {
-      bucketsFrom(s, dir, servedHeldoutFrame(s, dir))
-    }
+    bucketsFrom(s, dir, servedHeldoutFrame(s, dir))
 
   /** The store-served heldout scores — one frozen-LM scoring pass
     * consumed by three graded queries (ppl_served, ppl_buckets_served,
@@ -478,12 +473,10 @@ object TextQueries {
     * LM FIT stays in the persisted store. */
   private def servedHeldoutFrame(s: SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    Tables.sharedFrame(s, dir, "heldout_served") {
-      sharedNgramLm(s, dir).score(
-        SamplingQueries.withSplit(docs(s, dir), "doc_id")
-          .where(col("split") === "val"),
-        "doc_id", "text")
-    }
+    sharedNgramLm(s, dir).score(
+      SamplingQueries.withSplit(docs(s, dir), "doc_id")
+        .where(col("split") === "val"),
+      "doc_id", "text")
 
   /** TRAIN-ONCE / SCORE-MANY: one persisted [[graft.ml.NgramLm]] per
     * (application, corpus dir), fitted on the deterministic train split
@@ -1679,9 +1672,7 @@ object TextQueries {
     // heavy token subtrees (the measured 65 s trap, r14), and (b) the
     // pipelines reference the frame more than once. Cluster swap:
     // persist(MEMORY_AND_DISK_2) (PLANS.md).
-    Tables.sharedFrame(s, dir, "filter_verdicts") {
-      filterVerdictsInline(s, dir)
-    }.localCheckpoint(true)
+    filterVerdictsInline(s, dir).localCheckpoint(true)
 
   private def filterVerdictsInline(s: org.apache.spark.sql.SparkSession,
                                       dir: String): org.apache.spark.sql.DataFrame =
@@ -1910,22 +1901,21 @@ object TextQueries {
     * (SamplingQueries): the "real tokenizer count column" the packing
     * scaladoc promised drops in without changing the packing shape. */
   private[queries] def bpeDocTokens(s: SparkSession, dir: String)
-      : org.apache.spark.sql.DataFrame =
+      : org.apache.spark.sql.DataFrame = {
     // One definition for bpe_tokenize + pack_bpe; the vocabulary-sized
     // BPE replace chain runs inline per consumer (r16).
-    Tables.sharedFrame(s, dir, "bpe_doc_tokens") {
-      val tf = docs(s, dir)
-        .select(col("doc_id"), col("source"),
-          explode(TokenOps.terms(col("text"))).as("term"))
-        .groupBy("doc_id", "source", "term").agg(count(lit(1)).as("tf"))
-      val vocab = tf.select("term").distinct()
-        .select(col("term"),
-          expr(bpeCountExpr("term", spark = true)).cast("long").as("n_sub"))
-      tf.join(vocab, Seq("term"))
-        .groupBy("doc_id", "source")
-        .agg(sum("tf").as("n_ws_tokens"),
-          sum(col("tf") * col("n_sub")).as("n_bpe_tokens"))
-    }
+    val tf = docs(s, dir)
+      .select(col("doc_id"), col("source"),
+        explode(TokenOps.terms(col("text"))).as("term"))
+      .groupBy("doc_id", "source", "term").agg(count(lit(1)).as("tf"))
+    val vocab = tf.select("term").distinct()
+      .select(col("term"),
+        expr(bpeCountExpr("term", spark = true)).cast("long").as("n_sub"))
+    tf.join(vocab, Seq("term"))
+      .groupBy("doc_id", "source")
+      .agg(sum("tf").as("n_ws_tokens"),
+        sum(col("tf") * col("n_sub")).as("n_bpe_tokens"))
+  }
 
   /** DuckDB twin of [[bpeDocTokens]], as a CTE body both BPE consumers
     * paste — the merge recipe string is generated from the SAME

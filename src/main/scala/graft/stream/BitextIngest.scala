@@ -100,12 +100,11 @@ final class BitextIngest(
     * dropped across the three surfaces. */
   def forget(victims: DataFrame,
       checkpointLocation: Option[String]): Long = {
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
-    val v = victims.select(
-        col(victims.columns.head).cast("long").as("__vid"))
-      .distinct().localCheckpoint(true)
-    try {
+    // This call's pins (victim set + nn survivors) are released by
+    // their own ids on exit ([[graft.ops.CheckpointIds.scoped]]).
+    graft.ops.CheckpointIds.scoped { pin =>
+      val v = pin(victims.select(
+          col(victims.columns.head).cast("long").as("__vid")).distinct())
       val nn = ensureNeighborhood()
       val nVictims = nn.join(v, nn("tgt_id") === v("__vid"), "left_semi")
         .count()
@@ -113,9 +112,8 @@ final class BitextIngest(
         // Overwrite is crash-safe here: a torn nn dir loses its
         // _SUCCESS marker and ensureNeighborhood recomputes from the
         // (already redacted) index — convergent, never torn-served.
-        val survivors = nn
-          .join(v, nn("tgt_id") === v("__vid"), "left_anti")
-          .localCheckpoint(true)
+        val survivors = pin(nn
+          .join(v, nn("tgt_id") === v("__vid"), "left_anti"))
         survivors.write.mode(SaveMode.Overwrite).parquet(nnDir)
       }
       val pairsDropped =
@@ -124,12 +122,6 @@ final class BitextIngest(
         MicroBatchIngest.forgetFromBatchStore(spark, outDir,
           v, "tgt_id", checkpointLocation)
       nVictims + pairsDropped
-    } finally {
-      // Release this call's checkpoint blocks (victim pin + nn
-      // survivors) — the withReleasedCheckpoint discipline.
-      val mine = sc.getPersistentRDDs.keySet.toSet -- before
-      sc.getPersistentRDDs.filter { case (id, _) => mine(id) }
-        .values.foreach(_.unpersist(blocking = false))
     }
   }
 

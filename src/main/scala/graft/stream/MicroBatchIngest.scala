@@ -77,16 +77,8 @@ private[graft] object MicroBatchIngest {
     * or accumulate one dead set per trigger) held in ONE place instead
     * of re-implemented per maintainer: a fix to the release rule lands
     * everywhere at once. */
-  def withReleasedCheckpoint[A](df: DataFrame)(f: DataFrame => A): A = {
-    val pinned = df.localCheckpoint(true)
-    // PRECISE attribution ([[graft.ops.CheckpointIds]]): the released
-    // ids are read off the pinned frame itself — the old
-    // getPersistentRDDs before/after diff claimed any RDD a CONCURRENT
-    // thread persisted in the window, and unpersisting a foreign
-    // lineage-truncated checkpoint breaks that frame permanently.
-    try f(pinned)
-    finally graft.ops.CheckpointIds.release(pinned)
-  }
+  def withReleasedCheckpoint[A](df: DataFrame)(f: DataFrame => A): A =
+    graft.ops.CheckpointIds.scoped(pin => f(pin(df)))
 
   /** Idempotent per-batch write: DYNAMIC overwrite of this batch's own
     * `batch_id=<id>` partition only — every other batch's output is
@@ -307,12 +299,12 @@ private[graft] object MicroBatchIngest {
   def forgetFromBatchStore(spark: SparkSession, dir: String,
       victims: DataFrame, idCol: String,
       checkpointLocation: Option[String]): Long = {
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
-    val v = victims.select(
-        col(victims.columns.head).cast("long").as(idCol))
-      .distinct().localCheckpoint(true)
-    try {
+    // This call's pins (victim set + survivor frames) are released by
+    // their own ids on exit — never a persistent-RDD diff, which would
+    // also claim a concurrent thread's checkpoints.
+    graft.ops.CheckpointIds.scoped { pin =>
+      val v = pin(victims.select(
+          col(victims.columns.head).cast("long").as(idCol)).distinct())
       val fs = new Path(dir)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       val prior = latestCompaction(spark, dir)
@@ -340,9 +332,9 @@ private[graft] object MicroBatchIngest {
             "commits (or pass the correct checkpointLocation)")
         if (hit.nonEmpty) {
           val affected = hit.keySet.toSeq
-          val survivors = r.where(col("batch_id").isin(affected: _*))
-            .join(v, Seq(idCol), "left_anti")
-            .localCheckpoint(true) // partition list + write read it once
+          // Pinned: the partition list and the write read it once.
+          val survivors = pin(r.where(col("batch_id").isin(affected: _*))
+            .join(v, Seq(idCol), "left_anti"))
           val kept = survivors.select("batch_id").distinct()
             .collect().map(_.getLong(0)).toSet
           survivors.write
@@ -404,12 +396,6 @@ private[graft] object MicroBatchIngest {
         }
       }
       dropped
-    } finally {
-      // Release this call's checkpoint blocks (victim pin + survivor
-      // frames) — the withReleasedCheckpoint discipline.
-      val mine = sc.getPersistentRDDs.keySet.toSet -- before
-      sc.getPersistentRDDs.filter { case (id, _) => mine(id) }
-        .values.foreach(_.unpersist(blocking = false))
     }
   }
 }

@@ -160,15 +160,19 @@ class HashedLogRegSpec extends SparkSpec {
         (i.toLong, (1000 + i % 50).toLong, 0.25)).toDF("doc_id", "bucket", "x"))
     val labels = (0 until 120).map(i => (i.toLong, (i % 2).toLong))
       .toDF("doc_id", "y")
-    val persistedBefore = spark.sparkContext.getPersistentRDDs.size
+    // Held strongly: the context's persistent-RDD registry is weak-valued,
+    // so an earlier test's dead frame can be collected mid-train and move
+    // a bare count without train touching it.
+    val persistedBefore = spark.sparkContext.getPersistentRDDs
     val (model, steps) = HashedLogReg.train(feats, labels,
       buckets = 65537, iters = 8, lr = 2.0)
     assert(steps.head.loss > steps.last.loss && steps.last.loss < 0.5,
       s"loss did not fall: ${steps.head.loss} -> ${steps.last.loss}")
     assert(model.w(60001) > 0 && model.w(2) < 0,
       s"signs wrong: ${model.w(60001)} / ${model.w(2)}")
-    // The iteration-checkpoint discipline: train leaves NO blocks behind.
-    assert(spark.sparkContext.getPersistentRDDs.size == persistedBefore,
+    // The iteration-checkpoint discipline: train leaves NO blocks behind
+    // and releases none it does not own.
+    assert(spark.sparkContext.getPersistentRDDs.keySet == persistedBefore.keySet,
       "train leaked checkpoint blocks")
   }
 }
