@@ -6,6 +6,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ops.SegmentStore
+
 /** Cross-store right-to-be-forgotten orchestration — the missing top of
   * the governance stack: every persisted store already proves an EXACT
   * per-store forget ([[graft.sim.IvfIndex.forget]],
@@ -68,7 +70,7 @@ import org.apache.spark.sql.functions._
   *   - RETENTION ([[consolidate]]): `request=` dirs would otherwise
   *     accumulate forever. Aged completed requests fold into ONE
   *     consolidated audit segment under the shared
-  *     [[graft.ops.VersionedPaths]] manifest rules (`a=N` manifests,
+  *     [[graft.ops.SegmentStore]] manifest rules (`a=N` manifests,
   *     `audit/seg-*` data): [[tombstones]] stays row-identical,
   *     [[isComplete]] and [[audit]] keep answering for folded requests,
   *     and the folded dirs are swept AFTER the manifest publishes (a
@@ -243,28 +245,27 @@ final class ForgetPipeline(spark: SparkSession, val ledgerDir: String) {
 
   // ---- consolidated audit area (`a=N` manifests over audit/seg-*) ----
 
-  private def auditManifest(): Option[(Seq[String], Set[String])] =
-    graft.ops.VersionedPaths.listNumbered(fs, new Path(ledgerDir), "a=",
-        dirsOnly = false)
-      .map(_._2).sorted.lastOption.map(readAuditManifest)
+  /** The newest audit manifest: (version, segments, folded ids). Body:
+    * `seg <name>` and `req <id>` lines ([[SegmentStore]]'s low layer). */
+  private def auditManifest(): Option[(Long, Seq[String], Set[String])] =
+    SegmentStore.latest(fs, new Path(ledgerDir), "a=").map { v =>
+      val (segs, reqs) = readAuditManifest(v)
+      (v, segs, reqs)
+    }
 
   private def readAuditManifest(v: Long): (Seq[String], Set[String]) = {
-    val in = fs.open(new Path(ledgerDir, s"a=$v"))
-    val lines =
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .map(_.trim).filter(_.nonEmpty).toList
-      finally in.close()
+    val lines = SegmentStore.readLines(fs, new Path(ledgerDir), "a=", v)
     (lines.collect { case s if s.startsWith("seg ") => s.drop(4) },
       lines.collect { case s if s.startsWith("req ") => s.drop(4) }.toSet)
   }
 
   /** Request ids folded into the consolidated audit segments. */
   private def foldedRequests(): Set[String] =
-    auditManifest().map(_._2).getOrElse(Set.empty)
+    auditManifest().map(_._3).getOrElse(Set.empty)
 
   private def auditRows(): DataFrame =
     auditManifest() match {
-      case Some((segs, _)) if segs.nonEmpty =>
+      case Some((_, segs, _)) if segs.nonEmpty =>
         spark.read.parquet(
             segs.map(s => s"$ledgerDir/audit/$s"): _*)
           .select("request_id", "id", "store", "version")
@@ -275,26 +276,27 @@ final class ForgetPipeline(spark: SparkSession, val ledgerDir: String) {
     }
 
   /** RETENTION: fold aged COMPLETED requests into one consolidated
-    * audit segment (VersionedPaths manifest rules — readers see the old
-    * or the new audit set, never a torn mix). [[tombstones]] stays
-    * row-identical and [[isComplete]]/[[audit]] keep answering for the
-    * folded ids; the folded `request=` dirs are swept AFTER the
-    * manifest publishes. Replaying a consolidation (same or overlapping
-    * ids) is safe: already-folded ids are skipped, leftover dirs from a
-    * crashed sweep are re-swept. Returns the published manifest
-    * version, or the current one when nothing new folds. */
+    * audit segment ([[SegmentStore]] manifest rules — readers see the
+    * old or the new audit set, never a torn mix; the publish is based
+    * on the manifest version this call read, so a racing consolidation
+    * fails loudly instead of dropping the other's folded ids).
+    * [[tombstones]] stays row-identical and [[isComplete]]/[[audit]]
+    * keep answering for the folded ids; the folded `request=` dirs are
+    * swept AFTER the manifest publishes. Replaying a consolidation
+    * (same or overlapping ids) is safe: already-folded ids are skipped,
+    * leftover dirs from a crashed sweep are re-swept. Returns the
+    * published manifest version, or the current one when nothing new
+    * folds. */
   def consolidate(requestIds: Seq[String]): Long = {
     requestIds.foreach(validId)
-    val (liveSegs, folded0) =
-      auditManifest().getOrElse((Seq.empty[String], Set.empty[String]))
+    val manifest = auditManifest()
+    val currentV = manifest.map(_._1)
+    val folded0 = manifest.map(_._3).getOrElse(Set.empty[String])
     val toFold = requestIds.filterNot(folded0).distinct
     toFold.foreach { id =>
       require(fs.exists(new Path(requestPath(id), "_SUCCESS")),
         s"request '$id' is not committed — only completed requests consolidate")
     }
-    val currentV = graft.ops.VersionedPaths
-      .listNumbered(fs, new Path(ledgerDir), "a=", dirsOnly = false)
-      .map(_._2).sorted.lastOption
     if (toFold.isEmpty) {
       // Pure re-sweep: clean up dirs a crashed prior sweep left behind.
       folded0.intersect(requestIds.toSet)
@@ -312,47 +314,21 @@ final class ForgetPipeline(spark: SparkSession, val ledgerDir: String) {
     rows.write.mode(SaveMode.Overwrite)
       .parquet(s"$ledgerDir/audit/$seg")
     val folded = folded0 ++ toFold
-    val body = (Seq(s"seg $seg") ++ folded.toSeq.sorted.map(r => s"req $r"))
-      .mkString("", "\n", "\n")
-    val tmp = new Path(ledgerDir, s".audit-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, false)
-    try out.write(body.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    val v = graft.ops.VersionedPaths.publish(fs, new Path(ledgerDir), tmp,
-      "a=", currentV.map(_ + 1).getOrElse(0L))
+    val v = SegmentStore.publishLines(fs, new Path(ledgerDir), "a=",
+      s"seg $seg" +: folded.toSeq.sorted.map(r => s"req $r"), currentV)
     // Sweep AFTER publish: a crash here leaves dirs that every read
     // already excludes (folded set wins); the next consolidate re-sweeps.
+    // Superseded segments are reclaimed by vacuumAudit.
     folded.foreach(id => fs.delete(requestPath(id), true))
-    val _ = liveSegs // superseded segments reclaimed by vacuumAudit
     v
   }
 
   /** Keep the newest `keep` audit-manifest versions; sweep older
     * manifests and unreferenced `audit/seg-*` dirs. Maintenance-window
     * op (no concurrent [[consolidate]]), like every store vacuum. */
-  def vacuumAudit(keep: Int = 1): (Int, Int) = {
-    require(keep >= 1, "must retain at least the live version")
-    val root = new Path(ledgerDir)
-    val versions = graft.ops.VersionedPaths
-      .listNumbered(fs, root, "a=", dirsOnly = false).map(_._2).sorted
-    if (versions.isEmpty) return (0, 0)
-    val drop = versions.filter(_ <= versions.last - keep)
-    var manifests = 0
-    drop.foreach { v =>
-      if (fs.delete(new Path(root, s"a=$v"), false)) manifests += 1
-    }
-    val live: Set[String] = graft.ops.VersionedPaths
-      .listNumbered(fs, root, "a=", dirsOnly = false).map(_._2)
-      .flatMap(v => readAuditManifest(v)._1).toSet
-    var dirs = 0
-    val auditRoot = new Path(root, "audit")
-    if (fs.exists(auditRoot)) fs.listStatus(auditRoot).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("seg-") && !live(n) && fs.delete(st.getPath, true))
-        dirs += 1
-    }
-    (manifests, dirs)
-  }
+  def vacuumAudit(keep: Int = 1): (Int, Int) =
+    SegmentStore.vacuum(fs, new Path(ledgerDir), "a=", keep,
+      readAuditManifest(_)._1, Seq("audit" -> "seg-"))
 
   /** The standing tombstone ledger: every committed request's rows —
     * live `request=` dirs (excluding any whose id has been folded: a

@@ -1,12 +1,11 @@
 package graft.ml
 
-import java.nio.charset.StandardCharsets
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ops.TokenOps
+import graft.ops.{SegmentStore, TokenOps}
+import graft.ops.SegmentStore.State
 
 /** Persisted ORDER-2 n-gram language model — the CCNet/KenLM-shaped
   * perplexity filter as a learn→serve loop (the `HashedLogReg.save/load`
@@ -54,9 +53,9 @@ import graft.ops.TokenOps
   *     against its meta, so a torn store (lost part-files) fails loudly
   *     instead of serving a silently-sharper LM (the explicit-width
   *     rule from the logreg store).
-  *   - `m=N` manifest — live segment names, temp-write + ONE atomic
-  *     rename ([[graft.ops.VersionedPaths.publish]]): readers see the
-  *     old or the new segment set, never a torn mix.
+  *   - `m=N` manifest — live segment names, kept by
+  *     [[graft.ops.SegmentStore]]: readers see the old or the new
+  *     segment set, never a torn mix.
   *   - [[Model.append]] counts only the delta text — exact by
   *     additivity (served scores ≡ a from-scratch fit on the union).
   *   - [[Model.forget]] writes a NEGATIVE-count segment from the victim
@@ -68,7 +67,7 @@ import graft.ops.TokenOps
   *     added, drives counts negative; [[Model.vocab]] fails loudly on
   *     any negative rolled count rather than serve an impossible LM.)
   *   - [[Model.compact]] folds live segments into one (additive sums,
-  *     zero rows dropped); [[Model.vacuum]] shares [[graft.sim.IndexVacuum]].
+  *     zero rows dropped); [[Model.vacuum]] is the shared store vacuum.
   *
   * The vocabulary is DISTRIBUTED state (unlike the O(B) logreg weights,
   * a corpus vocabulary outgrows the driver; it stays a parquet-backed
@@ -99,20 +98,15 @@ object NgramLm {
     // the manifest under one session's hadoopConfiguration and write
     // segments under another's, a torn store by construction).
     val store = new Store(docs.sparkSession, dir)
-    val snap = store.snapshot()
-    val (tokens, horizon, sid) = snap match {
-      case Some(s) => (s.tokens,
-        graft.ops.BatchHorizon.afterFold(s.horizon, s.segments), s.sid)
-      case None => (Set.empty[String], None, None)
-    }
-    store.publish(Seq(store.writeSegment(gramCountsOf(docs, textCol))),
-      tokens, horizon, sid, basedOn = snap.map(_.version))
+    val s = store.core.state()
+    store.core.fold(s.copy(tagged = Map("tok" -> s.tag("tok"))))(
+      store.writeTables(gramCountsOf(docs, textCol)))
     ()
   }
 
   /** True iff a complete (manifest-published) store exists under `dir`. */
   def storeExists(spark: SparkSession, dir: String): Boolean =
-    new Store(spark, dir).currentVersion().isDefined
+    new Store(spark, dir).core.currentVersion().isDefined
 
   /** First-batch form of the streaming maintainer
     * ([[graft.stream.LmIngest]]): one BATCH-NAMED segment published as
@@ -124,12 +118,11 @@ object NgramLm {
       dir: String, batchId: Long,
       streamId: Option[String] = None): Unit = {
     val store = new Store(docs.sparkSession, dir)
-    // basedOn = None: the caller observed no store (m=0 expected) — a
+    // Based on Empty: the caller observed no store (m=0 expected) — a
     // concurrent first publish makes this one fail loudly instead of
-    // clobbering it ([[Store.publish]]'s CAS rule).
-    store.publish(Seq(store.writeNamedSegment(
-      gramCountsOf(docs, textCol), s"seg-batch-$batchId")),
-      sid = streamId, basedOn = None)
+    // clobbering it (the optimistic-publish rule).
+    store.core.appendBatch(SegmentStore.Empty, batchId, streamId)(
+      store.writeTables(gramCountsOf(docs, textCol)))
     ()
   }
 
@@ -170,7 +163,7 @@ object NgramLm {
     * mid-stream wants [[loadPinned]] instead. */
   def load(spark: SparkSession, dir: String): Model = {
     val store = new Store(spark, dir)
-    verifySegments(spark, store, store.snapshotOrThrow().segments)
+    verifySegments(spark, store, store.core.live().segments)
     new Model(spark, store, pinned = None)
   }
 
@@ -186,9 +179,9 @@ object NgramLm {
     * their pinned reads. */
   def loadPinned(spark: SparkSession, dir: String): Model = {
     val store = new Store(spark, dir)
-    val snap = store.snapshotOrThrow()
+    val snap = store.core.live()
     verifySegments(spark, store, snap.segments)
-    new Model(spark, store, pinned = Some(snap.version))
+    new Model(spark, store, pinned = snap.version)
   }
 
   /** Segments already torn-verified by THIS application — a published
@@ -216,7 +209,7 @@ object NgramLm {
       case (seg, k) if !verifiedSegs.contains(k) => seg }
     val keyOf = keys.toMap
     segs.foreach { seg =>
-      val metaRows = spark.read.parquet(store.segPath(seg, "meta")).collect()
+      val metaRows = spark.read.parquet(store.core.segPath(seg, "meta")).collect()
       require(metaRows.length == 1,
         s"LM store at $dir/$seg has ${metaRows.length} meta rows (want 1)")
       val m = metaRows.head
@@ -246,7 +239,7 @@ object NgramLm {
       // suffices (round-15; semantics identical — same counts, same
       // failure messages).
       val checks = wanted.map { case (table, _, _) =>
-        spark.read.parquet(store.segPath(seg, table))
+        spark.read.parquet(store.core.segPath(seg, table))
           .agg(count(lit(1)).as("n"), coalesce(sum("cnt"), lit(0L)).as("s"))
           .select(lit(table).as("tbl"), col("n"), col("s"))
       }.reduce(_ unionAll _).collect().map(r =>
@@ -264,88 +257,38 @@ object NgramLm {
     }
   }
 
-  /** One PARSED manifest read — everything a lifecycle operation needs
-    * to know about the store, captured atomically from a single
-    * version. Lifecycle ops read through this instead of 6–8
-    * independent accessor calls (each of which re-lists the directory
-    * and re-parses the manifest — on an object store that is one
-    * metadata round-trip apiece), and they publish AGAINST
-    * [[Snapshot.version]] ([[Store.publish]]'s basedOn rule), so two
-    * interleaved writers can no longer silently drop each other's
-    * lines. */
-  private[NgramLm] final case class Snapshot(
-      version: Long,
-      segments: Seq[String],
-      tokens: Set[String],
-      horizon: Option[Long],
-      sid: Option[String],
-      gates: Set[String],
-      inc: Set[String])
-
-  /** Manifest + segment plumbing (the shared store rules). */
+  /** Manifest + segment plumbing: the shared [[SegmentStore]] plus the
+    * LM's own segment tables and audits. Manifest lines beyond the
+    * segments, all read through one [[SegmentStore.State]]:
+    *  - `tok <token>` — the REALIZED-FORGET TOKEN LEDGER: compact()
+    *    folds forget segments away (their negatives realize into the
+    *    summed counts), which would otherwise erase the
+    *    `seg-forget-<token>` name [[Model.forgetBatch]]'s replay no-op
+    *    keys on; token lines survive every publish, so the no-op check
+    *    stays true across compactions. Audit-ledger-sized growth: one
+    *    short line per erasure REQUEST.
+    *  - `gate <table>` — SERVING GATES: order tables an erasure ran
+    *    against while incomplete; serving them would leak un-redacted
+    *    transitions, so [[Model.requireServable]] throws until a full
+    *    refit ([[NgramLm.fit]]) clears the line.
+    *  - `inc <table>` — INCOMPLETE-ORDER markers: some live ingests
+    *    predate the table (legacy vintage). Written the first time a
+    *    fold or forget OBSERVES a missing table dir, carried forever
+    *    (compaction's full-format rewrite blinds the missing-dir test,
+    *    but the absent transitions stay absent).
+    *  - `bh <id>` / `sid <token>` — the replay horizon and
+    *    stream-identity pin ([[graft.ops.BatchHorizon]]).
+    * Legacy manifests simply lack the optional lines. Lifecycle ops read
+    * ONE state and publish against its version, so two interleaved
+    * writers (a standing [[graft.stream.LmIngest]] append racing a
+    * [[graft.gov.ForgetPipeline]] erasure) fail loudly instead of
+    * silently dropping each other's segment and `tok` lines. */
   private[NgramLm] final class Store(spark: SparkSession, val dir: String) {
+    val core = new SegmentStore(spark, dir, kind = "LM store",
+      tags = Seq("tok", "gate", "inc"))
+
     private def fs = new Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-    def currentVersion(): Option[Long] =
-      graft.ops.VersionedPaths.listNumbered(fs, new Path(dir), "m=",
-          dirsOnly = false)
-        .map(_._2).sorted.lastOption
-
-    /** The fully parsed state of manifest `v` (see [[Snapshot]]). */
-    def snapshotAt(v: Long): Snapshot = {
-      val lines = manifestLines(v)
-      val payload = lines.filterNot(l => l.startsWith("tok ") ||
-        l.startsWith("gate ") || l.startsWith("inc "))
-      val (segs, horizon) = graft.ops.BatchHorizon.split(payload)
-      Snapshot(v, segs,
-        lines.collect { case s if s.startsWith("tok ") => s.drop(4) }.toSet,
-        horizon,
-        graft.ops.BatchHorizon.splitSid(lines),
-        lines.collect { case s if s.startsWith("gate ") =>
-          s.drop(5).trim }.toSet,
-        lines.collect { case s if s.startsWith("inc ") =>
-          s.drop(4).trim }.toSet)
-    }
-
-    def snapshot(): Option[Snapshot] = currentVersion().map(snapshotAt)
-
-    def snapshotOrThrow(): Snapshot = snapshot().getOrElse(
-      throw new IllegalStateException(s"no complete LM store under $dir"))
-
-    private def manifestLines(v: Long): Seq[String] = {
-      val in = fs.open(new Path(dir, s"m=$v"))
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .map(_.trim).filter(_.nonEmpty).toList
-      finally in.close()
-    }
-
-    // Manifest format, all read through [[snapshotAt]]:
-    //  - one SEGMENT name per line;
-    //  - `tok <token>` — the REALIZED-FORGET TOKEN LEDGER: compact()
-    //    folds forget segments away (their negatives realize into the
-    //    summed counts), which would otherwise erase the
-    //    `seg-forget-<token>` name [[Model.forgetBatch]]'s replay
-    //    no-op keys on; token lines survive every publish, so the
-    //    no-op check stays true across compactions. Audit-ledger-sized
-    //    growth: one short line per erasure REQUEST.
-    //  - `gate <table>` — SERVING GATES: order tables an erasure ran
-    //    against while incomplete; serving them would leak un-redacted
-    //    transitions, so [[Model.requireServable]] throws until a full
-    //    refit ([[NgramLm.fit]]) clears the line.
-    //  - `inc <table>` — INCOMPLETE-ORDER markers: some live ingests
-    //    predate the table (legacy vintage). Written the first time a
-    //    fold or forget OBSERVES a missing table dir, carried forever
-    //    (compaction's full-format rewrite blinds the missing-dir
-    //    test, but the absent transitions stay absent).
-    //  - `bh <id>` / `sid <token>` — the replay horizon and
-    //    stream-identity pin ([[graft.ops.BatchHorizon]]).
-    // Legacy manifests simply lack the optional lines; segment names
-    // are all `seg-…`, so the prefixes cannot collide.
-    private def segmentsAt(v: Long): Seq[String] = snapshotAt(v).segments
-
-    def segPath(seg: String, table: String): String =
-      s"$dir/segments/$seg/$table"
 
     /** Driver-side fingerprint of the segment's on-disk FILE SET —
       * sorted (relative path, length) pairs. The verify-once cache
@@ -366,34 +309,31 @@ object NgramLm {
       buf.sorted.mkString("\n").hashCode.toString
     }
 
-    /** One segment from a combined (w1, w2, cnt) gram frame (w2 NULL on
-      * unigram rows — [[gramCountsOf]]'s shape); meta written AFTER
-      * uni+bi from the same checkpointed counts so load's cross-checks
-      * catch any torn combination. The split into the two tables runs
-      * on the vocabulary-sized aggregate, not the corpus. */
-    def writeSegment(grams: DataFrame): String =
-      writeNamedSegment(grams, s"seg-${java.util.UUID.randomUUID()}")
-
-    def writeNamedSegment(grams: DataFrame, seg: String): String = {
-      // Table writes + meta read one materialization; RELEASED before
-      // returning (precise ids — [[graft.ops.CheckpointIds]]): nothing
-      // returned references it, and an unreleased per-segment pin would
-      // accumulate index-sized blocks per lifecycle op on a long-lived
-      // driver (the stores-own-release contract [[graft.gov.ForgetPipeline]]
-      // relies on).
+    /** One segment's tables from a combined (w1, w2, w3, cnt) gram
+      * frame (NULL w2/w3 on lower orders — [[gramCountsOf]]'s shape);
+      * meta written AFTER the order tables from the same checkpointed
+      * counts so load's cross-checks catch any torn combination. The
+      * split runs on the vocabulary-sized aggregate, not the corpus.
+      * The materialization is RELEASED before returning (precise ids —
+      * [[graft.ops.CheckpointIds]]): nothing returned references it,
+      * and an unreleased per-segment pin would accumulate index-sized
+      * blocks per lifecycle op on a long-lived driver (the
+      * stores-own-release contract [[graft.gov.ForgetPipeline]] relies
+      * on). */
+    def writeTables(grams: DataFrame)(out: String): Unit = {
       val c = grams.localCheckpoint(true)
-      try writeSegmentTables(c, seg)
+      try writeSegmentTables(c, out)
       finally graft.ops.CheckpointIds.release(c)
     }
 
-    private def writeSegmentTables(c: DataFrame, seg: String): String = {
+    private def writeSegmentTables(c: DataFrame, out: String): Unit = {
       c.where(col("w2").isNull).select(col("w1").as("term"), col("cnt"))
-        .write.mode(SaveMode.Overwrite).parquet(segPath(seg, "uni"))
+        .write.mode(SaveMode.Overwrite).parquet(s"$out/uni")
       c.where(col("w2").isNotNull && col("w3").isNull)
         .select("w1", "w2", "cnt")
-        .write.mode(SaveMode.Overwrite).parquet(segPath(seg, "bi"))
+        .write.mode(SaveMode.Overwrite).parquet(s"$out/bi")
       c.where(col("w3").isNotNull).select("w1", "w2", "w3", "cnt")
-        .write.mode(SaveMode.Overwrite).parquet(segPath(seg, "tri"))
+        .write.mode(SaveMode.Overwrite).parquet(s"$out/tri")
       c.agg(
           coalesce(sum(when(col("w2").isNull, col("cnt"))), lit(0L))
             .as("t_total"),
@@ -405,60 +345,16 @@ object NgramLm {
           coalesce(sum(when(col("w3").isNotNull, col("cnt"))), lit(0L))
             .as("tri_total"),
           count(when(col("w3").isNotNull, lit(1))).as("tri_size"))
-        .write.mode(SaveMode.Overwrite).parquet(segPath(seg, "meta"))
-      seg
+        .write.mode(SaveMode.Overwrite).parquet(s"$out/meta")
     }
 
-    /** Publish the next manifest version, OPTIMISTICALLY: `basedOn` is
-      * the version the caller's reads were based on (None = the caller
-      * observed no store), and the target is exactly basedOn + 1 —
-      * never a publish-time re-listing. [[graft.ops.VersionedPaths.publish]]
-      * throws if that version already exists, so a lifecycle op that
-      * interleaved with another writer (a standing [[graft.stream.LmIngest]]
-      * append racing a [[graft.gov.ForgetPipeline]] erasure) fails
-      * LOUDLY and retries against the fresh state, instead of silently
-      * rebuilding the manifest from stale reads — which would drop the
-      * other writer's segment and `tok` ledger lines and resurrect
-      * erased victims. */
-    def publish(segs: Seq[String],
-        tokens: Set[String] = Set.empty,
-        horizon: Option[Long] = None,
-        sid: Option[String] = None,
-        gates: Set[String] = Set.empty,
-        inc: Set[String] = Set.empty,
-        basedOn: Option[Long]): Long = {
-      val body = (segs ++ tokens.toSeq.sorted.map("tok " + _) ++
-        gates.toSeq.sorted.map("gate " + _) ++
-        inc.toSeq.sorted.map("inc " + _) ++
-        graft.ops.BatchHorizon.lines(horizon) ++
-        graft.ops.BatchHorizon.sidLines(sid))
-        .mkString("\n") + "\n"
-      val tmp = new Path(dir, s".manifest-${java.util.UUID.randomUUID()}")
-      val out = fs.create(tmp, false)
-      try out.write(body.getBytes(StandardCharsets.UTF_8))
-      finally out.close()
-      graft.ops.VersionedPaths.publish(fs, new Path(dir), tmp, "m=",
-        basedOn.map(_ + 1).getOrElse(0L))
-    }
-
-    def vacuum(keep: Int): (Int, Int) =
-      graft.sim.IndexVacuum.vacuum(fs, dir, keep, segmentsAt,
-        Seq("segments" -> "seg-"))
-
-    /** Union of `table` across an EXPLICIT segment set — the caller
-      * resolves the set once from its snapshot (live or pinned), so a
-      * multi-read operation cannot straddle two versions. */
-    def readUnion(segs: Seq[String], table: String): DataFrame =
-      segs.map(s => spark.read.parquet(segPath(s, table)))
-        .reduce(_ unionByName _)
-
-    /** [[readUnion]] tolerating segments that predate the table (the
-      * order-1 → order-2 migration: a legacy segment simply contributes
-      * no rows). Empty-schema fallback keeps downstream plans
+    /** [[SegmentStore.readUnion]] tolerating segments that predate the
+      * table (the order-1 → order-2 migration: a legacy segment simply
+      * contributes no rows). Empty-schema fallback keeps downstream plans
       * well-typed when NO segment has the table. */
     def readUnionTolerant(segs: Seq[String], table: String,
         schemaDdl: String): DataFrame = {
-      val present = segs.map(s => segPath(s, table))
+      val present = segs.map(s => core.segPath(s, table))
         .filter(p => fs.exists(new Path(p)))
       if (present.isEmpty)
         spark.createDataFrame(
@@ -470,7 +366,7 @@ object NgramLm {
     /** True iff any of `segs` has no `table` directory (a legacy
       * segment from before the order existed). */
     def anyMissing(segs: Seq[String], table: String): Boolean =
-      segs.exists(s => !fs.exists(new Path(segPath(s, table))))
+      segs.exists(s => !fs.exists(new Path(core.segPath(s, table))))
   }
 
   /** A verified handle; construct via [[load]] (live — every read
@@ -480,13 +376,10 @@ object NgramLm {
   final class Model private[NgramLm] (spark: SparkSession, store: Store,
       pinned: Option[Long]) {
 
-    /** The version this read resolves: the pin, or the newest. */
-    private def ver(): Long = pinned.getOrElse(
-      store.currentVersion().getOrElse(throw new IllegalStateException(
-        s"no complete LM store under ${store.dir}")))
-
-    /** One parsed manifest read for this access ([[Store.snapshotAt]]). */
-    private def readSnap(): Snapshot = store.snapshotAt(ver())
+    /** One parsed manifest read for this access: the pinned version, or
+      * the newest. */
+    private def readSnap(): State =
+      pinned.map(store.core.stateAt).getOrElse(store.core.live())
 
     private def requireMutable(): Unit =
       if (pinned.nonEmpty) throw new IllegalStateException(
@@ -518,8 +411,8 @@ object NgramLm {
     /** The rolled-up vocabulary (term, cnt) ([[rolledNonNeg]]). */
     def vocab(): DataFrame = vocabOf(readSnap())
 
-    private def vocabOf(snap: Snapshot): DataFrame =
-      rolledNonNeg(store.readUnion(snap.segments, "uni"),
+    private def vocabOf(snap: State): DataFrame =
+      rolledNonNeg(store.core.readUnion(snap.segments, "uni"),
         Seq("term"), "term")
 
     /** Loud serving gate (`gate` manifest lines): an erasure ran while
@@ -528,8 +421,8 @@ object NgramLm {
       * serving them would leak. The negative-count raise_error never
       * fires for this case (the forget SKIPPED the inexact negatives);
       * it remains the broken-contract guard it always was. */
-    private def requireServable(snap: Snapshot, table: String): Unit =
-      if (snap.gates.contains(table))
+    private def requireServable(snap: State, table: String): Unit =
+      if (snap.tag("gate").contains(table))
         throw new IllegalStateException(
           s"LM store at ${store.dir}: order-" +
             (if (table == "tri") "3" else "2") +
@@ -546,7 +439,7 @@ object NgramLm {
       * gated ([[requireServable]]). */
     def bigrams(): DataFrame = bigramsOf(readSnap())
 
-    private def bigramsOf(snap: Snapshot): DataFrame = {
+    private def bigramsOf(snap: State): DataFrame = {
       requireServable(snap, "bi")
       rolledNonNeg(store.readUnionTolerant(snap.segments, "bi",
           "w1 STRING, w2 STRING, cnt BIGINT"),
@@ -558,7 +451,7 @@ object NgramLm {
       * when order-3 serving is gated ([[requireServable]]). */
     def trigrams(): DataFrame = trigramsOf(readSnap())
 
-    private def trigramsOf(snap: Snapshot): DataFrame = {
+    private def trigramsOf(snap: State): DataFrame = {
       requireServable(snap, "tri")
       rolledNonNeg(store.readUnionTolerant(snap.segments, "tri",
           "w1 STRING, w2 STRING, w3 STRING, cnt BIGINT"),
@@ -630,7 +523,7 @@ object NgramLm {
       // independently could cache version-v+1 data under key v when a
       // publish lands between the two reads.
       val snap = readSnap()
-      val v = snap.version
+      val v = snap.version.get
       bigramScoresCache match {
         case Some((cv, df, _)) if cv == v => df
         case stale =>
@@ -734,7 +627,7 @@ object NgramLm {
 
     private def knTypeScores: DataFrame = synchronized {
       val snap = readSnap()
-      val v = snap.version
+      val v = snap.version.get
       knScoresCache match {
         case Some((cv, df, _)) if cv == v => df
         case stale =>
@@ -822,7 +715,7 @@ object NgramLm {
 
     private def kn3TypeScores: DataFrame = synchronized {
       val snap = readSnap()
-      val v = snap.version
+      val v = snap.version.get
       kn3ScoresCache match {
         case Some((cv, df, _)) if cv == v => df
         case stale =>
@@ -873,46 +766,24 @@ object NgramLm {
       * (spec-pinned). Cost ∝ delta. */
     def append(docs: DataFrame, textCol: String): Long = {
       requireMutable()
-      val snap = store.snapshotOrThrow() // one read, BEFORE the write
-      store.publish(
-        snap.segments :+ store.writeSegment(gramCountsOf(docs, textCol)),
-        snap.tokens, snap.horizon, snap.sid, snap.gates, snap.inc,
-        basedOn = Some(snap.version))
+      store.core.append(store.core.live())( // one read, BEFORE the write
+        store.writeTables(gramCountsOf(docs, textCol)))
     }
 
     /** IDEMPOTENT per-batch append for the streaming maintainer
-      * ([[graft.stream.LmIngest]]): batch-derived segment name, manifest
-      * gains the segment at most once — an at-least-once redelivery
-      * converges instead of double-counting (the
-      * [[graft.sim.MinHashIndex.appendSigsAsBatch]] rule; a UUID-named
-      * [[append]] under replay WOULD double-count, which is why the
-      * streaming path must use this form). A segment already in the
-      * live manifest is a TRUE no-op — published data is never
-      * rewritten in place, so a crash mid-replay can't tear a segment
-      * [[load]]'s cross-checks would then have to catch; the batch's
-      * counts are deterministic, so skipping loses nothing. */
+      * ([[graft.stream.LmIngest]]) — [[SegmentStore.appendBatch]]:
+      * batch-derived segment name, manifest gains the segment at most
+      * once — an at-least-once redelivery converges instead of
+      * double-counting (a UUID-named [[append]] under replay WOULD
+      * double-count, which is why the streaming path must use this
+      * form). A segment already live, or a batch a compact() already
+      * realized (the replay horizon), is a TRUE no-op; a pinned store
+      * fed by a different stream identity fails loudly. */
     private[graft] def appendBatch(docs: DataFrame, textCol: String,
         batchId: Long, streamId: Option[String] = None): Long = {
       requireMutable()
-      val snap = store.snapshotOrThrow()
-      // Identity pin FIRST (BatchHorizon.requireSid): the horizon no-op
-      // below is sound only per checkpoint — a pinned store fed by a
-      // different stream identity fails loudly here instead of silently
-      // dropping every batch at or below the old horizon.
-      graft.ops.BatchHorizon.requireSid(snap.sid, streamId,
-        s"LM store ${store.dir}")
-      val seg = s"seg-batch-$batchId"
-      // Second no-op trigger: the batch is at or below the replay
-      // horizon — a compact() already realized its counts into the
-      // folded segment; re-appending would double-count them.
-      if (snap.segments.contains(seg) ||
-          graft.ops.BatchHorizon.realizedLoud(snap.horizon, batchId,
-            store.dir))
-        return snap.version
-      store.writeNamedSegment(gramCountsOf(docs, textCol), seg)
-      store.publish(snap.segments :+ seg, snap.tokens, snap.horizon,
-        graft.ops.BatchHorizon.adoptSid(snap.sid, streamId),
-        snap.gates, snap.inc, basedOn = Some(snap.version))
+      store.core.appendBatch(store.core.live(), batchId, streamId)(
+        store.writeTables(gramCountsOf(docs, textCol)))
     }
 
     /** EXACT FORGET via a NEGATIVE-count segment: tokenize the victim
@@ -932,12 +803,11 @@ object NgramLm {
       * exact, incomplete orders stop serving rather than leak. */
     def forget(docs: DataFrame, textCol: String): Long = {
       requireMutable()
-      val snap = store.snapshotOrThrow()
+      val snap = store.core.live()
       val inc = incompleteNow(snap)
-      store.publish(snap.segments :+ store.writeSegment(
-        negGrams(gramCountsOf(docs, textCol), inc)),
-        snap.tokens, snap.horizon, snap.sid, snap.gates ++ inc, inc,
-        basedOn = Some(snap.version))
+      store.core.append(snap.withTag("gate", snap.tag("gate") ++ inc)
+          .withTag("inc", inc))(
+        store.writeTables(negGrams(gramCountsOf(docs, textCol), inc)))
     }
 
     /** Orders whose table is INCOMPLETE in this snapshot: the
@@ -949,8 +819,8 @@ object NgramLm {
       * PRE-marker compact() already rewrote full-format (dirs present,
       * no `inc` line, missing-dir test blind) before this code could
       * observe their legacy vintage. */
-    private def incompleteNow(snap: Snapshot): Set[String] =
-      snap.inc ++ snap.gates ++
+    private def incompleteNow(snap: State): Set[String] =
+      snap.tag("inc") ++ snap.tag("gate") ++
         Seq("bi", "tri").filter(t => store.anyMissing(snap.segments, t)) ++
         auditVintage(snap)
 
@@ -959,9 +829,9 @@ object NgramLm {
       * [[NgramLm.verifySegments]] economics. Metas that predate an
       * order's fields contribute zero (those segments also lack the
       * dir, which the missing-dir scan flags independently). */
-    private def rolledMetaTotals(snap: Snapshot): (Long, Long, Long) =
+    private def rolledMetaTotals(snap: State): (Long, Long, Long) =
       snap.segments.foldLeft((0L, 0L, 0L)) { case ((t, b, tr), seg) =>
-        val m = spark.read.parquet(store.segPath(seg, "meta")).head()
+        val m = spark.read.parquet(store.core.segPath(seg, "meta")).head()
         def f(name: String): Long =
           if (m.schema.fieldNames.contains(name)) m.getAs[Long](name) else 0L
         (t + f("t_total"), b + f("b_total"), tr + f("tri_total"))
@@ -988,12 +858,12 @@ object NgramLm {
       * store any of whose order tables predates some of its live
       * ingest must be gated by hand ([[gateOrders]]) before its first
       * post-upgrade forget if this audit comes back empty. */
-    private[graft] def auditVintage(snap: Snapshot): Set[String] = {
+    private[graft] def auditVintage(snap: State): Set[String] = {
       // An already-marked order's totals drift by design (forgets skip
       // its negatives), so only audit orders still believed complete —
       // and skip the O(segments) meta scan entirely when nothing the
       // audit could add is unmarked.
-      def marked(o: String) = snap.inc(o) || snap.gates(o)
+      def marked(o: String) = snap.tag("inc")(o) || snap.tag("gate")(o)
       if (marked("bi") && marked("tri")) return Set.empty
       val (t, b, tr) = rolledMetaTotals(snap)
       // Attribution by direction (legacy vintage only UNDER-counts):
@@ -1031,12 +901,11 @@ object NgramLm {
       requireMutable()
       require(tables.nonEmpty && tables.subsetOf(Set("bi", "tri")),
         s"gateOrders takes a non-empty subset of {bi, tri}, got $tables")
-      val snap = store.snapshotOrThrow()
-      if (tables.subsetOf(snap.gates) && tables.subsetOf(snap.inc))
-        return snap.version
-      store.publish(snap.segments, snap.tokens, snap.horizon, snap.sid,
-        snap.gates ++ tables, snap.inc ++ tables,
-        basedOn = Some(snap.version))
+      val snap = store.core.live()
+      if (tables.subsetOf(snap.tag("gate")) && tables.subsetOf(snap.tag("inc")))
+        return snap.version.get
+      store.core.publish(snap.withTag("gate", snap.tag("gate") ++ tables)
+        .withTag("inc", snap.tag("inc") ++ tables))
     }
 
     /** The NEGATED victim counts, with incomplete orders' rows
@@ -1072,7 +941,7 @@ object NgramLm {
         (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') ||
           (c >= '0' && c <= '9') || c == '-' || c == '_'),
         s"forget token must be [A-Za-z0-9_-]+, got '$token'")
-      val snap = store.snapshotOrThrow()
+      val snap = store.core.live()
       val seg = s"seg-forget-$token"
       // The no-op check consults BOTH the live segment name and the
       // manifest's realized-token ledger: [[compact]] folds the
@@ -1081,14 +950,14 @@ object NgramLm {
       // survives every later publish, so a replay landing AFTER a
       // compaction is still a true no-op instead of a second
       // subtraction.
-      if (snap.segments.contains(seg) || snap.tokens.contains(token))
-        return snap.version
+      if (snap.segments.contains(seg) || snap.tag("tok").contains(token))
+        return snap.version.get
       val inc = incompleteNow(snap) // the [[forget]] legacy-store rule
-      store.writeNamedSegment(
-        negGrams(gramCountsOf(docs, textCol), inc), seg)
-      store.publish(snap.segments :+ seg, snap.tokens + token,
-        snap.horizon, snap.sid, snap.gates ++ inc, inc,
-        basedOn = Some(snap.version))
+      store.core.writeSegment(seg)(
+        store.writeTables(negGrams(gramCountsOf(docs, textCol), inc)))
+      store.core.publish(snap.copy(segments = snap.segments :+ seg)
+        .withTag("tok", snap.tag("tok") + token)
+        .withTag("gate", snap.tag("gate") ++ inc).withTag("inc", inc))
     }
 
     /** MAINTENANCE compaction: fold live segments into one (the same
@@ -1097,14 +966,14 @@ object NgramLm {
       * store). Bounds per-score segment fan-out after many appends. */
     def compact(): Long = {
       requireMutable()
-      val snap = store.snapshotOrThrow()
-      if (snap.segments.size <= 1) return snap.version
+      val snap = store.core.live()
+      if (snap.segments.size <= 1) return snap.version.get
       // Observe incompleteness BEFORE the fold: the rewrite below is
       // full-format (every order gets a dir), so this is the last
       // moment the missing-dir test can see a legacy segment — the
       // `inc` marker carries the fact forward for any later forget.
       val inc = incompleteNow(snap)
-      val uni = store.readUnion(snap.segments, "uni")
+      val uni = store.core.readUnion(snap.segments, "uni")
         .groupBy("term").agg(sum("cnt").as("cnt"))
         .where(col("cnt") =!= 0L)
         .select(col("term").as("w1"),
@@ -1127,21 +996,18 @@ object NgramLm {
       // post-compaction replay no-op keys on these lines). The fold
       // also advances the replay horizon so a redelivered folded batch
       // no-ops in [[appendBatch]] instead of double-counting.
-      store.publish(
-        Seq(store.writeSegment(uni.unionByName(bi).unionByName(tri))),
-        snap.tokens,
-        graft.ops.BatchHorizon.afterFold(snap.horizon, snap.segments),
-        snap.sid, snap.gates, inc, basedOn = Some(snap.version))
+      store.core.fold(snap.withTag("inc", inc))(
+        store.writeTables(uni.unionByName(bi).unionByName(tri)))
     }
 
     /** Retention: keep the newest `keep` versions, sweep older
-      * manifests and unreferenced segments (shared IndexVacuum rules).
+      * manifests and unreferenced segments ([[SegmentStore.vacuum]]).
       * A MUTATION for the read-only guard: a pinned handle sweeping
       * old versions could delete its own pinned manifest and brick
       * every later read. */
     def vacuum(keep: Int = 1): (Int, Int) = {
       requireMutable()
-      store.vacuum(keep)
+      store.core.vacuum(keep)
     }
   }
 

@@ -2,7 +2,9 @@ package graft.ops
 
 /** The REALIZED-BATCH REPLAY HORIZON — the manifest convention that
   * pins the forget-vs-streaming-replay contract for every store with
-  * batch-named segments (MinHashIndex, IvfIndex, PqIvfIndex, NgramLm).
+  * batch-named segments (BqIndex, MinHashIndex, IvfIndex, PqIvfIndex,
+  * NgramLm), applied once by [[SegmentStore.appendBatch]] and
+  * [[SegmentStore.fold]].
   *
   * The hazard it closes: a streaming maintainer's at-least-once replay
   * is made convergent by the batch-named segment rule — a redelivered
@@ -16,7 +18,7 @@ package graft.ops
   * [[graft.gov.ForgetPipeline]] ledger would then be lying).
   *
   * The pinned contract: any operation that folds batch-named segments
-  * away (forget, compact) records `bh <maxFoldedBatchId>` in the
+  * away (forget, compact, rebuild) records `bh <maxFoldedBatchId>` in the
   * manifest it publishes, carrying forward any prior horizon
   * (horizons only grow). A per-batch append at or below the horizon
   * is a TRUE no-op: its rows were already realized into the folded
@@ -120,10 +122,9 @@ object BatchHorizon {
     * it can make them DETECTABLE: every horizon no-op logs with the
     * store, ids, and the fresh-checkpoint warning, so a misconfigured
     * restart shows up as a wall of these lines instead of quietly
-    * empty data. (Stores with their own identity pin — the IVF
-    * codebook check — already fail a fresh stream loudly after any
-    * rebuild; MinHash and the LM have no such pin, which makes this
-    * log their only tell.) */
+    * empty data. (A stream that passes its checkpoint identity is
+    * caught earlier and loudly by [[requireSid]]; this log is the tell
+    * for anonymous callers.) */
   def realizedLoud(horizon: Option[Long], batchId: Long,
       store: String): Boolean = {
     val r = realized(horizon, batchId)

@@ -2,13 +2,13 @@ package graft.ops
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** Shared rules for number-versioned directory stores — `CdcIngest`
-  * snapshots (`v=N`), `IvfIndex` versions (`v=N`), `StreamEngine` epoch
-  * markers (`epoch-N`). Two rules, one definition each, because the
-  * call sites used to be "documented twins" that drifted on exactly
-  * these points (the name-filter-before-probe ordering and the
-  * retention threshold were each fixed twice before this object
-  * existed):
+/** Shared rules for number-versioned entries — `CdcIngest` snapshots
+  * (`v=N`), `StreamEngine` epoch markers (`epoch-N`), and the `m=N` /
+  * `a=N` manifests of [[SegmentStore]]. Two rules, one definition
+  * each, because the call sites used to be "documented twins" that
+  * drifted on exactly these points (the name-filter-before-probe
+  * ordering and the retention threshold were each fixed twice before
+  * this object existed):
   *
   *  1. LIST with the name regex FIRST: stray/stale entries (`v=bak`, a
   *     `.staging-*` dir, an editor backup) are rejected by name before
@@ -36,8 +36,8 @@ object VersionedPaths {
       })
   }
 
-  /** Atomically publish a fully-staged version dir as `prefix`+N (the
-    * `IvfIndex` discipline, now shared with every versioned index):
+  /** Atomically publish a fully-staged entry as `prefix`+N (every
+    * manifest store publishes through here via [[SegmentStore]]):
     * rename is atomic on HDFS/local; an existing destination makes it
     * fail — and on the local filesystem, where a rename onto an
     * existing directory can instead degrade to a move INTO it, the

@@ -1,10 +1,9 @@
 package graft.sim
 
-import java.nio.charset.StandardCharsets
-
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.ops.SegmentStore
 
 /** Persisted BINARY-QUANTIZATION code sidecar — the build-once /
   * scan-many store behind the 1-bit serving path (`q_sim_bq_served`).
@@ -18,11 +17,10 @@ import org.apache.spark.sql.functions._
   *
   * Layout: `segments/seg-<uuid>/` of (id, lo, hi) rows — 8 B of code
   * per vector, 32× under the f32 vector — and a manifest `m=N` listing
-  * the live segments, published by temp-write + ONE atomic rename (the
-  * shared [[graft.ops.VersionedPaths.publish]] race rules, optimistic
-  * basedOn+1 versioning like every store here). `forget` rewrites the
+  * the live segments, kept by [[graft.ops.SegmentStore]] (optimistic
+  * basedOn+1 publication like every store here). `forget` rewrites the
   * live segments without the victims (survivor rows bit-unchanged);
-  * `compact` is a pure union; `vacuum` shares [[IndexVacuum]].
+  * `compact` is a pure union.
   *
   * [[search]] is the deployment read pattern this store exists for:
   * the symmetric Hamming coarse scan runs over the 16 B/pair code
@@ -34,160 +32,63 @@ import org.apache.spark.sql.functions._
 final class BqIndex(spark: SparkSession, val indexDir: String)
     extends Serializable {
 
-  private def fs = new Path(indexDir)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val store = new SegmentStore(spark, indexDir)
 
-  def currentVersion(): Option[Long] =
-    graft.ops.VersionedPaths.listNumbered(fs, new Path(indexDir), "m=",
-        dirsOnly = false)
-      .map(_._2).sorted.lastOption
+  def currentVersion(): Option[Long] = store.currentVersion()
 
-  private[sim] def segmentsAt(v: Long): Seq[String] = {
-    val (segs, _) = graft.ops.BatchHorizon.split(manifestLinesAt(v))
-    require(segs.nonEmpty, s"empty manifest m=$v under $indexDir")
-    segs
-  }
+  private def writeCodes(emb: DataFrame, idCol: String, vecCol: String,
+      dim: Int)(out: String): Unit =
+    BqIndex.codes(graft.queries.Tables.fanout(emb), idCol, vecCol, dim)
+      .write.mode(SaveMode.Overwrite).parquet(out)
 
-  private def horizonAt(v: Long): Option[Long] =
-    graft.ops.BatchHorizon.split(manifestLinesAt(v))._2
-
-  private def manifestLinesAt(v: Long): Seq[String] = {
-    val in = fs.open(new Path(indexDir, s"m=$v"))
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .map(_.trim).filter(_.nonEmpty).toList
-    finally in.close()
-  }
-
-  private def resolvedOrFail(): Long = currentVersion().getOrElse(
-    throw new IllegalStateException(s"no complete index under $indexDir"))
-
-  private def publishManifest(segs: Seq[String],
-      horizon: Option[Long], basedOn: Option[Long]): Long = {
-    val body = segs ++ graft.ops.BatchHorizon.lines(horizon)
-    val tmp = new Path(indexDir, s".manifest-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, false)
-    try out.write((body.mkString("\n") + "\n")
-      .getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    graft.ops.VersionedPaths.publish(fs, new Path(indexDir), tmp, "m=",
-      basedOn.map(_ + 1).getOrElse(0L))
-  }
-
-  private def bestEffortDelete(paths: Path*): Unit =
-    paths.foreach { p =>
-      try fs.delete(p, true)
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
-
-  private def writeSegment(emb: DataFrame, idCol: String, vecCol: String,
-      dim: Int): String = {
-    val seg = s"seg-${java.util.UUID.randomUUID()}"
-    val out = new Path(indexDir, s"segments/$seg")
-    try BqIndex.codes(graft.queries.Tables.fanout(emb), idCol, vecCol, dim)
-      .write.mode(SaveMode.Overwrite).parquet(out.toString)
-    catch { case e: Throwable => bestEffortDelete(out); throw e }
-    seg
-  }
-
-  /** Full (re)build: pack the corpus into one segment, publish. */
-  def build(emb: DataFrame, idCol: String, vecCol: String, dim: Int): Long = {
-    val cv = currentVersion()
-    publishManifest(Seq(writeSegment(emb, idCol, vecCol, dim)),
-      horizon = None, basedOn = cv)
-  }
+  /** Full (re)build: pack the corpus into one segment, publish. Over an
+    * existing store this is a FOLD ([[SegmentStore.fold]]): the replay
+    * horizon advances past the live batch segments and the stream pin
+    * is carried, so a pre-rebuild batch redelivered afterwards no-ops. */
+  def build(emb: DataFrame, idCol: String, vecCol: String, dim: Int): Long =
+    store.fold(store.state())(writeCodes(emb, idCol, vecCol, dim))
 
   /** Incremental append: pack ONLY the delta (codes are per-vector, so
     * any append sequence equals a one-shot build over the union —
     * spec-pinned). Batches must be id-disjoint, the shared ingest
     * contract. */
   def append(emb: DataFrame, idCol: String, vecCol: String,
-      dim: Int): Long = {
-    val v0 = resolvedOrFail()
-    publishManifest(
-      segmentsAt(v0) :+ writeSegment(emb, idCol, vecCol, dim),
-      horizonAt(v0), basedOn = Some(v0))
-  }
+      dim: Int): Long =
+    store.append(store.live())(writeCodes(emb, idCol, vecCol, dim))
 
   /** IDEMPOTENT per-batch append for the streaming maintainer
-    * ([[graft.stream.BqIngest]]) — the shared replay rule: segment
-    * name derives from the batch id and the manifest gains it at most
-    * once (an at-least-once redelivery converges); a batch at or below
-    * the replay horizon no-ops LOUDLY-checked (a forget already
-    * realized — and possibly redacted — its rows; re-appending would
-    * resurrect victims). Unlike build this cannot create the index. */
+    * ([[graft.stream.BqIngest]]) — [[SegmentStore.appendBatch]]'s
+    * identity pin, batch-named segment and replay horizon. Unlike build
+    * this cannot create the index. */
   private[graft] def appendAsBatch(emb: DataFrame, idCol: String,
-      vecCol: String, dim: Int, batchId: Long): Long = {
-    val v0 = resolvedOrFail()
-    val segs = segmentsAt(v0)
-    val h = horizonAt(v0)
-    val seg = s"seg-batch-$batchId"
-    if (segs.contains(seg) ||
-        graft.ops.BatchHorizon.realizedLoud(h, batchId, indexDir))
-      return v0
-    val out = new Path(indexDir, s"segments/$seg")
-    try BqIndex.codes(graft.queries.Tables.fanout(emb), idCol, vecCol, dim)
-      .write.mode(SaveMode.Overwrite).parquet(out.toString)
-    catch { case e: Throwable => bestEffortDelete(out); throw e }
-    publishManifest(segs :+ seg, h, basedOn = Some(v0))
-  }
+      vecCol: String, dim: Int, batchId: Long,
+      streamId: Option[String] = None): Long =
+    store.appendBatch(store.live(), batchId, streamId)(
+      writeCodes(emb, idCol, vecCol, dim))
 
   /** Deletion propagated into the derived store: rewrite live segments
     * without the victims into one segment; survivors bit-unchanged. */
   def forget(ids: Seq[Long]): Long =
-    forgetImpl(_.where(!col("id").isin(ids: _*)))
+    store.forget(SegmentStore.dropIds("id", ids))(rewrite)
 
   /** Mass-erasure form: victim frame end to end, LEFT ANTI on `id`
     * (first column cast to BIGINT) — no driver materialization. */
-  def forget(victims: DataFrame): Long = {
-    val v = victims.select(
-      col(victims.columns.head).cast("long").as("id"))
-    forgetImpl(_.join(v, Seq("id"), "left_anti"))
-  }
-
-  private def forgetImpl(screen: DataFrame => DataFrame): Long = {
-    val v0 = resolvedOrFail()
-    val segs = segmentsAt(v0)
-    val seg = s"seg-${java.util.UUID.randomUUID()}"
-    val out = new Path(indexDir, s"segments/$seg")
-    try screen(readUnion(segs))
-      .write.mode(SaveMode.Overwrite).parquet(out.toString)
-    catch { case e: Throwable => bestEffortDelete(out); throw e }
-    // The fold advances the replay horizon so a redelivered pre-forget
-    // batch cannot re-append and resurrect the victims just erased.
-    publishManifest(Seq(seg),
-      graft.ops.BatchHorizon.afterFold(horizonAt(v0), segs),
-      basedOn = Some(v0))
-  }
+  def forget(victims: DataFrame): Long =
+    store.forget(SegmentStore.dropVictims("id", victims))(rewrite)
 
   /** Merge live segments into one — pure IO, search-invariant. */
-  def compact(): Long = {
-    val v0 = resolvedOrFail()
-    val segs = segmentsAt(v0)
-    if (segs.size <= 1) return v0
-    val seg = s"seg-${java.util.UUID.randomUUID()}"
-    val out = new Path(indexDir, s"segments/$seg")
-    try readUnion(segs)
-      .write.mode(SaveMode.Overwrite).parquet(out.toString)
-    catch { case e: Throwable => bestEffortDelete(out); throw e }
-    publishManifest(Seq(seg),
-      graft.ops.BatchHorizon.afterFold(horizonAt(v0), segs),
-      basedOn = Some(v0))
-  }
+  def compact(): Long =
+    store.compact((segs, out) => rewrite(store.readUnion(segs), out))
+
+  private def rewrite(codes: DataFrame, out: String): Unit =
+    codes.write.mode(SaveMode.Overwrite).parquet(out)
 
   /** Keep the newest `keep` versions, sweep older manifests and
     * unreferenced segment dirs. */
-  def vacuum(keep: Int = 1): (Int, Int) =
-    IndexVacuum.vacuum(fs, indexDir, keep, v => segmentsAt(v),
-      Seq("segments" -> "seg-"))
-
-  private def readSeg(seg: String): DataFrame =
-    spark.read.parquet(s"$indexDir/segments/$seg")
-
-  private def readUnion(segs: Seq[String]): DataFrame =
-    segs.map(readSeg).reduce(_ unionByName _)
+  def vacuum(keep: Int = 1): (Int, Int) = store.vacuum(keep)
 
   /** The live (id, lo, hi) code table. */
-  def codesTable(): DataFrame = readUnion(segmentsAt(resolvedOrFail()))
+  def codesTable(): DataFrame = store.readUnion(store.live().segments)
 
   /** Hamming coarse scan over the stored codes: top-`c` candidates per
     * query by (ham asc, id asc) through the bounded-heap TopKPerKey.

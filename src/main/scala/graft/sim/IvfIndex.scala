@@ -1,10 +1,9 @@
 package graft.sim
 
-import java.nio.charset.StandardCharsets
-
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.ops.SegmentStore
 
 /** Persisted IVF index — the build-once / query-many shape a production
   * vector store actually runs (the inline `q_sim_ivf_ann` rebuilds its
@@ -21,11 +20,9 @@ import org.apache.spark.sql.functions._
   *     a probe reads `probes/cells` of each segment — the scan pruning
   *     this index exists for.
   *   - `m=N` — the MANIFEST file: codebook name on the first line, live
-  *     segment names after. Publication is a temp write + ONE atomic
-  *     rename (shared [[graft.ops.VersionedPaths.publish]] race rules),
-  *     so readers see either the old segment set or the new one, never
-  *     a torn mix; data dirs unreferenced by the newest manifest are
-  *     invisible.
+  *     segment names after, kept by [[graft.ops.SegmentStore]]: readers
+  *     see either the old segment set or the new one, never a torn mix;
+  *     data dirs unreferenced by the newest manifest are invisible.
   *
   * [[build]] trains a fresh codebook and one full segment. [[append]]
   * writes only its delta segment under the LIVE codebook — the standing
@@ -46,123 +43,48 @@ import org.apache.spark.sql.functions._
 final class IvfIndex(spark: SparkSession, val indexDir: String)
     extends Serializable {
 
-  private def fs = new Path(indexDir)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private[sim] val store = new SegmentStore(spark, indexDir,
+    headDirs = Seq("codebooks" -> "cb-"))
 
-  /** Newest manifest version (name filter first — zero probes on stray
-    * entries; the manifest file is atomic by rename, so existence is
-    * completeness: every dir it references was fully written before the
-    * manifest was published). */
-  def currentVersion(): Option[Long] =
-    graft.ops.VersionedPaths.listNumbered(fs, new Path(indexDir), "m=",
-        dirsOnly = false)
-      .map(_._2).sorted.lastOption
-
-  /** (codebook, segments) recorded at manifest version `v`; an
-    * optional `bh <id>` replay-horizon line ([[graft.ops.BatchHorizon]])
-    * is split off and served by [[horizonAt]]. */
-  private[sim] def manifestAt(v: Long): (String, Seq[String]) = {
-    val (lines, _) = graft.ops.BatchHorizon.split(manifestLinesAt(v))
-    require(lines.nonEmpty, s"empty manifest m=$v under $indexDir")
-    (lines.head, lines.tail)
-  }
-
-  private def horizonAt(v: Long): Option[Long] =
-    graft.ops.BatchHorizon.split(manifestLinesAt(v))._2
-
-  private def manifestLinesAt(v: Long): Seq[String] = {
-    val in = fs.open(new Path(indexDir, s"m=$v"))
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .map(_.trim).filter(_.nonEmpty).toList
-    finally in.close()
-  }
-
-  private def resolvedOrFail(): Long = currentVersion().getOrElse(
-    throw new IllegalStateException(s"no complete index under $indexDir"))
-
-  /** Atomic manifest publication via the shared
-    * [[graft.ops.VersionedPaths.publish]] rules — a racing publisher
-    * loses loudly and its temp file is discarded. */
-  private[sim] def publish(tmp: Path, v: Long): Long =
-    graft.ops.VersionedPaths.publish(fs, new Path(indexDir), tmp, "m=", v)
-
-  /** Publish OPTIMISTICALLY against the version the caller's reads
-    * were based on (None = no store observed): target = basedOn + 1,
-    * and the versioned rename throws if it exists — an op interleaving
-    * with another writer fails loudly instead of silently rebuilding
-    * the manifest from stale reads (the lost-update that could drop a
-    * concurrent forget's fold and resurrect erased victims). */
-  private def publishManifest(codebook: String, segs: Seq[String],
-      horizon: Option[Long] = None,
-      basedOn: Option[Long]): Long = {
-    val body = (codebook +: segs) ++ graft.ops.BatchHorizon.lines(horizon)
-    val tmp = new Path(indexDir, s".manifest-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, false)
-    try out.write((body.mkString("\n") + "\n")
-      .getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    publish(tmp, basedOn.map(_ + 1).getOrElse(0L))
-  }
-
-
-  /** Delete `paths` recursively, swallowing cleanup failures (the
-    * original error is the one worth throwing). */
-  private def bestEffortDelete(paths: Path*): Unit =
-    paths.foreach { p =>
-      try fs.delete(p, true)
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
+  /** Newest manifest version ([[SegmentStore.currentVersion]]). */
+  def currentVersion(): Option[Long] = store.currentVersion()
 
   /** Write one postings segment: `emb` assigned to each vector's single
     * nearest centroid of `cents`. Fan out first: the assignment pass (a
     * cosine against every centroid per vector) is the expensive stage,
     * and a single-file parquet input would otherwise run it on one task
     * — same rationale as the inline query's fanout. The segment dir is
-    * uuid-named and unreferenced until a manifest lists it, so the
-    * write needs no staging rename of its own. */
-  private def writeSegment(emb: DataFrame, idCol: String, vecCol: String,
-      cents: DataFrame): String =
-    writeNamedSegment(emb, idCol, vecCol, cents,
-      s"seg-${java.util.UUID.randomUUID()}")
-
-  private def writeNamedSegment(emb: DataFrame, idCol: String,
-      vecCol: String, cents: DataFrame, seg: String): String = {
-    val out = new Path(indexDir, s"segments/$seg")
-    try {
-      Similarity.rankedCellAffinity(
-          graft.queries.Tables.fanout(emb.select(col(idCol), col(vecCol))),
-          idCol, vecCol, cents)
-        .where(col("rnk") === 1)
-        .select("cell", "id", "vector")
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("cell").parquet(out.toString)
-    } catch {
-      case e: Throwable => bestEffortDelete(out); throw e
-    }
-    seg
-  }
+    * uuid- or batch-named and unreferenced until a manifest lists it, so
+    * the write needs no staging rename of its own. */
+  private def writePostings(emb: DataFrame, idCol: String, vecCol: String,
+      cents: DataFrame)(out: String): Unit =
+    Similarity.rankedCellAffinity(
+        graft.queries.Tables.fanout(emb.select(col(idCol), col(vecCol))),
+        idCol, vecCol, cents)
+      .where(col("rnk") === 1)
+      .select("cell", "id", "vector")
+      .write.mode(SaveMode.Overwrite)
+      .partitionBy("cell").parquet(out)
 
   /** Full (re)build: train a fresh codebook from `seedCol` (any rough
     * partition — a label, a hash bucket, a first-round k-means
     * assignment; nearest-centroid assignment then repairs a mediocre
     * seed), assign the whole corpus into one segment, publish. Returns
     * the published manifest version. A failed build deletes its
-    * uuid-named dirs (no later build would ever reclaim them). */
+    * uuid-named dirs (no later build would ever reclaim them). Over an
+    * existing index this is a FOLD ([[SegmentStore.fold]]): the replay
+    * horizon advances past the live batch segments and the stream pin
+    * is carried. */
   def build(emb: DataFrame, idCol: String, vecCol: String,
             seedCol: String): Long = {
-    val cv = currentVersion() // the basedOn CAS anchor
-    val cb = s"cb-${java.util.UUID.randomUUID()}"
-    val cbPath = new Path(indexDir, s"codebooks/$cb")
-    val seg =
-      try {
-        Similarity.centroids(emb, vecCol, seedCol)
-          .write.mode(SaveMode.Overwrite).parquet(cbPath.toString)
-        writeSegment(emb, idCol, vecCol,
-          spark.read.parquet(cbPath.toString))
-      } catch {
-        case e: Throwable => bestEffortDelete(cbPath); throw e
-      }
-    publishManifest(cb, Seq(seg), basedOn = cv)
+    val s = store.state() // the basedOn CAS anchor
+    val cb = SegmentStore.fresh("cb")
+    store.writing("codebooks", cb) { cbPath =>
+      Similarity.centroids(emb, vecCol, seedCol)
+        .write.mode(SaveMode.Overwrite).parquet(cbPath)
+      store.fold(s.copy(heads = Seq(cb)))(
+        writePostings(emb, idCol, vecCol, spark.read.parquet(cbPath)))
+    }
   }
 
   /** Incremental APPEND under the live FROZEN codebook: assign only the
@@ -173,73 +95,50 @@ final class IvfIndex(spark: SparkSession, val indexDir: String)
     * assignment is per-vector, so segment boundaries are invisible to
     * it (pinned in `IvfIndexSpec`). */
   def append(emb: DataFrame, idCol: String, vecCol: String): Long = {
-    val v0 = resolvedOrFail()
-    val (cb, segs) = manifestAt(v0) // resolve BEFORE writing
-    val seg = writeSegment(emb, idCol, vecCol, codebook(cb))
-    publishManifest(cb, segs :+ seg, horizonAt(v0), basedOn = Some(v0))
+    val s = store.live() // resolve BEFORE writing
+    store.append(s)(writePostings(emb, idCol, vecCol, codebook(s.heads.head)))
   }
 
   /** IDEMPOTENT per-batch append for the streaming maintainer
-    * ([[graft.stream.IvfIngest]]) — the
-    * [[MinHashIndex.appendSigsAsBatch]] rule applied to postings: the
-    * segment name derives from the batch id and the manifest gains it
-    * at most once, so an at-least-once redelivery (same checkpointed
-    * offsets ⇒ same vectors, same id) converges instead of surfacing
-    * duplicate postings in search. A segment already in the live
-    * manifest is a TRUE no-op (published data is never rewritten in
-    * place — the crash-mid-overwrite tear rule); a crash before the
-    * publish leaves an unreferenced dir the replay overwrites whole.
-    * The caller passes the codebook name it serves under
-    * (`requireCodebook`): assignments are only meaningful against the
-    * manifest's codebook, so a rebuild that swapped codebooks
-    * mid-stream fails LOUDLY here instead of publishing postings
-    * assigned under dead centroids (restart the ingest to adopt a
-    * rebuild — the version-pinning rule). Unlike the other appends
-    * this cannot create the index: a codebook must exist to assign
-    * against ([[build]] first). */
+    * ([[graft.stream.IvfIngest]]) — [[SegmentStore.appendBatch]]'s
+    * identity pin, batch-named segment and replay horizon, so an
+    * at-least-once redelivery (same checkpointed offsets ⇒ same
+    * vectors, same id) converges instead of surfacing duplicate
+    * postings in search. The caller passes the codebook name it serves
+    * under (`requireCodebook`), checked FIRST: assignments are only
+    * meaningful against the manifest's codebook, so a rebuild that
+    * swapped codebooks mid-stream fails LOUDLY here instead of
+    * publishing postings assigned under dead centroids (restart the
+    * ingest to adopt a rebuild — the version-pinning rule). Unlike the
+    * other appends this cannot create the index: a codebook must exist
+    * to assign against ([[build]] first). */
   private[graft] def appendAsBatch(emb: DataFrame, idCol: String,
-      vecCol: String, batchId: Long, requireCodebook: String): Long = {
-    val v0 = resolvedOrFail()
-    val (cb, segs) = manifestAt(v0)
+      vecCol: String, batchId: Long, requireCodebook: String,
+      streamId: Option[String] = None): Long = {
+    val s = store.live()
+    val cb = s.heads.head
     require(cb == requireCodebook,
       s"index $indexDir now serves codebook $cb, not $requireCodebook — " +
         "a rebuild happened mid-stream; restart the ingest to adopt it")
-    val h = horizonAt(v0)
-    val seg = s"seg-batch-$batchId"
-    // Second no-op trigger: the batch is at or below the replay
-    // horizon — a forget/compact already realized (and possibly
-    // redacted) its rows; re-appending would resurrect victims.
-    if (segs.contains(seg) || graft.ops.BatchHorizon.realizedLoud(h, batchId, indexDir))
-      return v0
-    writeNamedSegment(emb, idCol, vecCol, codebook(cb), seg)
-    publishManifest(cb, segs :+ seg, h, basedOn = Some(v0))
+    store.appendBatch(s, batchId, streamId)(
+      writePostings(emb, idCol, vecCol, codebook(cb)))
   }
 
   /** The live codebook's name (manifest head) — what a streaming
     * maintainer pins at construction. */
-  private[graft] def codebookName(): String = manifestAt(resolvedOrFail())._1
+  private[graft] def codebookName(): String = store.live().heads.head
 
   /** MAINTENANCE compaction: merge the live segments into one — a pure
     * per-cell union (no distance math, no re-assignment; O(index) IO)
     * — and publish a one-segment manifest under the same codebook.
     * Bounds per-query segment fan-out after many appends; search
     * results are bit-identical before and after. */
-  def compact(): Long = {
-    val v0 = resolvedOrFail()
-    val (cb, segs) = manifestAt(v0)
-    if (segs.size <= 1) return v0
-    val seg = s"seg-${java.util.UUID.randomUUID()}"
-    val out = new Path(indexDir, s"segments/$seg")
-    try readUnion(segs)
-      .write.mode(SaveMode.Overwrite).partitionBy("cell")
-      .parquet(out.toString)
-    catch { case e: Throwable => bestEffortDelete(out); throw e }
-    // Fold advances the replay horizon (BatchHorizon): a redelivery of
-    // a folded batch no-ops instead of re-adding its rows.
-    publishManifest(cb, Seq(seg),
-      graft.ops.BatchHorizon.afterFold(horizonAt(v0), segs),
-      basedOn = Some(v0))
-  }
+  def compact(): Long =
+    store.compact((segs, out) => rewrite(store.readUnion(segs), out))
+
+  /** Rewrite postings as one cell-partitioned segment. */
+  private def rewrite(postings: DataFrame, out: String): Unit =
+    postings.write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(out)
 
   /** FORGET: remove `ids` from the postings — deletion propagated into
     * the derived store (the `q_report_forget_impact` governance family;
@@ -251,7 +150,7 @@ final class IvfIndex(spark: SparkSession, val indexDir: String)
     * (pinned in spec). Centroids are aggregates and stay — full
     * statistical erasure is [[build]] on the redacted corpus + [[vacuum]]. */
   def forget(ids: Seq[Long]): Long =
-    forgetImpl(_.where(!col("id").isin(ids: _*)))
+    store.forget(SegmentStore.dropIds("id", ids))(rewrite)
 
   /** MASS-erasure forget: the victim set stays a DataFrame end to end
     * (LEFT ANTI join on `id` — no driver materialization, no broadcast
@@ -259,56 +158,27 @@ final class IvfIndex(spark: SparkSession, val indexDir: String)
     * victims) where a driver `Seq` would not fit. The frame's FIRST
     * column, cast to BIGINT, is the victim id; semantics are identical
     * to the Seq form (spec-pinned). */
-  def forget(victims: DataFrame): Long = {
-    val v = victims.select(
-      col(victims.columns.head).cast("long").as("id"))
-    forgetImpl(_.join(v, Seq("id"), "left_anti"))
-  }
-
-  private def forgetImpl(screen: DataFrame => DataFrame): Long = {
-    val v0 = resolvedOrFail()
-    val (cb, segs) = manifestAt(v0) // resolve BEFORE writing
-    val seg = s"seg-${java.util.UUID.randomUUID()}"
-    val out = new Path(indexDir, s"segments/$seg")
-    try screen(readUnion(segs))
-      .write.mode(SaveMode.Overwrite).partitionBy("cell")
-      .parquet(out.toString)
-    catch { case e: Throwable => bestEffortDelete(out); throw e }
-    // The fold advances the replay horizon so a redelivered pre-forget
-    // batch cannot re-append and resurrect the victims just erased.
-    publishManifest(cb, Seq(seg),
-      graft.ops.BatchHorizon.afterFold(horizonAt(v0), segs),
-      basedOn = Some(v0))
-  }
+  def forget(victims: DataFrame): Long =
+    store.forget(SegmentStore.dropVictims("id", victims))(rewrite)
 
   /** Retention: keep the newest `keep` versions, sweep older manifests
-    * and unreferenced codebook/segment dirs ([[IndexVacuum]] — the
-    * "readable until vacuumed" promise made concrete; maintenance
-    * window, no concurrent builds). Compact-then-vacuum is the standard
-    * maintenance pair: compaction publishes the one-segment manifest,
-    * vacuum reclaims the merged inputs. */
-  def vacuum(keep: Int = 1): (Int, Int) =
-    IndexVacuum.vacuum(fs, indexDir, keep,
-      v => { val (cb, segs) = manifestAt(v); cb +: segs },
-      Seq("codebooks" -> "cb-", "segments" -> "seg-"))
+    * and unreferenced codebook/segment dirs — the "readable until
+    * vacuumed" promise made concrete; maintenance window, no concurrent
+    * builds. Compact-then-vacuum is the standard maintenance pair:
+    * compaction publishes the one-segment manifest, vacuum reclaims the
+    * merged inputs. */
+  def vacuum(keep: Int = 1): (Int, Int) = store.vacuum(keep)
 
-  private def codebook(cb: String): DataFrame =
-    spark.read.parquet(s"$indexDir/codebooks/$cb")
+  private def codebook(cb: String): DataFrame = store.readDir("codebooks", cb)
 
-  private def readSeg(seg: String): DataFrame =
-    spark.read.parquet(s"$indexDir/segments/$seg")
-
-  private def readUnion(segs: Seq[String]): DataFrame =
-    segs.map(readSeg).reduce(_ unionByName _)
-
-  def centroids(): DataFrame = codebook(manifestAt(resolvedOrFail())._1)
-  def postings(): DataFrame = readUnion(manifestAt(resolvedOrFail())._2)
+  def centroids(): DataFrame = codebook(store.live().heads.head)
+  def postings(): DataFrame = store.readUnion(store.live().segments)
 
   /** Postings as recorded at manifest version `v` — old versions stay
     * readable until their segments are vacuumed (publication never
     * rewrites in place). */
   private[sim] def postingsAt(v: Long): DataFrame =
-    readUnion(manifestAt(v)._2)
+    store.readUnion(store.stateAt(v).segments)
 
   /** Top-k cosine neighbors per query over the persisted index. The
     * manifest is resolved ONCE and codebook + segments read from it —
@@ -334,7 +204,8 @@ final class IvfIndex(spark: SparkSession, val indexDir: String)
     * assignment), so multi-cell probing never duplicates a pair. */
   def probeMatches(queries: DataFrame, idCol: String, vecCol: String,
       probes: Int): DataFrame = {
-    val (cb, segs) = manifestAt(resolvedOrFail())
+    val live = store.live()
+    val cb = live.heads.head
     // Sidecar as a LocalRelation (SidecarCache — r16): the O(cells)
     // codebook is re-planned by every probe; serving it from the
     // driver-side cache drops the per-query codebook scan jobs.
@@ -352,7 +223,7 @@ final class IvfIndex(spark: SparkSession, val indexDir: String)
     // O(queries·cells).
     val probedCells: Seq[Any] = probed.select("cell").distinct()
       .collect().toIndexedSeq.map(_.get(0))
-    readUnion(segs).where(col("cell").isin(probedCells: _*))
+    store.readUnion(live.segments).where(col("cell").isin(probedCells: _*))
       .join(broadcast(probed), Seq("cell"))
       .select(col("qid"), col("id").as("cid"),
         Similarity.cosine(col("qe"), col("vector")).as("cos"))

@@ -1,11 +1,10 @@
 package graft.sim
 
-import java.nio.charset.StandardCharsets
-
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.ops.SegmentStore
 
 /** Persisted K-MEANS model — the build-once / assign-many form of the
   * inline deterministic Lloyd in
@@ -19,8 +18,7 @@ import org.apache.spark.sql.functions._
   *   - `segments/seg-<uuid>/` — (id, cid, d2_ppm) assignment postings
   *     against the manifest's codebook.
   *   - `m=N` — the MANIFEST: codebook name first line, live segments
-  *     after; published via the shared atomic-rename rules
-  *     ([[graft.ops.VersionedPaths.publish]]), so readers see the old
+  *     after, kept by [[graft.ops.SegmentStore]]: readers see the old
   *     model or the new one, never a torn mix.
   *
   * Determinism is the fitted algorithm's, bit-for-bit: no RNG (seeds =
@@ -40,46 +38,10 @@ import org.apache.spark.sql.functions._
 final class KmeansModel(spark: SparkSession, val modelDir: String)
     extends Serializable {
 
-  private def fs = new Path(modelDir)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val store = new SegmentStore(spark, modelDir, kind = "fitted model",
+    headDirs = Seq("codebooks" -> "cb-"))
 
-  def currentVersion(): Option[Long] =
-    graft.ops.VersionedPaths.listNumbered(fs, new Path(modelDir), "m=",
-        dirsOnly = false)
-      .map(_._2).sorted.lastOption
-
-  private[sim] def manifestAt(v: Long): (String, Seq[String]) = {
-    val in = fs.open(new Path(modelDir, s"m=$v"))
-    val lines =
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .map(_.trim).filter(_.nonEmpty).toList
-      finally in.close()
-    require(lines.nonEmpty, s"empty manifest m=$v under $modelDir")
-    (lines.head, lines.tail)
-  }
-
-  private def resolvedOrFail(): Long = currentVersion().getOrElse(
-    throw new IllegalStateException(s"no fitted model under $modelDir"))
-
-  /** OPTIMISTIC publish: target = basedOn + 1, loud on collision —
-    * the shared lost-update guard ([[IvfIndex]]'s publishManifest
-    * rule; None = the caller observed no store). */
-  private def publishManifest(codebook: String, segs: Seq[String],
-      basedOn: Option[Long]): Long = {
-    val tmp = new Path(modelDir, s".manifest-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, false)
-    try out.write(((codebook +: segs).mkString("\n") + "\n")
-      .getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    graft.ops.VersionedPaths.publish(fs, new Path(modelDir), tmp, "m=",
-      basedOn.map(_ + 1).getOrElse(0L))
-  }
-
-  private def bestEffortDelete(paths: Path*): Unit =
-    paths.foreach { p =>
-      try fs.delete(p, true)
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
+  def currentVersion(): Option[Long] = store.currentVersion()
 
   /** Floor-ppm squared L2 — the shared integer-discipline distance:
     * quantized BEFORE the argmin so ties and orderings compare
@@ -100,6 +62,11 @@ final class KmeansModel(spark: SparkSession, val modelDir: String)
       keyCols = Seq("id"),
       orderBy = Seq("d2_ppm" -> true, "cid" -> true), k = 1)
 
+  /** Write one assignment segment of `base` against `cents`. */
+  private def writeAssignments(base: DataFrame, cents: DataFrame)(
+      out: String): Unit =
+    assignFrame(base, cents).write.mode(SaveMode.Overwrite).parquet(out)
+
   /** Centroid update: order-pinned per-(cid, dim) mean through the
     * BOUNDED fold tree ([[graft.ops.OrderedFold]]) — the cross-engine
     * FP discipline of the inline Lloyd with every aggregation buffer
@@ -117,16 +84,6 @@ final class KmeansModel(spark: SparkSession, val modelDir: String)
       .groupBy("cid")
       .agg(expr("transform(array_sort(collect_list(struct(pos, m))), q -> q.m)")
         .as("centroid"))
-
-  /** Write one assignment segment of `base` against `cents`. */
-  private def writeSegment(base: DataFrame, cents: DataFrame): String = {
-    val seg = s"seg-${java.util.UUID.randomUUID()}"
-    val out = new Path(modelDir, s"segments/$seg")
-    try assignFrame(base, cents)
-      .write.mode(SaveMode.Overwrite).parquet(out.toString)
-    catch { case e: Throwable => bestEffortDelete(out); throw e }
-    seg
-  }
 
   /** The deterministic Lloyd recurrence over an (id, v) frame: seeds =
     * the k smallest ids, `rounds` assignment passes with one centroid
@@ -152,7 +109,7 @@ final class KmeansModel(spark: SparkSession, val modelDir: String)
     * until vacuumed. Returns the published version. */
   def fit(emb: DataFrame, idCol: String, vecCol: String, k: Int,
       rounds: Int = 2): Long = {
-    val cv = currentVersion() // the basedOn CAS anchor
+    val s = store.state() // the basedOn CAS anchor
     // One materialization serves every assignment + update pass;
     // RELEASED by precise ids ([[graft.ops.CheckpointIds]]) — the old
     // getPersistentRDDs before/after diff could claim (and permanently
@@ -161,16 +118,14 @@ final class KmeansModel(spark: SparkSession, val modelDir: String)
       .localCheckpoint(true)
     try {
       val cents = lloydCentroids(base, k, rounds)
-      val cb = s"cb-${java.util.UUID.randomUUID()}"
-      val cbPath = new Path(modelDir, s"codebooks/$cb")
-      val seg =
-        try {
-          cents.write.mode(SaveMode.Overwrite).parquet(cbPath.toString)
-          // The segment derives from the PERSISTED centroids (read back),
-          // so what the manifest references is exactly what assigned it.
-          writeSegment(base, spark.read.parquet(cbPath.toString))
-        } catch { case e: Throwable => bestEffortDelete(cbPath); throw e }
-      publishManifest(cb, Seq(seg), basedOn = cv)
+      val cb = SegmentStore.fresh("cb")
+      store.writing("codebooks", cb) { cbPath =>
+        cents.write.mode(SaveMode.Overwrite).parquet(cbPath)
+        // The segment derives from the PERSISTED centroids (read back),
+        // so what the manifest references is exactly what assigned it.
+        store.fold(s.copy(heads = Seq(cb)))(
+          writeAssignments(base, spark.read.parquet(cbPath)))
+      }
     } finally
       // The model is on disk; nothing returned references base.
       graft.ops.CheckpointIds.release(base)
@@ -184,7 +139,7 @@ final class KmeansModel(spark: SparkSession, val modelDir: String)
     * path: cost ∝ batch·K·dim, the standing corpus is never re-read.
     * Returns (idCol, cid, d2_ppm); pure frame, nothing written. */
   def assign(df: DataFrame, idCol: String, vecCol: String): DataFrame =
-    assignAt(resolvedOrFail(), df, idCol, vecCol)
+    assignAt(store.live().version.get, df, idCol, vecCol)
 
   /** [[assign]] pinned to manifest version `v` — the serving form a
     * long-lived consumer (a streaming ingest) must use: resolving the
@@ -214,7 +169,7 @@ final class KmeansModel(spark: SparkSession, val modelDir: String)
     * audit convention). */
   def assignApprox(df: DataFrame, idCol: String, vecCol: String,
       probes: Int): DataFrame =
-    assignApproxAt(resolvedOrFail(), df, idCol, vecCol, probes)
+    assignApproxAt(store.live().version.get, df, idCol, vecCol, probes)
 
   /** [[assignApprox]] pinned to manifest version `v` (the [[assignAt]]
     * rule for the hierarchical path). */
@@ -251,39 +206,30 @@ final class KmeansModel(spark: SparkSession, val modelDir: String)
     * delta, publish old segments + the new one. Ids must be disjoint
     * from standing segments (the `IvfIndex`/`LexIndex` contract). */
   def append(df: DataFrame, idCol: String, vecCol: String): Long = {
-    val v0 = resolvedOrFail() // resolve ONCE, BEFORE writing
-    val (cb, segs) = manifestAt(v0)
-    val seg = writeSegment(
-      df.select(col(idCol).as("id"), col(vecCol).as("v")), codebook(cb))
-    publishManifest(cb, segs :+ seg, basedOn = Some(v0))
+    val s = store.live() // resolve ONCE, BEFORE writing
+    store.append(s)(writeAssignments(
+      df.select(col(idCol).as("id"), col(vecCol).as("v")),
+      codebook(s.heads.head)))
   }
 
-  private def codebook(cb: String): DataFrame =
-    spark.read.parquet(s"$modelDir/codebooks/$cb")
+  private def codebook(cb: String): DataFrame = store.readDir("codebooks", cb)
 
-  def centroids(): DataFrame = centroidsAt(resolvedOrFail())
+  def centroids(): DataFrame = codebook(store.live().heads.head)
 
   /** The codebook of manifest version `v` — version-pinned model state
     * for consumers that must not follow a live refit. */
-  def centroidsAt(v: Long): DataFrame = codebook(manifestAt(v)._1)
+  def centroidsAt(v: Long): DataFrame = codebook(store.stateAt(v).heads.head)
 
   /** MAINTENANCE compaction: merge the live assignment segments into
     * one (pure union rewrite — no distance math, no re-assignment;
     * O(store) IO) and publish under the same codebook. Bounds segment
     * fan-out after many [[append]]s; [[assignments]] is row-identical
     * before and after. The [[IvfIndex.compact]] economics. */
-  def compact(): Long = {
-    val v0 = resolvedOrFail()
-    val (cb, segs) = manifestAt(v0)
-    if (segs.size <= 1) return v0
-    val seg = s"seg-${java.util.UUID.randomUUID()}"
-    val out = new Path(modelDir, s"segments/$seg")
-    try segs.map(s0 => spark.read.parquet(s"$modelDir/segments/$s0"))
-      .reduce(_ unionByName _)
-      .write.mode(SaveMode.Overwrite).parquet(out.toString)
-    catch { case e: Throwable => bestEffortDelete(out); throw e }
-    publishManifest(cb, Seq(seg), basedOn = Some(v0))
-  }
+  def compact(): Long =
+    store.compact((segs, out) => rewrite(store.readUnion(segs), out))
+
+  private def rewrite(assigned: DataFrame, out: String): Unit =
+    assigned.write.mode(SaveMode.Overwrite).parquet(out)
 
   /** FORGET: remove `ids` from the assignment store — the
     * deletion-propagation step a right-to-be-forgotten request needs
@@ -299,43 +245,21 @@ final class KmeansModel(spark: SparkSession, val modelDir: String)
     * pre-forget versions from disk. `ids` must be bounded request
     * state (a forget request, not a data stream) — it broadcasts. */
   def forget(ids: Seq[Long]): Long =
-    forgetImpl(_.where(!col("id").isin(ids.distinct: _*)))
+    store.forget(SegmentStore.dropIds("id", ids))(rewrite)
 
   /** MASS-erasure forget: victims stay a DataFrame end to end (LEFT
     * ANTI join on `id`; first column cast to BIGINT) — the
     * [[graft.sim.IvfIndex.forget]] overload contract. */
-  def forget(victims: DataFrame): Long = {
-    val v = victims.select(
-      col(victims.columns.head).cast("long").as("id"))
-    forgetImpl(_.join(v, Seq("id"), "left_anti"))
-  }
-
-  private def forgetImpl(screen: DataFrame => DataFrame): Long = {
-    val v0 = resolvedOrFail() // resolve ONCE, BEFORE writing
-    val (cb, segs) = manifestAt(v0)
-    val seg = s"seg-${java.util.UUID.randomUUID()}"
-    val out = new Path(modelDir, s"segments/$seg")
-    try screen(segs.map(s0 => spark.read.parquet(s"$modelDir/segments/$s0"))
-      .reduce(_ unionByName _))
-      .write.mode(SaveMode.Overwrite).parquet(out.toString)
-    catch { case e: Throwable => bestEffortDelete(out); throw e }
-    publishManifest(cb, Seq(seg), basedOn = Some(v0))
-  }
+  def forget(victims: DataFrame): Long =
+    store.forget(SegmentStore.dropVictims("id", victims))(rewrite)
 
   /** Retention: keep the newest `keep` versions, sweep older manifests
-    * and unreferenced codebook/segment dirs ([[IndexVacuum]] — the
-    * "readable until vacuumed" promise made concrete; maintenance
-    * window, no concurrent fits). */
-  def vacuum(keep: Int = 1): (Int, Int) =
-    IndexVacuum.vacuum(fs, modelDir, keep,
-      v => { val (cb, segs) = manifestAt(v); cb +: segs },
-      Seq("codebooks" -> "cb-", "segments" -> "seg-"))
+    * and unreferenced codebook/segment dirs — the "readable until
+    * vacuumed" promise made concrete; maintenance window, no concurrent
+    * fits. */
+  def vacuum(keep: Int = 1): (Int, Int) = store.vacuum(keep)
 
   /** The persisted assignment store: (id, cid, d2_ppm) across all live
     * segments — resolved from ONE manifest read (the torn-read rule). */
-  def assignments(): DataFrame = {
-    val (_, segs) = manifestAt(resolvedOrFail())
-    segs.map(s => spark.read.parquet(s"$modelDir/segments/$s"))
-      .reduce(_ unionByName _)
-  }
+  def assignments(): DataFrame = store.readUnion(store.live().segments)
 }

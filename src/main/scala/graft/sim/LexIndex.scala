@@ -1,10 +1,9 @@
 package graft.sim
 
-import java.nio.charset.StandardCharsets
-
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.ops.SegmentStore
 
 /** Persisted LEXICAL (BM25) index — the build-once / query-many twin of
   * [[IvfIndex]] on the sparse-retrieval side, with Lucene's SEGMENT
@@ -23,11 +22,10 @@ import org.apache.spark.sql.functions._
   *     never joins a doc-length table.
   *   - `segments/seg-<uuid>/stats/` — (term, df), vocabulary-sized.
   *   - `segments/seg-<uuid>/meta/`  — ONE row (n_docs, dl_sum).
-  *   - `m=N` — the MANIFEST file: the live segment names, one per line.
-  *     Publication is a temp-write + ONE atomic rename (the shared
-  *     [[graft.ops.VersionedPaths.publish]] race rules), so readers see
-  *     either the old segment set or the new one, never a torn mix, and
-  *     segments never referenced by the newest manifest are invisible.
+  *   - `m=N` — the MANIFEST file: the live segment names, one per line,
+  *     kept by [[graft.ops.SegmentStore]]: readers see either the old
+  *     segment set or the new one, never a torn mix, and segments never
+  *     referenced by the newest manifest are invisible.
   *
   * BM25 statistics are ADDITIVE (N = Σ segment n_docs, Σdl likewise,
   * df(t) = Σ segment df(t)), so an append is exact — index-served scores
@@ -41,39 +39,18 @@ final class LexIndex(spark: SparkSession, val indexDir: String)
     extends Serializable {
   import LexIndex._
 
-  private def fs = new Path(indexDir)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val store = new SegmentStore(spark, indexDir)
 
-  /** Newest manifest version (name filter first — zero probes on stray
-    * entries; the manifest file is atomic by rename, so existence is
-    * completeness). */
-  def currentVersion(): Option[Long] =
-    graft.ops.VersionedPaths.listNumbered(fs, new Path(indexDir), "m=",
-        dirsOnly = false)
-      .map(_._2).sorted.lastOption
-
-  /** The live segment names at version `v`. */
-  private def segmentsAt(v: Long): Seq[String] = {
-    val in = fs.open(new Path(indexDir, s"m=$v"))
-    try {
-      scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .map(_.trim).filter(_.nonEmpty).toList
-    } finally in.close()
-  }
+  /** Newest manifest version ([[SegmentStore.currentVersion]]). */
+  def currentVersion(): Option[Long] = store.currentVersion()
 
   /** Live segment names at the newest version, or fail loudly. */
-  def liveSegments(): Seq[String] = segmentsAt(resolvedOrFail())
+  def liveSegments(): Seq[String] = store.live().segments
 
   /** Retention: keep the newest `keep` versions, sweep older manifests
-    * and unreferenced segment dirs (shared [[IndexVacuum]] rules —
-    * maintenance window, no concurrent builds; compact-then-vacuum
-    * reclaims the merged inputs). */
-  def vacuum(keep: Int = 1): (Int, Int) =
-    IndexVacuum.vacuum(fs, indexDir, keep, segmentsAt,
-      Seq("segments" -> "seg-"))
-
-  private def resolvedOrFail(): Long = currentVersion().getOrElse(
-    throw new IllegalStateException(s"no complete index under $indexDir"))
+    * and unreferenced segment dirs (maintenance window, no concurrent
+    * builds; compact-then-vacuum reclaims the merged inputs). */
+  def vacuum(keep: Int = 1): (Int, Int) = store.vacuum(keep)
 
   /** FORGET: remove `ids` and publish one rewritten segment — deletion
     * propagated into the derived store (the
@@ -86,28 +63,25 @@ final class LexIndex(spark: SparkSession, val indexDir: String)
     * One O(index) filter + vocabulary-sized aggregates; no tokenize
     * pass, the corpus text is never re-read. */
   def forget(ids: Seq[Long]): Long =
-    forgetImpl(_.where(!col("doc_id").isin(ids: _*)))
+    store.forget(SegmentStore.dropIds("doc_id", ids), "postings")(
+      writeFromPostings)
 
   /** MASS-erasure forget: victims stay a DataFrame end to end (LEFT
     * ANTI join on `doc_id`; first column cast to BIGINT) — the
     * [[graft.sim.IvfIndex.forget]] overload contract. */
-  def forget(victims: DataFrame): Long = {
-    val v = victims.select(
-      col(victims.columns.head).cast("long").as("doc_id"))
-    forgetImpl(_.join(v, Seq("doc_id"), "left_anti"))
-  }
+  def forget(victims: DataFrame): Long =
+    store.forget(SegmentStore.dropVictims("doc_id", victims), "postings")(
+      writeFromPostings)
 
-  private def forgetImpl(screen: DataFrame => DataFrame): Long = {
-    val v0 = resolvedOrFail() // resolve ONCE, BEFORE the writes
-    val live = segmentsAt(v0)
-    val seg = s"seg-${java.util.UUID.randomUUID()}"
-    val out = s"$indexDir/segments/$seg"
-    // One materialization feeds postings, df, and meta; RELEASED
-    // before returning (nothing returned references it — an
-    // unreleased index-sized pin per erasure request would accumulate
-    // for the driver's lifetime, the stores-own-release contract
-    // [[graft.gov.ForgetPipeline]] relies on).
-    val posts = screen(readUnion(live, "postings")).localCheckpoint(true)
+  /** One segment re-derived from (surviving) postings: df recounted per
+    * term, n_docs/Σdl from the denormalized per-doc lengths. One
+    * materialization feeds all three tables; RELEASED before returning
+    * (nothing returned references it — an unreleased index-sized pin
+    * per erasure request would accumulate for the driver's lifetime, the
+    * stores-own-release contract [[graft.gov.ForgetPipeline]] relies
+    * on). */
+  private def writeFromPostings(postings: DataFrame, out: String): Unit = {
+    val posts = postings.localCheckpoint(true)
     try {
       posts.write.mode(SaveMode.Overwrite).partitionBy("b")
         .parquet(s"$out/postings")
@@ -118,19 +92,16 @@ final class LexIndex(spark: SparkSession, val indexDir: String)
         .agg(count(lit(1)).as("n_docs"), sum("dl").as("dl_sum"))
         .write.mode(SaveMode.Overwrite).parquet(s"$out/meta")
     } finally graft.ops.CheckpointIds.release(posts)
-    publishManifest(Seq(seg), basedOn = Some(v0))
   }
 
   /** Write one segment (postings + stats + meta) from a (id, text)
-    * batch and return its name. Zero-term docs contribute no postings
-    * and are excluded from n_docs and Σdl — exactly the inline query's
-    * `dl > 0` population, so scores agree by construction. */
-  private def writeSegment(docs: DataFrame, idCol: String,
-      textCol: String): String = {
-    val seg = s"seg-${java.util.UUID.randomUUID()}"
-    val out = s"$indexDir/segments/$seg"
+    * batch. Zero-term docs contribute no postings and are excluded from
+    * n_docs and Σdl — exactly the inline query's `dl > 0` population, so
+    * scores agree by construction. */
+  private def writeTables(docs: DataFrame, idCol: String,
+      textCol: String)(out: String): Unit = {
     // One materialization feeds postings, dl, df, and meta; RELEASED
-    // before returning (see forgetImpl's release note).
+    // before returning (see writeFromPostings' release note).
     val tf = graft.queries.Tables.fanout(docs)
       .select(col(idCol).as("doc_id"),
         explode(graft.ops.TokenOps.terms(col(textCol))).as("term"))
@@ -147,32 +118,13 @@ final class LexIndex(spark: SparkSession, val indexDir: String)
       dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("dl_sum"))
         .write.mode(SaveMode.Overwrite).parquet(s"$out/meta")
     } finally graft.ops.CheckpointIds.release(tf)
-    seg
-  }
-
-  /** Publish `segs` as the next manifest version: temp write + one
-    * atomic rename (shared [[graft.ops.VersionedPaths.publish]] rules —
-    * a racing publisher loses loudly, readers never see a torn set). */
-  private def publishManifest(segs: Seq[String],
-      basedOn: Option[Long]): Long = {
-    // OPTIMISTIC target = basedOn + 1, loud on collision — the shared
-    // lost-update guard ([[IvfIndex]]'s publishManifest rule).
-    val tmp = new Path(indexDir, s".manifest-${java.util.UUID.randomUUID()}")
-    val outStream = fs.create(tmp, false)
-    try outStream.write(
-      (segs.mkString("\n") + "\n").getBytes(StandardCharsets.UTF_8))
-    finally outStream.close()
-    graft.ops.VersionedPaths.publish(fs, new Path(indexDir), tmp, "m=",
-      basedOn.map(_ + 1).getOrElse(0L))
   }
 
   /** First build: one segment, manifest version 0 (or the next version
     * when rebuilding over an existing index — older manifests keep
     * working until pruned). */
-  def build(docs: DataFrame, idCol: String, textCol: String): Long = {
-    val cv = currentVersion() // the basedOn CAS anchor
-    publishManifest(Seq(writeSegment(docs, idCol, textCol)), basedOn = cv)
-  }
+  def build(docs: DataFrame, idCol: String, textCol: String): Long =
+    store.fold(store.state())(writeTables(docs, idCol, textCol))
 
   /** Incremental APPEND: index only the delta batch, publish the
     * manifest referencing old segments + the new one. Cost ∝ delta —
@@ -183,41 +135,26 @@ final class LexIndex(spark: SparkSession, val indexDir: String)
     * re-ingested into a second segment would double-count in N/df and
     * merge its postings at query time — put the dedup ingest in front,
     * as the streaming pipeline here already does. */
-  def append(docs: DataFrame, idCol: String, textCol: String): Long = {
-    val v0 = resolvedOrFail() // resolve ONCE, BEFORE the heavy write
-    publishManifest(segmentsAt(v0) :+ writeSegment(docs, idCol, textCol),
-      basedOn = Some(v0))
-  }
+  def append(docs: DataFrame, idCol: String, textCol: String): Long =
+    store.append(store.live())(writeTables(docs, idCol, textCol))
 
   /** MAINTENANCE compaction: merge the live segments into one (postings
     * unioned per bucket, df summed per term, meta summed — the same
     * additive algebra search uses) and publish a one-segment manifest.
     * O(index size), never re-tokenizes; bounds per-query fan-out after
     * many appends. */
-  def compact(): Long = {
-    val v0 = resolvedOrFail()
-    val live = segmentsAt(v0)
-    if (live.size <= 1) return v0
-    val seg = s"seg-${java.util.UUID.randomUUID()}"
-    val out = s"$indexDir/segments/$seg"
-    readUnion(live, "postings")
+  def compact(): Long = store.compact { (live, out) =>
+    store.readUnion(live, "postings")
       .write.mode(SaveMode.Overwrite).partitionBy("b").parquet(s"$out/postings")
-    readUnion(live, "stats")
+    store.readUnion(live, "stats")
       .groupBy("term").agg(sum("df").as("df"))
       .write.mode(SaveMode.Overwrite).parquet(s"$out/stats")
-    readUnion(live, "meta")
+    store.readUnion(live, "meta")
       .agg(sum("n_docs").as("n_docs"), sum("dl_sum").as("dl_sum"))
       .write.mode(SaveMode.Overwrite).parquet(s"$out/meta")
-    publishManifest(Seq(seg), basedOn = Some(v0))
   }
 
-  private def readSeg(seg: String, table: String): DataFrame =
-    spark.read.parquet(s"$indexDir/segments/$seg/$table")
-
-  private def readUnion(segs: Seq[String], table: String): DataFrame =
-    segs.map(readSeg(_, table)).reduce(_ unionByName _)
-
-  def postings(): DataFrame = readUnion(liveSegments(), "postings")
+  def postings(): DataFrame = store.readUnion(liveSegments(), "postings")
 
   /** Top-k BM25 docs for a bag of query terms, from the persisted index
     * only. The manifest is resolved ONCE (the torn-read rule); probed
@@ -235,9 +172,9 @@ final class LexIndex(spark: SparkSession, val indexDir: String)
     val buckets = spark.createDataset(terms).toDF("term")
       .withColumn("b", expr(bucketSql("term")))
       .collect().map(_.getLong(1)).distinct.toSeq
-    val globals = readUnion(live, "meta")
+    val globals = store.readUnion(live, "meta")
       .agg(sum("n_docs").as("n_docs"), sum("dl_sum").as("dl_sum"))
-    val termStats = readUnion(live, "stats")
+    val termStats = store.readUnion(live, "stats")
       .where(col("term").isin(terms: _*))
       .groupBy("term").agg(sum("df").as("df"))
       .crossJoin(broadcast(globals))
@@ -245,7 +182,7 @@ final class LexIndex(spark: SparkSession, val indexDir: String)
         expr(graft.ops.Bm25.aMilliSql("dl_sum", "n_docs", "DIV")))
       .withColumn("idf_un", expr(graft.ops.Bm25.idfUnSql("n_docs", "df")))
       .select("term", "idf_un", "a_milli")
-    live.map(readSeg(_, "postings"))
+    live.map(seg => store.readUnion(Seq(seg), "postings"))
       .map(_.where(col("b").isin(buckets: _*) && col("term").isin(terms: _*)))
       .reduce(_ unionByName _)
       .join(broadcast(termStats), Seq("term"))

@@ -1,10 +1,9 @@
 package graft.sim
 
-import java.nio.charset.StandardCharsets
-
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.ops.SegmentStore
 
 /** Persisted MinHash-LSH index — the build-once / probe-many form of the
   * near-dup screen (reference dedup-by-id sink `test/data_ingestion/
@@ -18,7 +17,7 @@ import org.apache.spark.sql.functions._
   * standing corpus" is the difference between an ingest step and a
   * rebuild — the [[LexIndex]] segment economics applied to LSH.
   *
-  * Layout (the shared manifest discipline of [[IvfIndex]]/[[LexIndex]]):
+  * Layout (the shared [[graft.ops.SegmentStore]] manifest discipline):
   *   - `segments/seg-<uuid>/sigs/`  — (doc_id, sig1..sigN), one row per
   *     sketchable doc (≥ 3 tokens — the inline rule).
   *   - `segments/seg-<uuid>/bands/` — (b, bkey, doc_id) PARTITIONED BY
@@ -27,9 +26,9 @@ import org.apache.spark.sql.functions._
   *     (directory-level pruning; a small batch reads a few buckets, not
   *     the index). Matches can never be lost to pruning: a colliding
   *     corpus row shares (b, bkey) and therefore the bucket.
-  *   - `m=N` — manifest: live segment names, one per line; temp-write +
-  *     ONE atomic rename ([[graft.ops.VersionedPaths.publish]]), so
-  *     readers see the old or new segment set, never a torn mix.
+  *   - `m=N` — manifest: live segment names, one per line, plus the
+  *     optional `bh`/`sid` replay lines; readers see the old or new
+  *     segment set, never a torn mix.
   *
   * Signatures are PER-DOC — no cross-doc state — so the algebra is
   * trivially exact: append of a doc-disjoint batch equals a from-scratch
@@ -49,85 +48,24 @@ final class MinHashIndex(spark: SparkSession, val indexDir: String)
     extends Serializable {
   import MinHashIndex._
 
-  private def fs = new Path(indexDir)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val store = new SegmentStore(spark, indexDir)
 
   /** Newest manifest version (atomic-by-rename ⇒ existence is
     * completeness). */
-  def currentVersion(): Option[Long] =
-    graft.ops.VersionedPaths.listNumbered(fs, new Path(indexDir), "m=",
-        dirsOnly = false)
-      .map(_._2).sorted.lastOption
-
-  private def manifestLinesAt(v: Long): Seq[String] = {
-    val in = fs.open(new Path(indexDir, s"m=$v"))
-    try {
-      scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .map(_.trim).filter(_.nonEmpty).toList
-    } finally in.close()
-  }
-
-  // Manifest = segment names + an optional `bh <id>` replay-horizon
-  // line ([[graft.ops.BatchHorizon]] — forget/compact fold batch-named
-  // segments away; the horizon keeps a redelivered pre-fold batch a
-  // no-op instead of a victim-resurrecting re-append).
-  private def segmentsAt(v: Long): Seq[String] =
-    graft.ops.BatchHorizon.split(manifestLinesAt(v))._1
+  def currentVersion(): Option[Long] = store.currentVersion()
 
   /** Live segment names at the newest version, or fail loudly. */
-  def liveSegments(): Seq[String] = segmentsAt(resolvedOrFail())
-
-  private def resolvedOrFail(): Long = currentVersion().getOrElse(
-    throw new IllegalStateException(s"no complete index under $indexDir"))
+  def liveSegments(): Seq[String] = store.live().segments
 
   /** Retention: keep the newest `keep` versions, sweep older manifests
-    * and unreferenced segment dirs (shared [[IndexVacuum]] rules). */
-  def vacuum(keep: Int = 1): (Int, Int) =
-    IndexVacuum.vacuum(fs, indexDir, keep, segmentsAt,
-      Seq("segments" -> "seg-"))
-
-  /** (segments, horizon, sid) from ONE parsed manifest read — the
-    * lifecycle ops' single-read rule (each accessor is a metadata
-    * round trip on an object store, and independent reads can straddle
-    * a concurrent publish). */
-  private def stateAt(v: Long): (Seq[String], Option[Long], Option[String]) = {
-    val lines = manifestLinesAt(v)
-    val (segs, h) = graft.ops.BatchHorizon.split(lines)
-    (segs, h, graft.ops.BatchHorizon.splitSid(lines))
-  }
-
-  /** Publish OPTIMISTICALLY against the version the caller's reads
-    * were based on (None = no store observed): the target is exactly
-    * basedOn + 1, and [[graft.ops.VersionedPaths.publish]] throws if
-    * it already exists — a lifecycle op interleaving with another
-    * writer (a standing [[graft.stream.MinHashIngest]] append racing a
-    * [[graft.gov.ForgetPipeline]] erasure) fails LOUDLY instead of
-    * silently rebuilding the manifest from stale reads, which would
-    * drop the other writer's segment (or resurrect erased victims). */
-  private def publishManifest(segs: Seq[String],
-      horizon: Option[Long] = None,
-      sid: Option[String] = None,
-      basedOn: Option[Long]): Long = {
-    val body = segs ++ graft.ops.BatchHorizon.lines(horizon) ++
-      graft.ops.BatchHorizon.sidLines(sid)
-    val tmp = new Path(indexDir, s".manifest-${java.util.UUID.randomUUID()}")
-    val outStream = fs.create(tmp, false)
-    try outStream.write(
-      (body.mkString("\n") + "\n").getBytes(StandardCharsets.UTF_8))
-    finally outStream.close()
-    graft.ops.VersionedPaths.publish(fs, new Path(indexDir), tmp, "m=",
-      basedOn.map(_ + 1).getOrElse(0L))
-  }
+    * and unreferenced segment dirs. */
+  def vacuum(keep: Int = 1): (Int, Int) = store.vacuum(keep)
 
   /** Write one segment from a signatures frame: sigs parquet first, then
     * bands DERIVED FROM THE WRITTEN FILE (the write is the
     * materialization — the shingle→sig pipeline runs exactly once per
     * batch, never once per table). */
-  private def writeSegmentFromSigs(sigs: DataFrame): String =
-    writeNamedSegment(sigs, s"seg-${java.util.UUID.randomUUID()}")
-
-  private def writeNamedSegment(sigs: DataFrame, seg: String): String = {
-    val out = s"$indexDir/segments/$seg"
+  private def writeTables(sigs: DataFrame, out: String): Unit = {
     sigs.write.mode(SaveMode.Overwrite).parquet(s"$out/sigs")
     graft.queries.DedupQueries
       .minhashBandsOf(spark.read.parquet(s"$out/sigs"))
@@ -135,7 +73,6 @@ final class MinHashIndex(spark: SparkSession, val indexDir: String)
       .select("bucket", "b", "bkey", "doc_id")
       .write.mode(SaveMode.Overwrite).partitionBy("bucket")
       .parquet(s"$out/bands")
-    seg
   }
 
   /** Sketch a raw (id, text) batch with the shared kernel. The batch is
@@ -147,105 +84,55 @@ final class MinHashIndex(spark: SparkSession, val indexDir: String)
         docs.select(col(idCol).as("doc_id"), col(textCol).as("text"))))
 
   /** First build: one segment, manifest version 0 — or a REBUILD over
-    * an existing index, which is a FOLD for replay purposes: the live
-    * batch-named segments vanish from the manifest, so the published
-    * horizon must advance past them ([[graft.ops.BatchHorizon.afterFold]]
-    * — a pre-rebuild batch redelivered afterwards would otherwise
+    * an existing index, which is a FOLD for replay purposes
+    * ([[SegmentStore.fold]]): the live batch-named segments vanish from
+    * the manifest, so the published horizon advances past them (a
+    * pre-rebuild batch redelivered afterwards would otherwise
     * re-append, double-adding its rows or resurrecting victims a
     * pre-rebuild forget erased) and the stream-identity pin is carried.
     * Old manifests serve until vacuumed. */
-  def build(docs: DataFrame, idCol: String, textCol: String): Long = {
-    val cv = currentVersion()
-    val (folded, h, sid) = cv match {
-      case Some(v) => stateAt(v)
-      case None => (Nil, None, None)
-    }
-    publishManifest(Seq(writeSegmentFromSigs(sketch(docs, idCol, textCol))),
-      graft.ops.BatchHorizon.afterFold(h, folded), sid, basedOn = cv)
-  }
+  def build(docs: DataFrame, idCol: String, textCol: String): Long =
+    store.fold(store.state())(writeTables(sketch(docs, idCol, textCol), _))
 
   /** Incremental APPEND: sketch only the delta, publish old segments +
     * the new one. Cost ∝ delta — the standing corpus text is never
     * re-read. Exact (per-doc rows, doc-disjoint contract). */
-  def append(docs: DataFrame, idCol: String, textCol: String): Long = {
-    val v = resolvedOrFail() // resolve ONCE, BEFORE the heavy write
-    val (live, h, sid) = stateAt(v)
-    publishManifest(
-      live :+ writeSegmentFromSigs(sketch(docs, idCol, textCol)), h,
-      sid, basedOn = Some(v))
-  }
+  def append(docs: DataFrame, idCol: String, textCol: String): Long =
+    store.append(store.live())(writeTables(sketch(docs, idCol, textCol), _))
 
   /** IDEMPOTENT per-batch append for the streaming maintainer
-    * ([[graft.stream.MinHashIngest]]): the segment name is DERIVED FROM
-    * THE BATCH ID and the manifest gains the segment at most once — so
-    * an at-least-once redelivery (same checkpointed offsets ⇒ same
-    * survivor sigs, same id) converges instead of accumulating
-    * duplicate segments (the
+    * ([[graft.stream.MinHashIngest]]) — [[SegmentStore.appendBatch]]:
+    * the segment name is DERIVED FROM THE BATCH ID and the manifest
+    * gains the segment at most once, so an at-least-once redelivery
+    * (same checkpointed offsets ⇒ same survivor sigs, same id)
+    * converges instead of accumulating duplicate segments (the
     * [[graft.stream.MicroBatchIngest.writeBatchPartition]] convergence
-    * rule, applied to manifest-versioned segments). A segment ALREADY
-    * in the live manifest is a TRUE no-op: published data is never
-    * rewritten in place (a crash mid-overwrite would leave the manifest
-    * pointing at a half-written segment — the tear the manifest
-    * discipline exists to prevent; the caller's rows are deterministic
-    * in the batch, so skipping loses nothing). A crash BEFORE the
-    * publish leaves an unreferenced segment dir, which the replay
-    * overwrites whole. Creates the index when none exists yet.
-    *
-    * TWO no-op triggers: the segment is still live, OR the batch is at
-    * or below the manifest's replay horizon ([[graft.ops.BatchHorizon]])
-    * — a forget/compact folded it away, so re-appending would
-    * double-add its survivors and RESURRECT its forgotten victims. */
+    * rule, applied to manifest-versioned segments). A segment already
+    * live, or a batch at or below the replay horizon (a forget/compact
+    * folded it away), is a TRUE no-op; a pinned index fed by a
+    * different stream identity fails loudly. A crash BEFORE the publish
+    * leaves an unreferenced segment dir, which the replay overwrites
+    * whole. Creates the index when none exists yet. */
   private[graft] def appendSigsAsBatch(sigs: DataFrame, batchId: Long,
-      streamId: Option[String] = None): Long = {
-    val cv = currentVersion()
-    val (live, h, sid) = cv match {
-      case Some(v) => stateAt(v)
-      case None    => (Nil, None, None)
-    }
-    // Identity pin FIRST: the horizon no-op is sound only per
-    // checkpoint — a pinned index fed by a different stream identity
-    // fails loudly instead of silently dropping every batch at or
-    // below the old horizon ([[graft.ops.BatchHorizon.requireSid]]).
-    graft.ops.BatchHorizon.requireSid(sid, streamId, s"MinHash index $indexDir")
-    val seg = s"seg-batch-$batchId"
-    if (live.contains(seg) || graft.ops.BatchHorizon.realizedLoud(h, batchId, indexDir))
-      return cv.get
-    writeNamedSegment(sigs, seg)
-    publishManifest(live :+ seg, h,
-      graft.ops.BatchHorizon.adoptSid(sid, streamId), basedOn = cv)
-  }
+      streamId: Option[String] = None): Long =
+    store.appendBatch(store.state(), batchId, streamId)(writeTables(sigs, _))
 
   /** FORGET: drop `ids` and publish one rewritten segment — deletion
     * propagated into the derived store, and EXACT: signatures are
     * per-doc, so the surviving rows (bands re-derived from them) equal
     * an index built over the redacted corpus bit-for-bit (pinned in
     * `MinHashIndexSpec`). O(index) filter; no re-sketch, the corpus
-    * text is never re-read. */
-  def forget(ids: Seq[Long]): Long = {
-    val v = resolvedOrFail()
-    val (live, h, sid) = stateAt(v)
-    val survivors = readUnion(live, "sigs")
-      .where(!col("doc_id").isin(ids: _*))
-    // The fold realizes every batch-named segment: advance the replay
-    // horizon so a redelivered pre-forget batch cannot re-append (and
-    // resurrect victims this forget just erased).
-    publishManifest(Seq(writeSegmentFromSigs(survivors)),
-      graft.ops.BatchHorizon.afterFold(h, live), sid, basedOn = Some(v))
-  }
+    * text is never re-read. The fold advances the replay horizon so a
+    * redelivered pre-forget batch cannot re-append its victims. */
+  def forget(ids: Seq[Long]): Long =
+    store.forget(SegmentStore.dropIds("doc_id", ids), "sigs")(writeTables)
 
   /** MASS-erasure forget: victims stay a DataFrame end to end (LEFT
     * ANTI join on `doc_id`; first column cast to BIGINT) — the
     * [[graft.sim.IvfIndex.forget]] overload contract. */
-  def forget(victims: DataFrame): Long = {
-    val vict = victims.select(
-      col(victims.columns.head).cast("long").as("doc_id"))
-    val v = resolvedOrFail()
-    val (live, h, sid) = stateAt(v)
-    val survivors = readUnion(live, "sigs")
-      .join(vict, Seq("doc_id"), "left_anti")
-    publishManifest(Seq(writeSegmentFromSigs(survivors)),
-      graft.ops.BatchHorizon.afterFold(h, live), sid, basedOn = Some(v))
-  }
+  def forget(victims: DataFrame): Long =
+    store.forget(SegmentStore.dropVictims("doc_id", victims), "sigs")(
+      writeTables)
 
   /** MAINTENANCE compaction: merge live segments into one (row union —
     * exact) and publish a one-segment manifest; bounds per-probe segment
@@ -258,26 +145,15 @@ final class MinHashIndex(spark: SparkSession, val indexDir: String)
     * replaces the round-10 caller-side "compact only past the
     * checkpoint's last committed batch" rule). Like every maintenance
     * pass here, run it in a window with no concurrent builders. */
-  def compact(): Long = {
-    val v = resolvedOrFail()
-    val (live, h, sid) = stateAt(v)
-    if (live.size <= 1) return v
-    publishManifest(Seq(writeSegmentFromSigs(readUnion(live, "sigs"))),
-      graft.ops.BatchHorizon.afterFold(h, live), sid, basedOn = Some(v))
-  }
-
-  private def readSeg(seg: String, table: String): DataFrame =
-    spark.read.parquet(s"$indexDir/segments/$seg/$table")
-
-  private def readUnion(segs: Seq[String], table: String): DataFrame =
-    segs.map(readSeg(_, table)).reduce(_ unionByName _)
+  def compact(): Long =
+    store.compact((segs, out) => writeTables(store.readUnion(segs, "sigs"), out))
 
   /** All persisted signatures (doc_id, sig1..sigN) at the newest
     * manifest (resolved once — the torn-read rule). */
-  def signatures(): DataFrame = readUnion(liveSegments(), "sigs")
+  def signatures(): DataFrame = store.readUnion(liveSegments(), "sigs")
 
   /** All persisted band rows (bucket, b, bkey, doc_id). */
-  def bands(): DataFrame = readUnion(liveSegments(), "bands")
+  def bands(): DataFrame = store.readUnion(liveSegments(), "bands")
 
   /** LSH candidate pairs (doc1 < doc2) WITHIN the index — the standing
     * corpus' near-dup pair set, served from the persisted bands with no
@@ -290,7 +166,7 @@ final class MinHashIndex(spark: SparkSession, val indexDir: String)
     // band table reads as ~Buckets tiny splits (openCost-dominated), and
     // two aliased reads paid that scan twice — measured 2 × ~200 ms of
     // pure split-scheduling at sf0.1. Cluster swap: persist (PLANS.md).
-    val b1 = readUnion(live, "bands").localCheckpoint(true)
+    val b1 = store.readUnion(live, "bands").localCheckpoint(true)
     val b2 = b1
     b1.as("x").join(b2.as("y"),
         col("x.b") === col("y.b") && col("x.bkey") === col("y.bkey") &&
@@ -335,7 +211,7 @@ final class MinHashIndex(spark: SparkSession, val indexDir: String)
     val bucketRows = distinctBuckets.limit(maxBucketLiterals + 1).collect()
     if (bucketRows.isEmpty) return deltaBands
       .select(col("doc_id"), col("doc_id").as("corpus_doc")).limit(0)
-    val corpus = readUnion(live, "bands")
+    val corpus = store.readUnion(live, "bands")
     val pruned =
       if (bucketRows.length <= maxBucketLiterals)
         corpus.where(col("bucket").isin(

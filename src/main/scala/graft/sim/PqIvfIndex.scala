@@ -1,10 +1,9 @@
 package graft.sim
 
-import java.nio.charset.StandardCharsets
-
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.ops.SegmentStore
 
 /** Persisted IVF-PQ index — the FAISS `IndexIVFPQ` shape (Jégou et al.
   * 2011), and the configuration a 100 TB vector store actually deploys:
@@ -30,8 +29,7 @@ import org.apache.spark.sql.functions._
   *     One row per vector, M small ints of payload — the compressed
   *     representation IS the stored row.
   *   - `m=N` — manifest: coarse codebook, pq codebook, then live
-  *     segments; temp write + ONE atomic rename (the shared
-  *     [[graft.ops.VersionedPaths.publish]] race rules).
+  *     segments, kept by [[graft.ops.SegmentStore]].
   *
   * BOTH codebooks freeze at [[build]] (Faiss `add` semantics): appends
   * encode only the delta against the live codebooks — O(delta·(cells +
@@ -53,107 +51,54 @@ final class PqIvfIndex(spark: SparkSession, val indexDir: String)
     extends Serializable {
   import PqIvfIndex._
 
-  private def fs = new Path(indexDir)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private[sim] val store = new SegmentStore(spark, indexDir,
+    headDirs = Seq("codebooks" -> "cb-", "pq" -> "pq-"))
 
-  def currentVersion(): Option[Long] =
-    graft.ops.VersionedPaths.listNumbered(fs, new Path(indexDir), "m=",
-        dirsOnly = false)
-      .map(_._2).sorted.lastOption
-
-  /** (coarse codebook, pq codebook, segments) at manifest version `v`;
-    * an optional `bh <id>` replay-horizon line
-    * ([[graft.ops.BatchHorizon]]) is split off, see [[horizonAt]]. */
-  private[sim] def manifestAt(v: Long): (String, String, Seq[String]) = {
-    val (lines, _) = graft.ops.BatchHorizon.split(manifestLinesAt(v))
-    require(lines.length >= 2, s"torn manifest m=$v under $indexDir")
-    (lines(0), lines(1), lines.drop(2))
-  }
-
-  private def horizonAt(v: Long): Option[Long] =
-    graft.ops.BatchHorizon.split(manifestLinesAt(v))._2
-
-  private def manifestLinesAt(v: Long): Seq[String] = {
-    val in = fs.open(new Path(indexDir, s"m=$v"))
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .map(_.trim).filter(_.nonEmpty).toList
-    finally in.close()
-  }
-
-  private def resolvedOrFail(): Long = currentVersion().getOrElse(
-    throw new IllegalStateException(s"no complete index under $indexDir"))
-
-  /** Publish OPTIMISTICALLY against the version the caller's reads
-    * were based on (None = no store observed): target = basedOn + 1,
-    * loud on collision — the shared lost-update guard
-    * ([[IvfIndex]]'s publishManifest rule). */
-  private def publishManifest(coarse: String, pq: String,
-      segs: Seq[String], horizon: Option[Long] = None,
-      basedOn: Option[Long]): Long = {
-    val body = (coarse +: pq +: segs) ++ graft.ops.BatchHorizon.lines(horizon)
-    val tmp = new Path(indexDir, s".manifest-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, false)
-    try out.write((body.mkString("\n") + "\n")
-      .getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    graft.ops.VersionedPaths.publish(fs, new Path(indexDir), tmp, "m=",
-      basedOn.map(_ + 1).getOrElse(0L))
-  }
-
-  private def bestEffortDelete(paths: Path*): Unit =
-    paths.foreach { p =>
-      try fs.delete(p, true)
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
+  def currentVersion(): Option[Long] = store.currentVersion()
 
   /** Encode `emb` under the given codebooks into one cell-partitioned
     * code segment. The assignment fan-out rule is [[IvfIndex]]'s: the
     * coarse ranking and the M·K encode join are the hot stages. */
-  private def writeNamedSegment(emb: DataFrame, idCol: String,
-      vecCol: String, coarseCb: DataFrame, pqCb: DataFrame,
-      seg: String): String = {
-    val out = new Path(indexDir, s"segments/$seg")
-    try {
-      val fanned = graft.queries.Tables.fanout(
-        emb.select(col(idCol), col(vecCol)))
-      val cells = coarseRank(fanned, idCol, vecCol, coarseCb)
-        .where(col("rnk") === 1).select(col("id"), col("cell"))
-      encode(subvectors(fanned, idCol, vecCol, pqCb), pqCb)
-        .join(cells, Seq("id"))
-        .select(col("cell"), col("id"), col("codes"))
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("cell").parquet(out.toString)
-    } catch {
-      case e: Throwable => bestEffortDelete(out); throw e
-    }
-    seg
+  private def writeCodes(emb: DataFrame, idCol: String, vecCol: String,
+      coarseCb: DataFrame, pqCb: DataFrame)(out: String): Unit = {
+    val fanned = graft.queries.Tables.fanout(
+      emb.select(col(idCol), col(vecCol)))
+    val cells = coarseRank(fanned, idCol, vecCol, coarseCb)
+      .where(col("rnk") === 1).select(col("id"), col("cell"))
+    encode(subvectors(fanned, idCol, vecCol, pqCb), pqCb)
+      .join(cells, Seq("id"))
+      .select(col("cell"), col("id"), col("codes"))
+      .write.mode(SaveMode.Overwrite)
+      .partitionBy("cell").parquet(out)
   }
+
+  /** [[writeCodes]] under the codebooks a manifest names. */
+  private def writeCodesUnder(s: SegmentStore.State, emb: DataFrame,
+      idCol: String, vecCol: String): String => Unit =
+    writeCodes(emb, idCol, vecCol, coarseCodebook(s.heads(0)),
+      pqCodebookDf(s.heads(1)))
 
   /** Full (re)build: train BOTH codebooks on `emb` (coarse cells seeded
     * by `seedCol`, pq cells seeded by `idCol` mod `pqK`), encode the
-    * corpus into one segment, publish. Train on the corpus you serve —
-    * query vectors never enter the store. */
+    * corpus into one segment, publish — a FOLD over an existing index
+    * ([[SegmentStore.fold]]: horizon advanced, stream pin carried).
+    * Train on the corpus you serve — query vectors never enter the
+    * store. */
   def build(emb: DataFrame, idCol: String, vecCol: String, seedCol: String,
             m: Int, dsub: Int, pqK: Int): Long = {
-    val cv = currentVersion() // the basedOn CAS anchor
-    val cb = s"cb-${java.util.UUID.randomUUID()}"
-    val pq = s"pq-${java.util.UUID.randomUUID()}"
-    val cbPath = new Path(indexDir, s"codebooks/$cb")
-    val pqPath = new Path(indexDir, s"pq/$pq")
-    val seg =
-      try {
-        coarseCentroids(emb, idCol, vecCol, seedCol)
-          .write.mode(SaveMode.Overwrite).parquet(cbPath.toString)
+    val s = store.state() // the basedOn CAS anchor
+    val cb = SegmentStore.fresh("cb")
+    val pq = SegmentStore.fresh("pq")
+    store.writing("codebooks", cb) { cbPath =>
+      coarseCentroids(emb, idCol, vecCol, seedCol)
+        .write.mode(SaveMode.Overwrite).parquet(cbPath)
+      store.writing("pq", pq) { pqPath =>
         pqCodebook(subvectors(emb, idCol, vecCol, m, dsub), pqK)
-          .write.mode(SaveMode.Overwrite).parquet(pqPath.toString)
-        writeNamedSegment(emb, idCol, vecCol,
-          spark.read.parquet(cbPath.toString),
-          spark.read.parquet(pqPath.toString),
-          s"seg-${java.util.UUID.randomUUID()}")
-      } catch {
-        case e: Throwable => bestEffortDelete(cbPath, pqPath); throw e
+          .write.mode(SaveMode.Overwrite).parquet(pqPath)
+        store.fold(s.copy(heads = Seq(cb, pq)))(writeCodes(emb, idCol,
+          vecCol, spark.read.parquet(cbPath), spark.read.parquet(pqPath)))
       }
-    publishManifest(cb, pq, Seq(seg), basedOn = cv)
+    }
   }
 
   /** Incremental APPEND under the live FROZEN codebooks: encode only the
@@ -161,57 +106,36 @@ final class PqIvfIndex(spark: SparkSession, val indexDir: String)
     * so segment boundaries are invisible to search (spec-pinned: append
     * ≡ one full build-encode of the union under the same codebooks). */
   def append(emb: DataFrame, idCol: String, vecCol: String): Long = {
-    val v0 = resolvedOrFail()
-    val (cb, pq, segs) = manifestAt(v0) // resolve FIRST
-    val seg = writeNamedSegment(emb, idCol, vecCol, coarseCodebook(cb),
-      pqCodebookDf(pq), s"seg-${java.util.UUID.randomUUID()}")
-    publishManifest(cb, pq, segs :+ seg, horizonAt(v0),
-      basedOn = Some(v0))
+    val s = store.live() // resolve FIRST
+    store.append(s)(writeCodesUnder(s, emb, idCol, vecCol))
   }
 
   /** Idempotent per-batch append — the [[IvfIndex.appendAsBatch]] rule
-    * verbatim: batch-named segment, manifest gains it at most once, a
-    * segment already live is a TRUE no-op, and a codebook swap
-    * mid-stream fails loudly (restart to adopt a rebuild). */
+    * verbatim: a codebook swap mid-stream fails loudly (restart to
+    * adopt a rebuild), then [[SegmentStore.appendBatch]]'s identity
+    * pin, batch-named segment and replay horizon. */
   private[graft] def appendAsBatch(emb: DataFrame, idCol: String,
-      vecCol: String, batchId: Long, requireCoarse: String): Long = {
-    val v0 = resolvedOrFail()
-    val (cb, pq, segs) = manifestAt(v0)
+      vecCol: String, batchId: Long, requireCoarse: String,
+      streamId: Option[String] = None): Long = {
+    val s = store.live()
+    val cb = s.heads.head
     require(cb == requireCoarse,
       s"index $indexDir now serves codebook $cb, not $requireCoarse — " +
         "a rebuild happened mid-stream; restart the ingest to adopt it")
-    val h = horizonAt(v0)
-    val seg = s"seg-batch-$batchId"
-    // Second no-op trigger: the batch is at or below the replay
-    // horizon — a forget/compact already realized (and possibly
-    // redacted) its rows; re-appending would resurrect victims.
-    if (segs.contains(seg) || graft.ops.BatchHorizon.realizedLoud(h, batchId, indexDir))
-      return v0
-    writeNamedSegment(emb, idCol, vecCol, coarseCodebook(cb),
-      pqCodebookDf(pq), seg)
-    publishManifest(cb, pq, segs :+ seg, h, basedOn = Some(v0))
+    store.appendBatch(s, batchId, streamId)(
+      writeCodesUnder(s, emb, idCol, vecCol))
   }
 
-  private[graft] def coarseName(): String = manifestAt(resolvedOrFail())._1
+  private[graft] def coarseName(): String = store.live().heads.head
 
   /** Merge live segments into one (pure per-cell file union, no
     * re-encoding); search is bit-identical before and after. */
-  def compact(): Long = {
-    val v0 = resolvedOrFail()
-    val (cb, pq, segs) = manifestAt(v0)
-    if (segs.size <= 1) return v0
-    val seg = s"seg-${java.util.UUID.randomUUID()}"
-    val out = new Path(indexDir, s"segments/$seg")
-    try readUnion(segs)
-      .write.mode(SaveMode.Overwrite).partitionBy("cell")
-      .parquet(out.toString)
-    catch { case e: Throwable => bestEffortDelete(out); throw e }
-    // Fold advances the replay horizon (BatchHorizon): a redelivery of
-    // a folded batch no-ops instead of re-adding its rows.
-    publishManifest(cb, pq, Seq(seg),
-      graft.ops.BatchHorizon.afterFold(horizonAt(v0), segs),
-      basedOn = Some(v0))
-  }
+  def compact(): Long =
+    store.compact((segs, out) => rewrite(store.readUnion(segs), out))
+
+  /** Rewrite code postings as one cell-partitioned segment. */
+  private def rewrite(postings: DataFrame, out: String): Unit =
+    postings.write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(out)
 
   /** FORGET: rewrite live segments without the victims under the SAME
     * codebooks (deletion propagated into the derived store; surviving
@@ -220,51 +144,24 @@ final class PqIvfIndex(spark: SparkSession, val indexDir: String)
     * stay; full statistical erasure is [[build]] on the redacted
     * corpus + [[vacuum]]. */
   def forget(ids: Seq[Long]): Long =
-    forgetImpl(_.where(!col("id").isin(ids: _*)))
+    store.forget(SegmentStore.dropIds("id", ids))(rewrite)
 
   /** MASS-erasure forget: victims stay a DataFrame end to end (LEFT
     * ANTI join on `id`; first column cast to BIGINT) — the
     * [[graft.sim.IvfIndex.forget]] overload contract. */
-  def forget(victims: DataFrame): Long = {
-    val v = victims.select(
-      col(victims.columns.head).cast("long").as("id"))
-    forgetImpl(_.join(v, Seq("id"), "left_anti"))
-  }
-
-  private def forgetImpl(screen: DataFrame => DataFrame): Long = {
-    val v0 = resolvedOrFail()
-    val (cb, pq, segs) = manifestAt(v0)
-    val seg = s"seg-${java.util.UUID.randomUUID()}"
-    val out = new Path(indexDir, s"segments/$seg")
-    try screen(readUnion(segs))
-      .write.mode(SaveMode.Overwrite).partitionBy("cell")
-      .parquet(out.toString)
-    catch { case e: Throwable => bestEffortDelete(out); throw e }
-    // The fold advances the replay horizon so a redelivered pre-forget
-    // batch cannot re-append and resurrect the victims just erased.
-    publishManifest(cb, pq, Seq(seg),
-      graft.ops.BatchHorizon.afterFold(horizonAt(v0), segs),
-      basedOn = Some(v0))
-  }
+  def forget(victims: DataFrame): Long =
+    store.forget(SegmentStore.dropVictims("id", victims))(rewrite)
 
   /** Keep the newest `keep` versions, sweep unreferenced dirs. */
-  def vacuum(keep: Int = 1): (Int, Int) =
-    IndexVacuum.vacuum(fs, indexDir, keep,
-      v => { val (cb, pq, segs) = manifestAt(v); cb +: pq +: segs },
-      Seq("codebooks" -> "cb-", "pq" -> "pq-", "segments" -> "seg-"))
+  def vacuum(keep: Int = 1): (Int, Int) = store.vacuum(keep)
 
   private def coarseCodebook(cb: String): DataFrame =
-    spark.read.parquet(s"$indexDir/codebooks/$cb")
-  private def pqCodebookDf(pq: String): DataFrame =
-    spark.read.parquet(s"$indexDir/pq/$pq")
-  private def readSeg(seg: String): DataFrame =
-    spark.read.parquet(s"$indexDir/segments/$seg")
-  private def readUnion(segs: Seq[String]): DataFrame =
-    segs.map(readSeg).reduce(_ unionByName _)
+    store.readDir("codebooks", cb)
+  private def pqCodebookDf(pq: String): DataFrame = store.readDir("pq", pq)
 
-  def centroids(): DataFrame = coarseCodebook(manifestAt(resolvedOrFail())._1)
-  def pqCentroids(): DataFrame = pqCodebookDf(manifestAt(resolvedOrFail())._2)
-  def postings(): DataFrame = readUnion(manifestAt(resolvedOrFail())._3)
+  def centroids(): DataFrame = coarseCodebook(store.live().heads(0))
+  def pqCentroids(): DataFrame = pqCodebookDf(store.live().heads(1))
+  def postings(): DataFrame = store.readUnion(store.live().segments)
 
   /** ADC top-k per query over the persisted index: route each query to
     * its `probes` nearest cells, build its O(M·K) distance table against
@@ -289,7 +186,8 @@ final class PqIvfIndex(spark: SparkSession, val indexDir: String)
     * (qid, cid). */
   def probeCandidates(queries: DataFrame, idCol: String, vecCol: String,
       probes: Int): DataFrame = {
-    val (cb, _, segs) = manifestAt(resolvedOrFail())
+    val live = store.live()
+    val cb = live.heads(0)
     val probed = PqIvfIndex.coarseRank(
         queries.select(col(idCol), col(vecCol)), idCol, vecCol,
         SidecarCache.localized(spark, indexDir, cb)(coarseCodebook(cb)))
@@ -297,7 +195,7 @@ final class PqIvfIndex(spark: SparkSession, val indexDir: String)
       .select(col("id").as("qid"), col("cell"))
     val probedCells: Seq[Any] = probed.select("cell").distinct()
       .collect().toIndexedSeq.map(_.get(0))
-    readUnion(segs).where(col("cell").isin(probedCells: _*))
+    store.readUnion(live.segments).where(col("cell").isin(probedCells: _*))
       .select("cell", "id")
       .join(broadcast(probed), Seq("cell"))
       .select(col("qid"), col("id").as("cid"))
@@ -305,7 +203,8 @@ final class PqIvfIndex(spark: SparkSession, val indexDir: String)
 
   def search(queries: DataFrame, idCol: String, vecCol: String,
              k: Int, probes: Int): DataFrame = {
-    val (cb, pq, segs) = manifestAt(resolvedOrFail())
+    val live = store.live()
+    val (cb, pq) = (live.heads(0), live.heads(1))
     // Sidecars as LocalRelations (SidecarCache — r16): the coarse and
     // product codebooks are re-planned by every served search; the
     // driver-side cache drops those per-query scan jobs.
@@ -324,7 +223,7 @@ final class PqIvfIndex(spark: SparkSession, val indexDir: String)
       subvectors(queries.select(col(idCol), col(vecCol)), idCol, vecCol,
         pqCb), pqCb)
     adcTotals(
-      readUnion(segs).where(col("cell").isin(probedCells: _*))
+      store.readUnion(live.segments).where(col("cell").isin(probedCells: _*))
         .join(broadcast(probed), Seq("cell"))
         .select(col("qid"), col("id").as("cid"), col("codes")),
       qtab)

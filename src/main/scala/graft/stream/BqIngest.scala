@@ -18,7 +18,8 @@ import graft.sim.BqIndex
   * Replay safety is [[BqIndex.appendAsBatch]]'s rule: batch-named
   * segment, manifest gains it at most once, at-or-below-horizon
   * batches no-op (a forget's fold must not be undone by a redelivered
-  * pre-forget batch). Batches must be id-disjoint from the standing
+  * pre-forget batch), and the checkpoint identity pins the store
+  * ([[graft.ops.BatchHorizon.requireSid]]). Batches must be id-disjoint from the standing
   * store (the [[DedupIngest]] screen's contract). The vector width is
   * pinned at construction — a stream that switched embedding dims
   * mid-flight would otherwise pack half-width garbage silently. */
@@ -42,7 +43,8 @@ final class BqIngest(
       batch.select(col(idCol).as("id"), col(vecCol).as("__v"))) {
       prepared =>
         val n = prepared.count()
-        if (n > 0) index.appendAsBatch(prepared, "id", "__v", dim, batchId)
+        if (n > 0)
+          index.appendAsBatch(prepared, "id", "__v", dim, batchId, streamId)
         n
     }
   }

@@ -27,7 +27,9 @@ import graft.sim.IvfIndex
   * segment, manifest gains it at most once, already-live segments are
   * true no-ops — an at-least-once redelivery (same checkpointed offsets
   * ⇒ same vectors under the same frozen codebook ⇒ same assignments)
-  * converges instead of surfacing duplicate postings in search. Batches
+  * converges instead of surfacing duplicate postings in search — and
+  * the checkpoint identity pins the store
+  * ([[graft.ops.BatchHorizon.requireSid]]). Batches
   * must be id-disjoint from the standing index (the [[DedupIngest]]
   * screen's contract, inherited from [[IvfIndex.append]]).
   *
@@ -61,7 +63,8 @@ final class IvfIngest(
       prepared =>
         val n = prepared.count()
         if (n > 0)
-          index.appendAsBatch(prepared, "id", "__v", batchId, servedCodebook)
+          index.appendAsBatch(prepared, "id", "__v", batchId, servedCodebook,
+            streamId)
         n
     }
   }

@@ -1,11 +1,11 @@
 package graft.stream
 
-import java.nio.charset.StandardCharsets
-
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+
+import graft.ops.SegmentStore
 
 /** The shared shape of the streaming maintainers ([[DedupIngest]],
   * [[CdcIngest]], [[SketchIngest]]): a per-micro-batch `processBatch`
@@ -23,11 +23,11 @@ private[stream] trait MicroBatchIngest {
   /** The STREAM IDENTITY this maintainer runs under — the checkpoint
     * location bound at [[start]] (batch ids are meaningful only per
     * checkpoint). Maintainers that publish into batch-horizon stores
-    * (LM, MinHash) pass it to the store's append so a restart with a
-    * FRESH checkpoint fails loudly against the store's pinned identity
-    * ([[graft.ops.BatchHorizon.requireSid]]) instead of silently
-    * no-opping every batch at or below the old replay horizon. None
-    * when started without a checkpoint (tests, ad-hoc runs) — such
+    * (LM, MinHash, BQ, IVF, IVF-PQ) pass it to the store's append so a
+    * restart with a FRESH checkpoint fails loudly against the store's
+    * pinned identity ([[graft.ops.BatchHorizon.requireSid]]) instead of
+    * silently no-opping every batch at or below the old replay horizon.
+    * None when started without a checkpoint (tests, ad-hoc runs) — such
     * streams make no cross-restart batch-id promise to pin. */
   @volatile private var boundCheckpoint: Option[String] = None
   protected final def streamId: Option[String] = boundCheckpoint
@@ -111,7 +111,7 @@ private[graft] object MicroBatchIngest {
       catch { case _: org.apache.spark.sql.AnalysisException => None }
     latestCompaction(spark, dir) match {
       case None => recent.getOrElse(empty)
-      case Some((horizon, segPath)) =>
+      case Some((_, horizon, segPath)) =>
         val cons = spark.read.parquet(segPath)
         recent match {
           case None => cons
@@ -136,27 +136,52 @@ private[graft] object MicroBatchIngest {
   private[stream] def lastCommittedBatch(spark: SparkSession,
       checkpointLocation: String): Option[Long] = {
     val commits = new Path(checkpointLocation, "commits")
-    val fs = commits.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.ops.VersionedPaths.listNumbered(fs, commits, "", dirsOnly = false)
-      .map(_._2).maxOption
+    SegmentStore.latest(
+      commits.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      commits, "")
   }
 
-  /** Latest published (horizon, consolidated-segment path), if any. */
+  /** Latest published (manifest version, horizon, consolidated-segment
+    * path), if any. Manifest body: `<horizon>\n<segment name>`. */
   private def latestCompaction(spark: SparkSession,
-      dir: String): Option[(Long, String)] = {
+      dir: String): Option[(Long, Long, String)] = {
     val c = compactionDir(dir)
     val fs = c.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.ops.VersionedPaths.listNumbered(fs, c, "m=", dirsOnly = false)
-      .sortBy(_._2).lastOption.map { case (p, _) =>
-        val in = fs.open(p)
-        val lines =
-          try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-            .map(_.trim).filter(_.nonEmpty).toList
-          finally in.close()
-        require(lines.size == 2, s"torn compaction manifest $p")
-        (lines.head.toLong, new Path(c, lines(1)).toString)
-      }
+    SegmentStore.latest(fs, c, "m=").map { v =>
+      val lines = SegmentStore.readLines(fs, c, "m=", v)
+      require(lines.size == 2, s"torn compaction manifest ${new Path(c, s"m=$v")}")
+      (v, lines.head.toLong, new Path(c, lines(1)).toString)
+    }
   }
+
+  /** Publish `<horizon>\n<seg>` against the manifest version the caller
+    * read (the optimistic-publish rule), then sweep best-effort:
+    * older manifests and every `seg-*` dir the new one does not name
+    * (incl. orphans of crashed runs) — all ignored by the reader, so a
+    * failed sweep retries at the next call. */
+  private def publishCompaction(fs: FileSystem, c: Path, horizon: Long,
+      seg: String, basedOn: Option[Long], label: String): Unit = {
+    SegmentStore.publishLines(fs, c, "m=", Seq(horizon.toString, seg), basedOn)
+    try SegmentStore.vacuum(fs, c, "m=", 1,
+      v => SegmentStore.readLines(fs, c, "m=", v).drop(1), Seq("" -> "seg-"))
+    catch { case scala.util.control.NonFatal(e) =>
+      System.err.println(s"[MicroBatchIngest.$label] sweep failed " +
+        s"(will retry): $e")
+    }
+  }
+
+  /** Delete every `batch_id=N` partition dir of `dir` with N ≤ `through`. */
+  private def sweepBatchPartitions(fs: FileSystem, dir: String,
+      through: Long): Unit =
+    if (fs.exists(new Path(dir))) {
+      val part = "^batch_id=(-?\\d+)$".r
+      fs.listStatus(new Path(dir)).toSeq.filter(_.isDirectory).foreach {
+        s => s.getPath.getName match {
+          case part(n) if n.toLong <= through => fs.delete(s.getPath, true)
+          case _ => ()
+        }
+      }
+    }
 
   /** RETENTION compaction for `batch_id=`-partitioned stores — the
     * maintenance pass that keeps "one partition per trigger forever"
@@ -166,9 +191,9 @@ private[graft] object MicroBatchIngest {
     * [[MicroBatchIngest]] store): all batch partitions with
     * `batch_id` ≤ `throughBatch` — plus the previous consolidated
     * segment — are folded into ONE new segment under the sibling
-    * `<dir>.c/`, published via the shared atomic-manifest rules
-    * ([[graft.ops.VersionedPaths.publish]]: readers see the old view or
-    * the new one, never a torn mix), and the superseded batch
+    * `<dir>.c/`, published via the shared optimistic-manifest rules
+    * ([[graft.ops.SegmentStore]]: readers see the old view or the new
+    * one, never a torn mix), and the superseded batch
     * partitions are swept best-effort (a crash leaves them ignored by
     * the horizon filter, re-swept next time — self-healing, never
     * double-counted). `batch_id` survives as a DATA column in the
@@ -208,7 +233,7 @@ private[graft] object MicroBatchIngest {
     val c = compactionDir(dir)
     val fs = c.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val prior = latestCompaction(spark, dir)
-    val priorHorizon = prior.map(_._1).getOrElse(-1L)
+    val priorHorizon = prior.map(_._2).getOrElse(-1L)
     if (throughBatch <= priorHorizon) return priorHorizon
     val recent =
       try Some(spark.read.parquet(dir))
@@ -218,46 +243,22 @@ private[graft] object MicroBatchIngest {
       .withColumn("batch_id", col("batch_id").cast("long"))
       .where(col("batch_id") > priorHorizon &&
         col("batch_id") <= throughBatch))
-    val folded = (prior.map(p => spark.read.parquet(p._2)), fresh) match {
+    val folded = (prior.map(p => spark.read.parquet(p._3)), fresh) match {
       case (Some(cons), Some(f)) => cons.unionByName(f)
       case (Some(cons), None)    => cons
       case (None, Some(f))       => f
       case _                     => return priorHorizon
     }
-    val seg = s"seg-${java.util.UUID.randomUUID()}"
+    val seg = SegmentStore.fresh("seg")
     folded.write.mode(SaveMode.Overwrite)
       .parquet(new Path(c, seg).toString)
-    val tmp = new Path(c, s".manifest-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, false)
-    try out.write(s"$throughBatch\n$seg\n".getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    val v = graft.ops.VersionedPaths.listNumbered(fs, c, "m=",
-      dirsOnly = false).map(_._2).maxOption.getOrElse(-1L) + 1
-    graft.ops.VersionedPaths.publish(fs, c, tmp, "m=", v)
-    // Best-effort sweeps — all ignored-by-the-reader state: superseded
-    // batch partitions, manifests older than the new one, and segments
-    // the new manifest does not reference (incl. orphans of crashed
-    // runs). A failure retries at the next compaction.
-    try {
-      val part = ("^batch_id=(-?\\d+)$").r
-      fs.listStatus(new Path(dir)).toSeq.filter(_.isDirectory)
-        .foreach { s =>
-          s.getPath.getName match {
-            case part(n) if n.toLong <= throughBatch =>
-              fs.delete(s.getPath, true)
-            case _ => ()
-          }
-        }
-      graft.ops.VersionedPaths.pruneOlderThan(fs, c, "m=", dirsOnly = false,
-        latest = v, keep = 1, label = "MicroBatchIngest.compact")
-      fs.listStatus(c).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("seg-") &&
-          s.getPath.getName != seg)
-        .foreach(s => fs.delete(s.getPath, true))
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[MicroBatchIngest.compact] sweep failed " +
-          s"(will retry): $e")
+    publishCompaction(fs, c, throughBatch, seg, prior.map(_._1), "compact")
+    // Best-effort: the superseded batch partitions (reader-ignored below
+    // the horizon; a failure retries at the next compaction).
+    try sweepBatchPartitions(fs, dir, throughBatch)
+    catch { case scala.util.control.NonFatal(e) =>
+      System.err.println(s"[MicroBatchIngest.compact] sweep failed " +
+        s"(will retry): $e")
     }
     throughBatch
   }
@@ -308,7 +309,7 @@ private[graft] object MicroBatchIngest {
       val fs = new Path(dir)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       val prior = latestCompaction(spark, dir)
-      val compHorizon = prior.map(_._1).getOrElse(-1L)
+      val compHorizon = prior.map(_._2).getOrElse(-1L)
       val commitHorizon: Long = checkpointLocation match {
         case Some(ckpt) => lastCommittedBatch(spark, ckpt).getOrElse(-1L)
         case None       => Long.MaxValue // caller owns the horizon
@@ -352,46 +353,22 @@ private[graft] object MicroBatchIngest {
       // Stale partitions at or below the compaction horizon are reader-
       // ignored but still hold victim BYTES (a crashed compact sweep) —
       // erasure must remove them, not just out-reference them.
-      if (fs.exists(new Path(dir))) {
-        val part = "^batch_id=(-?\\d+)$".r
-        fs.listStatus(new Path(dir)).toSeq.filter(_.isDirectory).foreach {
-          s => s.getPath.getName match {
-            case part(n) if n.toLong <= compHorizon =>
-              fs.delete(s.getPath, true)
-            case _ => ()
-          }
-        }
-      }
+      sweepBatchPartitions(fs, dir, compHorizon)
       // The consolidated segment, iff it holds victims: rewrite under a
       // new manifest at the SAME horizon (readers see old or new, never
       // torn); the superseded segment is swept immediately, best-effort
       // (it holds the victim bytes — the next compact re-sweeps on
       // failure).
-      prior.foreach { case (horizon, segPath) =>
+      prior.foreach { case (mv, horizon, segPath) =>
         val c = compactionDir(dir)
         val cons = spark.read.parquet(segPath)
         val nVictims = cons.join(v, Seq(idCol), "left_semi").count()
         if (nVictims > 0) {
-          val seg = s"seg-${java.util.UUID.randomUUID()}"
+          val seg = SegmentStore.fresh("seg")
           cons.join(v, Seq(idCol), "left_anti")
             .write.mode(SaveMode.Overwrite)
             .parquet(new Path(c, seg).toString)
-          val tmp = new Path(c, s".manifest-${java.util.UUID.randomUUID()}")
-          val out = fs.create(tmp, false)
-          try out.write(s"$horizon\n$seg\n".getBytes(StandardCharsets.UTF_8))
-          finally out.close()
-          val mv = graft.ops.VersionedPaths.listNumbered(fs, c, "m=",
-            dirsOnly = false).map(_._2).maxOption.getOrElse(-1L) + 1
-          graft.ops.VersionedPaths.publish(fs, c, tmp, "m=", mv)
-          try {
-            graft.ops.VersionedPaths.pruneOlderThan(fs, c, "m=",
-              dirsOnly = false, latest = mv, keep = 1,
-              label = "MicroBatchIngest.forget")
-            fs.delete(new Path(segPath), true)
-          } catch { case scala.util.control.NonFatal(e) =>
-            System.err.println(s"[MicroBatchIngest.forget] sweep failed " +
-              s"(will retry at next compact): $e")
-          }
+          publishCompaction(fs, c, horizon, seg, Some(mv), "forget")
           dropped += nVictims
         }
       }

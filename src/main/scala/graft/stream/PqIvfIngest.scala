@@ -48,7 +48,8 @@ final class PqIvfIngest(
       prepared =>
         val n = prepared.count()
         if (n > 0)
-          index.appendAsBatch(prepared, "id", "__v", batchId, servedCoarse)
+          index.appendAsBatch(prepared, "id", "__v", batchId, servedCoarse,
+            streamId)
         n
     }
   }

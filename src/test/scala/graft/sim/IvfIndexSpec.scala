@@ -59,7 +59,8 @@ class IvfIndexSpec extends SparkSpec {
     * the winner's manifest byte-identical. Driven deterministically: a
     * separate index dir gets a winner via build(), then a fabricated
     * temp-manifest loser attempts publication of the same version
-    * through the same [[IvfIndex.publish]] path build() uses. */
+    * through the same [[graft.ops.VersionedPaths.publish]] rename
+    * build() publishes through ([[graft.ops.SegmentStore]]). */
   test("of two interleaved builds exactly one publishes; the loser never corrupts") {
     val raceIdx = new IvfIndex(spark,
       Files.createTempDirectory("ivf-race").toString + "/index")
@@ -74,7 +75,10 @@ class IvfIndexSpec extends SparkSpec {
     val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = fs.create(staging, false)
     out.write("cb-loser\nseg-loser\n".getBytes("UTF-8")); out.close()
-    val e = intercept[IllegalStateException] { raceIdx.publish(staging, 0L) }
+    val e = intercept[IllegalStateException] {
+      graft.ops.VersionedPaths.publish(fs,
+        new org.apache.hadoop.fs.Path(raceIdx.indexDir), staging, "m=", 0L)
+    }
     assert(e.getMessage.contains("publication race"), e.getMessage)
     // Loser's temp manifest is gone; the winner's manifest is untouched;
     // the reader still serves the winner's index.
@@ -118,7 +122,7 @@ class IvfIndexSpec extends SparkSpec {
     val before = appIdx.search(queries, "vec_id", "embedding", K, probes = 2)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     appIdx.compact()
-    assert(appIdx.manifestAt(appIdx.currentVersion().get)._2.size == 1)
+    assert(appIdx.store.stateAt(appIdx.currentVersion().get).segments.size == 1)
     val after = appIdx.search(queries, "vec_id", "embedding", K, probes = 2)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     assert(after == before, "compaction changed search results")

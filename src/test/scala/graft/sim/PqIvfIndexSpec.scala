@@ -107,7 +107,7 @@ class PqIvfIndexSpec extends SparkSpec {
       "vec_id", "embedding")
     val before = rows(i4.search(queries, "vec_id", "embedding", K, Probes))
     i4.compact()
-    assert(i4.manifestAt(i4.currentVersion().get)._3.size == 1)
+    assert(i4.store.stateAt(i4.currentVersion().get).segments.size == 1)
     assert(rows(i4.search(queries, "vec_id", "embedding", K, Probes))
       == before)
     // Vacuum sweeps the superseded versions; the live one still serves.

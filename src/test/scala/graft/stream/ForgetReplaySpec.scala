@@ -2,6 +2,7 @@ package graft.stream
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -17,8 +18,8 @@ import graft.queries.Tables
   * [[graft.gov.ForgetPipeline]] ledger still claimed them gone. Each
   * test here runs forget between trigger N and a FORCED redelivery of
   * batch N−1 through the real maintainer, on every store with
-  * batch-named segments (MinHash, IVF, IVF-PQ, LM), and proves victims
-  * stay gone and versions stay put. */
+  * batch-named segments (MinHash, BQ, IVF, IVF-PQ, LM), and proves
+  * victims stay gone and versions stay put. */
 class ForgetReplaySpec extends SparkSpec {
   import spark.implicits._
 
@@ -213,6 +214,47 @@ class ForgetReplaySpec extends SparkSpec {
       "the rebuild dropped the token ledger — a replayed forget re-subtracted")
   }
 
+  /** The vector stores' rebuild-is-a-fold case: seed build, ingest
+    * batches 0 and 1, rebuild over everything, then a FRESH ingest (a
+    * restart — for IVF/IVF-PQ it adopts the rebuilt codebook)
+    * redelivers batch 1. The rebuild's manifest must carry a horizon
+    * past batch 1, so the redelivery no-ops: same rows, same version. */
+  private def rebuildThenRedeliver(name: String, build: DataFrame => Long,
+      ingest: () => MicroBatchIngest, rows: () => Long,
+      version: () => Option[Long]): Unit = {
+    val emb = Tables.t(spark, dir, "embeddings")
+    val b0 = emb.where(col("vec_id") < 10)
+    val b1 = emb.where(col("vec_id") >= 10 && col("vec_id") < 20)
+    build(emb.where(col("vec_id") >= 20))
+    val ing = ingest()
+    assert(ing.processBatch(b0, 0L) > 0)
+    assert(ing.processBatch(b1, 1L) > 0)
+    build(emb) // rebuild over the whole corpus
+    val (n, v) = (rows(), version())
+    ingest().processBatch(b1, 1L) // restarted ingest redelivers batch 1
+    assert(rows() == n,
+      s"$name: a redelivered pre-rebuild batch re-appended ($n -> ${rows()})")
+    assert(version() == v,
+      s"$name: the redelivery published over the rebuild instead of no-oping")
+  }
+
+  test("REBUILD is a fold for BQ, IVF and IVF-PQ: a restarted ingest's " +
+      "redelivered pre-rebuild batch no-ops") {
+    val bq = new graft.sim.BqIndex(spark, tmp("frp-rbbq") + "/index")
+    rebuildThenRedeliver("BQ", bq.build(_, "vec_id", "embedding", 64),
+      () => new BqIngest(spark, bq.indexDir, "vec_id", "embedding", 64),
+      () => bq.codesTable().count(), () => bq.currentVersion())
+    val ivf = new graft.sim.IvfIndex(spark, tmp("frp-rbivf") + "/index")
+    rebuildThenRedeliver("IVF", ivf.build(_, "vec_id", "embedding", "label"),
+      () => new IvfIngest(spark, ivf.indexDir, "vec_id", "embedding"),
+      () => ivf.postings().count(), () => ivf.currentVersion())
+    val pq = new graft.sim.PqIvfIndex(spark, tmp("frp-rbpq") + "/index")
+    rebuildThenRedeliver("IVF-PQ",
+      pq.build(_, "vec_id", "embedding", "label", 8, 8, 16),
+      () => new PqIvfIngest(spark, pq.indexDir, "vec_id", "embedding"),
+      () => pq.postings().count(), () => pq.currentVersion())
+  }
+
   test("stream-identity pin: a pinned store rejects a different stream " +
       "id loudly instead of no-opping below the horizon") {
     val docs = Tables.t(spark, dir, "documents")
@@ -257,5 +299,35 @@ class ForgetReplaySpec extends SparkSpec {
     // Anonymous callers (no checkpoint bound) still pass — they make
     // no cross-restart batch-id promise to pin.
     assert(ing.processBatch(b0, 0L) >= 0)
+
+    // Same contract on the vector stores' batch appends: pin under A,
+    // fold, then the resumed stream no-ops and a stream B fails loudly.
+    val emb = Tables.t(spark, dir, "embeddings")
+    val vb0 = emb.where(col("vec_id") < 10).select(col("vec_id"),
+      expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("embedding"))
+    def pinned(name: String, append: Option[String] => Long,
+        compact: () => Long): Unit = {
+      append(Some("ckpt-A"))
+      val v = compact()
+      assert(append(Some("ckpt-A")) == v, s"$name: resumed replay published")
+      val e = intercept[IllegalStateException](append(Some("ckpt-B")))
+      assert(e.getMessage.contains("pinned to stream identity"), name)
+    }
+    val seed = emb.where(col("vec_id") >= 20)
+    val bq = new graft.sim.BqIndex(spark, tmp("frp-sidbq") + "/index")
+    bq.build(seed, "vec_id", "embedding", 64)
+    pinned("BQ", bq.appendAsBatch(vb0, "vec_id", "embedding", 64, 0L, _),
+      () => bq.compact())
+    val ivf = new graft.sim.IvfIndex(spark, tmp("frp-sidivf") + "/index")
+    ivf.build(seed, "vec_id", "embedding", "label")
+    val cb = ivf.codebookName()
+    pinned("IVF", ivf.appendAsBatch(vb0, "vec_id", "embedding", 0L, cb, _),
+      () => ivf.compact())
+    val pq = new graft.sim.PqIvfIndex(spark, tmp("frp-sidpq") + "/index")
+    pq.build(seed, "vec_id", "embedding", "label", 8, 8, 16)
+    val coarse = pq.coarseName()
+    pinned("IVF-PQ",
+      pq.appendAsBatch(vb0, "vec_id", "embedding", 0L, coarse, _),
+      () => pq.compact())
   }
 }
