@@ -15,7 +15,7 @@ import graft.stream.StreamEngine
   *   envelope) → CAST(value AS STRING) → from_json(CorpusSchema) + flatten
   *   → per-micro-batch: prepare (null-drop, clean chain, calendar
   *   features, sentiment) → PipelineModel.transform → topic argmax + label
-  *   broadcast join ("Autre" storage default) → virality + rounded score →
+  *   lookup ("Autre" storage default) → virality + rounded score →
   *   sink projection (`init.cql:8-18` shape) → parquet primary with
   *   distributed JSON-lines fallback — 20 s processing-time trigger,
   *   checkpointed.

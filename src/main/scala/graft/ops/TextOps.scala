@@ -12,7 +12,10 @@ import org.apache.spark.sql.functions._
   *
   * All regexes are restricted to ASCII classes exactly as the reference
   * uses them, and stay within the RE2-compatible subset so the DuckDB
-  * oracle evaluates the identical pattern.
+  * oracle evaluates the identical pattern. The clean chain itself runs
+  * as the one-scan [[graft.functions.CleanText]] kernel; its patterns
+  * below stay as the definition the kernel is held to and the source of
+  * the DuckDB oracle's SQL mirror (`TextQueries.duckClean`).
   */
 object TextOps {
 
@@ -28,9 +31,11 @@ object TextOps {
 
   /** F1–F4 full clean chain, inference order (lowercase first —
     * reference `spark/preprocessor.py:17-21`): lowercase → strip
-    * URLs/specials → collapse whitespace → trim. */
-  def cleanText(c: Column): Column =
-    trim(regexp_replace(regexp_replace(lower(c), CleanPattern, ""), "\\s+", " "))
+    * URLs/specials → collapse whitespace → trim. Spark's `lower`, then
+    * the [[graft.functions.CleanText]] kernel: one byte scan equal to
+    * `trim(regexp_replace(regexp_replace(lower(c), CleanPattern, ""),
+    * "\\s+", " "))`, which `CleanTextSpec` keeps as its oracle. */
+  def cleanText(c: Column): Column = graft.functions.CleanText.column(lower(c))
 
   /** F8: printable-char filter (reference `main/data_ingestion/utils.py:18`)
     * — strips Unicode control/format chars. */

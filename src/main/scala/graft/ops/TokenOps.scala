@@ -8,9 +8,12 @@ import org.apache.spark.sql.functions._
   *
   * The reference uses `ml.feature.Tokenizer` + `StopWordsRemover`
   * (reference `spark/model_training.py:62-78`, `spark/preprocessor.py:36-40`).
-  * Here the relational core is pure Catalyst (split + higher-order filter)
-  * so the same semantics are SQL-checkable and stay inside codegen; the
-  * MLlib classes are still used on the ML path (graft.ml.NlpPipeline).
+  * Here the relational core is pure Catalyst — the one-scan
+  * [[graft.functions.CleanText]] kernel, then split + higher-order filter
+  * — so it stays inside codegen, and the DuckDB oracle checks the same
+  * semantics through SQL generated from `TextOps`' regex patterns and
+  * [[StopWords]]. The MLlib classes are still used on the ML path
+  * (graft.ml.NlpPipeline).
   */
 object TokenOps {
 
@@ -41,7 +44,8 @@ object TokenOps {
     filter(tokens, w => w =!= "" && !array_contains(stopArr, w))
   }
 
-  /** Clean → tokenize → remove stop words in one expression. */
+  /** Clean → tokenize → remove stop words in one expression: `lower`,
+    * the clean kernel's byte scan, `split`, one `filter`. */
   def terms(text: Column): Column =
     removeStopWords(tokenize(TextOps.cleanText(text)))
 

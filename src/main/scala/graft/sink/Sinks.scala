@@ -78,12 +78,18 @@ final class FailingSink(message: String = "primary sink unavailable")
 /** Primary-with-fallback composition (T6 delivery semantics): try the
   * primary; on any failure divert the SAME batch to the fallback. The
   * caller (StreamEngine) persists the batch so the diverted write does not
-  * recompute the transform chain. */
+  * recompute the transform chain. [[diversions]] counts the batches the
+  * fallback took (a failed fallback write propagates and is not counted). */
 final class FallbackSink(primary: Sink, fallback: Sink) extends Sink {
+  private val diverted = new java.util.concurrent.atomic.AtomicLong
+
+  def diversions: Long = diverted.get
+
   def write(df: DataFrame): Unit =
     try primary.write(df)
     catch { case e: Exception =>
       System.err.println(s"[sink] primary failed (${e.getMessage}); diverting batch to fallback")
       fallback.write(df)
+      diverted.incrementAndGet()
     }
 }

@@ -18,12 +18,16 @@ import graft.sink.{FallbackSink, Sink}
   *
   * Deliberate departures, each a scale fix for a measured reference defect:
   *  - the batch is persisted once before count+write, fixing the 2×
-  *    recompute (reference `spark/engine.py:204-209` has no cache);
+  *    recompute (reference `spark/engine.py:204-209` has no cache); the
+  *    cached count is also the P7 emptiness guard, so an empty batch
+  *    costs no separate source probe and reaches no sink;
   *  - the fallback write is distributed (`df.write`), never a driver
   *    collect (reference `spark/engine.py:144` `toPandas()`);
   *  - batch failures propagate to the streaming query instead of being
   *    swallowed (reference `spark/engine.py:218-219` silently drops a
-  *    whole micro-batch on any error).
+  *    whole micro-batch on any error);
+  *  - fallback diversions are counted ([[fallbackBatches]]), not only
+  *    logged.
   */
 final class StreamEngine(
     transform: DataFrame => DataFrame,
@@ -36,9 +40,13 @@ final class StreamEngine(
     ledgerKeep: Int = 1000) extends Serializable {
 
   /** Per-micro-batch body (S7). Persist once; count is the logging action
-    * the reference performs (P8) and doubles as materialization. The
-    * T6 degradation semantic lives in [[FallbackSink]]. */
+    * the reference performs (P8) and doubles as materialization and as the
+    * P7 emptiness guard. The T6 degradation semantic lives in
+    * [[FallbackSink]]. */
   private val sink = new FallbackSink(primary, fallback)
+
+  /** Micro-batches this engine diverted to the fallback sink so far. */
+  def fallbackBatches: Long = sink.diversions
 
   /** Exactly-once epoch ledger (opt-in): one marker file per COMMITTED
     * micro-batch id. foreachBatch is at-least-once — after a crash the
@@ -61,14 +69,17 @@ final class StreamEngine(
         return
       }
     }
-    if (!batch.isEmpty) {                                  // P7 emptiness guard
-      val out = transform(batch).persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        val n = out.count()                                // P8 (now cached)
+    // P7 emptiness guard on the cached count (P8), so no job probes the
+    // source first: an empty result — an empty source batch, or every row
+    // dropped by the transform — reaches neither `onBatch` nor a sink.
+    val out = transform(batch).persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val n = out.count()
+      if (n > 0) {
         onBatch(batchId, n)
         sink.write(out)
-      } finally out.unpersist()
-    }
+      }
+    } finally out.unpersist()
     if (epochLedger.isDefined) {
       val (fs, p) = ledgerPath(batch.sparkSession, batchId)
       fs.mkdirs(p.getParent)

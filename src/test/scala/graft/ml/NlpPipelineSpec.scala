@@ -63,6 +63,54 @@ class NlpPipelineSpec extends SparkSpec {
     assert(v.subsetOf(Set("HOT", "UP", "LOW")))
   }
 
+  /** The composition inferBatch replaced: the model's own transform,
+    * then the broadcast left join against the label frame. */
+  private def composed(labels: org.apache.spark.sql.DataFrame) = {
+    val argmaxVec = udf((v: Vector) => v.argmax)
+    graft.ops.ScoreOps.withTopicLabel(
+        model.transform(corpus)
+          .withColumn("topic_id", argmaxVec(col("topic_distribution")))
+          .withColumn("score_predit", round(col("prediction"), 2).cast("float"))
+          .withColumn("viralite", graft.ops.ScoreOps.virality(col("prediction"))),
+        col("topic_id"), labels, default = Some(lit("Autre")))
+      .select(col("id"), col("author"), col("subreddit"),
+        col("text").as("text_content"), col("sentiment"),
+        col("sujet"), col("score_predit"), col("viralite"),
+        to_timestamp(col("timestamp")).as("creation_date"))
+  }
+
+  private def rows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().toSeq.sortBy(_.getString(0))
+
+  test("inferBatch rows equal model.transform + the label join + the same projection") {
+    val labels = NlpPipeline.topicLabels(spark, model)
+    val want = rows(composed(labels))
+    assert(want.size == 60)
+    val got = NlpPipeline.inferBatch(corpus, model, labels)
+    assert(got.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
+      composed(labels).schema.fields.map(f => (f.name, f.dataType)).toSeq)
+    assert(rows(got) == want)
+    // the second batch is served from the bindings made by the first
+    assert(rows(NlpPipeline.inferBatch(corpus, model, labels)) == want)
+  }
+
+  test("a topic missing from the labels maps to Autre; duplicate topic_ids are rejected") {
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
+    val argmaxVec = udf((v: Vector) => v.argmax)
+    val common = model.transform(corpus)
+      .groupBy(argmaxVec(col("topic_distribution")).as("t")).count()
+      .orderBy(col("count").desc).as[(Int, Long)].head()._1
+    val labels = NlpPipeline.topicLabels(spark, model)
+    val partial = labels.where(col("topic_id") =!= common)
+    val got = rows(NlpPipeline.inferBatch(corpus, model, partial))
+    assert(got == rows(composed(partial)))
+    assert(got.count(_.getAs[String]("sujet") == "Autre") > 0)
+
+    val dup = labels.union(labels.where(col("topic_id") === common))
+    val e = intercept[IllegalArgumentException](NlpPipeline.inferBatch(corpus, model, dup))
+    assert(e.getMessage.contains("duplicate topic_id"), e.getMessage)
+  }
+
   test("save/load round-trips the whole pipeline (S3/S11)") {
     val dir = java.nio.file.Files.createTempDirectory("graft-model").toString
     // Stamped save: the fit-horizon sidecar must neither disturb the

@@ -18,6 +18,34 @@ class TextOpsSpec extends SparkSpec {
     assert(clean1("  UPPER   lower  ") == "upper lower")
   }
 
+  test("cleanText parity hazards: Unicode case maps, non-ASCII, URL edges, every \\s byte") {
+    val cases = Seq(
+      "Kelvin" -> "kelvin",                  // Kelvin sign lowercases to ASCII k
+      "İstanbul" -> "istanbul",              // dotted I -> i + U+0307, mark dropped
+      "Straße ﬁnance" -> "strae nance", // sharp s, fi ligature: dropped whole
+      "moon 🚀🚀 soon" -> "moon soon", // surrogate pairs
+      "café a b" -> "caf ab",          // NBSP is not Java \s
+      "see http://x.io/a?b=1 now" -> "see now",
+      "HTTPS://X.COM/Q" -> "",                    // lowercased first, then a URL
+      "end http://" -> "end http",                // no \S after the scheme
+      "http:// gap" -> "http gap",
+      "xhttp://a b" -> "x b",                     // mid-word URL
+      "wwww.x y" -> "w y",
+      "https:/x" -> "httpsx",
+      "httpss://x" -> "httpssx",
+      "a\tb\u000bc\fd\re\nf" -> "a b c d e f",
+      " \t!! \r\n " -> "")
+    val input = cases.map(c => Option(c._1)) :+ None
+    val want = cases.map(c => Option(c._2)) :+ None
+    // a local relation is folded by interpreted eval; an RDD-backed frame
+    // runs the generated code
+    val local = input.toDF("t").select(TextOps.cleanText($"t")).as[Option[String]].collect().toSeq
+    val codegen = spark.sparkContext.parallelize(input, 2).toDF("t")
+      .select(TextOps.cleanText($"t")).as[Option[String]].collect().toSeq
+    assert(local == want)
+    assert(codegen == want)
+  }
+
   test("cleanText is idempotent (property)") {
     val asciiish = Gen.listOf(Gen.frequency(
       8 -> Gen.alphaNumChar, 2 -> Gen.oneOf(' ', '!', '@', '#', '.', ':', '/')))

@@ -39,6 +39,7 @@ class FileStreamSpec extends SparkSpec {
       checkpointLocation = Some(ckpt))
 
     engine.start(stream, s"file-spec-${System.nanoTime()}").awaitTermination(120000)
+    assert(engine.fallbackBatches == 0)
 
     val sunk = spark.read.parquet(outDir)
     assert(sunk.count() == 200)
@@ -63,10 +64,14 @@ class FileStreamSpec extends SparkSpec {
       fallback = new JsonLinesSink(fbDir),
       trigger = Trigger.AvailableNow(),
       checkpointLocation = Some(s"$root/ckpt"))
-    engine.start(stream, s"fb-spec-${System.nanoTime()}").awaitTermination(120000)
+    val q = engine.start(stream, s"fb-spec-${System.nanoTime()}")
+    q.awaitTermination(120000)
 
     val diverted = spark.read.json(fbDir)
     assert(diverted.count() == 50)
+    val batches = q.recentProgress.count(_.numInputRows > 0)
+    assert(batches > 0 && engine.fallbackBatches == batches,
+      s"${engine.fallbackBatches} diversions counted for $batches batches")
     assert(diverted.columns.toSet == Set("event_id", "event_type", "value"))
   }
 }

@@ -54,6 +54,26 @@ class StreamEngineSpec extends SparkSpec {
     assert(fallback.rows.map(_.getAs[String]("id")).toSet == (1 to 5).map(i => s"c$i").toSet)
   }
 
+  test("an empty micro-batch reaches neither onBatch nor a sink; the ledger still marks it") {
+    val ledger = java.nio.file.Files.createTempDirectory("graft-empty-ledger").toString
+    val (primary, fallback) = (new MemorySink, new MemorySink)
+    var calls = 0
+    val engine = new StreamEngine(
+      transform = b => b.where(col("score") > 100),
+      primary = primary, fallback = fallback,
+      onBatch = (_, _) => calls += 1,
+      epochLedger = Some(ledger))
+    val empty = Seq.empty[(String, Int)].toDF("id", "score")
+    val filteredOut = Seq(("a", 1), ("b", 2)).toDF("id", "score")
+    engine.processBatch(empty, 0L)          // empty source batch
+    engine.processBatch(filteredOut, 1L)    // every row dropped by the transform
+    assert(calls == 0)
+    assert(primary.batches.isEmpty && fallback.batches.isEmpty)
+    assert(Seq(0, 1).forall(i => new java.io.File(ledger, s"epoch-$i").exists()))
+    engine.processBatch(Seq(("c", 101)).toDF("id", "score"), 2L)
+    assert(calls == 1 && primary.rows.size == 1)
+  }
+
   test("malformed JSON becomes null columns, not a stream failure") {
     val primary = new MemorySink
     runStream(primary, new FailingSink, Seq(jsonRecord(1), "{not json"))
