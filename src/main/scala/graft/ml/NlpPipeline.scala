@@ -7,7 +7,7 @@ import org.apache.spark.ml.clustering.{LDA, LDAModel}
 import org.apache.spark.ml.feature._
 import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.ml.regression.{RandomForestRegressionModel, RandomForestRegressor}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** N3–N8: the ML feature/model chain (SURVEY.md §2.11, §3.2) with the
@@ -129,22 +129,24 @@ object NlpPipeline {
     * projection.
     *
     * A stream calls this once per micro-batch with the same model and
-    * label frame, so what they serve is bound once and reused (see
-    * [[served]] and [[labelOf]]): the forest is broadcast once per model
-    * instance instead of by every `transform`, and the O(topics) label
-    * table is a literal map lookup instead of a broadcast-join job per
-    * batch. The rows are those of `model.transform` +
-    * `ScoreOps.withTopicLabel(…, Some(lit("Autre")))` + this projection. */
+    * label frame, so what they serve is bound once and reused: the forest
+    * is broadcast once per model instance (see [[served]]) instead of by
+    * every `transform`, and `labels` is collected once per frame instance
+    * by [[graft.ops.ScoreOps.withTopicLabel]] — it is read once and must
+    * not change afterwards; pass a new frame to re-read. `model` must end
+    * in the [[RandomForestRegressionModel]] that [[pipeline]] puts last.
+    * The rows are those of `model.transform` + the left join against
+    * `labels` with an "Autre" default + this projection. */
   def inferBatch(batch: DataFrame, model: PipelineModel,
                  labels: DataFrame): DataFrame = {
     val argmaxVec = udf((v: Vector) => v.argmax)  // the one permitted UDF (SURVEY §7.1)
-    served(model, batch.sparkSession.sparkContext)(batch)
-      .withColumn("topic_id", argmaxVec(col("topic_distribution")))
+    val scored = served(model, batch.sparkSession.sparkContext)(batch)
       .withColumn("score_predit", round(col("prediction"), 2).cast("float")) // M1/M4
       .withColumn("viralite", graft.ops.ScoreOps.virality(col("prediction"))) // M2
-      // Storage path: unmatched topics fall back to the constant "Autre"
-      // (reference `spark/engine.py:181-183`); "Sujet {id}" is display-only.
-      .withColumn("sujet", coalesce(labelOf(labels)(col("topic_id")), lit("Autre")))
+    // Storage path: unmatched topics fall back to the constant "Autre"
+    // (reference `spark/engine.py:181-183`); "Sujet {id}" is display-only.
+    graft.ops.ScoreOps.withTopicLabel(scored, argmaxVec(col("topic_distribution")),
+        labels, default = Some(lit("Autre")))
       .select(col("id"), col("author"), col("subreddit"),
         col("text").as("text_content"), col("sentiment"),
         col("sujet"), col("score_predit"), col("viralite"),
@@ -152,53 +154,34 @@ object NlpPipeline {
   }
 
   // Bindings are keyed weakly by instance identity (Guava's weak keys
-  // compare with `eq`): a model or label frame that is no longer served
-  // — ModelReloader swapped it out — drops its entry, and the forest
-  // broadcast becomes garbage for the ContextCleaner.
+  // compare with `eq`): a model that is no longer served — ModelReloader
+  // swapped it out — drops its entry, and the forest broadcast becomes
+  // garbage for the ContextCleaner.
   private val servedModels = new MapMaker().weakKeys()
     .makeMap[PipelineModel, (SparkContext, DataFrame => DataFrame)]()
-  private val boundLabels = new MapMaker().weakKeys().makeMap[DataFrame, Column]()
 
   /** `model.transform` with the forest's `predict` served over ONE
     * broadcast per model instance and live SparkContext — the forest's
     * own `transform` broadcasts its 30 trees on every call. A stopped or
     * replaced context binds afresh. The binding holds the stages, never
     * the model, so the weak key can go. */
-  private def served(model: PipelineModel, sc: SparkContext): DataFrame => DataFrame =
-    model.stages.last match {
-      case rf: RandomForestRegressionModel => servedModels.synchronized {
-        Option(servedModels.get(model)).filter { case (bsc, _) => (bsc eq sc) && !sc.isStopped }
-          .getOrElse {
-            val forest = sc.broadcast(rf)
-            val predict = udf((v: Vector) => forest.value.predict(v))
-            val prefix = model.stages.init
-            val bound = (sc, (df: DataFrame) => prefix.foldLeft(df)((d, stage) => stage.transform(d))
-              .withColumn(rf.getPredictionCol, predict(col(rf.getFeaturesCol))))
-            servedModels.put(model, bound)
-            bound
-          }._2
-      }
-      case _ => model.transform(_)
+  private def served(model: PipelineModel, sc: SparkContext): DataFrame => DataFrame = {
+    val rf = model.stages.last match {
+      case rf: RandomForestRegressionModel => rf
+      case s => throw new IllegalArgumentException(
+        s"inferBatch serves a pipeline ending in a RandomForestRegressionModel, not ${s.getClass.getName}")
     }
-
-  /** The label table as a literal `map<int,string>`, collected once per
-    * frame. Looking a topic up in it equals the left join it replaces
-    * only while each `topic_id` has one label, so duplicates are
-    * rejected; an unmatched id reads null (map lookup never throws, ANSI
-    * or not), which the caller's default fills. */
-  private def labelOf(labels: DataFrame): Column =
-    boundLabels.synchronized {
-      Option(boundLabels.get(labels)).getOrElse {
-        val rows = labels.select(col("topic_id").cast("int"), col("label").cast("string"))
-          .collect().filterNot(_.isNullAt(0))
-        val ids = rows.map(_.getInt(0))
-        val dups = ids.diff(ids.distinct).distinct
-        require(dups.isEmpty,
-          s"topic label table has duplicate topic_id(s) ${dups.sorted.mkString(", ")}")
-        val lookup = typedLit(rows.filterNot(_.isNullAt(1))
-          .map(r => r.getInt(0) -> r.getString(1)).toMap)
-        boundLabels.put(labels, lookup)
-        lookup
-      }
+    servedModels.synchronized {
+      Option(servedModels.get(model)).filter { case (bsc, _) => (bsc eq sc) && !sc.isStopped }
+        .getOrElse {
+          val forest = sc.broadcast(rf)
+          val predict = udf((v: Vector) => forest.value.predict(v))
+          val prefix = model.stages.init
+          val bound = (sc, (df: DataFrame) => prefix.foldLeft(df)((d, stage) => stage.transform(d))
+            .withColumn(rf.getPredictionCol, predict(col(rf.getFeaturesCol))))
+          servedModels.put(model, bound)
+          bound
+        }._2
     }
+  }
 }

@@ -176,8 +176,8 @@ object TextQueries {
       col("label")),
         col("vec_id"))
 
-  /** J1/F5: topic-label broadcast join with default label (reference
-    * `spark/engine.py:113-122` as a join, not a UDF). */
+  /** J1/F5: topic-label lookup with default label (reference
+    * `spark/engine.py:113-122` as a literal map lookup, not a UDF). */
   private val j1TopicLabel: Q = (s, dir) => {
     val withTopic = t(s, dir, "embeddings")
       .select(col("vec_id"), pmod(ScoreOps.argmax(col("embedding")), lit(8)).as("topic_id"))

@@ -1,5 +1,7 @@
 package graft.ml
 
+import org.apache.spark.ml.Pipeline
+import org.apache.spark.ml.feature.Tokenizer
 import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.sql.functions._
 
@@ -64,15 +66,16 @@ class NlpPipelineSpec extends SparkSpec {
   }
 
   /** The composition inferBatch replaced: the model's own transform,
-    * then the broadcast left join against the label frame. */
+    * then the broadcast left join against the label frame with an
+    * "Autre" default, then the sink projection. */
   private def composed(labels: org.apache.spark.sql.DataFrame) = {
     val argmaxVec = udf((v: Vector) => v.argmax)
-    graft.ops.ScoreOps.withTopicLabel(
-        model.transform(corpus)
-          .withColumn("topic_id", argmaxVec(col("topic_distribution")))
-          .withColumn("score_predit", round(col("prediction"), 2).cast("float"))
-          .withColumn("viralite", graft.ops.ScoreOps.virality(col("prediction"))),
-        col("topic_id"), labels, default = Some(lit("Autre")))
+    model.transform(corpus)
+      .withColumn("topic_id", argmaxVec(col("topic_distribution")))
+      .withColumn("score_predit", round(col("prediction"), 2).cast("float"))
+      .withColumn("viralite", graft.ops.ScoreOps.virality(col("prediction")))
+      .join(broadcast(labels), Seq("topic_id"), "left")
+      .withColumn("sujet", coalesce(col("label"), lit("Autre")))
       .select(col("id"), col("author"), col("subreddit"),
         col("text").as("text_content"), col("sentiment"),
         col("sujet"), col("score_predit"), col("viralite"),
@@ -109,6 +112,14 @@ class NlpPipelineSpec extends SparkSpec {
     val dup = labels.union(labels.where(col("topic_id") === common))
     val e = intercept[IllegalArgumentException](NlpPipeline.inferBatch(corpus, model, dup))
     assert(e.getMessage.contains("duplicate topic_id"), e.getMessage)
+  }
+
+  test("inferBatch rejects a model that does not end in the forest") {
+    val tokens = new Pipeline().setStages(Array(
+      new Tokenizer().setInputCol("text").setOutputCol("words"))).fit(corpus)
+    val e = intercept[IllegalArgumentException](
+      NlpPipeline.inferBatch(corpus, tokens, NlpPipeline.topicLabels(spark, model)))
+    assert(e.getMessage.contains("RandomForestRegressionModel"), e.getMessage)
   }
 
   test("save/load round-trips the whole pipeline (S3/S11)") {

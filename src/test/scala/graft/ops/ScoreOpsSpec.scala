@@ -44,4 +44,27 @@ class ScoreOpsSpec extends SparkSpec {
     assert(out(1L) == "btc-price-moon") // matched ids unaffected
     assert(out(3L) == "Autre")
   }
+
+  test("withTopicLabel equals the broadcast left join it replaces; duplicate ids are rejected") {
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
+    val df = Seq[(Long, Option[Int])]((1L, Some(0)), (2L, Some(3)), (3L, Some(7)), (4L, None))
+      .toDF("id", "tid")
+    // a null label and a null id in the dimension: the join matches the
+    // first (label null → default) and never the second
+    val labels = ScoreOps.defaultTopicLabels(spark).where($"topic_id" =!= 3)
+      .union(Seq[(Option[Int], String)]((Some(3), null), (None, "nobody")).toDF("topic_id", "label"))
+    val fallback = concat(lit("Sujet "), col("topic_id"))
+    val joined = df.withColumn("topic_id", $"tid")
+      .join(broadcast(labels), Seq("topic_id"), "left")
+      .withColumn("sujet", coalesce(col("label"), fallback))
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.select("id", "topic_id", "sujet").as[(Long, Option[Int], String)].collect().sortBy(_._1).toSeq
+    val got = rows(ScoreOps.withTopicLabel(df, $"tid", labels))
+    assert(got == rows(joined))
+    assert(got.map(_._3) == Seq("btc-price-moon", "Sujet 3", "Sujet 7", null))
+
+    val dup = labels.union(Seq((0, "again")).toDF("topic_id", "label"))
+    val e = intercept[IllegalArgumentException](ScoreOps.withTopicLabel(df, $"tid", dup))
+    assert(e.getMessage.contains("duplicate topic_id(s) 0"), e.getMessage)
+  }
 }
