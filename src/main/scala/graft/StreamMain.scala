@@ -14,8 +14,9 @@ import graft.stream.StreamEngine
   *   source (Kafka, or a JSON-lines file stream carrying the same
   *   envelope) → CAST(value AS STRING) → from_json(CorpusSchema) + flatten
   *   → per-micro-batch: prepare (null-drop, clean chain, calendar
-  *   features, sentiment) → PipelineModel.transform → topic argmax + label
-  *   lookup ("Autre" storage default) → virality + rounded score →
+  *   features, sentiment) → the model's bound scorer (prediction + topic
+  *   argmax, `NlpPipeline.inferBatch`) → label lookup ("Autre" storage
+  *   default) → virality + rounded score →
   *   sink projection (`init.cql:8-18` shape) → parquet primary with
   *   distributed JSON-lines fallback — 20 s processing-time trigger,
   *   checkpointed.

@@ -5,9 +5,8 @@ import org.apache.spark.SparkContext
 import org.apache.spark.ml.{Pipeline, PipelineModel}
 import org.apache.spark.ml.clustering.{LDA, LDAModel}
 import org.apache.spark.ml.feature._
-import org.apache.spark.ml.linalg.Vector
-import org.apache.spark.ml.regression.{RandomForestRegressionModel, RandomForestRegressor}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.ml.regression.RandomForestRegressor
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** N3–N8: the ML feature/model chain (SURVEY.md §2.11, §3.2) with the
@@ -24,9 +23,16 @@ import org.apache.spark.sql.functions._
   * Everything is one `ml.Pipeline`, so fit/save/load are single calls
   * (the reference hand-sequences six separate fits and model files,
   * `spark/loader.py:13-34`).
+  *
+  * Serving does not run the stages: [[inferBatch]] binds a fitted model
+  * once into one [[PipelineScorer]] (one broadcast, one scoring function
+  * per row, LDA as the primitive [[LdaKernel]]). `model.transform` stays
+  * the spec that scorer is held to, row for row (`NlpPipelineSpec`).
   */
 object NlpPipeline {
 
+  /** The fitting seed of Word2Vec, LDA and the forest. LDA inference does
+    * not use it: MLlib infers with its old local model's own seed. */
   val Seed = 42L
   val W2vDim = 100
   val VocabSize = 2000
@@ -125,27 +131,38 @@ object NlpPipeline {
   }
 
   /** The per-batch inference chain (reference `spark/engine.py:169-200`):
-    * model transform → prediction round/bucket → topic label → sink
-    * projection.
+    * score → prediction round/bucket → topic label → sink projection.
     *
-    * A stream calls this once per micro-batch with the same model and
-    * label frame, so what they serve is bound once and reused: the forest
-    * is broadcast once per model instance (see [[served]]) instead of by
-    * every `transform`, and `labels` is collected once per frame instance
-    * by [[graft.ops.ScoreOps.withTopicLabel]] — it is read once and must
-    * not change afterwards; pass a new frame to re-read. `model` must end
-    * in the [[RandomForestRegressionModel]] that [[pipeline]] puts last.
-    * The rows are those of `model.transform` + the left join against
-    * `labels` with an "Autre" default + this projection. */
+    * The model is served as ONE bound scorer ([[PipelineScorer]]): once
+    * per model instance and live SparkContext, its fitted stages are read
+    * into one object (stop words, Word2Vec vectors, CountVectorizer
+    * vocabulary, LDA's `expElogbeta` and initial gamma, the two indexer
+    * label maps, the forest) and broadcast once; every batch then
+    * evaluates one scoring function per row, once. Nothing is broadcast
+    * per batch (`Word2VecModel.transform` alone broadcasts its vectors on
+    * every call), no vector crosses a UDT boundary, and LDA runs as
+    * [[LdaKernel]]. The LDA seed is the one MLlib infers with, the old
+    * local model's own (`LdaShim`), not [[Seed]].
+    *
+    * `labels` is collected once per frame instance by
+    * [[graft.ops.ScoreOps.withTopicLabel]] — it is read once and must not
+    * change afterwards; pass a new frame to re-read. `model` must be a fit
+    * of [[pipeline]]; any other is rejected.
+    *
+    * `model.transform` is the spec: the rows are those of
+    * `model.transform` (rows with a null or NaN time feature dropped by
+    * the assembler's `skip`) + the left join against `labels` with an
+    * "Autre" default + this projection. */
   def inferBatch(batch: DataFrame, model: PipelineModel,
                  labels: DataFrame): DataFrame = {
-    val argmaxVec = udf((v: Vector) => v.argmax)  // the one permitted UDF (SURVEY §7.1)
-    val scored = served(model, batch.sparkSession.sparkContext)(batch)
-      .withColumn("score_predit", round(col("prediction"), 2).cast("float")) // M1/M4
-      .withColumn("viralite", graft.ops.ScoreOps.virality(col("prediction"))) // M2
+    val bound = served(model, batch.sparkSession.sparkContext)
+    val scored = batch.na.drop(bound.time)                           // N7: assembler skip
+      .withColumn("scored", bound.score)
+      .withColumn("score_predit", round(col("scored.prediction"), 2).cast("float")) // M1/M4
+      .withColumn("viralite", graft.ops.ScoreOps.virality(col("scored.prediction"))) // M2
     // Storage path: unmatched topics fall back to the constant "Autre"
     // (reference `spark/engine.py:181-183`); "Sujet {id}" is display-only.
-    graft.ops.ScoreOps.withTopicLabel(scored, argmaxVec(col("topic_distribution")),
+    graft.ops.ScoreOps.withTopicLabel(scored, col("scored.topicId"),
         labels, default = Some(lit("Autre")))
       .select(col("id"), col("author"), col("subreddit"),
         col("text").as("text_content"), col("sentiment"),
@@ -153,35 +170,37 @@ object NlpPipeline {
         to_timestamp(col("timestamp")).as("creation_date"))          // P5/D3
   }
 
+  /** A model bound for serving: the scoring column over its one
+    * broadcast, and the time-feature columns whose null or NaN drops a
+    * row. */
+  private final case class Served(sc: SparkContext, score: Column, time: Seq[String])
+
   // Bindings are keyed weakly by instance identity (Guava's weak keys
   // compare with `eq`): a model that is no longer served — ModelReloader
-  // swapped it out — drops its entry, and the forest broadcast becomes
-  // garbage for the ContextCleaner.
-  private val servedModels = new MapMaker().weakKeys()
-    .makeMap[PipelineModel, (SparkContext, DataFrame => DataFrame)]()
+  // swapped it out — drops its entry, and its broadcast becomes garbage
+  // for the ContextCleaner.
+  private val servedModels = new MapMaker().weakKeys().makeMap[PipelineModel, Served]()
 
-  /** `model.transform` with the forest's `predict` served over ONE
-    * broadcast per model instance and live SparkContext — the forest's
-    * own `transform` broadcasts its 30 trees on every call. A stopped or
-    * replaced context binds afresh. The binding holds the stages, never
-    * the model, so the weak key can go. */
-  private def served(model: PipelineModel, sc: SparkContext): DataFrame => DataFrame = {
-    val rf = model.stages.last match {
-      case rf: RandomForestRegressionModel => rf
-      case s => throw new IllegalArgumentException(
-        s"inferBatch serves a pipeline ending in a RandomForestRegressionModel, not ${s.getClass.getName}")
-    }
+  /** The binding of `model` on `sc`, made on first use. A stopped or
+    * replaced context binds afresh. The binding holds the scorer, never
+    * the model, so the weak key can go. The scoring UDF is marked
+    * nondeterministic so the optimizer never copies it — into a pushed-down
+    * filter, or once per field it is read by — and the executed plan
+    * evaluates it once per row. */
+  private def served(model: PipelineModel, sc: SparkContext): Served =
     servedModels.synchronized {
-      Option(servedModels.get(model)).filter { case (bsc, _) => (bsc eq sc) && !sc.isStopped }
-        .getOrElse {
-          val forest = sc.broadcast(rf)
-          val predict = udf((v: Vector) => forest.value.predict(v))
-          val prefix = model.stages.init
-          val bound = (sc, (df: DataFrame) => prefix.foldLeft(df)((d, stage) => stage.transform(d))
-            .withColumn(rf.getPredictionCol, predict(col(rf.getFeaturesCol))))
-          servedModels.put(model, bound)
-          bound
-        }._2
+      Option(servedModels.get(model)).filter(b => (b.sc eq sc) && !sc.isStopped).getOrElse {
+        val inputs = PipelineScorer.inputs(model)
+        val scorer = sc.broadcast(PipelineScorer(model))
+        val score = udf { (text: String, subreddit: String, sentiment: String, year: Double,
+            month: Double, day: Double, hour: Double, dayOfWeek: Double, dayOfYear: Double) =>
+          scorer.value.score(text, subreddit, sentiment, year, month, day, hour, dayOfWeek, dayOfYear)
+        }.withName("nlp_score").asNondeterministic()
+        val (text, labels, time) = (inputs.head, inputs.slice(1, 3), inputs.drop(3))
+        val bound = Served(sc, score((col(text) +: labels.map(col(_).cast("string")) ++:
+          time.map(col(_).cast("double"))): _*), time)
+        servedModels.put(model, bound)
+        bound
+      }
     }
-  }
 }

@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.expressions.{Literal, Lower}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.Lower
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StringType
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
@@ -17,7 +16,7 @@ import graft.ops.TextOps
   * generated strings built from the hazards: ASCII text, every Java `\s`
   * byte, URL fragments in every position, Unicode case mappings that land
   * in ASCII, characters outside the BMP, and null. */
-class CleanTextSpec extends SparkSpec {
+class CleanTextSpec extends SparkSpec with GeneratedPath {
   import spark.implicits._
 
   /** The F2–F4 chain as regexes, exactly as `TextOps.cleanText` was. */
@@ -44,28 +43,17 @@ class CleanTextSpec extends SparkSpec {
   private lazy val samples: Seq[Option[String]] =
     Gen.listOfN(3000, texts).apply(Gen.Parameters.default, Seed(20161018L)).get
 
-  /** Kernel and oracle over an RDD-backed frame: a local relation would
-    * be folded by the optimizer's interpreted eval, never reaching
-    * generated code. Fallback off, so a codegen compile failure fails. */
+  /** Kernel and oracle over an RDD-backed frame, through generated code
+    * ([[GeneratedPath]]). */
   private def mismatches(input: Seq[Option[String]], kernel: Column => Column,
-                         oracle: Column => Column): Seq[(Option[String], String, String)] = {
-    val conf = Seq("spark.sql.codegen.fallback" -> "false",
-      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")
-    val saved = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
-    conf.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+                         oracle: Column => Column): Seq[(Option[String], String, String)] =
+    withCodegenOnly {
       val df: DataFrame = spark.sparkContext.parallelize(input, 2).toDF("t")
         .select($"t", kernel($"t").as("k"), oracle($"t").as("o"))
-      val plan = df.queryExecution.executedPlan.toString
-      assert(plan.contains("clean_text") && plan.contains("*("),
-        s"clean_text is not inside a whole-stage-codegen stage:\n$plan")
+      assertGenerated(df, classOf[CleanText])
       df.as[(Option[String], String, String)].collect().toSeq
         .filter { case (_, k, o) => k != o }
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
-  }
 
   private def show(ms: Seq[(Option[String], String, String)]): String =
     ms.take(5).map { case (t, k, o) =>
@@ -83,14 +71,10 @@ class CleanTextSpec extends SparkSpec {
   }
 
   test("interpreted eval (nullSafeEval) equals the generated-code result") {
-    val codegen = spark.sparkContext.parallelize(samples, 2).toDF("t")
-      .select(TextOps.cleanText($"t")).as[Option[String]].collect().toSeq
-    val interpreted = samples.map { s =>
-      Option(CleanText(Lower(Literal.create(s.orNull, StringType))).eval())
-        .map(_.asInstanceOf[UTF8String].toString)
-    }
-    assert(interpreted == codegen)
-    assert(interpreted.count(_.isEmpty) == samples.count(_.isEmpty), "null in, null out")
+    val schema = StructType(Seq(StructField("t", StringType)))
+    val results = generatedResults(samples.map(s => Row(s.orNull)), schema)(
+      es => CleanText(Lower(es.head)))
+    assert(results.count(_._2 == null) == samples.count(_.isEmpty), "null in, null out")
   }
 
   test("equals the regex chain on every document of the test corpus") {

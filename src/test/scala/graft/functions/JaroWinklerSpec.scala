@@ -1,8 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.ColumnShim
+import org.apache.spark.sql.{Column, Row}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.SparkSpec
@@ -10,7 +9,7 @@ import graft.SparkSpec
 /** Pins the Jaro–Winkler kernel to the textbook reference values the
   * DuckDB oracle was probed against, and the eval ↔ codegen parity the
   * expression relies on inside whole-stage spans. */
-class JaroWinklerSpec extends SparkSpec {
+class JaroWinklerSpec extends SparkSpec with GeneratedPath {
   import spark.implicits._
 
   private def jw(a: Column, b: Column): Column = JaroWinkler.column(a, b)
@@ -46,14 +45,15 @@ class JaroWinklerSpec extends SparkSpec {
     val pairs = Seq(
       ("martha", "marhta"), ("dwayne", "duane"), ("crate", "trace"),
       ("jellyfish", "smellyfish"), ("deposit", "deposti"),
-      ("according", "accordingly"), ("", "x"), ("aa", "aa"))
-    val df = pairs.toDF("a", "b")
-    // DataFrame execution runs the doGenCode path (whole-stage codegen);
-    // compare against the interpreted object call row by row.
-    val got = df.select($"a", $"b", jw($"a", $"b").as("s")).collect()
-    got.foreach { r =>
-      assert(r.getDouble(2) == sim(r.getString(0), r.getString(1)),
-        s"codegen != eval for (${r.getString(0)}, ${r.getString(1)})")
+      ("according", "accordingly"), ("", "x"), ("aa", "aa"), ("abc", "ABC"),
+      ("x", null), (null, null), ("\u00e9t\u00e9", "ete"), ("\uD83D\uDE00a", "a"))
+    val schema = StructType(Seq(StructField("a", StringType), StructField("b", StringType)))
+    val results = generatedResults(pairs.map { case (a, b) => Row(a, b) }, schema)(
+      es => JaroWinklerSim(es(0), es(1)))
+    // and both equal the textbook kernel the reference values pin
+    results.foreach { case (r, g) =>
+      if (r.isNullAt(0) || r.isNullAt(1)) assert(g == null)
+      else assert(g == sim(r.getString(0), r.getString(1)), s"codegen != eval for $r")
     }
   }
 

@@ -29,16 +29,25 @@ class ModelReloaderSpec extends SparkSpec {
 
     val batch = TrainMain.readCorpus(spark, s"$root/c1.json")
     val reloader = new ModelReloader(modelDir)
+    // what the model saved at `modelDir` right now serves, by its own stage fold
+    def oracle() = {
+      val m = NlpPipeline.load(modelDir)
+      StageFold.rows(StageFold.served(m, NlpPipeline.topicLabels(spark, m), TrainMain.prepare(batch)))
+    }
 
-    assert(reloader.infer(batch).count() == 60)
+    val first = StageFold.rows(reloader.infer(batch))
+    assert(first.size == 60)
+    assert(first == oracle())
     assert(reloader.infer(batch).count() == 60)
     assert(reloader.loadCount == 1, "unchanged model must not re-load")
 
-    // Retrain over the same dir — the next batch must pick it up.
+    // Retrain over the same dir — the next batch must serve the new model.
     Files.writeString(java.nio.file.Path.of(s"$root/c2.json"), corpus(60, 5))
     TrainMain.run(spark, s"$root/c2.json", modelDir)
-    assert(reloader.infer(batch).count() == 60)
+    val swapped = StageFold.rows(reloader.infer(batch))
     assert(reloader.loadCount == 2, "overwritten model must reload once")
+    assert(swapped == oracle(), "the batch after a swap is served by the new model")
+    assert(swapped != first, "the retrained model must score differently")
 
     // A corrupt overwrite (fingerprint changes, load fails): the
     // previous model keeps serving and no exception escapes the stream.
