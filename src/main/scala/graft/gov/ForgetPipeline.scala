@@ -6,7 +6,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ops.SegmentStore
+import graft.ops.{Materialize, SegmentStore}
 
 /** Cross-store right-to-be-forgotten orchestration — the missing top of
   * the governance stack: every persisted store already proves an EXACT
@@ -171,7 +171,10 @@ final class ForgetPipeline(spark: SparkSession, val ledgerDir: String) {
     // Pin the victim set once: every target and the ledger read ONE
     // materialization (a recomputed victim filter could drift between
     // stores if its source mutates mid-request). Blocks released after
-    // the commit — the withReleasedCheckpoint discipline.
+    // the commit: this request can run for MINUTES against seven
+    // stores, and a standing driver must not hold its victim set.
+    // Blocks the store forgets pin internally are those stores' own
+    // release contracts.
     // DISTINCT before pinning: erasure is a SET operation. Without it,
     // duplicate victim ids (a) inflate ledger rows and audit() n_ids,
     // and (b) poison the fingerprint below — bit_xor cancels
@@ -181,8 +184,8 @@ final class ForgetPipeline(spark: SparkSession, val ledgerDir: String) {
     // acks computed for other victims. Over the distinct set the
     // fingerprint is a true set digest: equal (count, xor-of-distinct)
     // pairs collide only on an engineered 64-bit xor collision.
-    val pinned = victimIds.distinct().localCheckpoint(true)
-    try {
+    Materialize.scoped { scope =>
+      val pinned = scope.pin(victimIds.distinct())
       require(!pinned.isEmpty, "empty victim set")
       // Victim-set fingerprint (count + order-independent id xor): acks
       // are only reusable by a replay of the SAME victim set — a
@@ -222,14 +225,6 @@ final class ForgetPipeline(spark: SparkSession, val ledgerDir: String) {
       sized.write.mode(SaveMode.Overwrite).parquet(path.toString)
       fs.delete(ackDir(requestId), true) // post-commit sweep (best effort)
       spark.read.parquet(path.toString)
-    } finally {
-      // PRECISE release of the victim pin ([[graft.ops.CheckpointIds]]).
-      // This request can run for MINUTES against seven stores; the old
-      // getPersistentRDDs before/after diff would claim — and
-      // permanently break — any checkpoint a CONCURRENT job persisted
-      // in that window. Blocks the store forgets pin internally are
-      // those stores' own release contracts.
-      graft.ops.CheckpointIds.release(pinned)
     }
   }
 

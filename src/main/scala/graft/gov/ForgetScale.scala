@@ -5,6 +5,8 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ops.Materialize.Pinning
+
 /** MASS-ERASURE AT SCALE — the measured form of the
   * [[ForgetPipeline.executeVictims]] 10⁷–10⁸-victim claim, driven by
   * [[graft.Scaling]] as the `q_gov_forget_victims` block: one erasure
@@ -203,15 +205,15 @@ object ForgetScale {
     // The LM target needs the victims' DOCUMENTS (its negative segment
     // tokenizes exactly the ingested text); pinned once so the LM and
     // the pipeline's own victim pin cannot drift mid-request — and
-    // RELEASED after the request commits (the withReleasedCheckpoint
-    // discipline; the returned ledger frame is a parquet read with no
+    // RELEASED after the request commits (the returned ledger frame is
+    // a parquet read with no
     // dependence on this pin, and a leaked slice-sized checkpoint per
     // timed pass would skew the very measurements this block grades).
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet.toSet
     val victimDocs = docs
       .where(pmod(col("doc_id"), lit(mod)) === i)
-      .localCheckpoint(true)
+      .pinned
     try {
       val ledger = fx.pipeline.executeVictims(s"scale-$i", victims, Seq(
       "batchstore" -> (v => graft.stream.MicroBatchIngest
@@ -229,7 +231,7 @@ object ForgetScale {
       ledger
     } finally {
       // DELIBERATELY broad (unlike the production paths' precise
-      // CheckpointIds release): this is the sequential measurement
+      // Materialize release): this is the sequential measurement
       // harness, and the sweep is the between-passes leak control for
       // anything a store forget pinned during the timed window — no
       // concurrent job exists here to misattribute.

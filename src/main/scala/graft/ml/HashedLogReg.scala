@@ -3,6 +3,8 @@ package graft.ml
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.ops.Materialize
+
 /** Distributed logistic-regression TRAINING over hashed text features —
   * the learning half of the fastText/CCNet/DCLM quality-classifier loop
   * whose serving half `q_text_classify` grades: score docs with a
@@ -170,39 +172,37 @@ object HashedLogReg {
     // checkpoint blocks are released once its collects land — N
     // iterations must hold ONE live iteration set plus `f`, never N dead
     // ones slowly bloating executor storage into eviction/GC territory.
-    // Frames are released by their own ids ([[graft.ops.CheckpointIds]]),
-    // so frames the caller or a concurrent thread persisted are never
-    // touched. One materialization serves every iteration (featurize
-    // tokenizes the corpus — unpinned, each pass would redo it).
-    val f = feats.join(labels, Seq("doc_id")).localCheckpoint(true)
-    val nDocs = f.select(countDistinct("doc_id")).head().getLong(0).toDouble
-    var model = Model(buckets, 0.0, Array.fill(buckets)(0.0))
-    val steps = Seq.newBuilder[Step]
-    for (it <- 0 until iters) {
-      val scored = predict(f, model)
-        .join(labels, Seq("doc_id"))
-        .withColumn("err", col("p") - col("y"))
-        // Clamped log-loss: p is sigmoid output, strictly in (0,1), but
-        // guard the log against FP underflow at extreme margins.
-        .withColumn("ll", -(col("y") * log(greatest(col("p"), lit(1e-12))) +
-          (lit(1.0) - col("y")) *
-            log(greatest(lit(1.0) - col("p"), lit(1e-12)))))
-        .localCheckpoint(true) // loss row + gradient aggregate both read it
-      val loss = scored.agg(avg("ll")).head().getDouble(0)
-      steps += Step(it, loss)
-      // O(buckets)+1 driver rows: the gradient, never the data.
-      val gBias = scored.agg(sum("err")).head().getDouble(0) / nDocs
-      val grads = f.join(scored.select("doc_id", "err"), Seq("doc_id"))
-        .groupBy("bucket").agg(sum(col("x") * col("err")).as("g"))
-        .collect().map(r => r.getLong(0).toInt -> r.getDouble(1)).toMap
-      val w = model.w.clone()
-      grads.foreach { case (b, g) => w(b) -= lr * g / nDocs }
-      model = Model(buckets, model.bias - lr * gBias, w)
-      // All of scored's readers have collected — drop its blocks now.
-      graft.ops.CheckpointIds.release(scored)
+    // One materialization serves every iteration (featurize tokenizes
+    // the corpus — unpinned, each pass would redo it); the model is
+    // driver state, so nothing returned references it.
+    Materialize.scoped { scope =>
+      val f = scope.pin(feats.join(labels, Seq("doc_id")))
+      val nDocs = f.select(countDistinct("doc_id")).head().getLong(0).toDouble
+      var model = Model(buckets, 0.0, Array.fill(buckets)(0.0))
+      val steps = Seq.newBuilder[Step]
+      for (it <- 0 until iters) Materialize.scoped { iteration =>
+        // Loss row + gradient aggregate both read it; all of its readers
+        // have collected when the iteration's scope releases it.
+        val scored = iteration.pin(predict(f, model)
+          .join(labels, Seq("doc_id"))
+          .withColumn("err", col("p") - col("y"))
+          // Clamped log-loss: p is sigmoid output, strictly in (0,1), but
+          // guard the log against FP underflow at extreme margins.
+          .withColumn("ll", -(col("y") * log(greatest(col("p"), lit(1e-12))) +
+            (lit(1.0) - col("y")) *
+              log(greatest(lit(1.0) - col("p"), lit(1e-12))))))
+        val loss = scored.agg(avg("ll")).head().getDouble(0)
+        steps += Step(it, loss)
+        // O(buckets)+1 driver rows: the gradient, never the data.
+        val gBias = scored.agg(sum("err")).head().getDouble(0) / nDocs
+        val grads = f.join(scored.select("doc_id", "err"), Seq("doc_id"))
+          .groupBy("bucket").agg(sum(col("x") * col("err")).as("g"))
+          .collect().map(r => r.getLong(0).toInt -> r.getDouble(1)).toMap
+        val w = model.w.clone()
+        grads.foreach { case (b, g) => w(b) -= lr * g / nDocs }
+        model = Model(buckets, model.bias - lr * gBias, w)
+      }
+      (model, steps.result())
     }
-    // The model is driver state; nothing returned references f.
-    graft.ops.CheckpointIds.release(f)
-    (model, steps.result())
   }
 }

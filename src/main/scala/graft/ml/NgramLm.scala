@@ -4,7 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ops.{SegmentStore, TokenOps}
+import graft.ops.{Materialize, SegmentStore, TokenOps}
+import graft.ops.Materialize.Pinning
 import graft.ops.SegmentStore.State
 
 /** Persisted ORDER-2 n-gram language model — the CCNet/KenLM-shaped
@@ -314,17 +315,13 @@ object NgramLm {
       * meta written AFTER the order tables from the same checkpointed
       * counts so load's cross-checks catch any torn combination. The
       * split runs on the vocabulary-sized aggregate, not the corpus.
-      * The materialization is RELEASED before returning (precise ids —
-      * [[graft.ops.CheckpointIds]]): nothing returned references it,
-      * and an unreleased per-segment pin would accumulate index-sized
-      * blocks per lifecycle op on a long-lived driver (the
-      * stores-own-release contract [[graft.gov.ForgetPipeline]] relies
-      * on). */
-    def writeTables(grams: DataFrame)(out: String): Unit = {
-      val c = grams.localCheckpoint(true)
-      try writeSegmentTables(c, out)
-      finally graft.ops.CheckpointIds.release(c)
-    }
+      * The materialization is RELEASED before returning: nothing
+      * returned references it, and an unreleased per-segment pin would
+      * accumulate index-sized blocks per lifecycle op on a long-lived
+      * driver (the stores-own-release contract
+      * [[graft.gov.ForgetPipeline]] relies on). */
+    def writeTables(grams: DataFrame)(out: String): Unit =
+      Materialize.scoped(scope => writeSegmentTables(scope.pin(grams), out))
 
     private def writeSegmentTables(c: DataFrame, out: String): Unit = {
       c.where(col("w2").isNull).select(col("w1").as("term"), col("cnt"))
@@ -489,7 +486,7 @@ object NgramLm {
           expr(graft.queries.TextQueries.HeldoutDocAggSql).as("heldout_mb"))
     }
 
-    /** The scored TYPE table of the frozen model, rolled once PER STORE
+    /** A scored TYPE table of the frozen model, rolled once PER STORE
       * VERSION: the vocabulary²-sized roll-up is cached keyed on the
       * manifest version the handle currently resolves — a standing
       * [[graft.stream.QualityGateIngest]] calls [[scoreBigrams]] every
@@ -498,64 +495,56 @@ object NgramLm {
       * THROUGH the same handle moves the version and transparently
       * rebuilds (the prior design's lazy val served STALE type scores
       * after a mutation, breaking "append sequence ≡ fit on the
-      * union"). The intermediate c2 roll-up's checkpoint blocks are
-      * released as soon as the final scored table materializes — only
-      * the serving table stays pinned — and a rebuild retires the
-      * previous version's blocks ONE GENERATION LATE (see
-      * `retiredBlockIds`): a [[scoreBigrams]] result held across a
-      * single mutation through this handle still evaluates; only a
-      * second mutation invalidates it. */
-    private var bigramScoresCache: Option[(Long, DataFrame, Set[Int])] =
-      None
-    // ONE retired generation stays alive (blocks un-reclaimed) so a
-    // DataFrame a caller obtained from [[scoreBigrams]] BEFORE the
-    // latest mutation through this handle still evaluates — its
-    // localCheckpoint lineage is truncated, so unpersisting it eagerly
-    // would make any held result fail with missing checkpoint blocks
-    // (recompute is impossible). The generation retires for good (and
-    // its blocks release) only when a SECOND mutation lands: held
-    // results are valid across at most one append/forget/compact.
-    private var retiredBlockIds: Set[Int] = Set.empty
+      * union"). `roll` builds the table from one snapshot; the
+      * intermediates it pins through its scope are released as soon as
+      * the table (an eager unscoped pin) materializes — only the
+      * serving table stays pinned. */
+    private final class TypeScores(
+        roll: (State, Materialize.Scope) => DataFrame) {
+      private var current: Option[(Long, DataFrame)] = None
+      // ONE retired generation stays alive (blocks un-reclaimed) so a
+      // DataFrame a caller obtained BEFORE the latest mutation through
+      // this handle still evaluates — its checkpoint lineage is
+      // truncated, so unpersisting it eagerly would make any held
+      // result fail with missing checkpoint blocks (recompute is
+      // impossible). The generation retires for good (and its blocks
+      // release) only when a SECOND mutation lands: held results are
+      // valid across at most one append/forget/compact.
+      private var retired: Option[DataFrame] = None
 
-    private def bigramTypeScores: DataFrame = synchronized {
-      // ONE snapshot supplies both the cache key and the data — on a
-      // live handle, keying on ver() but letting bigrams() re-resolve
-      // independently could cache version-v+1 data under key v when a
-      // publish lands between the two reads.
-      val snap = readSnap()
-      val v = snap.version.get
-      bigramScoresCache match {
-        case Some((cv, df, _)) if cv == v => df
-        case stale =>
-          val sc = spark.sparkContext
-          sc.getPersistentRDDs
-            .filter { case (id, _) => retiredBlockIds(id) }
-            .values.foreach(_.unpersist(blocking = false))
-          retiredBlockIds = stale.map(_._3).getOrElse(Set.empty)
-          // One read of the rolled table feeds c2 and both marginals.
-          // Block attribution is PRECISE ([[graft.ops.CheckpointIds]]
-          // reads the ids off the frames themselves) — a session-global
-          // before/after diff would claim a concurrent thread's
-          // checkpoint and unpersisting that breaks its
-          // lineage-truncated frame permanently.
-          val c2 = bigramsOf(snap).withColumnRenamed("cnt", "c2")
-            .localCheckpoint(true)
-          val cFirst = c2.groupBy("w1").agg(sum("c2").as("c1first"))
-          val uni2 = c2.groupBy(col("w2").as("w")).agg(sum("c2").as("cuni"))
-          val total = uni2.agg(coalesce(sum("cuni"), lit(0L)).as("t_total"))
-          val scored = c2.join(cFirst, Seq("w1"))
-            .join(uni2, c2("w2") === uni2("w"))
-            .crossJoin(broadcast(total))
-            .select(col("w1"), col("w2"),
-              expr(graft.queries.TextQueries.BigramSurprisalSql)
-                .as("surprisal_mb"))
-            .localCheckpoint(true)
-          graft.ops.CheckpointIds.release(c2)
-          bigramScoresCache =
-            Some((v, scored, graft.ops.CheckpointIds.of(scored)))
-          scored
+      def apply(): DataFrame = Model.this.synchronized {
+        // ONE snapshot supplies both the cache key and the data — on a
+        // live handle, keying on ver() but letting the roll re-resolve
+        // independently could cache version-v+1 data under key v when a
+        // publish lands between the two reads.
+        val snap = readSnap()
+        val v = snap.version.get
+        current match {
+          case Some((cv, df)) if cv == v => df
+          case stale =>
+            retired.foreach(Materialize.release)
+            retired = stale.map(_._2)
+            val scored = Materialize.scoped(roll(snap, _))
+            current = Some((v, scored))
+            scored
+        }
       }
     }
+
+    private val bigramTypeScores = new TypeScores({ (snap, scope) =>
+      // One read of the rolled table feeds c2 and both marginals.
+      val c2 = scope.pin(bigramsOf(snap).withColumnRenamed("cnt", "c2"))
+      val cFirst = c2.groupBy("w1").agg(sum("c2").as("c1first"))
+      val uni2 = c2.groupBy(col("w2").as("w")).agg(sum("c2").as("cuni"))
+      val total = uni2.agg(coalesce(sum("cuni"), lit(0L)).as("t_total"))
+      c2.join(cFirst, Seq("w1"))
+        .join(uni2, c2("w2") === uni2("w"))
+        .crossJoin(broadcast(total))
+        .select(col("w1"), col("w2"),
+          expr(graft.queries.TextQueries.BigramSurprisalSql)
+            .as("surprisal_mb"))
+        .pinned
+    })
 
     /** The scored batch's (doc_id, w1, w2, k) bigram counts — the one
       * doc-side tokenize pass both order-2 scoring kernels share. */
@@ -588,7 +577,7 @@ object NgramLm {
     def scoreBigrams(docs: DataFrame, idCol: String,
         textCol: String): DataFrame =
       docBigrams(docs, idCol, textCol)
-        .join(bigramTypeScores, Seq("w1", "w2"))
+        .join(bigramTypeScores(), Seq("w1", "w2"))
         .groupBy("doc_id")
         .agg(sum("k").as("n_bigrams"),
           expr("sum(k * surprisal_mb) DIV sum(k)").as("mean_surprisal_mb"))
@@ -603,56 +592,31 @@ object NgramLm {
       * [[graft.queries.TextQueries.KnSurprisalSql]] emission is
       * bit-identical (graded by `q_text_kn_served`, which shares
       * `q_text_kn_lm`'s oracle). Same absent-bigram / short-doc
-      * contract as [[scoreBigrams]]. The type roll-up is rebuilt per
-      * call (vocabulary²-bounded reads of model state — no checkpoint
-      * pinned, nothing cached; wire a [[bigramTypeScores]]-style cache
-      * only if a standing per-trigger consumer appears). */
+      * contract as [[scoreBigrams]]. */
     def scoreKneserNey(docs: DataFrame, idCol: String,
         textCol: String): DataFrame =
       docBigrams(docs, idCol, textCol)
-        .join(knTypeScores, Seq("w1", "w2"))
+        .join(knTypeScores(), Seq("w1", "w2"))
         .groupBy("doc_id")
         .agg(sum("k").as("n_bigrams"),
           expr("sum(k * s_mb) DIV sum(k)").as("kn_surprisal_mb"))
 
-    /** KN order-2 scored type table — the [[bigramTypeScores]]
-      * generation-cache discipline (one roll per store version per
-      * handle; the rolled c2 checkpoint is released as soon as the
-      * scored table materializes; the previous generation retires one
-      * mutation late). Added in r15: the per-call path re-read the
-      * stored bigram table once per marginal (3× model-state parquet
-      * scans + their stage launches per scoring call). */
-    private var knScoresCache: Option[(Long, DataFrame, Set[Int])] = None
-    private var knRetiredBlockIds: Set[Int] = Set.empty
-
-    private def knTypeScores: DataFrame = synchronized {
-      val snap = readSnap()
-      val v = snap.version.get
-      knScoresCache match {
-        case Some((cv, df, _)) if cv == v => df
-        case stale =>
-          val sc = spark.sparkContext
-          sc.getPersistentRDDs
-            .filter { case (id, _) => knRetiredBlockIds(id) }
-            .values.foreach(_.unpersist(blocking = false))
-          knRetiredBlockIds = stale.map(_._3).getOrElse(Set.empty)
-          val c2 = bigramsOf(snap).withColumnRenamed("cnt", "c2")
-            .localCheckpoint(true)
-          val cf = c2.groupBy("w1")
-            .agg(sum("c2").as("c1first"), count(lit(1)).as("n1pr"))
-          val cl = c2.groupBy("w2").agg(count(lit(1)).as("n1pl"))
-          val nAll = c2.agg(count(lit(1)).as("n1pall"))
-          val scored = c2.join(cf, Seq("w1")).join(cl, Seq("w2"))
-            .crossJoin(broadcast(nAll))
-            .select(col("w1"), col("w2"),
-              expr(graft.queries.TextQueries.KnSurprisalSql).as("s_mb"))
-            .localCheckpoint(true)
-          graft.ops.CheckpointIds.release(c2)
-          knScoresCache =
-            Some((v, scored, graft.ops.CheckpointIds.of(scored)))
-          scored
-      }
-    }
+    /** KN order-2 scored type table ([[TypeScores]]). Added in r15: the
+      * per-call path re-read the stored bigram table once per marginal
+      * (3× model-state parquet scans + their stage launches per scoring
+      * call). */
+    private val knTypeScores = new TypeScores({ (snap, scope) =>
+      val c2 = scope.pin(bigramsOf(snap).withColumnRenamed("cnt", "c2"))
+      val cf = c2.groupBy("w1")
+        .agg(sum("c2").as("c1first"), count(lit(1)).as("n1pr"))
+      val cl = c2.groupBy("w2").agg(count(lit(1)).as("n1pl"))
+      val nAll = c2.agg(count(lit(1)).as("n1pall"))
+      c2.join(cf, Seq("w1")).join(cl, Seq("w2"))
+        .crossJoin(broadcast(nAll))
+        .select(col("w1"), col("w2"),
+          expr(graft.queries.TextQueries.KnSurprisalSql).as("s_mb"))
+        .pinned
+    })
 
     /** The scored batch's (doc_id, w1, w2, w3, k) trigram counts — the
       * doc-side tokenize pass of the order-3 kernel. */
@@ -693,61 +657,40 @@ object NgramLm {
       * composed query launches this from a second driver thread so
       * the roll's jobs overlap independent work (guide §2.6) instead
       * of serializing in front of the scoring join. */
-    def prewarmKn3(): Unit = { kn3TypeScores; () }
+    def prewarmKn3(): Unit = { kn3TypeScores(); () }
 
     def scoreKneserNey3(docs: DataFrame, idCol: String,
         textCol: String): DataFrame =
       docTrigrams(docs, idCol, textCol)
-        .join(kn3TypeScores, Seq("w1", "w2", "w3"))
+        .join(kn3TypeScores(), Seq("w1", "w2", "w3"))
         .groupBy("doc_id")
         .agg(sum("k").as("n_trigrams"),
           expr("sum(k * s_mb) DIV sum(k)").as("kn3_surprisal_mb"))
 
-    /** KN order-3 scored type table — the [[bigramTypeScores]]
-      * generation-cache discipline (see [[knTypeScores]]). Added in
-      * r15: the per-call path re-read the stored trigram table once
-      * per marginal (4× model-state parquet scans per scoring call)
-      * plus the bigram table twice. ONE snapshot supplies both order
-      * tables (a concurrent publish between independent resolutions
-      * would otherwise interpolate across two versions). */
-    private var kn3ScoresCache: Option[(Long, DataFrame, Set[Int])] = None
-    private var kn3RetiredBlockIds: Set[Int] = Set.empty
-
-    private def kn3TypeScores: DataFrame = synchronized {
-      val snap = readSnap()
-      val v = snap.version.get
-      kn3ScoresCache match {
-        case Some((cv, df, _)) if cv == v => df
-        case stale =>
-          val sc = spark.sparkContext
-          sc.getPersistentRDDs
-            .filter { case (id, _) => kn3RetiredBlockIds(id) }
-            .values.foreach(_.unpersist(blocking = false))
-          kn3RetiredBlockIds = stale.map(_._3).getOrElse(Set.empty)
-          val c3 = trigramsOf(snap).withColumnRenamed("cnt", "c3")
-            .localCheckpoint(true)
-          val ctx = c3.groupBy("w1", "w2")
-            .agg(sum("c3").as("cctx"), count(lit(1)).as("n3r"))
-          val ml = c3.groupBy("w2", "w3").agg(count(lit(1)).as("n3l"))
-          val mid = c3.groupBy("w2")
-            .agg(count(lit(1)).as("n3mid"), countDistinct("w3").as("n3rt"))
-          val c2types = bigramsOf(snap).localCheckpoint(true)
-          val cl = c2types.groupBy("w2").agg(count(lit(1)).as("n1pl"))
-            .withColumnRenamed("w2", "w3")
-          val nAll = c2types.agg(count(lit(1)).as("n1pall"))
-          val scored = c3.join(ctx, Seq("w1", "w2"))
-            .join(ml, Seq("w2", "w3")).join(mid, Seq("w2"))
-            .join(cl, Seq("w3")).crossJoin(broadcast(nAll))
-            .select(col("w1"), col("w2"), col("w3"),
-              expr(graft.queries.TextQueries.Kn3SurprisalSql).as("s_mb"))
-            .localCheckpoint(true)
-          graft.ops.CheckpointIds.release(c3)
-          graft.ops.CheckpointIds.release(c2types)
-          kn3ScoresCache =
-            Some((v, scored, graft.ops.CheckpointIds.of(scored)))
-          scored
-      }
-    }
+    /** KN order-3 scored type table ([[TypeScores]]). Added in r15: the
+      * per-call path re-read the stored trigram table once per marginal
+      * (4× model-state parquet scans per scoring call) plus the bigram
+      * table twice. ONE snapshot supplies both order tables (a
+      * concurrent publish between independent resolutions would
+      * otherwise interpolate across two versions). */
+    private val kn3TypeScores = new TypeScores({ (snap, scope) =>
+      val c3 = scope.pin(trigramsOf(snap).withColumnRenamed("cnt", "c3"))
+      val ctx = c3.groupBy("w1", "w2")
+        .agg(sum("c3").as("cctx"), count(lit(1)).as("n3r"))
+      val ml = c3.groupBy("w2", "w3").agg(count(lit(1)).as("n3l"))
+      val mid = c3.groupBy("w2")
+        .agg(count(lit(1)).as("n3mid"), countDistinct("w3").as("n3rt"))
+      val c2types = scope.pin(bigramsOf(snap))
+      val cl = c2types.groupBy("w2").agg(count(lit(1)).as("n1pl"))
+        .withColumnRenamed("w2", "w3")
+      val nAll = c2types.agg(count(lit(1)).as("n1pall"))
+      c3.join(ctx, Seq("w1", "w2"))
+        .join(ml, Seq("w2", "w3")).join(mid, Seq("w2"))
+        .join(cl, Seq("w3")).crossJoin(broadcast(nAll))
+        .select(col("w1"), col("w2"), col("w3"),
+          expr(graft.queries.TextQueries.Kn3SurprisalSql).as("s_mb"))
+        .pinned
+    })
 
     /** The CCNet-style gate: keep docs at or below `maxMb` mean
       * surprisal (high-surprisal docs read as gibberish/OCR noise under
@@ -1043,12 +986,11 @@ object NgramLm {
       .groupBy("doc_id", "source", "term").agg(count(lit(1)).as("k"))
     // Vocabulary-sized left join of the two frozen count tables; it
     // feeds both the totals aggregate and the type scores and is
-    // RECOMPUTED per consumer (two model-state-sized parquet reads) —
-    // the [[Model.scoreKneserNey]] no-pinned-blocks rule. A per-call
-    // localCheckpoint here would leak its blocks until GC (the result
+    // RECOMPUTED per consumer (two model-state-sized parquet reads). A
+    // per-call pin here would leak its blocks until GC (the result
     // frame depends on it, so this path could never release it
     // deterministically); a standing per-trigger consumer should wire
-    // a [[Model.bigramTypeScores]]-style generation cache instead.
+    // a [[Model.TypeScores]]-style generation cache instead.
     val counts = general.vocab().withColumnRenamed("cnt", "c_all")
       .join(inDomain.vocab().withColumnRenamed("cnt", "c_in"),
         Seq("term"), "left_outer")

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.ops.Materialize.Pinning
+
 /** Iterative BPE tokenizer training (Sennrich et al. 2016) — the
   * tokenizer-induction step of a training-data pipeline, distributed
   * the way it actually scales: the corpus is read ONCE into the
@@ -72,12 +74,12 @@ object BpeTrainer {
   def train(wordFreq: DataFrame, nMerges: Int, minFreq: Long = 2L)
       : (Seq[Merge], DataFrame) = {
     // Each merge releases its predecessor by its own ids
-    // ([[CheckpointIds]]) once the successor has eagerly materialized — a
+    // ([[Materialize.release]]) once the successor has eagerly materialized — a
     // run holds ONE vocabulary-sized block set, not nMerges of them, and
     // never touches frames the caller or a concurrent thread persisted.
     var words = wordFreq.withColumn("syms", charSplit(col("w")))
       .select("w", "freq", "syms")
-      .localCheckpoint(true)
+      .pinned
     val merges = Seq.newBuilder[Merge]
     var step = 0
     var dry = false
@@ -97,8 +99,8 @@ object BpeTrainer {
           // the predecessor's blocks are no longer needed once it returns.
           val next = words
             .withColumn("syms", mergeAdjacent(col("syms"), l, r))
-            .localCheckpoint(true)
-          CheckpointIds.release(words)
+            .pinned
+          Materialize.release(words)
           words = next
           step += 1
       }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.ops.Materialize.Pinning
+
 /** Two-phase distributed prefix sums — the scale-safe replacement for
   * running aggregates windowed over a LOW-cardinality partition key
   * (`Window.partitionBy(source)` when there are 3 sources funnels the
@@ -69,11 +71,10 @@ object PrefixOps {
     // sf0.001 without this). The checkpoint pins one physical
     // partitioning; both consumers read the materialized blocks. This is
     // the honest cost of a two-pass prefix scan — one write of the
-    // shuffled stream — and the same localCheckpoint swap-point
-    // convention as the curation verdict frame (see PLANS.md).
+    // shuffled stream.
     val parted = df.repartitionByRange(parts, keys: _*)
       .withColumn(PidCol, spark_partition_id())
-      .localCheckpoint(true)
+      .pinned
     val subAggs = sums.map { case (n, e) => sum(e).as(n + "_sub") }
     val subtotals = parted
       .groupBy((group :+ PidCol).map(col): _*)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.ops.Materialize.Pinning
 import graft.queries.Tables.{t, Q}
 
 /** Change-data-capture / incremental-maintenance operators.
@@ -204,7 +205,7 @@ object CdcQueries {
     val before = stateAt(s, dir, Cutoff).select(col("user_id"),
       col("event_type").as("b_type"), col("value_cents").as("b_cents"),
       col("ts").as("b_ts"), col("event_id").as("b_eid"))
-      .localCheckpoint(true)
+      .pinned
     val after = latestPerKey(changelog(s, dir)).where(col("op") === "U")
       .select(col("user_id"), col("event_type").as("a_type"),
         col("value_cents").as("a_cents"), col("ts").as("a_ts"),
@@ -219,7 +220,7 @@ object CdcQueries {
     val changed = before.join(after, Seq("user_id"), "full_outer")
       .where(col("b_ts").isNull || col("a_ts").isNull ||
         struct(col("b_ts"), col("b_eid")) =!= struct(col("a_ts"), col("a_eid")))
-      .localCheckpoint(true)
+      .pinned
     val contributions =
       changed.where(col("b_ts").isNotNull)
         .select(col("b_type").as("event_type"),

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.ops.Materialize.Pinning
 import graft.queries.Tables.{t, Q}
 
 /** The end-to-end corpus-curation pipeline as ONE declarative plan —
@@ -142,7 +143,7 @@ object CurationQueries {
     val hm = labels
       .where(col("ppl_bucket") =!= "tail")
       .select("doc_id", "ppl_bucket")
-      .localCheckpoint(true)
+      .pinned
     curatedSplitFrom(s, dir, restrictTo = Some(hm.select("doc_id")),
         verdicts = fVerdicts, candidates = fCands)
       .join(hm, Seq("doc_id"))
@@ -322,7 +323,7 @@ object CurationQueries {
     val d = cum.crossJoin(broadcast(tot))
       .withColumn("d", expr(
         "abs(CAST(r AS DECIMAL(38,0)) * t_cur - CAST(c AS DECIMAL(38,0)) * t_ref)"))
-      .localCheckpoint(true) // max pass + argmax pass read it
+      .pinned // max pass + argmax pass read it
     val maxd = d.agg(max("d").as("maxd"))
     d.join(broadcast(maxd), col("d") === col("maxd"))
       .agg(max("t_ref").as("t_ref"), max("t_cur").as("t_cur"),
@@ -574,7 +575,7 @@ object CurationQueries {
     // group exactly as the old isNotNull pre-filter did.
     val caggAll = childKeys
       .groupBy("eid", "k").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(true) // classify join + totals read one pass
+      .pinned // classify join + totals read one pass
     val cagg = caggAll.where(col("k").isNotNull)
     val p = parentKeys.distinct().withColumn("inp", lit(1L))
     val classified = cagg.join(p, Seq("eid", "k"), "full_outer")

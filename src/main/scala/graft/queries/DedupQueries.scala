@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.ops.{TextOps, TokenOps}
+import graft.ops.{Materialize, TextOps, TokenOps}
+import graft.ops.Materialize.Pinning
 import graft.queries.Tables.{t, Q}
 
 /** Deduplication operators for a training-data pipeline (builder brief +
@@ -218,7 +219,7 @@ object DedupQueries {
     // upstream defeats exchange reuse). The fanout before the checkpoint
     // undoes AQE's coalescing of the signature aggregate's tiny shuffle —
     // without it the checkpoint pins the pair join to ~1 partition.
-    val bands = Tables.fanout(bandsRaw).localCheckpoint(true)
+    val bands = Tables.fanout(bandsRaw).pinned
     bands.as("x").join(bands.as("y"),
         col("x.b") === col("y.b") && col("x.bkey") === col("y.bkey") &&
           col("x.doc_id") < col("y.doc_id"))
@@ -321,8 +322,7 @@ object DedupQueries {
   private[queries] def connectedComponentsWithIters(
       s: SparkSession, pairs: DataFrame): (DataFrame, Int) = {
     val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    var edges: DataFrame = null
-    try {
+    try Materialize.scoped { scope =>
       // Loop sizing: edges ≈ 2×pairs rows, tiny per-row payload. 1/8 of
       // defaultParallelism keeps iterations at a few tasks on local[32]
       // (the round-1 measured sweet spot) and still spreads a
@@ -332,8 +332,8 @@ object DedupQueries {
       val t0 = System.nanoTime()
       // The union references `pairs` twice; materialize the (possibly
       // expensive) candidate subtree once before mirroring it.
-      val p = pairs.localCheckpoint(true)
-      edges = spreadEdges(p, loopParts).persist()
+      val p = pairs.pinned
+      val edges = scope.cached(spreadEdges(p, loopParts))
       // localCheckpoint (not persist): an iterative DataFrame loop grows
       // the logical plan each round — caching cuts re-EXECUTION but not
       // re-ANALYSIS, so planning time compounds. Checkpointing truncates
@@ -347,7 +347,7 @@ object DedupQueries {
       var labels = edges.groupBy(col("src").as("doc_id"))
         .agg(min(col("dst")).as("m"))
         .select(col("doc_id"),
-          least(col("doc_id"), col("m")).as("label")).localCheckpoint(true)
+          least(col("doc_id"), col("m")).as("label")).pinned
       // Self-loops (r16): with an (x, x) row per node, the propagate
       // step's "min(own label, min neighbor label)" is ONE join + ONE
       // aggregate — min over (neighbors ∪ self) — instead of the old
@@ -385,7 +385,7 @@ object DedupQueries {
             col("l1") === col("pid"))
           .select(col("doc_id"), least(col("l1"), col("l2")).as("label"),
             (least(col("l1"), col("l2")) =!= col("old_label")).as("chg"))
-          .localCheckpoint(false)
+          .pinnedLazily
         // LAZY checkpoint + count as the materializing action: the
         // convergence count's own job writes the blocks — one job per
         // iteration, same blocks, same lineage truncation.
@@ -398,10 +398,7 @@ object DedupQueries {
       // (dedup-apply, the curation pipeline) must not pay a global sort;
       // the components query orders its own output.
       (labels.select(col("doc_id"), col("label").as("component")), iter)
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      if (edges != null) edges.unpersist()
-    }
+    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
   }
 
   /** SimHash fingerprints — one definition for both simhash
@@ -444,7 +441,7 @@ object DedupQueries {
     val bands = Tables.fanout(fp.select(col("doc_id"), col("fpl"),
       posexplode(array(half(col("simhash"), 0), half(col("simhash"), 1)))
         .as(Seq("b", "bkey"))))
-      .localCheckpoint(true) // fingerprint agg computed once, not per join side
+      .pinned // fingerprint agg computed once, not per join side
     bands.as("x").join(bands.as("y"),
         col("x.b") === col("y.b") && col("x.bkey") === col("y.bkey") &&
           col("x.doc_id") < col("y.doc_id"))
@@ -619,7 +616,7 @@ object DedupQueries {
   private[queries] def jaccardPrefixCandidates(d: DataFrame, tBp: Int,
       dfreq: Option[DataFrame] = None): DataFrame = {
     // Checkpointed once: both sides of the candidate self-join read it.
-    val pfx = rankedTerms(d, dfreq).where(prefixLenFilter(tBp)).localCheckpoint(true)
+    val pfx = rankedTerms(d, dfreq).where(prefixLenFilter(tBp)).pinned
     pfx.select(col("doc_id").as("doc1"), col("lang"), col("n").as("na"),
         col("pos").as("pa"), col("h"))
       .join(pfx.select(col("doc_id").as("doc2"), col("lang"),
@@ -672,8 +669,8 @@ object DedupQueries {
     * scaling fixture ([[ngramJaccardZipfFrame]]), so the selector and
     * both branches are measured exactly as shipped. */
   private[graft] def ngramJaccardPairsOf(d0: DataFrame): DataFrame = {
-    val d = d0.localCheckpoint(true)            // one set build, three readers
-    val dfreq = termDf(d).localCheckpoint(true) // selector + prefix ranking
+    val d = d0.pinned            // one set build, three readers
+    val dfreq = termDf(d).pinned // selector + prefix ranking
     if (prefixSelective(dfreq, d.count(), 10000 - JaccardBpThreshold))
       ngramJaccardPrefixRouted(d, dfreq)
     else ngramJaccardAllPairsFrame(d)
@@ -712,7 +709,7 @@ object DedupQueries {
   }
 
   private[queries] def ngramJaccardAllPairs(s: SparkSession, dir: String): DataFrame =
-    ngramJaccardAllPairsFrame(termSets(s, dir).localCheckpoint(true))
+    ngramJaccardAllPairsFrame(termSets(s, dir).pinned)
       .orderBy("doc1", "doc2")
 
   /** Prefix-filter EXACT set-similarity join (the AllPairs/PPJoin
@@ -763,7 +760,7 @@ object DedupQueries {
         Window.partitionBy("doc_id").orderBy(col("df").asc, col("h").asc)))
       .where(expr("pos <= n DIV 2 + 1"))
       .select("doc_id", "n", "h")
-      .localCheckpoint(true)
+      .pinned
     // Length filter inside the candidate join (also lossless): J ≥ 1/2
     // forces |∩| ≥ max(n1,n2)/2 and |∩| ≤ min(n1,n2), so sizes must be
     // within 2× of each other — a hub element (boilerplate shingle)
@@ -804,7 +801,7 @@ object DedupQueries {
           .groupBy("doc_id")
           .agg(array_sort(collect_set(col("h"))).as("tset"))
           .withColumn("n", size(col("tset"))))
-        .localCheckpoint(true))
+        .pinned)
 
   /** SHINGLE-space set frame (doc_id, lang, tset, n) — the Zipfian
     * element space (3-word shingles, df≈1 almost everywhere on real
@@ -852,7 +849,7 @@ object DedupQueries {
     * session-shared shingle frame. */
   private[graft] def zipfPrefixCandidateCount(s: SparkSession,
       dir: String): Long = {
-    val d = zipfShingleSets(s, dir).localCheckpoint(true)
+    val d = zipfShingleSets(s, dir).pinned
     // Explicit dfreq, exactly as the routed plan passes it — the
     // metric must count the SAME candidate generator the timed plan
     // ran, through the same input seam.
@@ -887,7 +884,7 @@ object DedupQueries {
     // Checkpointed once: both sides of the pairwise self-join read it.
     val sk = fps
       .groupBy("source").agg(sketchAgg(col("fp")).as("sk"))
-      .localCheckpoint(true)
+      .pinned
     sk.select(col("source").as("src_a"), col("sk").as("sk_a"))
       .join(sk.select(col("source").as("src_b"), col("sk").as("sk_b")),
         col("src_a") < col("src_b"))
@@ -977,7 +974,7 @@ object DedupQueries {
       .where(col("n_toks") >= MinSharedChunkToks)
       .groupBy("doc_id", "chunk_fp")
       .agg(max("n_toks").as("n_toks"))
-      .localCheckpoint(true)
+      .pinned
     ch.select(col("doc_id").as("doc1"), col("chunk_fp"), col("n_toks"))
       .join(ch.select(col("doc_id").as("doc2"), col("chunk_fp")), Seq("chunk_fp"))
       .where(col("doc1") < col("doc2"))
@@ -996,7 +993,7 @@ object DedupQueries {
     * it measures small. Emits the verified similarity (no threshold) —
     * the downstream filter is policy, the verify kernel is the operator. */
   private val lshJaccard: Q = (s, dir) => {
-    val d = termSets(s, dir).localCheckpoint(true) // attached to both pair ends
+    val d = termSets(s, dir).pinned // attached to both pair ends
     minhashCandidates(s, dir)
       .join(d.select(col("doc_id").as("doc1"), col("tset").as("t1"),
         col("n").as("n1")), Seq("doc1"))
@@ -1037,7 +1034,7 @@ object DedupQueries {
           |  i -> concat_ws(' ', element_at(toks, i), element_at(toks, i+1)))"""
           .stripMargin)).as("bg"))
       .groupBy("doc_id", "bg").agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
+      .pinned
     val tot = bg.groupBy("doc_id").agg(sum("tf").as("nb"))
     val pairs = minhashCandidates(s, dir)
     val overlap = pairs
@@ -1088,7 +1085,7 @@ object DedupQueries {
     // Checkpointed once: the prefix side is a filter over the same frame
     // the full side consumes, so one df-aggregate + one rank window feed
     // both join inputs.
-    val ranked = rankedTerms(d, dfreq).localCheckpoint(true)
+    val ranked = rankedTerms(d, dfreq).pinned
     ranked.where(prefixLenFilter(tBp))
       .select(col("doc_id").as("small"), col("lang"), col("n").as("ns"),
         col("pos").as("ps"), col("h"))
@@ -1125,8 +1122,8 @@ object DedupQueries {
     * filter, shared by the graded term-space query and the Zipfian
     * shingle-space fixture. */
   private[graft] def containmentPairsOf(d0: DataFrame): DataFrame = {
-    val d = d0.localCheckpoint(true)
-    val dfreq = termDf(d).localCheckpoint(true)
+    val d = d0.pinned
+    val dfreq = termDf(d).pinned
     if (prefixSelective(dfreq, d.count(), 10000 - ContainmentBpThreshold))
       containmentPrefixRouted(d, dfreq)
     else containmentAllPairsFrame(d)
@@ -1152,7 +1149,7 @@ object DedupQueries {
     * twin. */
   private[graft] def zipfContainmentCandidateCount(s: SparkSession,
       dir: String): Long = {
-    val d = zipfShingleSets(s, dir).localCheckpoint(true)
+    val d = zipfShingleSets(s, dir).pinned
     containmentPrefixCandidates(d, ContainmentBpThreshold,
       Some(termDf(d))).count()
   }
@@ -1187,7 +1184,7 @@ object DedupQueries {
   }
 
   private[queries] def containmentAllPairs(s: SparkSession, dir: String): DataFrame =
-    containmentAllPairsFrame(termSets(s, dir).localCheckpoint(true))
+    containmentAllPairsFrame(termSets(s, dir).pinned)
       .orderBy("doc1", "doc2")
 
   /** Sketch calibration — MinHash-ESTIMATED Jaccard (matching-signature
@@ -1208,7 +1205,7 @@ object DedupQueries {
     val matchSql = (1 to NumHashes)
       .map(i => s"CASE WHEN doc1_s$i = doc2_s$i THEN 1 ELSE 0 END")
       .mkString(" + ")
-    val d = termSets(s, dir).localCheckpoint(true)
+    val d = termSets(s, dir).pinned
     // Signatures and term sets attach to the LSH CANDIDATES only — the
     // estimator is never evaluated on an unblocked pair space.
     minhashCandidates(s, dir)
@@ -1247,14 +1244,14 @@ object DedupQueries {
   private[queries] def minhashSweepErrorBp(s: SparkSession, dir: String,
                                            numHashes: Int): Double = {
     require(numHashes >= NumHashes, s"sweep width $numHashes < default $NumHashes")
-    val sigs = minhashSigs(s, dir, numHashes).localCheckpoint(true)
+    val sigs = minhashSigs(s, dir, numHashes).pinned
     def side(role: String) = sigs.select(
       col("doc_id").as(role) +:
         (1 to numHashes).map(i => col(s"sig$i").as(s"${role}_s$i")): _*)
     val matchSql = (1 to numHashes)
       .map(i => s"CASE WHEN doc1_s$i = doc2_s$i THEN 1 ELSE 0 END")
       .mkString(" + ")
-    val d = shingleSets(s, dir).localCheckpoint(true)
+    val d = shingleSets(s, dir).pinned
     candidatesFromBands(minhashBandsOf(sigs, bandsFor(NumHashes, rows = 1)))
       .join(side("doc1"), Seq("doc1")).join(side("doc2"), Seq("doc2"))
       .withColumn("est_bp", expr(s"CAST(10000 * ($matchSql) DIV $numHashes AS BIGINT)"))
@@ -1286,7 +1283,7 @@ object DedupQueries {
     * per-vertex wedge fanout on hubs; id-orientation is the same join
     * shape.) */
   private val dedupTriangles: Q = (s, dir) => {
-    val e = minhashCandidates(s, dir).localCheckpoint(true)
+    val e = minhashCandidates(s, dir).pinned
     val tri = e.as("ab").join(e.as("bc"), col("ab.doc2") === col("bc.doc1"))
       .select(col("ab.doc1").as("a"), col("ab.doc2").as("b"),
         col("bc.doc2").as("c"))
@@ -1391,7 +1388,7 @@ object DedupQueries {
   private val decontaminate: Q = (s, dir) => {
     val sh = tokenized(s, dir)
       .select(col("doc_id"), explode(expr(shingleExpr)).as("shingle"))
-      .localCheckpoint(true) // eval (broadcast build) + train sides read it
+      .pinned // eval (broadcast build) + train sides read it
     val evalSh = sh.where(col("doc_id") % EvalModulus === 0)
       .select(col("doc_id").as("eval_doc"), col("shingle")).distinct()
     // No distinct on the train side: the final countDistinct dedups
@@ -1447,11 +1444,10 @@ object DedupQueries {
   private val dedupPagerank: Q = (s, dir) => {
     // Checkpointed: the mirror union below references the candidate
     // subtree twice (r16 — candidates run inline, no shared table).
-    val pairs = minhashCandidates(s, dir).localCheckpoint(true)
-    // Cluster-mode swap point: see "localCheckpoint swap point" in PLANS.md.
+    val pairs = minhashCandidates(s, dir).pinned
     val edges = pairs.select(col("doc1").as("src"), col("doc2").as("dst"))
       .union(pairs.select(col("doc2").as("src"), col("doc1").as("dst")))
-      .localCheckpoint(true)
+      .pinned
     val deg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
     val nodes = edges.select(col("src").as("doc_id")).distinct()
     val nn = broadcast(nodes.agg(count(lit(1)).as("n")))
@@ -1492,7 +1488,7 @@ object DedupQueries {
     val docShingles = tokenized(s, dir)
       .select(col("doc_id"), explode(expr(shingleExpr)).as("shingle"))
       .distinct()
-      .localCheckpoint(true) // feeds the df count AND the per-doc join side
+      .pinned // feeds the df count AND the per-doc join side
     val dfreq = docShingles.groupBy("shingle").agg(count(lit(1)).as("df"))
     docShingles.join(dfreq, Seq("shingle"))
       .groupBy("doc_id")

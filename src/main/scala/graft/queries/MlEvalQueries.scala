@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.ops.{PrefixOps, TextOps, TokenOps}
+import graft.ops.Materialize.Pinning
 import graft.queries.Tables.Q
 
 /** Distributed model-evaluation metrics — the eval harness a curation
@@ -173,7 +174,7 @@ object MlEvalQueries {
     // pass never reruns.
     val pvG = sc.groupBy("g", "score")
       .agg(sum("y").as("posg"), sum(expr("1L - y")).as("negg"))
-      .localCheckpoint(true)
+      .pinned
     val pvTot = pvG.groupBy("score")
       .agg(sum("posg").as("pos"), sum("negg").as("neg"))
     val compl = pvG.select("g").distinct()
@@ -495,7 +496,7 @@ object MlEvalQueries {
     // thread [guide §2.3/§2.6 — the q_w2_rfm restructure], and join the
     // rank columns back on the unique doc_id. Same total orders, same
     // rn values, same Spearman arithmetic.
-    val base = sc.localCheckpoint(true)
+    val base = sc.pinned
     val Seq(f1, f2) = {
       import scala.concurrent.Future
       import scala.concurrent.ExecutionContext.Implicits.global
@@ -583,7 +584,7 @@ object MlEvalQueries {
     // the tokenize pass would run three times.
     val rel = perQ.withColumn("rel",
       expr(relSql("tf", "fpos", "dl")).cast("int"))
-      .localCheckpoint(true)
+      .pinned
     val judged = rel.where(col("rel") > 0)
       .groupBy("qterm").agg(count(lit(1L)).as("n_judged"))
     def ranksOf(in: DataFrame, order: Seq[(String, Boolean)]): DataFrame = {

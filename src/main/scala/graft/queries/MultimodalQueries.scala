@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ops.MultimodalOps
 import graft.ops.MultimodalOps.MediaRecord
+import graft.ops.Materialize.Pinning
 import graft.queries.Tables.{t, Q}
 
 /** Multimodal plumbing in the declared inventory (builder brief): binary
@@ -199,7 +200,7 @@ object MultimodalQueries {
       .withColumn("n", length(col("pb")))
       .where(col("n") >= BlockBits)
       .select(col("id"), expr(blockSigSql("pb", "DIV")).as("sig"))
-      .localCheckpoint(true) // both pigeonhole self-join sides
+      .pinned // both pigeonhole self-join sides
     val quarters = sigs.select(col("id"), col("sig"),
       posexplode(array((0 until NQuarters).map(j =>
         expr(s"(sig >> ${QuarterBits * j}) & ${(1 << QuarterBits) - 1}")): _*))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.ops.Materialize.Pinning
 import graft.queries.Tables.{t, Q}
 
 /** The relational spine (SURVEY.md §2.1–§2.7): scans, filters,
@@ -642,7 +643,7 @@ object RelationalQueries {
       .select(expr("unix_timestamp(ts) DIV 86400").as("day"), col("user_id"))
       .groupBy("day")
       .agg(graft.functions.ThetaSketch.sketchAgg(col("user_id")).as("sk"))
-      .localCheckpoint(true)
+      .pinned
     val next = daily.select((col("day") - 1).as("day"), col("sk").as("sk_b"))
     import graft.functions.ThetaSketch.{aNotBCol, estimateCol, intersectionCol}
     daily.join(next, Seq("day"))
@@ -1205,7 +1206,7 @@ object RelationalQueries {
     val ref = agg.agg(max("last_s").as("ref_s"))
     val metrics = agg.crossJoin(broadcast(ref))
       .withColumn("recency_days", expr("(ref_s - last_s) DIV 86400"))
-      .localCheckpoint(true)
+      .pinned
     // The three rankings are INDEPENDENT range scans of the
     // checkpointed metrics frame. The old foldLeft chained them — each
     // range shuffle re-carried the previous rankings' columns and the

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
+import graft.ops.Materialize.Pinning
 import graft.queries.Tables.{t, Q}
 
 /** Deterministic sampling / split operators for a training-data pipeline
@@ -318,7 +319,7 @@ object SamplingQueries {
     * totals ride one O(1) aggregate through the scalar-broadcast
     * convention. Output is O(|grid|). */
   private val sampleProtoAblation: Q = (s, dir) => {
-    val ranked = protoRanked(s, dir, ProtoGridBp.max).localCheckpoint(true)
+    val ranked = protoRanked(s, dir, ProtoGridBp.max).pinned
     val tot = SimilarityQueries.sharedKmeansAssign(s, dir)
       .agg(count(lit(1)).as("n_total"), sum("d2_ppm").as("d2_total_ppm"))
     ProtoGridBp.map { bp =>
@@ -364,7 +365,7 @@ object SamplingQueries {
     // them). One materialization, three cheap reads.
     val surv = SimilarityQueries.sharedKmeansAssign(s, dir)
       .join(removed, Seq("vec_id"), "left_anti")
-      .localCheckpoint(true)
+      .pinned
     protoRankedOf(surv, ProtoKeepBp)
       .where(col("rnk") <= quotaExpr(ProtoKeepBp))
       .select(col("cid"), col("rnk"), col("vec_id"), col("d2_ppm"))
@@ -714,7 +715,7 @@ object SamplingQueries {
       .withColumn("b",
         expr(s"CAST((${hexBucketSql("term", 2)}) AS BIGINT)"))
       .groupBy("doc_id", "source", "b").agg(count(lit(1)).as("k"))
-      .localCheckpoint(true) // raw counts, target counts, doc scoring
+      .pinned // raw counts, target counts, doc scoring
     val inDom = tf.select(min("source").as("in_src"))
     val raw = tf.groupBy("b").agg(sum("k").as("kr"))
     val tgt = tf.crossJoin(broadcast(inDom))
@@ -722,7 +723,7 @@ object SamplingQueries {
       .groupBy("b").agg(sum("k").as("kt"))
     val counts = raw.join(tgt, Seq("b"), "left_outer")
       .select(col("b"), col("kr"), coalesce(col("kt"), lit(0L)).as("kt"))
-      .localCheckpoint(true) // totals aggregate + bucket weights
+      .pinned // totals aggregate + bucket weights
     val consts = counts.agg(sum("kr").as("tr"), sum("kt").as("tt"))
     val lw = counts.crossJoin(broadcast(consts))
       .select(col("b"), expr(
@@ -762,7 +763,7 @@ object SamplingQueries {
       .select(col("doc_id"), expr("n_chars DIV 4").as("tok"),
         expr("CAST(10000 * length(regexp_replace(text, '[^A-Za-z]', '')) DIV length(text) AS BIGINT)")
           .as("quality_bp"))
-      .localCheckpoint(true) // prefix pass + corpus total read it once
+      .pinned // prefix pass + corpus total read it once
     val total = base.agg(sum("tok").as("t_total"))
     val pref = graft.ops.PrefixOps.withPrefixOffsets(base, Nil,
       Seq(col("quality_bp").desc, col("doc_id").asc),
@@ -834,7 +835,7 @@ object SamplingQueries {
       // O(sources) rows, but its subtree is the full heldout scoring
       // chain — checkpoint so the min/total scalar folds below don't
       // re-execute it (r16: the per-doc scores run inline, on-clock).
-      .localCheckpoint(true)
+      .pinned
     val mn = perSrc.agg(min("mean_mb").as("min_mb"))
     val ex = perSrc.crossJoin(broadcast(mn))
       .withColumn("excess_mb", col("mean_mb") - col("min_mb"))
@@ -950,7 +951,7 @@ object SamplingQueries {
         s"(n_tok DIV 1000) * $EpochCapMilli +" +
           s" ((n_tok % 1000) * $EpochCapMilli) DIV 1000"))
       .select("source", "n_tok", "w_ppm", "b_tok", "cap_tok")
-      .localCheckpoint(true) // O(sources); feeds the fill and the zero arm
+      .pinned // O(sources); feeds the fill and the zero arm
     val wt = w.where(col("w_ppm") > 0)
       .agg(sum("w_ppm").as("w_tot"))
     val ordPrev = org.apache.spark.sql.expressions.Window

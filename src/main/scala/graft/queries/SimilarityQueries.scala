@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.ops.Materialize.Pinning
 import graft.sim.{PqIvfIndex, Similarity}
 import graft.queries.Tables.{t, Q}
 
@@ -710,7 +711,7 @@ object SimilarityQueries {
          |  si -> transform(slice(embedding, si * $PqDsub + 1, $PqDsub),
          |    x -> CAST(x AS DOUBLE)))""".stripMargin))
       .as(Seq("s", "subvec")))
-      .localCheckpoint(true)
+      .pinned
     val cand = sub.where(col("vec_id") >= NumQueries)
     // Centroid mean via an ORDER-PINNED fold (the q_sim_hof_math
     // discipline), not a distributed avg(): a parallel FP reduction's
@@ -791,7 +792,7 @@ object SimilarityQueries {
     // consume the corpus subvector explode — unshared it runs twice (r15).
     val corpusSubs = PqIvfIndex
       .subvectors(corpus, "vec_id", "embedding", PqM, PqDsub)
-      .localCheckpoint(true)
+      .pinned
     val pqCb = PqIvfIndex.pqCodebook(corpusSubs, PqK)
     val cells = PqIvfIndex.coarseRank(corpus, "vec_id", "embedding", coarse)
       .where(col("rnk") === 1).select(col("id"), col("cell"))
@@ -926,7 +927,7 @@ object SimilarityQueries {
       .where(col("vec_id") >= NumQueries)
       .select(col("vec_id"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-      .localCheckpoint(true) // read by every assignment + update pass
+      .pinned // read by every assignment + update pass
     // Deterministic seeds; the rank window runs on K rows by definition.
     val init = base.orderBy("vec_id").limit(k)
       .withColumn("cid",
@@ -1031,7 +1032,7 @@ object SimilarityQueries {
     val e = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
     // One checkpointed (vec, cluster, embedding) frame feeds both ends
     // of the within-cluster join.
-    val m = Tables.fanout(assign.join(e, Seq("vec_id"))).localCheckpoint(true)
+    val m = Tables.fanout(assign.join(e, Seq("vec_id"))).pinned
     val pairs = m.as("x").join(m.as("y"),
         col("x.cid") === col("y.cid") && col("x.vec_id") < col("y.vec_id"))
       .select(col("y.vec_id").as("v"), col("x.vec_id").as("u"),
@@ -1222,7 +1223,7 @@ object SimilarityQueries {
     def topk(scored: DataFrame) =
       graft.plans.GraftOps.topKPerKey(scored, Seq("qid"),
         Seq("cos" -> false, "cid" -> true), LshTopK)
-    val joined = c.join(broadcast(q)).localCheckpoint(true) // both rankings
+    val joined = c.join(broadcast(q)).pinned // both rankings
     val truth = topk(joined.select(col("qid"), col("cid"),
         Similarity.cosine(col("qe"), col("ce")).as("cos")))
       .select("qid", "cid")
@@ -1382,7 +1383,7 @@ object SimilarityQueries {
       .join(TextQueries.langPredictedFrame(s, dir),
         col("vec_id") === col("doc_id"))
       .select("vec_id", "embedding", "predicted")
-      .localCheckpoint(true)
+      .pinned
     (emb.where(col("predicted") === "en").select("vec_id", "embedding"),
       emb.where(col("predicted") === "fr").select("vec_id", "embedding"))
   }
@@ -1418,7 +1419,7 @@ object SimilarityQueries {
       .withColumn("tie",
         when(col("d") === 0, col("bid")).otherwise(col("aid")))
     val tk = graft.plans.GraftOps.topKPerKey(tagged, Seq("d", "kid"),
-      Seq("cp" -> false, "tie" -> true), BitextK).localCheckpoint(true)
+      Seq("cp" -> false, "tie" -> true), BitextK).pinned
     val ta = tk.where(col("d") === 0).select("aid", "bid", "cp")
     val tb = tk.where(col("d") === 1).select("aid", "bid", "cp")
     val aagg = ta.groupBy("aid")
@@ -1431,7 +1432,7 @@ object SimilarityQueries {
       .select(col("aid"), col("bid"),
         expr("CAST((cp * 2 * ka * kb * 1000) DIV (asum * kb + bsum * ka) AS BIGINT)")
           .as("margin_ppk"))
-      .localCheckpoint(true) // feeds both argmax windows + the join
+      .pinned // feeds both argmax windows + the join
     val fbest = mg.withColumn("r", row_number().over(
         Window.partitionBy("aid")
           .orderBy(col("margin_ppk").desc, col("bid").asc)))
@@ -1485,7 +1486,7 @@ object SimilarityQueries {
           Similarity.cosinePre(col("ae"), col("be"), col("an"), col("bn")))
           .cast("long").as("cp"))
       .where(col("cp") > 0)
-      .localCheckpoint(true) // one cosine pass feeds both directions
+      .pinned // one cosine pass feeds both directions
     marginPairs(scores, scores)
   }
 
@@ -1600,9 +1601,9 @@ object SimilarityQueries {
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.global
     val truthF = scala.concurrent.Future(bitextMinedFrameFrom(s, dir, sides)
-      .select("src_id", "tgt_id").localCheckpoint(true))
+      .select("src_id", "tgt_id").pinned)
     val servedF = scala.concurrent.Future(bitextServedFrameFrom(s, dir, sides)
-      .select("src_id", "tgt_id").localCheckpoint(true))
+      .select("src_id", "tgt_id").pinned)
     val inf = scala.concurrent.duration.Duration.Inf
     val truth = scala.concurrent.Await.result(truthF, inf)
     val served = scala.concurrent.Await.result(servedF, inf)
@@ -1641,7 +1642,7 @@ object SimilarityQueries {
     val docs = Tables.fanout(t(s, dir, "documents")).select(col("doc_id"),
       size(graft.ops.TokenOps.terms(col("text"))).cast("long").as("n_tok"),
       md5(graft.ops.TextOps.cleanText(col("text"))).as("fp"))
-      .localCheckpoint(true)
+      .pinned
     bitextMinedFrame(s, dir)
       .join(docs.select(col("doc_id").as("src_id"),
         col("n_tok").as("src_tok"), col("fp").as("src_fp")), Seq("src_id"))
@@ -1688,7 +1689,7 @@ object SimilarityQueries {
     }(scala.concurrent.ExecutionContext.global)
     val mined = bitextMinedFrame(s, dir)
       .select("src_id", "tgt_id", "margin_ppk")
-      .localCheckpoint(true) // feeds members, the cut, and the final joins
+      .pinned // feeds members, the cut, and the final joins
     val members = mined.select(col("src_id").as("doc_id"))
       .unionByName(mined.select(col("tgt_id").as("doc_id"))).distinct()
     val kn3 = scala.concurrent.Await
@@ -1697,7 +1698,7 @@ object SimilarityQueries {
         t(s, dir, "documents").join(members, Seq("doc_id"), "left_semi"),
         "doc_id", "text")
       .select(col("doc_id"), col("kn3_surprisal_mb"))
-      .localCheckpoint(true) // feeds the cut + both pair joins
+      .pinned // feeds the cut + both pair joins
     val srcScored = mined.select(col("src_id").as("doc_id")).distinct()
       .join(kn3, Seq("doc_id"))
     val wLoc = Window.partitionBy(col(graft.ops.PrefixOps.PidCol))

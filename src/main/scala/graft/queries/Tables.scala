@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, count, expr, lit}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
+import graft.ops.Materialize.Pinning
+
 /** Testdata table loader (TESTDATA.md). All graded queries take the
   * scale-factor directory as a parameter. */
 object Tables {
@@ -65,16 +67,14 @@ object Tables {
     * partitioner SAMPLES its child by executing it, then the sort
     * shuffle executes it again — a pure map subtree therefore runs
     * twice per orderBy (measured +75% wall on the clean-chain pass at
-    * sf0.1; r15). One eager localCheckpoint makes the sampling pass
-    * read materialized blocks instead. Same cluster-mode swap point as
-    * every other localCheckpoint in the graded paths (PLANS.md): on a
-    * real cluster use persist(MEMORY_AND_DISK_2) — materialize-before-
-    * global-sort is the standard trade of memory for a second compute
-    * pass (guide §3.3). Use ONLY when the child is expensive to
+    * sf0.1; r15). One eager pin makes the sampling pass read
+    * materialized blocks instead — materialize-before-global-sort is
+    * the standard trade of memory for a second compute pass (guide
+    * §3.3). Use ONLY when the child is expensive to
     * recompute and not already checkpoint-backed; for a tiny aggregate
     * output the extra materialization is pure overhead. */
   def orderedOnce(df: DataFrame, order: org.apache.spark.sql.Column*): DataFrame =
-    df.localCheckpoint(true).orderBy(order: _*)
+    df.pinned.orderBy(order: _*)
 
   /** ORDER-INDEPENDENT RESULT DIGEST — the graded emission of the
     * output-dense pair family (`q_dedup_ngram_jaccard`,

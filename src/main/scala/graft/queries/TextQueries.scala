@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.{ScoreOps, TextOps, TimeOps, TokenOps}
+import graft.ops.Materialize.Pinning
 import graft.queries.Tables.{t, Q}
 
 /** Text / time / scoring / envelope queries (SURVEY.md §2.8–§2.11 F*, D*,
@@ -214,7 +215,7 @@ object TextQueries {
     // consuming stage at bench scale (round-15 measurement) while buying
     // nothing — the expensive tokenize already ran at full width upstream.
     val tf = byDocTerm.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
+      .pinned
     val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val n = tf.select(countDistinct(col("doc_id")).as("n_docs"))
     val scored = tf.join(df, Seq("term")).crossJoin(broadcast(n))
@@ -245,7 +246,7 @@ object TextQueries {
     // round-robin shuffle of the token stream bought nothing (r15).
     val toks = docs(s, dir)
       .select(explode(TokenOps.terms(col("text"))).as("term"))
-      .localCheckpoint(true) // sketch + exact pass read the same frame once
+      .pinned // sketch + exact pass read the same frame once
     val cands = graft.ops.FrequentItems.candidates(
         toks.select("term").as(org.apache.spark.sql.Encoders.STRING), HhK)
       .toDF("term").distinct()
@@ -280,7 +281,7 @@ object TextQueries {
     val tf = docs(s, dir)
       .select(col("doc_id"), explode(TokenOps.terms(col("text"))).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
+      .pinned
     val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val n = tf.select(countDistinct(col("doc_id")).as("n_docs"))
     val w = tf.join(df, Seq("term")).crossJoin(broadcast(n))
@@ -291,7 +292,7 @@ object TextQueries {
         w.select("doc_id", "term", "w"),
         keyCols = Seq("doc_id"),
         orderBy = Seq("w" -> false, "term" -> true), k = DocsimTopTerms)
-      .localCheckpoint(true)
+      .pinned
     topw.as("x").join(topw.as("y"),
         col("x.term") === col("y.term") && col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc1"), col("y.doc_id").as("doc2"),
@@ -319,7 +320,7 @@ object TextQueries {
     val tf = docs(s, dir)
       .select(col("doc_id"), explode(TokenOps.terms(col("text"))).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("k"))
-      .localCheckpoint(true)
+      .pinned
     val termCnt = tf.groupBy("term").agg(sum("k").as("cnt"))
     val total = tf.select(sum("k").as("t_total"))
     tf.join(termCnt, Seq("term")).crossJoin(broadcast(total))
@@ -392,7 +393,7 @@ object TextQueries {
     // rule — see tfidf's comment).
     heldoutOf(tagged.groupBy("doc_id", "split", "term")
       .agg(count(lit(1)).as("k"))
-      .localCheckpoint(true)) // train LM + val scoring read one pass
+      .pinned) // train LM + val scoring read one pass
   }
 
   private val heldoutPpl: Q = (s, dir) =>
@@ -574,7 +575,7 @@ object TextQueries {
       .select(col("doc_id"), col("source"),
         explode(TokenOps.terms(col("text"))).as("term"))
       .groupBy("doc_id", "source", "term").agg(count(lit(1)).as("k"))
-      .localCheckpoint(true)
+      .pinned
     val inDom = tf.select(min("source").as("in_src"))
     val cAll = tf.groupBy("term").agg(sum("k").as("c_all"))
     val cIn = tf.crossJoin(broadcast(inDom))
@@ -585,7 +586,7 @@ object TextQueries {
     val counts = cAll.join(cIn, Seq("term"), "left_outer")
       .select(col("term"), col("c_all"),
         coalesce(col("c_in"), lit(0L)).as("c_in"))
-      .localCheckpoint(true)
+      .pinned
     val consts = counts.agg(sum("c_all").as("t_all"), sum("c_in").as("t_in"),
       count(lit(1)).as("v"))
     val typeScores = counts.crossJoin(broadcast(consts))
@@ -703,7 +704,7 @@ object TextQueries {
       .select(col("doc_id"), explode(expr(bigramsExpr)).as("b"))
       .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2"))
       .groupBy("doc_id", "w1", "w2").agg(count(lit(1)).as("k"))
-      .localCheckpoint(true)
+      .pinned
     val c2 = db.groupBy("w1", "w2").agg(sum("k").as("c2"))
     val cFirst = c2.groupBy("w1").agg(sum("c2").as("c1first"))
     val uni = db.groupBy(col("w2").as("w")).agg(sum("k").as("cuni"))
@@ -749,9 +750,9 @@ object TextQueries {
       .select(col("doc_id"), explode(expr(bigramsExpr)).as("b"))
       .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2"))
       .groupBy("doc_id", "w1", "w2").agg(count(lit(1)).as("k"))
-      .localCheckpoint(true)
+      .pinned
     val c2 = db.groupBy("w1", "w2").agg(sum("k").as("c2"))
-      .localCheckpoint(true) // feeds three marginals + the type join
+      .pinned // feeds three marginals + the type join
     val cf = c2.groupBy("w1")
       .agg(sum("c2").as("c1first"), count(lit(1)).as("n1pr"))
     val cl = c2.groupBy("w2").agg(count(lit(1)).as("n1pl"))
@@ -834,15 +835,15 @@ object TextQueries {
     // token arrays bought nothing (r15).
     val base = docs(s, dir).withColumn("toks", TokenOps.terms(col("text")))
       .select("doc_id", "toks")
-      .localCheckpoint(true) // one tokenize pass feeds both orders
+      .pinned // one tokenize pass feeds both orders
     val dt = base.where(size(col("toks")) >= 3)
       .select(col("doc_id"), explode(expr(trigramsExpr)).as("g"))
       .select(col("doc_id"), col("g.w1").as("w1"), col("g.w2").as("w2"),
         col("g.w3").as("w3"))
       .groupBy("doc_id", "w1", "w2", "w3").agg(count(lit(1)).as("k"))
-      .localCheckpoint(true)
+      .pinned
     val c3 = dt.groupBy("w1", "w2", "w3").agg(sum("k").as("c3"))
-      .localCheckpoint(true) // feeds four marginals + the type join
+      .pinned // feeds four marginals + the type join
     val ctx = c3.groupBy("w1", "w2")
       .agg(sum("c3").as("cctx"), count(lit(1)).as("n3r"))
     val ml = c3.groupBy("w2", "w3").agg(count(lit(1)).as("n3l"))
@@ -1229,7 +1230,7 @@ object TextQueries {
     val dfreq = sel.groupBy("wmin").agg(count(lit(1)).as("df"))
     val pruned = sel.join(dfreq.where(col("df") <= WinnowPairHubDf), Seq("wmin"))
       .select("doc_id", "wmin")
-      .localCheckpoint(true)
+      .pinned
     pruned.as("x").join(pruned.as("y"),
         col("x.wmin") === col("y.wmin") && col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc1"), col("y.doc_id").as("doc2"))
@@ -1241,7 +1242,7 @@ object TextQueries {
       minShared: Int = WinnowPairMinShared): org.apache.spark.sql.DataFrame =
     pairsFromSel(
       winnowSelected(d).select(col("doc_id"), col("wmin")).distinct()
-        .localCheckpoint(true), // df stats + both self-join sides, once
+        .pinned, // df stats + both self-join sides, once
       minShared)
 
   /** The pair index off the session-shared store (no gram pass). */
@@ -1312,7 +1313,7 @@ object TextQueries {
   private[graft] def spanFrame(d: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame =
     // Checkpointed once: both gram-attach joins read the same stream.
-    spansFromParts(gramFrame(d).localCheckpoint(true),
+    spansFromParts(gramFrame(d).pinned,
       winnowPairFrame(d, minShared = 1).select("doc1", "doc2"))
 
   /** The span build off the session-shared store: grams AND candidates
@@ -1458,7 +1459,7 @@ object TextQueries {
       .withColumn("toks", TokenOps.terms(col("text")))
       .select(col("doc_id") +: size(col("toks")).cast("long").as("dl") +: tfCols: _*)
       .where(col("dl") > 0)
-      .localCheckpoint(true) // stats row + scoring read the same narrow frame
+      .pinned // stats row + scoring read the same narrow frame
     val statAggs =
       sum("dl").as("dl_sum") +:
         Bm25Terms.indices.map(i =>
@@ -1597,7 +1598,7 @@ object TextQueries {
     val tf = docs(s, dir)
       .select(col("source"), explode(TokenOps.terms(col("text"))).as("term"))
       .groupBy("source", "term").agg(count(lit(1)).as("k"))
-      .localCheckpoint(true) // term totals, source totals, corpus total, join
+      .pinned // term totals, source totals, corpus total, join
     val byTerm = tf.groupBy("term").agg(sum("k").as("ck"))
     val bySrc = tf.groupBy("source").agg(sum("k").as("tsrc"))
     val total = tf.agg(sum("k").as("ct"))
@@ -1672,7 +1673,7 @@ object TextQueries {
     // heavy token subtrees (the measured 65 s trap, r14), and (b) the
     // pipelines reference the frame more than once. Cluster swap:
     // persist(MEMORY_AND_DISK_2) (PLANS.md).
-    filterVerdictsInline(s, dir).localCheckpoint(true)
+    filterVerdictsInline(s, dir).pinned
 
   private def filterVerdictsInline(s: org.apache.spark.sql.SparkSession,
                                       dir: String): org.apache.spark.sql.DataFrame =

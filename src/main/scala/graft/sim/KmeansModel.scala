@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.ops.SegmentStore
+import graft.ops.{Materialize, SegmentStore}
 
 /** Persisted K-MEANS model — the build-once / assign-many form of the
   * inline deterministic Lloyd in
@@ -110,13 +110,11 @@ final class KmeansModel(spark: SparkSession, val modelDir: String)
   def fit(emb: DataFrame, idCol: String, vecCol: String, k: Int,
       rounds: Int = 2): Long = {
     val s = store.state() // the basedOn CAS anchor
-    // One materialization serves every assignment + update pass;
-    // RELEASED by precise ids ([[graft.ops.CheckpointIds]]) — the old
-    // getPersistentRDDs before/after diff could claim (and permanently
-    // break) a concurrent thread's lineage-truncated checkpoint.
-    val base = emb.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .localCheckpoint(true)
-    try {
+    // One materialization serves every assignment + update pass; the
+    // model is on disk when the scope releases it, and nothing returned
+    // references it.
+    Materialize.scoped { scope =>
+      val base = scope.pin(emb.select(col(idCol).as("id"), col(vecCol).as("v")))
       val cents = lloydCentroids(base, k, rounds)
       val cb = SegmentStore.fresh("cb")
       store.writing("codebooks", cb) { cbPath =>
@@ -126,9 +124,7 @@ final class KmeansModel(spark: SparkSession, val modelDir: String)
         store.fold(s.copy(heads = Seq(cb)))(
           writeAssignments(base, spark.read.parquet(cbPath)))
       }
-    } finally
-      // The model is on disk; nothing returned references base.
-      graft.ops.CheckpointIds.release(base)
+    }
   }
 
   /** Maintenance refit — a fresh Lloyd run published as a new version. */

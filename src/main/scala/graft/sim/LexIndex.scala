@@ -3,7 +3,7 @@ package graft.sim
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ops.SegmentStore
+import graft.ops.{Materialize, SegmentStore}
 
 /** Persisted LEXICAL (BM25) index — the build-once / query-many twin of
   * [[IvfIndex]] on the sparse-retrieval side, with Lucene's SEGMENT
@@ -80,9 +80,9 @@ final class LexIndex(spark: SparkSession, val indexDir: String)
     * per erasure request would accumulate for the driver's lifetime, the
     * stores-own-release contract [[graft.gov.ForgetPipeline]] relies
     * on). */
-  private def writeFromPostings(postings: DataFrame, out: String): Unit = {
-    val posts = postings.localCheckpoint(true)
-    try {
+  private def writeFromPostings(postings: DataFrame, out: String): Unit =
+    Materialize.scoped { scope =>
+      val posts = scope.pin(postings)
       posts.write.mode(SaveMode.Overwrite).partitionBy("b")
         .parquet(s"$out/postings")
       posts.groupBy("term").agg(count(lit(1)).as("df"))
@@ -91,23 +91,21 @@ final class LexIndex(spark: SparkSession, val indexDir: String)
       posts.select("doc_id", "dl").distinct()
         .agg(count(lit(1)).as("n_docs"), sum("dl").as("dl_sum"))
         .write.mode(SaveMode.Overwrite).parquet(s"$out/meta")
-    } finally graft.ops.CheckpointIds.release(posts)
-  }
+    }
 
   /** Write one segment (postings + stats + meta) from a (id, text)
     * batch. Zero-term docs contribute no postings and are excluded from
     * n_docs and Σdl — exactly the inline query's `dl > 0` population, so
     * scores agree by construction. */
   private def writeTables(docs: DataFrame, idCol: String,
-      textCol: String)(out: String): Unit = {
+      textCol: String)(out: String): Unit =
     // One materialization feeds postings, dl, df, and meta; RELEASED
     // before returning (see writeFromPostings' release note).
-    val tf = graft.queries.Tables.fanout(docs)
-      .select(col(idCol).as("doc_id"),
-        explode(graft.ops.TokenOps.terms(col(textCol))).as("term"))
-      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
-    try {
+    Materialize.scoped { scope =>
+      val tf = scope.pin(graft.queries.Tables.fanout(docs)
+        .select(col(idCol).as("doc_id"),
+          explode(graft.ops.TokenOps.terms(col(textCol))).as("term"))
+        .groupBy("doc_id", "term").agg(count(lit(1)).as("tf")))
       val dl = tf.groupBy("doc_id").agg(sum("tf").as("dl"))
       tf.join(dl, Seq("doc_id"))
         .withColumn("b", expr(bucketSql("term")))
@@ -117,8 +115,7 @@ final class LexIndex(spark: SparkSession, val indexDir: String)
         .write.mode(SaveMode.Overwrite).parquet(s"$out/stats")
       dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("dl_sum"))
         .write.mode(SaveMode.Overwrite).parquet(s"$out/meta")
-    } finally graft.ops.CheckpointIds.release(tf)
-  }
+    }
 
   /** First build: one segment, manifest version 0 (or the next version
     * when rebuilding over an existing index — older manifests keep

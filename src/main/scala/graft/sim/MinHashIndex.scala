@@ -3,6 +3,7 @@ package graft.sim
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ops.Materialize.Pinning
 import graft.ops.SegmentStore
 
 /** Persisted MinHash-LSH index — the build-once / probe-many form of the
@@ -165,8 +166,8 @@ final class MinHashIndex(spark: SparkSession, val indexDir: String)
     // ONE store scan feeds both join sides (r16): the bucket-partitioned
     // band table reads as ~Buckets tiny splits (openCost-dominated), and
     // two aliased reads paid that scan twice — measured 2 × ~200 ms of
-    // pure split-scheduling at sf0.1. Cluster swap: persist (PLANS.md).
-    val b1 = store.readUnion(live, "bands").localCheckpoint(true)
+    // pure split-scheduling at sf0.1.
+    val b1 = store.readUnion(live, "bands").pinned
     val b2 = b1
     b1.as("x").join(b2.as("y"),
         col("x.b") === col("y.b") && col("x.bkey") === col("y.bkey") &&
@@ -196,7 +197,7 @@ final class MinHashIndex(spark: SparkSession, val indexDir: String)
     val deltaBands = graft.queries.DedupQueries
       .minhashBandsOf(deltaSigs)
       .withColumn("bucket", expr(bucketSql("b", "bkey")))
-      .localCheckpoint(true) // bucket list + join probe read it once
+      .pinned // bucket list + join probe read it once
     // The collected list is capped: today `bucket` is mod-[[Buckets]]
     // so ≤64 values come back, but the cap is the invariant the plan
     // rides on, not the constant — a deployment that widens the

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ops.Materialize
 import graft.sim.IvfIndex
 
 /** STREAMING bitext miner — the standing form of `q_sim_bitext_served`
@@ -100,10 +101,9 @@ final class BitextIngest(
     * dropped across the three surfaces. */
   def forget(victims: DataFrame,
       checkpointLocation: Option[String]): Long = {
-    // This call's pins (victim set + nn survivors) are released by
-    // their own ids on exit ([[graft.ops.CheckpointIds.scoped]]).
-    graft.ops.CheckpointIds.scoped { pin =>
-      val v = pin(victims.select(
+    // This call's pins (victim set + nn survivors) are released on exit.
+    Materialize.scoped { scope =>
+      val v = scope.pin(victims.select(
           col(victims.columns.head).cast("long").as("__vid")).distinct())
       val nn = ensureNeighborhood()
       val nVictims = nn.join(v, nn("tgt_id") === v("__vid"), "left_semi")
@@ -112,7 +112,7 @@ final class BitextIngest(
         // Overwrite is crash-safe here: a torn nn dir loses its
         // _SUCCESS marker and ensureNeighborhood recomputes from the
         // (already redacted) index — convergent, never torn-served.
-        val survivors = pin(nn
+        val survivors = scope.pin(nn
           .join(v, nn("tgt_id") === v("__vid"), "left_anti"))
         survivors.write.mode(SaveMode.Overwrite).parquet(nnDir)
       }
@@ -138,7 +138,8 @@ final class BitextIngest(
       .where(col("predicted") === srcLang)
       .select(col(idCol).as("id"),
         expr(s"transform($vecCol, x -> CAST(x AS DOUBLE))").as("__v"))
-    MicroBatchIngest.withReleasedCheckpoint(src) { pinned =>
+    Materialize.scoped { scope =>
+      val pinned = scope.pin(src)
       if (pinned.isEmpty) {
         // No partition is written for a source-free batch: dynamic
         // overwrite of a zero-row frame creates no directory (the
@@ -152,29 +153,25 @@ final class BitextIngest(
           .select(col("qid"), col("cid"),
             floor(lit(1000000) * col("cos")).cast("long").as("cp"))
           .where(col("cp") > 0)
-        val top = graft.plans.GraftOps.topKPerKey(scores, Seq("qid"),
-          Seq("cp" -> false, "cid" -> true), k)
-        MicroBatchIngest.withReleasedCheckpoint(top) { t =>
-          val aagg = t.groupBy("qid")
-            .agg(sum("cp").as("asum"), count(lit(1)).as("ka"))
-          val best = t.join(aagg, Seq("qid"))
-            .join(ensureNeighborhood(),
-              t("cid") === col("tgt_id"))
-            .select(col("qid"), col("cid"),
-              expr("CAST((cp * 2000 * ka) DIV (asum + ka * avg_nn_ppm) AS BIGINT)")
-                .as("margin_ppk"))
-            .withColumn("r", row_number().over(
-              org.apache.spark.sql.expressions.Window
-                .partitionBy("qid")
-                .orderBy(col("margin_ppk").desc, col("cid").asc)))
-            .where(col("r") === 1 && col("margin_ppk") >= marginMinPpk)
-            .select(col("qid").as("src_id"), col("cid").as("tgt_id"),
-              col("margin_ppk"))
-          MicroBatchIngest.withReleasedCheckpoint(best) { b =>
-            MicroBatchIngest.writeBatchPartition(b, outDir, batchId)
-            b.count()
-          }
-        }
+        val t = scope.pin(graft.plans.GraftOps.topKPerKey(scores, Seq("qid"),
+          Seq("cp" -> false, "cid" -> true), k))
+        val aagg = t.groupBy("qid")
+          .agg(sum("cp").as("asum"), count(lit(1)).as("ka"))
+        val b = scope.pin(t.join(aagg, Seq("qid"))
+          .join(ensureNeighborhood(),
+            t("cid") === col("tgt_id"))
+          .select(col("qid"), col("cid"),
+            expr("CAST((cp * 2000 * ka) DIV (asum + ka * avg_nn_ppm) AS BIGINT)")
+              .as("margin_ppk"))
+          .withColumn("r", row_number().over(
+            org.apache.spark.sql.expressions.Window
+              .partitionBy("qid")
+              .orderBy(col("margin_ppk").desc, col("cid").asc)))
+          .where(col("r") === 1 && col("margin_ppk") >= marginMinPpk)
+          .select(col("qid").as("src_id"), col("cid").as("tgt_id"),
+            col("margin_ppk")))
+        MicroBatchIngest.writeBatchPartition(b, outDir, batchId)
+        b.count()
       }
     }
   }

@@ -3,6 +3,7 @@ package graft.stream
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ops.Materialize
 import graft.sim.BqIndex
 
 /** Streaming BQ code-sidecar maintainer — the arriving-vectors case for
@@ -39,13 +40,13 @@ final class BqIngest(
   /** One micro-batch → one code segment. Returns rows appended. */
   override def processBatch(batch: DataFrame, batchId: Long): Long = {
     if (batch.isEmpty) return 0L
-    MicroBatchIngest.withReleasedCheckpoint(
-      batch.select(col(idCol).as("id"), col(vecCol).as("__v"))) {
-      prepared =>
-        val n = prepared.count()
-        if (n > 0)
-          index.appendAsBatch(prepared, "id", "__v", dim, batchId, streamId)
-        n
+    Materialize.scoped { scope =>
+      val prepared = scope.pin(
+        batch.select(col(idCol).as("id"), col(vecCol).as("__v")))
+      val n = prepared.count()
+      if (n > 0)
+        index.appendAsBatch(prepared, "id", "__v", dim, batchId, streamId)
+      n
     }
   }
 }

@@ -2,9 +2,9 @@ package graft.stream
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.ml.NgramLm
+import graft.ops.Materialize
 
 /** Streaming CCNet SCORING maintainer — the serving counterpart of
   * [[LmIngest]] (which GROWS the LM store; this one READS it frozen):
@@ -70,9 +70,9 @@ final class CcnetScoreIngest(
     if (batch.isEmpty) return 0L
     // One row per id via the shared content-keyed winner rule
     // ([[MicroBatchIngest.onePerId]]).
-    val docs = MicroBatchIngest.onePerId(batch, idCol, textCol)
-      .persist(StorageLevel.MEMORY_AND_DISK) // score join + output join
-    try {
+    Materialize.scoped { scope =>
+      val docs = scope.cached( // score join + output join
+        MicroBatchIngest.onePerId(batch, idCol, textCol))
       val scores = model.score(docs, idCol, textCol)
         .select(col("doc_id"), col("n_tokens"), col("n_oov"),
           col("heldout_mb"))
@@ -80,19 +80,16 @@ final class CcnetScoreIngest(
       // over the same scoring join — without the pin the batch would
       // tokenize and join TWICE per trigger (the QualityGateIngest
       // audit-frame discipline).
-      val scored = docs.withColumnRenamed(idCol, "doc_id")
+      val scored = scope.cached(docs.withColumnRenamed(idCol, "doc_id")
         .join(scores, Seq("doc_id"), "left_outer")
         .withColumn("ppl_bucket",
           when(col("heldout_mb").isNull, "tail")
             .when(col("heldout_mb") <= headMaxMb, "head")
             .when(col("heldout_mb") <= middleMaxMb, "middle")
-            .otherwise("tail"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        val n = scored.count()
-        MicroBatchIngest.writeBatchPartition(scored, scoredDir, batchId)
-        n
-      } finally { scored.unpersist(); () }
-    } finally { docs.unpersist(); () }
+            .otherwise("tail")))
+      val n = scored.count()
+      MicroBatchIngest.writeBatchPartition(scored, scoredDir, batchId)
+      n
+    }
   }
 }

@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ops.Materialize
+
 /** Streaming CDC apply — the streaming twin of `q_cdc_upsert`: maintain a
   * compacted one-row-per-key SNAPSHOT of a keyed changelog stream, so
   * downstream consumers read current state without ever replaying history
@@ -128,16 +130,16 @@ final class CdcIngest(
     }
     if (batch.isEmpty) return 0L
     val delta = compact(batch)
-    val merged = (snapshot() match {
-      case Some(base) => merge(base, delta)
-      case None       => delta
-    }).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Materialize.scoped { scope =>
+      val merged = scope.cached(snapshot() match {
+        case Some(base) => merge(base, delta)
+        case None       => delta
+      })
       val n = merged.count()
       merged.write.mode(SaveMode.Overwrite).parquet(s"$snapshotDir/v=$batchId")
       prune(batchId)
       n
-    } finally { merged.unpersist(); () }
+    }
   }
 
   /** Best-effort removal of versions older than the keep-window — the

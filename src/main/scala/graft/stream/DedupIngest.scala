@@ -2,9 +2,8 @@ package graft.stream
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
-import graft.ops.TextOps
+import graft.ops.{Materialize, TextOps}
 
 /** Streaming corpus ingestion with cross-batch exact dedup — the streaming
   * twin of `q_dedup_incremental` (batch) and the composition of S7/S10:
@@ -64,15 +63,15 @@ final class DedupIngest(
     val firstIds = fp.groupBy("fp").agg(min(col(idCol)).as(idCol))
     val inBatch = fp.join(firstIds, Seq("fp", idCol))
     // Cross-batch dedup: drop anything the corpus has ever seen.
-    val fresh = inBatch.join(seenFps(), Seq("fp"), "left_anti")
-      .persist(StorageLevel.MEMORY_AND_DISK) // read twice: corpus + index
-    try {
+    Materialize.scoped { scope =>
+      val fresh = scope.cached( // read twice: corpus + index
+        inBatch.join(seenFps(), Seq("fp"), "left_anti"))
       val n = fresh.count()
       if (n > 0) {
         MicroBatchIngest.writeBatchPartition(fresh.drop("fp"), corpusDir, batchId)
         MicroBatchIngest.writeBatchPartition(fresh.select("fp"), indexDir, batchId)
       }
       n
-    } finally { fresh.unpersist(); () }
+    }
   }
 }

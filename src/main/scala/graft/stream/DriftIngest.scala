@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
+import graft.ops.Materialize
+
 /** Streaming DRIFT MONITOR — the standing form of the batch
   * `q_report_drift`: every micro-batch folds its metric values into an
   * exact fixed-width histogram (O(bins) rows), the store accumulates one
@@ -62,9 +64,10 @@ final class DriftIngest(
     * batch's row count (0 rows ⇒ nothing written). */
   override def processBatch(batch: DataFrame, batchId: Long): Long = {
     // total + write read one materialization; blocks released per
-    // trigger (the shared withReleasedCheckpoint discipline — a standing
-    // monitor must not accumulate O(bins) block sets per trigger).
-    MicroBatchIngest.withReleasedCheckpoint(binned(batch)) { counts =>
+    // trigger (a standing monitor must not accumulate O(bins) block
+    // sets per trigger).
+    Materialize.scoped { scope =>
+      val counts = scope.pin(binned(batch))
       val n = counts.agg(coalesce(sum("c"), lit(0L))).head().getLong(0)
       if (n > 0)
         MicroBatchIngest.writeBatchPartition(counts, storeDir, batchId)

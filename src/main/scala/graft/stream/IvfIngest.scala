@@ -3,6 +3,7 @@ package graft.stream
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ops.Materialize
 import graft.sim.IvfIndex
 
 /** Streaming IVF-index maintainer — the arriving-vectors case of the
@@ -53,19 +54,17 @@ final class IvfIngest(
 
   /** One micro-batch → one postings segment. Returns rows appended.
     * Checkpointed once (count + append read one materialization) with
-    * the blocks released per trigger — the shared
-    * [[MicroBatchIngest.withReleasedCheckpoint]] discipline. */
+    * the blocks released per trigger. */
   override def processBatch(batch: DataFrame, batchId: Long): Long = {
     if (batch.isEmpty) return 0L
-    MicroBatchIngest.withReleasedCheckpoint(
-      batch.select(col(idCol).as("id"),
-        expr(s"transform($vecCol, x -> CAST(x AS DOUBLE))").as("__v"))) {
-      prepared =>
-        val n = prepared.count()
-        if (n > 0)
-          index.appendAsBatch(prepared, "id", "__v", batchId, servedCodebook,
-            streamId)
-        n
+    Materialize.scoped { scope =>
+      val prepared = scope.pin(batch.select(col(idCol).as("id"),
+        expr(s"transform($vecCol, x -> CAST(x AS DOUBLE))").as("__v")))
+      val n = prepared.count()
+      if (n > 0)
+        index.appendAsBatch(prepared, "id", "__v", batchId, servedCodebook,
+          streamId)
+      n
     }
   }
 }

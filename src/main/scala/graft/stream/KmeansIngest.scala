@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField, StructType}
 
+import graft.ops.Materialize
 import graft.sim.KmeansModel
 
 /** Streaming CLUSTER-ASSIGNMENT maintainer — the standing form of the
@@ -84,8 +85,9 @@ final class KmeansIngest(
       if (k <= flatAssignMaxK) model.assignAt(version, prepared, idCol, "__v")
       else model.assignApproxAt(version, prepared, idCol, "__v", probes)
     // count + write both read one materialization; blocks released per
-    // trigger (the shared withReleasedCheckpoint discipline).
-    MicroBatchIngest.withReleasedCheckpoint(assigned) { out =>
+    // trigger.
+    Materialize.scoped { scope =>
+      val out = scope.pin(assigned)
       val n = out.count()
       if (n > 0)
         MicroBatchIngest.writeBatchPartition(

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.ops.SegmentStore
+import graft.ops.{Materialize, SegmentStore}
 
 /** The shared shape of the streaming maintainers ([[DedupIngest]],
   * [[CdcIngest]], [[SketchIngest]]): a per-micro-batch `processBatch`
@@ -68,17 +68,6 @@ private[graft] object MicroBatchIngest {
       .dropDuplicates(idCol)
       .drop("__tfp")
   }
-
-  /** Run `f` over an eagerly-checkpointed copy of `df`, releasing the
-    * checkpoint's blocks afterward — the standing-maintainer storage
-    * discipline (a per-trigger checkpoint pins the batch so multiple
-    * consumers — count + write, screen + append — read ONE
-    * materialization; a standing stream must then release those blocks
-    * or accumulate one dead set per trigger) held in ONE place instead
-    * of re-implemented per maintainer: a fix to the release rule lands
-    * everywhere at once. */
-  def withReleasedCheckpoint[A](df: DataFrame)(f: DataFrame => A): A =
-    graft.ops.CheckpointIds.scoped(pin => f(pin(df)))
 
   /** Idempotent per-batch write: DYNAMIC overwrite of this batch's own
     * `batch_id=<id>` partition only — every other batch's output is
@@ -301,10 +290,9 @@ private[graft] object MicroBatchIngest {
       victims: DataFrame, idCol: String,
       checkpointLocation: Option[String]): Long = {
     // This call's pins (victim set + survivor frames) are released by
-    // their own ids on exit — never a persistent-RDD diff, which would
-    // also claim a concurrent thread's checkpoints.
-    graft.ops.CheckpointIds.scoped { pin =>
-      val v = pin(victims.select(
+    // their own ids on exit.
+    Materialize.scoped { scope =>
+      val v = scope.pin(victims.select(
           col(victims.columns.head).cast("long").as(idCol)).distinct())
       val fs = new Path(dir)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -334,7 +322,7 @@ private[graft] object MicroBatchIngest {
         if (hit.nonEmpty) {
           val affected = hit.keySet.toSeq
           // Pinned: the partition list and the write read it once.
-          val survivors = pin(r.where(col("batch_id").isin(affected: _*))
+          val survivors = scope.pin(r.where(col("batch_id").isin(affected: _*))
             .join(v, Seq(idCol), "left_anti"))
           val kept = survivors.select("batch_id").distinct()
             .collect().map(_.getLong(0)).toSet

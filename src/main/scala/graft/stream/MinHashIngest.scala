@@ -2,9 +2,8 @@ package graft.stream
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
-import graft.ops.TextOps
+import graft.ops.{Materialize, TextOps}
 import graft.sim.MinHashIndex
 
 /** Streaming corpus ingestion with cross-batch NEAR-dup screening — the
@@ -89,10 +88,9 @@ final class MinHashIngest(
 
     // ONE sketch pass per batch: these signatures feed the corpus
     // screen, the within-batch screen, AND the index append.
-    val sigs = graft.queries.DedupQueries.minhashSigsOf(
-        exactKept.select(col(idCol).as("doc_id"), col(textCol).as("text")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+    Materialize.scoped { scope =>
+      val sigs = scope.cached(graft.queries.DedupQueries.minhashSigsOf(
+        exactKept.select(col(idCol).as("doc_id"), col(textCol).as("text"))))
       // 2. Within-batch near-dup collapse FIRST (see class doc: the drop
       // set must be deterministic in the batch alone for replay
       // convergence): ALL exact-kept docs' band collisions form
@@ -114,7 +112,7 @@ final class MinHashIngest(
       // idempotence — see class doc). First batch: no index yet,
       // everything passes.
       val idx = index
-      val fresh = (
+      val fresh = scope.cached( // count + corpus + sig filter
         if (idx.currentVersion().isEmpty) reps
         else {
           val repSigs = sigs.join(
@@ -124,23 +122,20 @@ final class MinHashIngest(
             .select("doc_id").distinct()
           reps.join(hits, reps(idCol) === hits("doc_id"), "left_anti")
         })
-        .persist(StorageLevel.MEMORY_AND_DISK) // count + corpus + sig filter
-      try {
-        val n = fresh.count()
-        if (n > 0) {
-          // Corpus FIRST (the DedupIngest ordering): a crash before the
-          // index write replays into an identical recomputation; the
-          // reverse order could drop data on replay.
-          MicroBatchIngest.writeBatchPartition(fresh, corpusDir, batchId)
-          val freshSigs = sigs.join(
-            fresh.select(col(idCol).as("doc_id")), Seq("doc_id"), "left_semi")
-          // Shingle-free-only batches append nothing: an empty segment
-          // carries no state and would only churn manifests on replay.
-          if (!freshSigs.isEmpty)
-            idx.appendSigsAsBatch(freshSigs, batchId, streamId)
-        }
-        n
-      } finally { fresh.unpersist(); () }
-    } finally { sigs.unpersist(); () }
+      val n = fresh.count()
+      if (n > 0) {
+        // Corpus FIRST (the DedupIngest ordering): a crash before the
+        // index write replays into an identical recomputation; the
+        // reverse order could drop data on replay.
+        MicroBatchIngest.writeBatchPartition(fresh, corpusDir, batchId)
+        val freshSigs = sigs.join(
+          fresh.select(col(idCol).as("doc_id")), Seq("doc_id"), "left_semi")
+        // Shingle-free-only batches append nothing: an empty segment
+        // carries no state and would only churn manifests on replay.
+        if (!freshSigs.isEmpty)
+          idx.appendSigsAsBatch(freshSigs, batchId, streamId)
+      }
+      n
+    }
   }
 }

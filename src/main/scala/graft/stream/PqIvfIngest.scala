@@ -3,6 +3,7 @@ package graft.stream
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ops.Materialize
 import graft.sim.PqIvfIndex
 
 /** Streaming IVF-PQ maintainer — [[IvfIngest]]'s rules applied to the
@@ -42,15 +43,14 @@ final class PqIvfIngest(
   /** One micro-batch → one code segment. Returns rows appended. */
   override def processBatch(batch: DataFrame, batchId: Long): Long = {
     if (batch.isEmpty) return 0L
-    MicroBatchIngest.withReleasedCheckpoint(
-      batch.select(col(idCol).as("id"),
-        expr(s"transform($vecCol, x -> CAST(x AS DOUBLE))").as("__v"))) {
-      prepared =>
-        val n = prepared.count()
-        if (n > 0)
-          index.appendAsBatch(prepared, "id", "__v", batchId, servedCoarse,
-            streamId)
-        n
+    Materialize.scoped { scope =>
+      val prepared = scope.pin(batch.select(col(idCol).as("id"),
+        expr(s"transform($vecCol, x -> CAST(x AS DOUBLE))").as("__v")))
+      val n = prepared.count()
+      if (n > 0)
+        index.appendAsBatch(prepared, "id", "__v", batchId, servedCoarse,
+          streamId)
+      n
     }
   }
 }

@@ -2,9 +2,9 @@ package graft.stream
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.ml.NgramLm
+import graft.ops.Materialize
 
 /** Streaming perplexity gate — the CCNet deployment shape of
   * [[graft.ml.NgramLm]]: a reference LM is fitted ONCE (offline, on a
@@ -75,9 +75,8 @@ final class QualityGateIngest(
   /** One micro-batch: returns the number of surviving documents. */
   override def processBatch(batch: DataFrame, batchId: Long): Long = {
     if (batch.isEmpty) return 0L
-    val docs = onePerId(batch)
-      .persist(StorageLevel.MEMORY_AND_DISK) // audit join + survivor join
-    try {
+    Materialize.scoped { scope =>
+      val docs = scope.cached(onePerId(batch)) // audit join + survivor join
       val uniVerdicts = model.gate(docs, idCol, textCol, maxMb)
       // Order-2 leg (see class doc): AND the bigram threshold into the
       // decision; NULL bigram_mb (no scorable transitions) passes.
@@ -100,21 +99,18 @@ final class QualityGateIngest(
         col("heldout_mb") // null for token-free docs: no score exists
       ) ++ maxBigramMb.map(_ => col("bigram_mb")).toSeq :+
         coalesce(col("decision"), lit("drop")).as("decision")
-      val audit = docs.select(col(idCol).as("doc_id"))
+      val audit = scope.cached(docs.select(col(idCol).as("doc_id"))
         .join(verdicts, Seq("doc_id"), "left_outer")
-        .select(auditCols: _*)
-        .persist(StorageLevel.MEMORY_AND_DISK) // audit write + keep filter
-      try {
-        MicroBatchIngest.writeBatchPartition(audit, auditDir, batchId)
-        val keepIds = audit.where(col("decision") === "keep")
-          .select("doc_id")
-        val survivors = docs.join(keepIds,
-          docs(idCol) === keepIds("doc_id"), "left_semi")
-        val n = survivors.count()
-        if (n > 0)
-          MicroBatchIngest.writeBatchPartition(survivors, corpusDir, batchId)
-        n
-      } finally { audit.unpersist(); () }
-    } finally { docs.unpersist(); () }
+        .select(auditCols: _*)) // audit write + keep filter
+      MicroBatchIngest.writeBatchPartition(audit, auditDir, batchId)
+      val keepIds = audit.where(col("decision") === "keep")
+        .select("doc_id")
+      val survivors = docs.join(keepIds,
+        docs(idCol) === keepIds("doc_id"), "left_semi")
+      val n = survivors.count()
+      if (n > 0)
+        MicroBatchIngest.writeBatchPartition(survivors, corpusDir, batchId)
+      n
+    }
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
+import graft.ops.Materialize
 import graft.sim.KmeansModel
 
 /** Streaming SEMANTIC-DRIFT monitor — the embedding-space complement of
@@ -77,8 +78,9 @@ final class SemanticDriftIngest(
   override def processBatch(batch: DataFrame, batchId: Long): Long = {
     if (batch.isEmpty) return 0L
     // total + write read one materialization; blocks released per
-    // trigger (the shared withReleasedCheckpoint discipline).
-    MicroBatchIngest.withReleasedCheckpoint(occupancy(batch)) { counts =>
+    // trigger.
+    Materialize.scoped { scope =>
+      val counts = scope.pin(occupancy(batch))
       val n = counts.agg(coalesce(sum("c"), lit(0L))).head().getLong(0)
       if (n > 0)
         MicroBatchIngest.writeBatchPartition(counts, storeDir, batchId)

@@ -3,9 +3,10 @@ package graft.stream
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, DataType, LongType, StructField, StructType}
-import org.apache.spark.storage.StorageLevel
 
 import graft.functions.{FrequencySketch, QuantileSketch, ThetaSketch}
+import graft.ops.Materialize
+import graft.ops.Materialize.Pinning
 
 /** Streaming maintainer for the SLICE-SKETCH STORE — the piece that turns
   * the sketch family ([[graft.functions.ThetaSketch]] distinct/overlap,
@@ -70,20 +71,18 @@ final class SketchIngest(
     * persisted across its two uses (count + write) — without that the
     * full sketch aggregation would execute twice per trigger. An empty
     * batch aggregates to zero groups and writes nothing. */
-  override def processBatch(batch: DataFrame, batchId: Long): Long = {
-    val slices = batch.groupBy(col(sliceCol))
-      .agg(count(lit(1)).as("n_rows"),
-        ThetaSketch.sketchAgg(col(idCol), lgK).as("distinct_sk"),
-        QuantileSketch.sketchAgg(col(metricCol)).as("metric_sk"),
-        FrequencySketch.sketchAgg(col(idCol)).as("freq_sk"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+  override def processBatch(batch: DataFrame, batchId: Long): Long =
+    Materialize.scoped { scope =>
+      val slices = scope.cached(batch.groupBy(col(sliceCol))
+        .agg(count(lit(1)).as("n_rows"),
+          ThetaSketch.sketchAgg(col(idCol), lgK).as("distinct_sk"),
+          QuantileSketch.sketchAgg(col(metricCol)).as("metric_sk"),
+          FrequencySketch.sketchAgg(col(idCol)).as("freq_sk")))
       val n = slices.count()
       if (n > 0)
         MicroBatchIngest.writeBatchPartition(slices, storeDir, batchId)
       n
-    } finally { slices.unpersist(); () }
-  }
+    }
 
   /** The standing store (empty-schema'd before the first batch lands,
     * with `sliceType` keeping the pre- and post-data schemas identical).
@@ -133,8 +132,7 @@ final class SketchIngest(
     * base-data reads, the same economics as the theta overlap matrix. */
   def separability(): DataFrame = {
     // Checkpointed once: both sides of the pairwise self-join read it.
-    val r = rollup().select(col(sliceCol), col("metric_sk"))
-      .localCheckpoint(true)
+    val r = rollup().select(col(sliceCol), col("metric_sk")).pinned
     r.select(col(sliceCol).as("slice_a"), col("metric_sk").as("sk_a"))
       .join(r.select(col(sliceCol).as("slice_b"), col("metric_sk").as("sk_b")),
         col("slice_a") < col("slice_b"))

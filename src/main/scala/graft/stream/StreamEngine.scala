@@ -4,9 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.storage.StorageLevel
 
 import graft.ingest.JsonEnvelope
+import graft.ops.Materialize
 import graft.sink.{FallbackSink, Sink}
 
 /** S2/S7 + T1–T6: the Structured Streaming engine (SURVEY.md §2.13, §3.1).
@@ -72,14 +72,14 @@ final class StreamEngine(
     // P7 emptiness guard on the cached count (P8), so no job probes the
     // source first: an empty result — an empty source batch, or every row
     // dropped by the transform — reaches neither `onBatch` nor a sink.
-    val out = transform(batch).persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+    Materialize.scoped { scope =>
+      val out = scope.cached(transform(batch))
       val n = out.count()
       if (n > 0) {
         onBatch(batchId, n)
         sink.write(out)
       }
-    } finally out.unpersist()
+    }
     if (epochLedger.isDefined) {
       val (fs, p) = ledgerPath(batch.sparkSession, batchId)
       fs.mkdirs(p.getParent)

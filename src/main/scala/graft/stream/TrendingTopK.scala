@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.ops.Materialize.Pinning
 import graft.plans.GraftOps
 
 /** T5+/O2 streaming composition (absent in the reference, whose dashboard
@@ -66,7 +67,7 @@ final class TrendingTopK(
     val spark = updates0.sparkSession
     // Materialize BEFORE reading the store this write will replace — an
     // overwrite that still has a lazy scan of its own target corrupts it.
-    val updates = updates0.localCheckpoint(true)
+    val updates = updates0.pinned
     // Two-tier partition pruning without a data-sized driver transfer:
     //  - STATIC tier: the touched windows all fall inside the batch's
     //    [min ws, max ws] band (bounded by the watermark horizon, never
@@ -94,7 +95,7 @@ final class TrendingTopK(
       // Batch rows win (they hold the full running count); silver keys the
       // batch did not touch survive via the anti-join.
       existing.join(updates, Seq("ws", keyCol), "left_anti").unionByName(updates)
-    } else updates).localCheckpoint(true)
+    } else updates).pinned
     overwriteTouched(merged, silverDir)
     overwriteTouched(
       GraftOps.topKPerKey(merged, Seq("ws"), Seq("n" -> false, keyCol -> true), k),

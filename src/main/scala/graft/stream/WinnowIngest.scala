@@ -2,7 +2,8 @@ package graft.stream
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.ops.Materialize
 
 /** Streaming CONTAMINATION SCREEN — the winnowing fingerprint index
   * (`q_text_winnow`) as standing ingestion infrastructure: every
@@ -74,8 +75,8 @@ final class WinnowIngest(
     * documents flagged (n_shared > 0). */
   override def processBatch(batch: DataFrame, batchId: Long): Long = {
     if (batch.isEmpty) return 0L
-    val bf = fps(batch).persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+    Materialize.scoped { scope =>
+      val bf = scope.cached(fps(batch))
       // Self-exclusion: a replayed batch must screen against the
       // PRE-batch index even if its first delivery's index write landed.
       val standing = index().where(col("batch_id") =!= batchId)
@@ -84,22 +85,19 @@ final class WinnowIngest(
         .groupBy(idCol)
         .agg(countDistinct(col("wmin")).as("n_shared"),
           min(col("__src")).as("first_match_id"))
-      val flags = batch.select(col(idCol)).distinct()
+      val flags = scope.cached(batch.select(col(idCol)).distinct()
         .join(bf.groupBy(idCol).agg(countDistinct(col("wmin")).as("n_fps")),
           Seq(idCol), "left_outer")
         .join(matches, Seq(idCol), "left_outer")
         .select(col(idCol),
           coalesce(col("n_fps"), lit(0L)).as("n_fps"),
           coalesce(col("n_shared"), lit(0L)).as("n_shared"),
-          col("first_match_id"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        val n = flags.where(col("n_shared") > 0).count()
-        MicroBatchIngest.writeBatchPartition(flags, flagDir, batchId)
-        MicroBatchIngest.writeBatchPartition(bf, indexDir, batchId)
-        n
-      } finally { flags.unpersist(); () }
-    } finally { bf.unpersist(); () }
+          col("first_match_id")))
+      val n = flags.where(col("n_shared") > 0).count()
+      MicroBatchIngest.writeBatchPartition(flags, flagDir, batchId)
+      MicroBatchIngest.writeBatchPartition(bf, indexDir, batchId)
+      n
+    }
   }
 
   /** The standing flag log — one row per (document, delivering batch). */

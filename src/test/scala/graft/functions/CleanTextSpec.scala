@@ -78,10 +78,10 @@ class CleanTextSpec extends SparkSpec with GeneratedPath {
   }
 
   test("equals the regex chain on every document of the test corpus") {
-    val docs = graft.queries.Tables.t(spark, "/root/testdata/sf0.001", "documents")
-      .select($"text")
-    val diff = docs.where(!TextOps.cleanText($"text").eqNullSafe(regexChain(lower($"text"))))
-    assert(docs.count() > 0)
-    assert(diff.isEmpty, diff.limit(3).collect().mkString("\n"))
+    val texts = graft.queries.Tables.t(spark, "/root/testdata/sf0.001", "documents")
+      .select($"text").as[Option[String]].collect().toSeq
+    assert(texts.nonEmpty)
+    val bad = mismatches(texts, TextOps.cleanText, c => regexChain(lower(c)))
+    assert(bad.isEmpty, show(bad))
   }
 }

@@ -1,6 +1,8 @@
 package graft.functions
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, DoubleType, LongType, StructField, StructType}
 
 import graft.SparkSpec
 
@@ -8,7 +10,7 @@ import graft.SparkSpec
   * maxError = 0 ⇒ estimates ARE counts), the deterministic
   * `true ≤ est ≤ true + maxError` guarantee past capacity, additive
   * error through merge, and no-false-positive top-item extraction. */
-class FrequencySketchSpec extends SparkSpec {
+class FrequencySketchSpec extends SparkSpec with GeneratedPath {
 
   import spark.implicits._
 
@@ -103,5 +105,38 @@ class FrequencySketchSpec extends SparkSpec {
       .agg(FrequencySketch.sketchAgg(col("v")).as("sk"))
       .select(FrequencySketch.nCol(col("sk"))).as[Long].head()
     assert(r == 2L)
+  }
+
+  /** Aggregate-built sketches for the generated-path tests: under
+    * capacity (item i appears i+1 times, 100 items) and past it (item 1
+    * 5000 times beside 15000 distinct light items, so purges happen). */
+  private lazy val sketches: Seq[Array[Byte]] = Seq(
+    spark.range(100).select(
+      explode(expr("transform(sequence(0, CAST(id AS INT)), x -> id)")).as("v")),
+    spark.range(20000).select(when($"id" < 5000, lit(1L)).otherwise($"id").as("v"))
+  ).map(_.agg(FrequencySketch.sketchAgg(col("v"))).head().getAs[Array[Byte]](0))
+
+  private val sketchOnly = StructType(Seq(StructField("sk", BinaryType)))
+
+  test("freq_estimate: generated code equals interpreted eval, nulls included") {
+    val rows = (for (sk <- sketches :+ null; item <- Seq(0L, 1L, 99L, 12345L))
+      yield Row(sk, item)) :+ Row(sketches.head, null)
+    val out = generatedResults(rows,
+      StructType(Seq(StructField("sk", BinaryType), StructField("item", LongType))))(
+      es => FreqEstimate(es(0), es(1))).map(_._2)
+    assert(out.take(4) == Seq(1L, 2L, 100L, 0L))
+    assert(out.count(_ == null) == 5, "null in, null out")
+  }
+
+  test("freq_n: generated code equals interpreted eval, nulls included") {
+    val out = generatedResults((sketches :+ null).map(Row(_)), sketchOnly)(
+      es => FreqN(es.head)).map(_._2)
+    assert(out == Seq(5050L, 20000L, null))
+  }
+
+  test("freq_max_error: generated code equals interpreted eval, nulls included") {
+    val out = generatedResults((sketches :+ null).map(Row(_)), sketchOnly)(
+      es => FreqMaxError(es.head)).map(_._2)
+    assert(out.head == 0L && out(1).asInstanceOf[Long] > 0L && out(2) == null)
   }
 }

@@ -55,8 +55,8 @@ trait GeneratedPath { this: SparkSpec =>
   /** `kernel` over the columns of `rows`, through generated code, after
     * asserting that each result `equals` the interpreted eval of the same
     * kernel on literals of the same inputs (boxed, so NaN equals NaN and
-    * 0.0 differs from -0.0). One (input, result) pair per row, in input
-    * order. */
+    * 0.0 differs from -0.0; arrays such as sketch bytes by content). One
+    * (input, result) pair per row, in input order. */
   def generatedResults(rows: Seq[Row], schema: StructType)(
       kernel: Seq[Expression] => Expression): Seq[(Row, Any)] = withCodegenOnly {
     val in = schema.fieldNames.toSeq.map(n => ColumnShim.toExpression(col(n)))
@@ -68,7 +68,7 @@ trait GeneratedPath { this: SparkSpec =>
         Literal.create(row.get(i), f.dataType)
       })
       val interpreted = CatalystTypeConverters.convertToScala(e.eval(), e.dataType)
-      if (java.util.Objects.equals(g, interpreted)) None else Some((row, g, interpreted))
+      if (java.util.Objects.deepEquals(g, interpreted)) None else Some((row, g, interpreted))
     }
     assert(mismatches.isEmpty, s"generated != interpreted (input, generated, interpreted):\n" +
       mismatches.take(5).mkString("\n"))

@@ -1,6 +1,8 @@
 package graft.functions
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, DoubleType, LongType, StructField, StructType}
 
 import graft.SparkSpec
 
@@ -9,7 +11,7 @@ import graft.SparkSpec
   * error ≈1.65% at k = 200, asserted with a 3× guard band — plus the
   * invariants that hold exactly regardless of compaction: total weight
   * `kll_n`, exact extremes at rank 0/1, and null skipping. */
-class QuantileSketchSpec extends SparkSpec {
+class QuantileSketchSpec extends SparkSpec with GeneratedPath {
 
   import spark.implicits._
 
@@ -115,5 +117,52 @@ class QuantileSketchSpec extends SparkSpec {
       .select(col("g"), QuantileSketch.quantileCol(col("sk"), lit(0.5)).as("med"))
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(meds("a") < 1000.0 && meds("b") >= 10000.0, meds.toString)
+  }
+
+  /** Aggregate-built sketches for the generated-path tests: 0..999, the
+    * same shifted up by 300, and an empty sketch. */
+  private lazy val sketches: Seq[Array[Byte]] = Seq(
+    spark.range(1000).select($"id".cast("double").as("v")),
+    spark.range(1000).select(($"id" + 300).cast("double").as("v")),
+    Seq.empty[Option[Double]].toDF("v")
+  ).map(_.agg(QuantileSketch.sketchAgg(col("v"))).head().getAs[Array[Byte]](0))
+
+  private def sketchAnd(name: String) = StructType(Seq(
+    StructField("sk", BinaryType), StructField(name, DoubleType)))
+
+  test("kll_quantile: generated code equals interpreted eval, nulls included") {
+    val rows = (for (sk <- sketches :+ null; r <- Seq(0.0, 0.5, 1.0))
+      yield Row(sk, r)) :+ Row(sketches.head, null)
+    val out = generatedResults(rows, sketchAnd("rank"))(
+      es => KllQuantile(es(0), es(1))).map(_._2)
+    assert(out.head == 0.0 && out(2) == 999.0, "extremes are exact")
+    assert(out.slice(6, 9).forall(_.asInstanceOf[Double].isNaN), "empty sketch answers NaN")
+    assert(out.count(_ == null) == 4, "null in, null out")
+  }
+
+  test("kll_rank: generated code equals interpreted eval, nulls included") {
+    val rows = (for (sk <- sketches :+ null; v <- Seq(-1.0, 499.5, 2000.0))
+      yield Row(sk, v)) :+ Row(sketches.head, null)
+    val out = generatedResults(rows, sketchAnd("value"))(
+      es => KllRank(es(0), es(1))).map(_._2)
+    assert(out.head == 0.0 && out(2) == 1.0)
+    assert(out.count(_ == null) == 4, "null in, null out")
+  }
+
+  test("kll_n: generated code equals interpreted eval, nulls included") {
+    val out = generatedResults((sketches :+ null).map(Row(_)),
+      StructType(Seq(StructField("sk", BinaryType))))(es => KllN(es.head)).map(_._2)
+    assert(out == Seq(1000L, 1000L, 0L, null))
+  }
+
+  test("kll_auc: generated code equals interpreted eval, nulls included") {
+    val Seq(low, high, _) = sketches
+    val rows = Seq(Row(high, low), Row(low, high), Row(low, low),
+      Row(null, low), Row(low, null))
+    val out = generatedResults(rows, StructType(Seq(
+      StructField("pos", BinaryType), StructField("neg", BinaryType))))(
+      es => KllAuc(es(0), es(1))).map(_._2)
+    assert(out.head.asInstanceOf[Double] > 0.5 && out(1).asInstanceOf[Double] < 0.5)
+    assert(out.drop(3) == Seq(null, null), "null in, null out")
   }
 }

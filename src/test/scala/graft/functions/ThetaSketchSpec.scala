@@ -1,6 +1,8 @@
 package graft.functions
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, DoubleType, LongType, StructField, StructType}
 
 import graft.SparkSpec
 
@@ -11,7 +13,7 @@ import graft.SparkSpec
   * asserts the error bars, plus the algebraic properties the store
   * depends on (partitioning-invariance, union associativity through
   * rollup, set-op consistency). */
-class ThetaSketchSpec extends SparkSpec {
+class ThetaSketchSpec extends SparkSpec with GeneratedPath {
 
   import spark.implicits._
 
@@ -119,5 +121,50 @@ class ThetaSketchSpec extends SparkSpec {
       .agg(ThetaSketch.sketchAgg(col("v")).as("sk"))
       .select(ThetaSketch.estimateCol(col("sk"))).as[Long].head()
     assert(est == 2L)
+  }
+
+  /** Aggregate-built sketches for the generated-path tests: A = [0, 2000),
+    * B = [1000, 3000) and C = [2500, 2600) in exact mode, and
+    * [0, 20000) in estimation mode. */
+  private lazy val sketches: Seq[Array[Byte]] =
+    Seq((0L, 2000L), (1000L, 3000L), (2500L, 2600L), (0L, 20000L)).map {
+      case (lo, hi) =>
+        spark.range(lo, hi).agg(ThetaSketch.sketchAgg(col("id")))
+          .head().getAs[Array[Byte]](0)
+    }
+
+  private val sketchPair = StructType(Seq(
+    StructField("a", BinaryType), StructField("b", BinaryType)))
+
+  /** Every ordered pair of the sketches, then a null on either side. */
+  private lazy val pairs: Seq[Row] =
+    (for (a <- sketches; b <- sketches) yield Row(a, b)) ++
+      Seq(Row(null, sketches.head), Row(sketches.head, null))
+
+  /** Estimates of the set-op results, per pair. */
+  private def estimates(out: Seq[(Row, Any)]): Seq[Any] = out.map {
+    case (_, b: Array[Byte]) => ThetaSketch.estimate(b)
+    case (_, other) => other
+  }
+
+  test("theta_estimate: generated code equals interpreted eval, nulls included") {
+    val out = generatedResults((sketches :+ null).map(Row(_)),
+      StructType(Seq(StructField("sk", BinaryType))))(
+      es => ThetaEstimate(es.head)).map(_._2)
+    assert(out.take(3) == Seq(2000L, 2000L, 100L) && out(4) == null)
+  }
+
+  test("theta_intersection: generated code equals interpreted eval, nulls included") {
+    val est = estimates(generatedResults(pairs, sketchPair)(
+      es => ThetaIntersectionExpr(es(0), es(1))))
+    assert(est(1) == 1000L && est(2) == 0L && est(6) == 100L)
+    assert(est.takeRight(2) == Seq(null, null), "null in, null out")
+  }
+
+  test("theta_a_not_b: generated code equals interpreted eval, nulls included") {
+    val est = estimates(generatedResults(pairs, sketchPair)(
+      es => ThetaANotBExpr(es(0), es(1))))
+    assert(est(1) == 1000L && est(2) == 2000L && est(6) == 1900L)
+    assert(est.takeRight(2) == Seq(null, null), "null in, null out")
   }
 }

@@ -59,13 +59,13 @@ class CheckpointReleaseSpec extends SparkSpec {
       assert(df.agg(count(lit(1))).as[Long].head() == 100L,
         "a concurrent thread's checkpoint was released")
     }
-    val foreignIds = foreign.asScala.flatMap(CheckpointIds.of).toSet
+    val foreignIds = foreign.asScala.flatMap(Materialize.of).toSet
     // The returned BPE frame is the only pin a caller may inherit.
     val leftover = sc.getPersistentRDDs.keySet.toSet -- before --
-      foreignIds -- CheckpointIds.of(words)
+      foreignIds -- Materialize.of(words)
     assert(leftover.isEmpty, s"blocks left behind: $leftover")
     assert(spark.read.parquet(dir).select("id").as[Long].collect().toSet ==
       Set(2L, 11L, 22L))
-    (foreign.asScala.toSeq :+ words).foreach(CheckpointIds.release)
+    (foreign.asScala.toSeq :+ words).foreach(Materialize.release)
   }
 }
