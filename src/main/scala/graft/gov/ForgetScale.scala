@@ -74,29 +74,12 @@ object ForgetScale {
     * frames already returned to callers keep reading it across the
     * rebuild (spec-pinned). The fixture pins nothing else (lastFrame
     * is a parquet read), so store disk is the only state to reclaim. */
-  private def vacuumFixture(fx: Fixture): Unit = {
-    def parent(storeDir: String): java.nio.file.Path =
-      java.nio.file.Paths.get(storeDir).getParent
+  private def vacuumFixture(fx: Fixture): Unit =
     Seq(fx.ivf.indexDir, fx.pq.indexDir, fx.mh.indexDir,
         fx.lex.indexDir, fx.km.modelDir, fx.bq.indexDir, fx.lmDir,
         fx.batchStoreDir)
-      .map(parent).distinct.foreach { p =>
-        try {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(p).iterator().asScala.toSeq
-            .sortBy(-_.getNameCount)
-            .foreach(java.nio.file.Files.deleteIfExists(_))
-        } catch {
-          // Files.walk surfaces mid-traversal errors as
-          // UncheckedIOException (a RuntimeException) — both kinds must
-          // log-and-continue, never abort a multi-hour anchor run over
-          // a cleanup hiccup.
-          case e @ (_: java.io.IOException |
-                    _: java.io.UncheckedIOException) =>
-            System.err.println(s"[ForgetScale] vacuum of $p failed: $e")
-        }
-      }
-  }
+      .map(java.nio.file.Paths.get(_).getParent).distinct
+      .foreach(graft.queries.Tables.deleteTree)
 
   /** Fixtures retired by a slice-exhaustion rebuild, vacuumed ONE
     * GENERATION LATE (the `retiredBlockIds` idiom): deleting the store

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.Materialize.Pinning
-import graft.queries.Tables.{t, Q}
+import graft.queries.Tables.{awaited, concurrently, t, Q}
 
 /** The end-to-end corpus-curation pipeline as ONE declarative plan —
   * the composition a training-data team actually ships (builder brief):
@@ -46,26 +46,13 @@ object CurationQueries {
   private def curatedSplitOf(s: org.apache.spark.sql.SparkSession,
       dir: String, restrictTo: Option[org.apache.spark.sql.DataFrame])
       : org.apache.spark.sql.DataFrame =
+    // The gate-verdict checkpoint and the LSH candidate-band scan share
+    // no inputs, so they build concurrently (guide §2.6); the CCNet
+    // twins start these futures BEFORE their bucket-label checkpoint so
+    // all three run concurrently.
     curatedSplitFrom(s, dir, restrictTo,
       verdicts = concurrently(TextQueries.filterVerdicts(s, dir)),
       candidates = concurrently(DedupQueries.minhashCandidates(s, dir)))
-
-  /** Overlap INDEPENDENT eager builds (guide §2.6): the gate-verdict
-    * checkpoint and the LSH candidate-band scan share no inputs, so a
-    * pipeline query launches both from driver threads and the FIFO
-    * scheduler back-fills one build's task tail with the other's —
-    * instead of paying the two builds end to end at composition time.
-    * The CCNet twins start these futures BEFORE their bucket-label
-    * checkpoint so all three run concurrently. */
-  private[queries] def concurrently(
-      build: => org.apache.spark.sql.DataFrame)
-      : scala.concurrent.Future[org.apache.spark.sql.DataFrame] =
-    scala.concurrent.Future(build)(
-      scala.concurrent.ExecutionContext.global)
-
-  private def awaited(f: scala.concurrent.Future[org.apache.spark.sql.DataFrame])
-      : org.apache.spark.sql.DataFrame =
-    scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
 
   private[queries] def curatedSplitFrom(s: org.apache.spark.sql.SparkSession,
       dir: String, restrictTo: Option[org.apache.spark.sql.DataFrame],

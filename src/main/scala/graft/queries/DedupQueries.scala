@@ -192,19 +192,12 @@ object DedupQueries {
     * (`MinHashIndexSpec` pins sigs and pairs); oracles unchanged.
     * `q_dedup_incremental` deliberately stays inline — it is the
     * declared inline/served contrast pair of `q_dedup_index_delta`. */
-  private val fullMinhashIndexDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private[graft] def sharedFullMinhashIndex(s: SparkSession,
-      dir: String): graft.sim.MinHashIndex = {
-    val key = s.sparkContext.applicationId + "|" + dir
-    val idir = fullMinhashIndexDirs.getOrElseUpdate(key, {
-      val d = java.nio.file.Files.createTempDirectory("graft_mhfull_").toString
+      dir: String): graft.sim.MinHashIndex =
+    new graft.sim.MinHashIndex(s, Tables.sessionStore(s, "mhfull", dir) { d =>
       new graft.sim.MinHashIndex(s, d)
         .build(t(s, dir, "documents"), "doc_id", "text")
-      d
     })
-    new graft.sim.MinHashIndex(s, idir)
-  }
 
   /** MinHash signatures (the per-doc sketch), served from the shared
     * persisted index — bit-identical to the inline build (spec-pinned);
@@ -256,15 +249,13 @@ object DedupQueries {
     minhashComponents(s, dir).orderBy("doc_id")
 
   /** The unrestricted-candidate component labels — one definition
-    * consumed by three graded queries (components, cluster_sizes,
-    * dedup_apply), each running the fixpoint INLINE on its own clock
-    * (r16; round-15 verdict — no cross-query materialization); the
-    * pipeline queries keep their OWN restricted fixpoints (membership
-    * changes the graph). */
-  private[graft] def sharedMinhashComponents(s: SparkSession,
-      dir: String): DataFrame = minhashComponents(s, dir)
-
-  private def minhashComponents(s: SparkSession, dir: String): DataFrame =
+    * consumed by the graded queries (components, cluster_sizes,
+    * dedup_apply, the sampling cluster split), each running the
+    * fixpoint INLINE on its own clock (r16; round-15 verdict — no
+    * cross-query materialization); the pipeline queries keep their OWN
+    * restricted fixpoints (membership changes the graph). */
+  private[queries] def minhashComponents(s: SparkSession,
+      dir: String): DataFrame =
     connectedComponents(s, minhashCandidates(s, dir))
 
   /** Near-dup CLUSTER-SIZE histogram — the dedup savings estimator read
@@ -1335,22 +1326,14 @@ object DedupQueries {
     * `q_dedup_index_delta`) read it: two queries, one sketch pass.
     * Signatures are deterministic and parquet round-trips BIGINTs
     * exactly, so index-served results are bit-identical to the inline
-    * pipeline (pinned in `MinHashIndexSpec`); keyed by applicationId so
-    * a fresh session never reads a stale index. */
-  private val minhashIndexDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+    * pipeline (pinned in `MinHashIndexSpec`). */
   private[graft] def sharedMinhashIndex(s: SparkSession,
-      dir: String): graft.sim.MinHashIndex = {
-    val key = s.sparkContext.applicationId + "|" + dir
-    val idir = minhashIndexDirs.getOrElseUpdate(key, {
-      val d = java.nio.file.Files.createTempDirectory("graft_mhidx_").toString
+      dir: String): graft.sim.MinHashIndex =
+    new graft.sim.MinHashIndex(s, Tables.sessionStore(s, "mhidx", dir) { d =>
       new graft.sim.MinHashIndex(s, d).build(
         t(s, dir, "documents").where(col("source") =!= NewBatchSource),
         "doc_id", "text")
-      d
     })
-    new graft.sim.MinHashIndex(s, idir)
-  }
 
   /** Standing-corpus LSH candidate pairs served from the PERSISTED index
     * (no sketch pass — the `q_dedup_minhash_pairs` semantics restricted

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ops.{PrefixOps, TextOps, TokenOps}
 import graft.ops.Materialize.Pinning
-import graft.queries.Tables.Q
+import graft.queries.Tables.{awaited, concurrently, Q}
 
 /** Distributed model-evaluation metrics — the eval harness a curation
   * pipeline runs after every scorer change: ROC AUC, the full
@@ -186,17 +186,13 @@ object MlEvalQueries {
     // §2.6 overlap (r16): the per-group estimates and the full-corpus
     // point estimate are independent prefix scans off the checkpointed
     // pvG — build both on driver threads instead of end to end.
-    import scala.concurrent.Future
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fPerG = Future(aucByFromPerValue(compl, "g"))
-    val fPoint = Future(
+    val fPerG = concurrently(aucByFromPerValue(compl, "g"))
+    val fPoint = concurrently(
       aucByFromPerValue(pvTot.withColumn("all", lit(0L)), "all").drop("all"))
-    def res(f: Future[DataFrame]) =
-      scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
-    val stats = res(fPerG).agg(count(lit(1)).as("g_n"),
+    val stats = awaited(fPerG).agg(count(lit(1)).as("g_n"),
       sum("auc_bp").as("s1"),
       sum((col("auc_bp") * col("auc_bp")).cast("decimal(38,0)")).as("s2"))
-    res(fPoint)
+    awaited(fPoint)
       .crossJoin(stats)
       .withColumn("jk_var_bp2", expr(
         """CAST((CAST(g_n AS DECIMAL(38,0)) - 1)
@@ -497,18 +493,14 @@ object MlEvalQueries {
     // rank columns back on the unique doc_id. Same total orders, same
     // rn values, same Spearman arithmetic.
     val base = sc.pinned
-    val Seq(f1, f2) = {
-      import scala.concurrent.Future
-      import scala.concurrent.ExecutionContext.Implicits.global
-      Seq((c1, "r1"), (c2, "r2")).map { case (c, out) => Future {
+    val Seq(f1, f2) = Seq((c1, "r1"), (c2, "r2")).map { case (c, out) =>
+      concurrently {
         PrefixOps.withGlobalRowNumber(base.select(col("doc_id"), col(c)),
             Seq(col(c).asc, col("doc_id").asc), out)
           .select(col("doc_id"), col(out))
-      }}
+      }
     }
-    def res(f: scala.concurrent.Future[DataFrame]) =
-      scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
-    res(f1).join(res(f2), Seq("doc_id"))
+    awaited(f1).join(awaited(f2), Seq("doc_id"))
       .agg(count(lit(1)).as("n"),
         sum(((col("r1") - col("r2")) * (col("r1") - col("r2")))
           .cast("decimal(38,0)")).as("d2"))

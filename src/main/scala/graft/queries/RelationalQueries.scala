@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.ops.Materialize.Pinning
-import graft.queries.Tables.{t, Q}
+import graft.queries.Tables.{awaited, concurrently, t, Q}
 
 /** The relational spine (SURVEY.md §2.1–§2.7): scans, filters,
   * projections, joins, aggregations, windows, sorts, set ops.
@@ -1216,23 +1216,19 @@ object RelationalQueries {
     // driver threads [guide §2.6], and the rank columns join back on
     // the unique user_id — same rn values (total order per metric is
     // unchanged), same ntile arithmetic, same rows.
-    val ranked = {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
+    val ranked =
       Seq(
         ("r", Seq(col("recency_days").asc, col("user_id").asc), "recency_days"),
         ("f", Seq(col("freq").desc, col("user_id").asc), "freq"),
         ("m", Seq(col("monetary_cents").desc, col("user_id").asc),
           "monetary_cents"))
-        .map { case (m, ord, keep) => Future {
+        .map { case (m, ord, keep) => concurrently {
           graft.ops.PrefixOps.withGlobalRowNumber(
               metrics.select(col("user_id"), col(keep)), ord, m + "_rn")
             .select(col("user_id"), col(m + "_rn"), col(m + "_rn_n"))
         }}
-        .map(Await.result(_, Duration.Inf))
+        .map(awaited(_))
         .foldLeft(metrics)((d, r) => d.join(r, Seq("user_id")))
-    }
     Seq("r", "f", "m").foldLeft(ranked) { (d, m) =>
         d.withColumn(m + "_q",
           graft.ops.PrefixOps.ntileFromRowNumber(m + "_rn", m + "_rn_n", 4))

@@ -184,7 +184,7 @@ object SamplingQueries {
     * components graph is pairs-sized (≪ corpus); the final assignment is
     * one left join plus a map-side hash — no new shuffle family. */
   private val sampleClusterSplit: Q = (s, dir) => {
-    val comp = DedupQueries.sharedMinhashComponents(s, dir)
+    val comp = DedupQueries.minhashComponents(s, dir)
     val assigned = t(s, dir, "documents").select(col("doc_id"))
       .join(comp, Seq("doc_id"), "left")
       .withColumn("cluster", coalesce(col("component"), col("doc_id")))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ops.Materialize.Pinning
 import graft.sim.{PqIvfIndex, Similarity}
-import graft.queries.Tables.{t, Q}
+import graft.queries.Tables.{awaited, concurrently, t, Q}
 
 /** Approximate-nearest-neighbor search over the embedding column (builder
   * brief: brute-force cosine top-k baseline + an LSH-bucketed scale path)
@@ -274,20 +274,13 @@ object SimilarityQueries {
     * and parquet round-trips the doubles exactly, so the served search
     * is bit-identical to the inline pipeline (pinned in
     * `IvfIndexSpec`); the oracle is the inline query's verbatim. */
-  private val ivfIndexDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private[graft] def sharedIvfIndex(s: org.apache.spark.sql.SparkSession,
-      dir: String): graft.sim.IvfIndex = {
-    val key = s.sparkContext.applicationId + "|" + dir
-    val idir = ivfIndexDirs.getOrElseUpdate(key, {
-      val d = java.nio.file.Files.createTempDirectory("graft_ivfq_").toString
+      dir: String): graft.sim.IvfIndex =
+    new graft.sim.IvfIndex(s, Tables.sessionStore(s, "ivfq", dir) { d =>
       val idx = new graft.sim.IvfIndex(s, d)
       idx.build(t(s, dir, "embeddings"), "vec_id", "embedding", "label")
       idx.forget(0L until NumQueries.toLong)
-      d
     })
-    new graft.sim.IvfIndex(s, idir)
-  }
 
   /** IVF ANN served from the PERSISTED index — `q_sim_ivf_ann`'s
     * contract through the store: centroids and the candidate postings
@@ -592,20 +585,13 @@ object SimilarityQueries {
     * and then `forget`-redacted of the query vectors, so the graded
     * serving path exercises deletion propagation on the way to its
     * answer (a forgotten vector must vanish from the Hamming scan). */
-  private val bqIndexDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private[graft] def sharedBqIndex(s: org.apache.spark.sql.SparkSession,
-      dir: String): graft.sim.BqIndex = {
-    val key = s.sparkContext.applicationId + "|" + dir
-    val idir = bqIndexDirs.getOrElseUpdate(key, {
-      val d = java.nio.file.Files.createTempDirectory("graft_bq_").toString
+      dir: String): graft.sim.BqIndex =
+    new graft.sim.BqIndex(s, Tables.sessionStore(s, "bq", dir) { d =>
       val idx = new graft.sim.BqIndex(s, d)
       idx.build(t(s, dir, "embeddings"), "vec_id", "embedding", EmbDim)
       idx.forget(0L until NumQueries.toLong)
-      d
     })
-    new graft.sim.BqIndex(s, idir)
-  }
 
   /** The BQ rescore path served from the PERSISTED code store —
     * [[bqRerank]]'s contract through [[graft.sim.BqIndex.search]]:
@@ -818,20 +804,13 @@ object SimilarityQueries {
   /** One persisted [[graft.sim.PqIvfIndex]] per (application, corpus
     * dir), built on first request over the CORPUS vectors only — the
     * shared-store rule of [[sharedIvfIndex]]/[[sharedKmeansModel]]. */
-  private val pqIvfIndexDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private[graft] def sharedPqIvfIndex(s: org.apache.spark.sql.SparkSession,
-      dir: String): graft.sim.PqIvfIndex = {
-    val key = s.sparkContext.applicationId + "|" + dir
-    val idir = pqIvfIndexDirs.getOrElseUpdate(key, {
-      val d = java.nio.file.Files.createTempDirectory("graft_ivfpq_").toString
+      dir: String): graft.sim.PqIvfIndex =
+    new graft.sim.PqIvfIndex(s, Tables.sessionStore(s, "ivfpq", dir) { d =>
       new graft.sim.PqIvfIndex(s, d).build(
         t(s, dir, "embeddings").where(col("vec_id") >= NumQueries),
         "vec_id", "embedding", "label", PqM, PqDsub, PqK)
-      d
     })
-    new graft.sim.PqIvfIndex(s, idir)
-  }
 
   /** IVF-PQ ADC served from the PERSISTED index — `q_sim_ivfpq_adc`'s
     * contract through the store: codebooks and the probed cells' code
@@ -850,7 +829,7 @@ object SimilarityQueries {
     * what production actually serves. Reads the served path, so the
     * store is in the graded loop. */
   private val ivfPqRecall: Q = (s, dir) =>
-    recallVsTruth(sharedL2Truth(s, dir), ivfPqServed(s, dir))
+    recallVsTruth(exactL2TruthTopK(s, dir), ivfPqServed(s, dir))
 
   private[queries] val KmeansK = 8
   private val EmbDim  = 64
@@ -871,24 +850,13 @@ object SimilarityQueries {
     * Lloyd — three graded queries, one clustering pass. The model is
     * deterministic and parquet round-trips doubles exactly, so the
     * served frame is bit-identical to the inline [[kmeansAssign]]
-    * (pinned in `KmeansModelSpec`); oracles are unchanged. Keyed by
-    * applicationId so a fresh session (fresh or mutated test data)
-    * never reads a stale model; the store itself is disposable derived
-    * state under java.io.tmpdir. */
-  private val kmeansModelDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+    * (pinned in `KmeansModelSpec`); oracles are unchanged. */
   private[graft] def sharedKmeansModel(s: org.apache.spark.sql.SparkSession,
-      dir: String, k: Int = KmeansK): graft.sim.KmeansModel = {
-    val key = s.sparkContext.applicationId + "|" + dir + "|k=" + k
-    val mdir = kmeansModelDirs.getOrElseUpdate(key, {
-      val d = java.nio.file.Files
-        .createTempDirectory(s"graft_kmeans_k$k" + "_").toString
+      dir: String, k: Int = KmeansK): graft.sim.KmeansModel =
+    new graft.sim.KmeansModel(s, Tables.sessionStore(s, "kmeans", dir, k) { d =>
       new graft.sim.KmeansModel(s, d)
         .fit(corpusVecs(s, dir), "vec_id", "v", k, rounds = 2)
-      d
     })
-    new graft.sim.KmeansModel(s, mdir)
-  }
   private[graft] def sharedKmeansAssign(s: org.apache.spark.sql.SparkSession,
       dir: String, k: Int = KmeansK): DataFrame =
     sharedKmeansModel(s, dir, k).assignments()
@@ -1144,8 +1112,10 @@ object SimilarityQueries {
     * (queries broadcast, corpus streams — the `q_sim_topk_bruteforce`
     * economics); the serving-scale candidate side reuses the graded
     * [[pqAdc]] frame unchanged. */
-  /** Exact full-vector L2 top-K — the shared metric-matched truth of
-    * both compressed-search recall audits. */
+  /** Exact full-vector L2 top-K — the metric-matched truth of the pq /
+    * sq / ivfpq recall audits; since r16 it runs INLINE inside each
+    * audit's own plan (the truth side IS part of what a recall audit
+    * computes). */
   private def exactL2TruthTopK(s: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
     val emb = t(s, dir, "embeddings")
@@ -1168,14 +1138,6 @@ object SimilarityQueries {
       orderBy = Seq("d2_ppm" -> true, "cid" -> true), k = LshTopK)
   }
 
-  /** The L2 truth — one definition read by the recall audits
-    * (pq / sq / ivfpq / bq); since r16 the brute-force exact baseline
-    * runs INLINE inside each audit's own plan (round-15 verdict — the
-    * truth side IS part of what a recall audit computes). */
-  private def sharedL2Truth(s: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    exactL2TruthTopK(s, dir)
-
   /** Per-query hits + recall bp of `approx(qid, cid)` vs the truth. */
   private def recallVsTruth(truth: DataFrame, approx: DataFrame): DataFrame =
     truth.select(col("qid"), col("cid"))
@@ -1188,14 +1150,14 @@ object SimilarityQueries {
       .orderBy("qid")
 
   private val pqRecall: Q = (s, dir) =>
-    recallVsTruth(sharedL2Truth(s, dir), pqAdc(s, dir))
+    recallVsTruth(exactL2TruthTopK(s, dir), pqAdc(s, dir))
 
   /** The same audit for the scalar-quantized search — 3-bit/dim lattice
     * codes are cheaper and coarser than PQ's trained subspace cells, and
     * this pair of reports is how that trade is read: same truth, same
     * tie rules, recall difference = quantizer quality difference. */
   private val sqRecall: Q = (s, dir) =>
-    recallVsTruth(sharedL2Truth(s, dir), sqAdc(s, dir))
+    recallVsTruth(exactL2TruthTopK(s, dir), sqAdc(s, dir))
 
   /** Matryoshka truncation width: the first 16 of 64 dims — the 4×
     * storage/compute cut an MRL deployment serves hot. */
@@ -1543,24 +1505,18 @@ object SimilarityQueries {
     * at-scale economics keep cells ∝ corpus (bounded cell
     * populations); this variant builds a scaling-only store seeded by
     * a `cells`-bucket id hash and is what [[graft.Scaling]] audits
-    * (`cells` = base · factor). Own store cache per (app, dir,
-    * cells) — built inside the first timed run, the min grades the
-    * mining path (the established serve-path grading rule). */
-  private val bitextScaleDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+    * (`cells` = base · factor). Own store per (app, dir, cells) —
+    * built inside the first timed run, the min grades the mining path
+    * (the established serve-path grading rule). */
   private[graft] def bitextServedAt(s: org.apache.spark.sql.SparkSession,
       dir: String, cells: Int): DataFrame = {
-    val key = s.sparkContext.applicationId + "|" + dir + "|" + cells
-    val idir = bitextScaleDirs.getOrElseUpdate(key, {
-      val d = java.nio.file.Files.createTempDirectory("graft_btx_").toString
-      val idx = new graft.sim.IvfIndex(s, d)
-      idx.build(
-        t(s, dir, "embeddings").where(col("vec_id") >= NumQueries)
-          .withColumn("__cell", pmod(xxhash64(col("vec_id")), lit(cells))),
-        "vec_id", "embedding", "__cell")
-      d
-    })
-    val idx = new graft.sim.IvfIndex(s, idir)
+    val idx = new graft.sim.IvfIndex(s,
+      Tables.sessionStore(s, "btx", dir, cells) { d =>
+        new graft.sim.IvfIndex(s, d).build(
+          t(s, dir, "embeddings").where(col("vec_id") >= NumQueries)
+            .withColumn("__cell", pmod(xxhash64(col("vec_id")), lit(cells))),
+          "vec_id", "embedding", "__cell")
+      })
     val (a, b) = bitextSides(s, dir)
     val aIds = a.select(col("vec_id").as("cid"))
     val bIds = b.select(col("vec_id").as("cid"))
@@ -1598,15 +1554,12 @@ object SimilarityQueries {
     // — submit them from separate driver threads (guide §2.6) so the
     // served arm's probe jobs back-fill the brute-force arm's stage
     // tails instead of waiting for the whole truth chain to finish.
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
-    val truthF = scala.concurrent.Future(bitextMinedFrameFrom(s, dir, sides)
+    val truthF = concurrently(bitextMinedFrameFrom(s, dir, sides)
       .select("src_id", "tgt_id").pinned)
-    val servedF = scala.concurrent.Future(bitextServedFrameFrom(s, dir, sides)
+    val servedF = concurrently(bitextServedFrameFrom(s, dir, sides)
       .select("src_id", "tgt_id").pinned)
-    val inf = scala.concurrent.duration.Duration.Inf
-    val truth = scala.concurrent.Await.result(truthF, inf)
-    val served = scala.concurrent.Await.result(servedF, inf)
+    val truth = awaited(truthF)
+    val served = awaited(servedF)
     val hits = truth.join(served, Seq("src_id", "tgt_id"))
       .agg(count(lit(1)).as("n_hits"))
     truth.agg(count(lit(1)).as("n_truth"))
@@ -1684,16 +1637,15 @@ object SimilarityQueries {
     // build it on a second driver thread while the mining chain runs
     // (guide §2.6): the roll's model-state jobs back-fill the miner's
     // stage tails instead of serializing in front of the scoring join.
-    val lmF = scala.concurrent.Future {
+    val lmF = concurrently {
       val m = TextQueries.sharedCorpusLm(s, dir); m.prewarmKn3(); m
-    }(scala.concurrent.ExecutionContext.global)
+    }
     val mined = bitextMinedFrame(s, dir)
       .select("src_id", "tgt_id", "margin_ppk")
       .pinned // feeds members, the cut, and the final joins
     val members = mined.select(col("src_id").as("doc_id"))
       .unionByName(mined.select(col("tgt_id").as("doc_id"))).distinct()
-    val kn3 = scala.concurrent.Await
-      .result(lmF, scala.concurrent.duration.Duration.Inf)
+    val kn3 = awaited(lmF)
       .scoreKneserNey3(
         t(s, dir, "documents").join(members, Seq("doc_id"), "left_semi"),
         "doc_id", "text")

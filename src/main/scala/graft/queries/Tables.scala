@@ -76,6 +76,60 @@ object Tables {
   def orderedOnce(df: DataFrame, order: org.apache.spark.sql.Column*): DataFrame =
     df.pinned.orderBy(order: _*)
 
+  /** BUILD-ONCE / SERVE-MANY for the query layer's derived stores (the
+    * MinHash, IVF, BQ, IVF-PQ, k-means, bitext, LM, winnow and
+    * classifier-weight stores): `build` fills a fresh
+    * `graft_<name>_` directory under java.io.tmpdir on the first call
+    * per (Spark application, `name`, `key`), and every later call
+    * returns that directory without building. The application id in
+    * the key means a fresh session (fresh or mutated test data) never
+    * reads a stale store. Every directory made here is deleted at JVM
+    * exit — also one whose build lost a concurrent first-call race
+    * (TrieMap runs `build` at most once per caller, but two callers
+    * may both run it and only one result is kept). */
+  def sessionStore(s: SparkSession, name: String, key: Any*)(
+      build: String => Unit): String =
+    storeDirs.getOrElseUpdate(
+      (s.sparkContext.applicationId +: name +: key).mkString("|"), {
+        val d = java.nio.file.Files.createTempDirectory(s"graft_${name}_")
+        storeDirsMade.add(d)
+        build(d.toString)
+        d.toString
+      })
+
+  private val storeDirs =
+    scala.collection.concurrent.TrieMap.empty[String, String]
+
+  private lazy val storeDirsMade = {
+    val made = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]
+    sys.addShutdownHook(made.forEach(deleteTree(_)))
+    made
+  }
+
+  /** Recursive delete of `root`, deepest paths first. A failure is
+    * logged and skipped: a cleanup hiccup must never abort a run. */
+  def deleteTree(root: java.nio.file.Path): Unit =
+    try {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(root).iterator().asScala.toSeq
+        .sortBy(-_.getNameCount)
+        .foreach(java.nio.file.Files.deleteIfExists(_))
+    } catch {
+      // Files.walk surfaces mid-traversal errors as UncheckedIOException
+      // (a RuntimeException), so both kinds are caught.
+      case e @ (_: java.io.IOException | _: java.io.UncheckedIOException) =>
+        System.err.println(s"[Tables] delete of $root failed: $e")
+    }
+
+  /** Overlap INDEPENDENT eager builds (guide §2.6): start `build` on a
+    * driver thread so the FIFO scheduler back-fills one build's task
+    * tail with another's, instead of paying them end to end. */
+  def concurrently[A](build: => A): scala.concurrent.Future[A] =
+    scala.concurrent.Future(build)(scala.concurrent.ExecutionContext.global)
+
+  def awaited[A](f: scala.concurrent.Future[A]): A =
+    scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
+
   /** ORDER-INDEPENDENT RESULT DIGEST — the graded emission of the
     * output-dense pair family (`q_dedup_ngram_jaccard`,
     * `q_dedup_containment`, and friends): (n_rows, xor_digest,

@@ -486,23 +486,15 @@ object TextQueries {
     * every later batch scores against the store). Counts round-trip as
     * BIGINTs and both paths evaluate the same shared expression
     * strings, so model-served scores are bit-identical to the inline
-    * kernel (pinned in `NgramLmSpec`); keyed by applicationId so a
-    * fresh session never reads a stale model. */
-  private val ngramLmDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+    * kernel (pinned in `NgramLmSpec`). */
   private[graft] def sharedNgramLm(s: SparkSession,
-      dir: String): graft.ml.NgramLm.Model = {
-    val key = s.sparkContext.applicationId + "|" + dir
-    val d = ngramLmDirs.getOrElseUpdate(key, {
-      val p = java.nio.file.Files.createTempDirectory("graft_nglm_").toString
+      dir: String): graft.ml.NgramLm.Model =
+    graft.ml.NgramLm.load(s, Tables.sessionStore(s, "nglm", dir) { p =>
       graft.ml.NgramLm.fit(
         SamplingQueries.withSplit(docs(s, dir), "doc_id")
           .where(col("split") === "train"),
         "text", p)
-      p
     })
-    graft.ml.NgramLm.load(s, d)
-  }
 
   /** Held-out scoring served from the PERSISTED LM — the
     * `q_text_heldout_ppl` contract through the learn→serve loop: the
@@ -519,18 +511,11 @@ object TextQueries {
     * (application, corpus dir), served by every later call. Distinct
     * store from the train-split LM — different fit corpus, different
     * statistic. */
-  private val corpusLmDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private[graft] def sharedCorpusLm(s: SparkSession,
-      dir: String): graft.ml.NgramLm.Model = {
-    val key = s.sparkContext.applicationId + "|" + dir
-    val d = corpusLmDirs.getOrElseUpdate(key, {
-      val p = java.nio.file.Files.createTempDirectory("graft_colm_").toString
+      dir: String): graft.ml.NgramLm.Model =
+    graft.ml.NgramLm.load(s, Tables.sessionStore(s, "colm", dir) { p =>
       graft.ml.NgramLm.fit(docs(s, dir), "text", p)
-      p
     })
-    graft.ml.NgramLm.load(s, d)
-  }
 
   /** Interpolated bigram scoring served from the PERSISTED order-2 LM —
     * the `q_text_bigram_lm` contract through the learn→serve loop (the
@@ -617,20 +602,13 @@ object TextQueries {
     * query's deterministic in-domain rule), served thereafter. The
     * single-value `min(source)` read is request-sized config state, not
     * data (the inline kernel carries the same scalar as a broadcast). */
-  private val inDomainLmDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private[graft] def sharedInDomainLm(s: SparkSession,
-      dir: String): graft.ml.NgramLm.Model = {
-    val key = s.sparkContext.applicationId + "|" + dir
-    val d = inDomainLmDirs.getOrElseUpdate(key, {
-      val p = java.nio.file.Files.createTempDirectory("graft_idlm_").toString
+      dir: String): graft.ml.NgramLm.Model =
+    graft.ml.NgramLm.load(s, Tables.sessionStore(s, "idlm", dir) { p =>
       val corpus = docs(s, dir)
       val inSrc = corpus.agg(min("source")).head().getString(0)
       graft.ml.NgramLm.fit(corpus.where(col("source") === inSrc), "text", p)
-      p
     })
-    graft.ml.NgramLm.load(s, d)
-  }
 
   /** Moore–Lewis served from TWO persisted LMs (general = full corpus,
     * in-domain = min(source) slice) — the `q_text_moore_lewis` contract
@@ -1176,20 +1154,14 @@ object TextQueries {
     * are deterministic functions of the corpus; parquet round-trips
     * the BIGINT hashes exactly. The durable lifecycle form of this
     * store is [[graft.stream.WinnowIngest]]'s batch-partitioned index;
-    * this one is session-scoped derived state under java.io.tmpdir
-    * (the `sharedKmeansModel` keying — applicationId guards staleness). */
-  private val winnowStoreDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+    * this one is session-scoped derived state ([[Tables.sessionStore]]). */
   private[graft] def sharedWinnowFrames(s: SparkSession, dir: String)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    val key = s.sparkContext.applicationId + "|" + dir
-    val p = winnowStoreDirs.getOrElseUpdate(key, {
-      val d = java.nio.file.Files.createTempDirectory("graft_winnow_").toString
+    val p = Tables.sessionStore(s, "winnow", dir) { d =>
       gramFrame(docs(s, dir)).write.parquet(s"$d/grams")
       winnowSelectedFromGrams(s.read.parquet(s"$d/grams"))
         .distinct().write.parquet(s"$d/sel")
-      d
-    })
+    }
     (s.read.parquet(s"$p/grams"), s.read.parquet(s"$p/sel"))
   }
 
@@ -1532,12 +1504,9 @@ object TextQueries {
     * weights are integers held exactly in the store's doubles (|w| ≤
     * 1000 ≪ 2⁵³), so load → serve loses nothing. Keyed by application
     * only — the derived table is corpus-independent. */
-  private val classifyModelDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def sharedClassifyModel(
-      s: SparkSession): graft.ml.HashedLogReg.Model = {
-    val d = classifyModelDirs.getOrElseUpdate(s.sparkContext.applicationId, {
-      val p = java.nio.file.Files.createTempDirectory("graft_clsw_").toString
+      s: SparkSession): graft.ml.HashedLogReg.Model =
+    graft.ml.HashedLogReg.load(s, Tables.sessionStore(s, "clsw") { p =>
       val md = java.security.MessageDigest.getInstance("MD5")
       val w = Array.tabulate(ClassifyBuckets) { b =>
         val hex = md.digest(s"w#$b".getBytes("UTF-8"))
@@ -1547,10 +1516,7 @@ object TextQueries {
       }
       graft.ml.HashedLogReg.save(
         graft.ml.HashedLogReg.Model(ClassifyBuckets, 0.0, w), p)
-      p
     })
-    graft.ml.HashedLogReg.load(s, d)
-  }
 
   /** Classifier serving from the PERSISTED weight table — the
     * `q_text_classify` contract through the learn→serve loop, closing
