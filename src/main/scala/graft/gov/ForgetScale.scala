@@ -68,12 +68,13 @@ object ForgetScale {
     * this, every slice-exhaustion rebuild would orphan a full store
     * copy for the life of the JVM — a long anchor run leaks multi-GB
     * per cycle. Each store root is `<tempdir>/x` ([[fixture]]'s
-    * `tmp`); the whole tempdir goes. The LEDGER dir deliberately
-    * survives: it is the audit record of committed erasures (a
-    * governance pipeline never deletes its own ledger), and ledger
-    * frames already returned to callers keep reading it across the
-    * rebuild (spec-pinned). The fixture pins nothing else (lastFrame
-    * is a parquet read), so store disk is the only state to reclaim. */
+    * `tmp`); the whole tempdir goes. The LEDGER dir survives the run:
+    * it is the audit record of committed erasures, and ledger frames
+    * already returned to callers keep reading it across the rebuild
+    * (spec-pinned). Only in-JVM frames read it, so it goes at JVM exit
+    * with every other fixture dir ([[graft.queries.Tables.tempDir]]).
+    * The fixture pins nothing else (lastFrame is a parquet read), so
+    * store disk is the only state to reclaim. */
   private def vacuumFixture(fx: Fixture): Unit =
     Seq(fx.ivf.indexDir, fx.pq.indexDir, fx.mh.indexDir,
         fx.lex.indexDir, fx.km.modelDir, fx.bq.indexDir, fx.lmDir,
@@ -93,8 +94,7 @@ object ForgetScale {
   private def fixture(spark: SparkSession, dir: String, mod: Int): Fixture = {
     val key = fixtureKey(spark, dir, mod)
     fixtures.getOrElseUpdate(key, {
-      def tmp(p: String) =
-        java.nio.file.Files.createTempDirectory(p).toString + "/x"
+      def tmp(p: String) = graft.queries.Tables.tempDir(p).toString + "/x"
       val emb = graft.queries.Tables.t(spark, dir, "embeddings")
       val docs = graft.queries.Tables.t(spark, dir, "documents")
       val ivf = new graft.sim.IvfIndex(spark, tmp("fsc_ivf"))

@@ -91,25 +91,33 @@ object Tables {
       build: String => Unit): String =
     storeDirs.getOrElseUpdate(
       (s.sparkContext.applicationId +: name +: key).mkString("|"), {
-        val d = java.nio.file.Files.createTempDirectory(s"graft_${name}_")
-        storeDirsMade.add(d)
-        build(d.toString)
-        d.toString
+        val d = tempDir(s"graft_${name}_").toString
+        build(d)
+        d
       })
 
   private val storeDirs =
     scala.collection.concurrent.TrieMap.empty[String, String]
 
-  private lazy val storeDirsMade = {
+  /** A fresh directory under java.io.tmpdir, deleted at JVM exit with
+    * everything in it. The one place `src/main` makes a temp dir. */
+  def tempDir(prefix: String): java.nio.file.Path = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    tempDirsMade.add(d)
+    d
+  }
+
+  private lazy val tempDirsMade = {
     val made = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]
     sys.addShutdownHook(made.forEach(deleteTree(_)))
     made
   }
 
-  /** Recursive delete of `root`, deepest paths first. A failure is
-    * logged and skipped: a cleanup hiccup must never abort a run. */
+  /** Recursive delete of `root`, deepest paths first; a missing root is
+    * skipped. A failure is logged and skipped: a cleanup hiccup must
+    * never abort a run. */
   def deleteTree(root: java.nio.file.Path): Unit =
-    try {
+    if (java.nio.file.Files.exists(root)) try {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(root).iterator().asScala.toSeq
         .sortBy(-_.getNameCount)

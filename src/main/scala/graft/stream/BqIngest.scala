@@ -39,7 +39,6 @@ final class BqIngest(
 
   /** One micro-batch → one code segment. Returns rows appended. */
   override def processBatch(batch: DataFrame, batchId: Long): Long = {
-    if (batch.isEmpty) return 0L
     Materialize.scoped { scope =>
       val prepared = scope.pin(
         batch.select(col(idCol).as("id"), col(vecCol).as("__v")))

@@ -2,6 +2,7 @@ package graft.stream
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.ops.{Materialize, TextOps}
 
@@ -39,10 +40,9 @@ final class DedupIngest(
     batch.withColumn("fp", md5(TextOps.cleanText(col(textCol))))
 
   /** The standing index; empty-schema'd on first batch (no files yet). */
-  private def seenFps(): DataFrame =
-    MicroBatchIngest.storeOrElse(spark, indexDir,
-      spark.range(0).select(lit("").as("fp")).where(lit(false)))
-      .select("fp")
+  private[stream] def seenFps(): DataFrame =
+    MicroBatchIngest.readStore(spark, indexDir,
+      StructType(Seq(StructField("fp", StringType))))
 
   /** One micro-batch: returns the number of novel documents appended.
     *
@@ -65,7 +65,7 @@ final class DedupIngest(
     // Cross-batch dedup: drop anything the corpus has ever seen.
     Materialize.scoped { scope =>
       val fresh = scope.cached( // read twice: corpus + index
-        inBatch.join(seenFps(), Seq("fp"), "left_anti"))
+        inBatch.join(seenFps().select("fp"), Seq("fp"), "left_anti"))
       val n = fresh.count()
       if (n > 0) {
         MicroBatchIngest.writeBatchPartition(fresh.drop("fp"), corpusDir, batchId)

@@ -77,13 +77,8 @@ final class DriftIngest(
 
   /** The standing per-batch histogram store. */
   def store(): DataFrame =
-    MicroBatchIngest.storeOrElse(spark, storeDir,
-      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-        StructType(Seq(
-          StructField("bin", LongType),
-          StructField("c", LongType, nullable = false),
-          StructField("batch_id", LongType)))))
-      .withColumn("batch_id", col("batch_id").cast("long"))
+    MicroBatchIngest.readStore(spark, storeDir, StructType(Seq(
+      StructField("bin", LongType), StructField("c", LongType, nullable = false))))
 
   /** Per-batch total PSI vs the pinned reference, micronats — every bin
     * present on both sides of every batch (absent bins joined in as 0,

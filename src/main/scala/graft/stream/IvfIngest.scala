@@ -56,7 +56,6 @@ final class IvfIngest(
     * Checkpointed once (count + append read one materialization) with
     * the blocks released per trigger. */
   override def processBatch(batch: DataFrame, batchId: Long): Long = {
-    if (batch.isEmpty) return 0L
     Materialize.scoped { scope =>
       val prepared = scope.pin(batch.select(col(idCol).as("id"),
         expr(s"transform($vecCol, x -> CAST(x AS DOUBLE))").as("__v")))

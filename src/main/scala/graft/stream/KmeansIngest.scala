@@ -78,7 +78,6 @@ final class KmeansIngest(
       if (live != served._1) served = (live, model.centroidsAt(live).count())
     }
     val (version, k) = served // one read — pinned for this whole batch
-    if (batch.isEmpty) return 0L
     val prepared = batch.select(col(idCol),
       expr(s"transform($vecCol, x -> CAST(x AS DOUBLE))").as("__v"))
     val assigned =
@@ -98,14 +97,8 @@ final class KmeansIngest(
 
   /** The standing assignment store: (id, cid, d2_ppm, batch_id). */
   def store(): DataFrame =
-    MicroBatchIngest.storeOrElse(spark, storeDir,
-      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-        StructType(Seq(
-          StructField("id", LongType),
-          StructField("cid", LongType),
-          StructField("d2_ppm", LongType),
-          StructField("batch_id", LongType)))))
-      .withColumn("batch_id", col("batch_id").cast("long"))
+    MicroBatchIngest.readStore(spark, storeDir, StructType(
+      Seq("id", "cid", "d2_ppm").map(StructField(_, LongType))))
 
   /** Live cluster occupancy including streamed arrivals — the corpus
     * segments union the stream store, the frame a cluster-balanced

@@ -39,8 +39,8 @@ final class LmIngest(
   /** One micro-batch: returns the batch row count ingested into the
     * statistics (rows, not tokens — the maintainer-specific count). */
   override def processBatch(batch: DataFrame, batchId: Long): Long = {
-    if (batch.isEmpty) return 0L
     val n = batch.count()
+    if (n == 0) return 0L
     if (NgramLm.storeExists(spark, modelDir))
       NgramLm.load(spark, modelDir)
         .appendBatch(batch, textCol, batchId, streamId)

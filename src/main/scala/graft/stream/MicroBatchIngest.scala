@@ -1,24 +1,30 @@
 package graft.stream
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{LongType, StructType}
 
 import graft.ops.{Materialize, SegmentStore}
 
-/** The shared shape of the streaming maintainers ([[DedupIngest]],
-  * [[CdcIngest]], [[SketchIngest]]): a per-micro-batch `processBatch`
-  * attached through `foreachBatch` (the S7 engine form), plus the
-  * replay-safe per-batch partition write they converge on. One
-  * definition, so the replay convention cannot drift between
-  * maintainers — the same rationale as
-  * [[graft.ops.VersionedPaths]] for the versioned-dir rules. */
+/** The one micro-batch protocol of the streaming layer: every standing
+  * query — the 15 store maintainers, [[StreamEngine]] and
+  * [[TrendingTopK]] — is a per-micro-batch `processBatch` attached by
+  * [[start]], the only `foreachBatch` in `src/main`. The companion owns
+  * the replay-safe partition write and the batch-store read they share,
+  * so the replay convention cannot drift between maintainers — the same
+  * rationale as [[graft.ops.VersionedPaths]] for the versioned-dir
+  * rules. */
 private[stream] trait MicroBatchIngest {
 
   /** One micro-batch; the returned count is maintainer-specific
-    * (novel docs, merged keys, slice rows). */
+    * (novel docs, merged keys, slice rows, rows written). */
   def processBatch(batch: DataFrame, batchId: Long): Long
+
+  /** The query's output mode: append, unless the maintainer consumes a
+    * streaming aggregation's running rows (update). */
+  protected def outputMode: String = "append"
 
   /** The STREAM IDENTITY this maintainer runs under — the checkpoint
     * location bound at [[start]] (batch ids are meaningful only per
@@ -32,12 +38,18 @@ private[stream] trait MicroBatchIngest {
   @volatile private var boundCheckpoint: Option[String] = None
   protected final def streamId: Option[String] = boundCheckpoint
 
-  /** Attach to a streaming frame via foreachBatch. */
+  /** Attach to a streaming frame: each micro-batch runs [[processBatch]]
+    * on the driver thread. */
+  final def start(source: DataFrame, queryName: String,
+                  trigger: Trigger): StreamingQuery =
+    start(source, queryName, trigger, None)
+
   final def start(source: DataFrame, queryName: String, trigger: Trigger,
-                  checkpointLocation: Option[String] = None): StreamingQuery = {
+                  checkpointLocation: Option[String]): StreamingQuery = {
     boundCheckpoint = checkpointLocation
     val w = source.writeStream
       .queryName(queryName)
+      .outputMode(outputMode)
       .foreachBatch((b: DataFrame, id: Long) => { processBatch(b, id); () })
       .trigger(trigger)
     checkpointLocation.foreach(w.option("checkpointLocation", _))
@@ -69,47 +81,59 @@ private[graft] object MicroBatchIngest {
       .drop("__tfp")
   }
 
-  /** Idempotent per-batch write: DYNAMIC overwrite of this batch's own
-    * `batch_id=<id>` partition only — every other batch's output is
-    * untouched, so an at-least-once redelivery (same checkpointed
+  /** Dynamic partition overwrite: only the `partCol` partitions present
+    * in `df` are replaced, every other partition of `dir` is untouched.
+    * The mode is this write's own option, never the session conf, so
+    * two queries sharing a session cannot switch each other's writes to
+    * a static overwrite (which deletes every partition `df` lacks). */
+  def overwritePartitions(df: DataFrame, dir: String, partCol: String): Unit =
+    df.write
+      .option("partitionOverwriteMode", "dynamic")
+      .mode(SaveMode.Overwrite)
+      .partitionBy(partCol)
+      .parquet(dir)
+
+  /** Idempotent per-batch write: this batch's own `batch_id=<id>`
+    * partition only, so an at-least-once redelivery (same checkpointed
     * offsets ⇒ same rows, same id) overwrites itself and the store
     * converges instead of duplicating. */
   def writeBatchPartition(df: DataFrame, dir: String, batchId: Long): Unit =
-    df.withColumn("batch_id", lit(batchId))
-      .write
-      .option("partitionOverwriteMode", "dynamic")
-      .mode(SaveMode.Overwrite)
-      .partitionBy("batch_id")
-      .parquet(dir)
+    overwritePartitions(df.withColumn("batch_id", lit(batchId)), dir, "batch_id")
 
-  /** The standing store, or `empty` (a zero-row frame with the store's
-    * schema) before the first batch lands — the schema must match what
-    * the first write will produce, so consumers capturing it early
-    * (unions, schema-derived writers) don't diverge once data arrives.
-    *
-    * When the store has been [[compactBatches]]-consolidated, the frame
-    * is the consolidated segment UNION the batch partitions NEWER than
-    * the compaction horizon — row-identical to the uncompacted store.
-    * Batch partitions at or below the horizon are ignored (their rows
-    * live in the segment), which is also what keeps replay convergent
-    * after compaction: a redelivered old batch rewrites a partition the
-    * reader never looks at. */
-  def storeOrElse(spark: SparkSession, dir: String, empty: => DataFrame): DataFrame = {
-    val recent =
-      try Some(spark.read.parquet(dir))
-      catch { case _: org.apache.spark.sql.AnalysisException => None }
-    latestCompaction(spark, dir) match {
-      case None => recent.getOrElse(empty)
-      case Some((_, horizon, segPath)) =>
-        val cons = spark.read.parquet(segPath)
-        recent match {
-          case None => cons
-          case Some(r) => cons.unionByName(
-            r.withColumn("batch_id", col("batch_id").cast("long"))
-              .where(col("batch_id") > horizon))
-        }
+  /** The standing store: the [[compactBatches]] segment ∪ the batch
+    * partitions NEWER than its horizon — row-identical to the
+    * uncompacted store — or, before the first batch lands, a zero-row
+    * frame of `schema` (the columns the maintainer writes) plus
+    * `batch_id`. `batch_id` is long in every case (a partition column
+    * re-infers as int when its values fit), so a consumer that captures
+    * the schema early (unions, schema-derived writers) sees the one the
+    * data will have. Batch partitions at or below the horizon are
+    * ignored (their rows live in the segment), which is also what keeps
+    * replay convergent after compaction: a redelivered old batch
+    * rewrites a partition the reader never looks at. */
+  def readStore(spark: SparkSession, dir: String, schema: StructType): DataFrame =
+    standing(spark, dir, latestCompaction(spark, dir)).getOrElse(
+      spark.createDataFrame(java.util.Collections.emptyList[Row](),
+        schema.add("batch_id", LongType)))
+
+  /** [[readStore]]'s rows under the given compaction, None if no batch
+    * landed yet. */
+  private def standing(spark: SparkSession, dir: String,
+      compaction: Option[(Long, Long, String)]): Option[DataFrame] = {
+    val recent = partitions(spark, dir)
+    compaction.fold(recent) { case (_, horizon, segPath) =>
+      val cons = spark.read.parquet(segPath)
+      Some(recent.fold(cons)(r =>
+        cons.unionByName(r.where(col("batch_id") > horizon))))
     }
   }
+
+  /** Every `batch_id=` partition of `dir`, `batch_id` read back as long;
+    * None before the first write. */
+  private def partitions(spark: SparkSession, dir: String): Option[DataFrame] =
+    try Some(spark.read.parquet(dir)
+      .withColumn("batch_id", col("batch_id").cast("long")))
+    catch { case _: AnalysisException => None }
 
   /** The directory holding a store's consolidated segments + manifests
     * — a SIBLING of the batch store, so parquet partition discovery
@@ -186,7 +210,7 @@ private[graft] object MicroBatchIngest {
     * partitions are swept best-effort (a crash leaves them ignored by
     * the horizon filter, re-swept next time — self-healing, never
     * double-counted). `batch_id` survives as a DATA column in the
-    * segment, so [[storeOrElse]] stays row-identical before and after.
+    * segment, so [[readStore]] stays row-identical before and after.
     *
     * `throughBatch` must lag the stream's replay horizon (batches that
     * can still be redelivered must stay partition-granular — exactly
@@ -224,20 +248,11 @@ private[graft] object MicroBatchIngest {
     val prior = latestCompaction(spark, dir)
     val priorHorizon = prior.map(_._2).getOrElse(-1L)
     if (throughBatch <= priorHorizon) return priorHorizon
-    val recent =
-      try Some(spark.read.parquet(dir))
-      catch { case _: org.apache.spark.sql.AnalysisException => None }
-    if (recent.isEmpty && prior.isEmpty) return priorHorizon // nothing yet
-    val fresh = recent.map(_
-      .withColumn("batch_id", col("batch_id").cast("long"))
-      .where(col("batch_id") > priorHorizon &&
-        col("batch_id") <= throughBatch))
-    val folded = (prior.map(p => spark.read.parquet(p._3)), fresh) match {
-      case (Some(cons), Some(f)) => cons.unionByName(f)
-      case (Some(cons), None)    => cons
-      case (None, Some(f))       => f
-      case _                     => return priorHorizon
-    }
+    // The segment holds only batches at or below its horizon, so this
+    // keeps it whole and adds the partitions in (priorHorizon, through].
+    val folded = standing(spark, dir, prior)
+      .getOrElse(return priorHorizon) // nothing yet
+      .where(col("batch_id") <= throughBatch)
     val seg = SegmentStore.fresh("seg")
     folded.write.mode(SaveMode.Overwrite)
       .parquet(new Path(c, seg).toString)
@@ -305,10 +320,7 @@ private[graft] object MicroBatchIngest {
       var dropped = 0L
       // Batch partitions the readers actually consult (> compHorizon).
       val recent =
-        try Some(spark.read.parquet(dir)
-          .withColumn("batch_id", col("batch_id").cast("long"))
-          .where(col("batch_id") > compHorizon))
-        catch { case _: org.apache.spark.sql.AnalysisException => None }
+        partitions(spark, dir).map(_.where(col("batch_id") > compHorizon))
       recent.foreach { r =>
         val hit = r.join(v, Seq(idCol), "left_semi")
           .groupBy("batch_id").count().collect()
@@ -326,11 +338,7 @@ private[graft] object MicroBatchIngest {
             .join(v, Seq(idCol), "left_anti"))
           val kept = survivors.select("batch_id").distinct()
             .collect().map(_.getLong(0)).toSet
-          survivors.write
-            .option("partitionOverwriteMode", "dynamic")
-            .mode(SaveMode.Overwrite)
-            .partitionBy("batch_id")
-            .parquet(dir)
+          overwritePartitions(survivors, dir, "batch_id")
           // Partitions whose every row was a victim: dynamic overwrite
           // wrote nothing for them — remove them whole.
           (hit.keySet -- kept).foreach(b =>

@@ -42,7 +42,6 @@ final class PqIvfIngest(
 
   /** One micro-batch → one code segment. Returns rows appended. */
   override def processBatch(batch: DataFrame, batchId: Long): Long = {
-    if (batch.isEmpty) return 0L
     Materialize.scoped { scope =>
       val prepared = scope.pin(batch.select(col(idCol).as("id"),
         expr(s"transform($vecCol, x -> CAST(x AS DOUBLE))").as("__v")))

@@ -76,7 +76,6 @@ final class SemanticDriftIngest(
   /** One micro-batch → its O(K) occupancy partition. Returns the
     * batch's vector count (0 ⇒ nothing written). */
   override def processBatch(batch: DataFrame, batchId: Long): Long = {
-    if (batch.isEmpty) return 0L
     // total + write read one materialization; blocks released per
     // trigger.
     Materialize.scoped { scope =>
@@ -90,13 +89,8 @@ final class SemanticDriftIngest(
 
   /** The standing per-batch occupancy store (cid, c, batch_id). */
   def store(): DataFrame =
-    MicroBatchIngest.storeOrElse(spark, storeDir,
-      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-        StructType(Seq(
-          StructField("cid", LongType),
-          StructField("c", LongType, nullable = false),
-          StructField("batch_id", LongType)))))
-      .withColumn("batch_id", col("batch_id").cast("long"))
+    MicroBatchIngest.readStore(spark, storeDir, StructType(Seq(
+      StructField("cid", LongType), StructField("c", LongType, nullable = false))))
 
   /** The accumulated semantic-drift report — the batch
     * `q_report_semantic_drift` contract served from the store: per

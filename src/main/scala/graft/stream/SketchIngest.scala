@@ -85,22 +85,14 @@ final class SketchIngest(
     }
 
   /** The standing store (empty-schema'd before the first batch lands,
-    * with `sliceType` keeping the pre- and post-data schemas identical).
-    * `batch_id` is a PARTITION column, so once data lands its type comes
-    * back from directory-name inference (int when values fit) — the cast
-    * pins it to the declared long so the pre- and post-data schema
-    * contract actually holds for every consumer. */
+    * with `sliceType` keeping the pre- and post-data schemas identical). */
   def store(): DataFrame =
-    MicroBatchIngest.storeOrElse(spark, storeDir,
-      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-        StructType(Seq(
-          StructField(sliceCol, sliceType),
-          StructField("n_rows", LongType, nullable = false),
-          StructField("distinct_sk", BinaryType, nullable = false),
-          StructField("metric_sk", BinaryType, nullable = false),
-          StructField("freq_sk", BinaryType, nullable = false),
-          StructField("batch_id", LongType)))))
-      .withColumn("batch_id", col("batch_id").cast("long"))
+    MicroBatchIngest.readStore(spark, storeDir, StructType(Seq(
+      StructField(sliceCol, sliceType),
+      StructField("n_rows", LongType, nullable = false),
+      StructField("distinct_sk", BinaryType, nullable = false),
+      StructField("metric_sk", BinaryType, nullable = false),
+      StructField("freq_sk", BinaryType, nullable = false))))
 
   /** Merge the per-batch slice rows down to one row per slice — the
     * read path every consumer starts from. Never touches base data. */

@@ -37,7 +37,7 @@ final class StreamEngine(
     checkpointLocation: Option[String] = None,
     onBatch: (Long, Long) => Unit = (_, _) => (),
     epochLedger: Option[String] = None,
-    ledgerKeep: Int = 1000) extends Serializable {
+    ledgerKeep: Int = 1000) extends MicroBatchIngest with Serializable {
 
   /** Per-micro-batch body (S7). Persist once; count is the logging action
     * the reference performs (P8) and doubles as materialization and as the
@@ -61,24 +61,26 @@ final class StreamEngine(
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
-  private[stream] def processBatch(batch: DataFrame, batchId: Long): Unit = {
+  /** Returns the rows written (0 for an empty or a replayed batch). */
+  override def processBatch(batch: DataFrame, batchId: Long): Long = {
     if (epochLedger.isDefined) {
       val (fs, p) = ledgerPath(batch.sparkSession, batchId)
       if (fs.exists(p)) {
         System.err.println(s"[stream] batch $batchId already committed; skipping replay")
-        return
+        return 0L
       }
     }
     // P7 emptiness guard on the cached count (P8), so no job probes the
     // source first: an empty result — an empty source batch, or every row
     // dropped by the transform — reaches neither `onBatch` nor a sink.
-    Materialize.scoped { scope =>
+    val n = Materialize.scoped { scope =>
       val out = scope.cached(transform(batch))
-      val n = out.count()
-      if (n > 0) {
-        onBatch(batchId, n)
+      val rows = out.count()
+      if (rows > 0) {
+        onBatch(batchId, rows)
         sink.write(out)
       }
+      rows
     }
     if (epochLedger.isDefined) {
       val (fs, p) = ledgerPath(batch.sparkSession, batchId)
@@ -86,6 +88,7 @@ final class StreamEngine(
       fs.create(p, true).close()
       pruneLedger(fs, p.getParent, batchId)
     }
+    n
   }
 
   /** Ledger retention: markers more than `ledgerKeep` epochs behind the
@@ -103,15 +106,10 @@ final class StreamEngine(
     graft.ops.VersionedPaths.pruneOlderThan(
       fs, dir, "epoch-", dirsOnly = false, latest, ledgerKeep, "stream-ledger")
 
-  /** Start the query over any streaming DataFrame (Kafka, file, memory). */
-  def start(source: DataFrame, queryName: String = "graft-stream"): StreamingQuery = {
-    val w = source.writeStream
-      .queryName(queryName)
-      .foreachBatch((b: DataFrame, id: Long) => processBatch(b, id))
-      .trigger(trigger)                                    // T1
-    checkpointLocation.foreach(w.option("checkpointLocation", _)) // T4
-    w.start()
-  }
+  /** Start the query over any streaming DataFrame (Kafka, file, memory)
+    * under this engine's trigger (T1) and checkpoint (T4). */
+  def start(source: DataFrame, queryName: String = "graft-stream"): StreamingQuery =
+    start(source, queryName, trigger, checkpointLocation)
 }
 
 object StreamEngine {

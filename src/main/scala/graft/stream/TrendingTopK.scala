@@ -1,11 +1,11 @@
 package graft.stream
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.ops.Materialize.Pinning
+import graft.ops.Materialize
 import graft.plans.GraftOps
 
 /** T5+/O2 streaming composition (absent in the reference, whose dashboard
@@ -41,7 +41,8 @@ final class TrendingTopK(
     keyCol: String, k: Int, silverDir: String, goldDir: String,
     window: String = "1 hour", watermark: String = "2 hours",
     trigger: Trigger = Trigger.ProcessingTime("20 seconds"),
-    checkpointLocation: Option[String] = None) extends Serializable {
+    checkpointLocation: Option[String] = None)
+    extends MicroBatchIngest with Serializable {
 
   /** Window start is stored as epoch SECONDS (long): a timestamp-typed
     * partition column round-trips through directory names as a string
@@ -59,73 +60,61 @@ final class TrendingTopK(
       .select(col("window.start").cast("long").as("ws"), col(keyCol), col("n"))
   }
 
-  /** One micro-batch: replace-merge `updates` into silver, rebuild gold
-    * top-K for the touched windows. Public-in-package so the spec can
-    * drive it on batch frames too. */
-  private[stream] def mergeBatch(updates0: DataFrame): Unit = {
-    if (updates0.isEmpty) return
-    val spark = updates0.sparkSession
-    // Materialize BEFORE reading the store this write will replace — an
-    // overwrite that still has a lazy scan of its own target corrupts it.
-    val updates = updates0.pinned
-    // Two-tier partition pruning without a data-sized driver transfer:
-    //  - STATIC tier: the touched windows all fall inside the batch's
-    //    [min ws, max ws] band (bounded by the watermark horizon, never
-    //    by stream age), and those two scalars — O(1) driver data, the
-    //    same class of read as an AQE statistic — prune the
-    //    ws-partitioned silver scan with a literal partition filter.
-    //    (A broadcast semi-join alone does NOT dynamic-partition-prune
-    //    here: Spark's DPP rule requires a selective filter on the
-    //    build side, and a distinct over a checkpointed RDD has none —
-    //    so without the band filter every batch would rescan the whole
-    //    store, O(stream age).)
-    //  - EXACT tier: the broadcast semi-join against the in-band rows
-    //    refines membership to exactly the touched windows.
-    val Row(wsLo: Long, wsHi: Long) =
-      updates.agg(min("ws"), max("ws")).head()
-    val touched = updates.select("ws").distinct()
-    val silverPath = new Path(silverDir)
-    val fs = silverPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val merged = (if (fs.exists(silverPath)) {
-      // Partition values re-infer as int when they fit; normalize to long.
-      val existing = spark.read.parquet(silverDir)
-        .where(col("ws") >= wsLo && col("ws") <= wsHi)
-        .withColumn("ws", col("ws").cast("long"))
-        .join(broadcast(touched), Seq("ws"), "left_semi")
-      // Batch rows win (they hold the full running count); silver keys the
-      // batch did not touch survive via the anti-join.
-      existing.join(updates, Seq("ws", keyCol), "left_anti").unionByName(updates)
-    } else updates).pinned
-    overwriteTouched(merged, silverDir)
-    overwriteTouched(
-      GraftOps.topKPerKey(merged, Seq("ws"), Seq("n" -> false, keyCol -> true), k),
-      goldDir)
-  }
+  override protected def outputMode: String = "update"
 
-  /** Dynamic partition overwrite: only the windows present in `df` are
-    * replaced; all other window partitions are untouched. */
-  private def overwriteTouched(df: DataFrame, dir: String): Unit = {
-    val spark = df.sparkSession
-    val conf = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.get(conf)
-    try {
-      spark.conf.set(conf, "dynamic")
-      df.write.mode("overwrite").partitionBy("ws").parquet(dir)
-    } finally spark.conf.set(conf, prev)
-  }
+  /** One micro-batch of update-mode rows: replace-merge them into
+    * silver, rebuild gold top-K for the touched windows. Returns the
+    * rows merged (0: nothing written). */
+  override def processBatch(batch: DataFrame, batchId: Long): Long =
+    Materialize.scoped { scope =>
+      // Materialize BEFORE reading the store this write will replace — an
+      // overwrite that still has a lazy scan of its own target corrupts it.
+      val updates = scope.pin(batch)
+      // Two-tier partition pruning without a data-sized driver transfer:
+      //  - STATIC tier: the touched windows all fall inside the batch's
+      //    [min ws, max ws] band (bounded by the watermark horizon, never
+      //    by stream age), and those two scalars — O(1) driver data, the
+      //    same class of read as an AQE statistic — prune the
+      //    ws-partitioned silver scan with a literal partition filter.
+      //    (A broadcast semi-join alone does NOT dynamic-partition-prune
+      //    here: Spark's DPP rule requires a selective filter on the
+      //    build side, and a distinct over a checkpointed RDD has none —
+      //    so without the band filter every batch would rescan the whole
+      //    store, O(stream age).)
+      //  - EXACT tier: the broadcast semi-join against the in-band rows
+      //    refines membership to exactly the touched windows.
+      // The same aggregate's count is the emptiness guard.
+      val band = updates.agg(count(lit(1)), min("ws"), max("ws")).head()
+      val n = band.getLong(0)
+      if (n > 0) {
+        val (wsLo, wsHi) = (band.getLong(1), band.getLong(2))
+        val touched = updates.select("ws").distinct()
+        val spark = batch.sparkSession
+        val silverPath = new Path(silverDir)
+        val fs = silverPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val merged = scope.pin(if (fs.exists(silverPath)) {
+          // Partition values re-infer as int when they fit; normalize to long.
+          val existing = spark.read.parquet(silverDir)
+            .where(col("ws") >= wsLo && col("ws") <= wsHi)
+            .withColumn("ws", col("ws").cast("long"))
+            .join(broadcast(touched), Seq("ws"), "left_semi")
+          // Batch rows win (they hold the full running count); silver keys
+          // the batch did not touch survive via the anti-join.
+          existing.join(updates, Seq("ws", keyCol), "left_anti").unionByName(updates)
+        } else updates)
+        MicroBatchIngest.overwritePartitions(merged, silverDir, "ws")
+        MicroBatchIngest.overwritePartitions(
+          GraftOps.topKPerKey(merged, Seq("ws"), Seq("n" -> false, keyCol -> true), k),
+          goldDir, "ws")
+      }
+      n
+    }
 
   /** Start the maintenance query over any streaming frame with an
     * event-time column. */
   def start(stream: DataFrame, tsCol: String = "ts",
-            queryName: String = "graft-trending"): StreamingQuery = {
-    val w = counts(stream, tsCol).writeStream
-      .queryName(queryName)
-      .outputMode("update")
-      .foreachBatch((b: DataFrame, _: Long) => mergeBatch(b))
-      .trigger(trigger)
-    checkpointLocation.foreach(w.option("checkpointLocation", _))
-    w.start()
-  }
+            queryName: String = "graft-trending"): StreamingQuery =
+    start(counts(stream, tsCol), queryName, trigger, checkpointLocation)
 
   /** The continuously-maintained result: top-`k` keys per window. */
   def gold(spark: SparkSession): DataFrame =

@@ -2,6 +2,7 @@ package graft.stream
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.ops.Materialize
 
@@ -64,12 +65,8 @@ final class WinnowIngest(
       .distinct()
 
   /** The standing index; empty-schema'd before the first batch lands. */
-  private def index(): DataFrame =
-    MicroBatchIngest.storeOrElse(spark, indexDir,
-      spark.range(0)
-        .select(lit(0L).as(idCol), lit(0L).as("wmin"), lit(0L).as("batch_id"))
-        .where(lit(false)))
-      .withColumn("batch_id", col("batch_id").cast("long"))
+  private[stream] def index(): DataFrame =
+    MicroBatchIngest.readStore(spark, indexDir, longs(idCol, "wmin"))
 
   /** One micro-batch → one flag row per document. Returns the number of
     * documents flagged (n_shared > 0). */
@@ -102,10 +99,9 @@ final class WinnowIngest(
 
   /** The standing flag log — one row per (document, delivering batch). */
   def flagLog(): DataFrame =
-    MicroBatchIngest.storeOrElse(spark, flagDir,
-      spark.range(0)
-        .select(lit(0L).as(idCol), lit(0L).as("n_fps"), lit(0L).as("n_shared"),
-          lit(0L).as("first_match_id"), lit(0L).as("batch_id"))
-        .where(lit(false)))
-      .withColumn("batch_id", col("batch_id").cast("long"))
+    MicroBatchIngest.readStore(spark, flagDir,
+      longs(idCol, "n_fps", "n_shared", "first_match_id"))
+
+  private def longs(names: String*): StructType =
+    StructType(names.map(StructField(_, LongType)))
 }

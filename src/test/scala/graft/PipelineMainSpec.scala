@@ -24,7 +24,7 @@ class PipelineMainSpec extends SparkSpec {
     * that as ABSENT (retrain overwrites it), or the pipeline would skip
     * training forever while the stream fails at load on every restart. */
   test("a metadata-only husk from an interrupted save triggers retraining") {
-    val root = Files.createTempDirectory("graft-pipeline-husk").toString
+    val root = tempDir("graft-pipeline-husk").toString
     val meta = new java.io.File(s"$root/model/metadata"); meta.mkdirs()
     Files.writeString(meta.toPath.resolve("part-00000"),
       """{"class":"org.apache.spark.ml.PipelineModel","timestamp":0}""")
@@ -40,7 +40,7 @@ class PipelineMainSpec extends SparkSpec {
     * harshest form of the race: the dir is GONE by the time the stream
     * starts, and inference still works off the validated artifact. */
   test("the validated model is the served model — no second load from the dir") {
-    val root = Files.createTempDirectory("graft-pipeline-preload").toString
+    val root = tempDir("graft-pipeline-preload").toString
     val corpus = s"$root/corpus.json"
     val inDir = new java.io.File(s"$root/in"); inDir.mkdirs()
     Files.writeString(java.nio.file.Path.of(corpus),
@@ -82,7 +82,7 @@ class PipelineMainSpec extends SparkSpec {
     *      marker): replay re-writes that one batch — at-least-once at
     *      the sink, served by the retrained model, rows stay valid. */
   test("composed recovery: retrain + ledgered crash-replay through PipelineMain") {
-    val root = Files.createTempDirectory("graft-pipeline-recover").toString
+    val root = tempDir("graft-pipeline-recover").toString
     val corpus = s"$root/corpus.json"
     val inDir = new java.io.File(s"$root/in"); inDir.mkdirs()
     val ledger = s"$root/ledger"
@@ -142,7 +142,7 @@ class PipelineMainSpec extends SparkSpec {
   }
 
   test("cold start trains then streams; warm restart skips training") {
-    val root = Files.createTempDirectory("graft-pipeline").toString
+    val root = tempDir("graft-pipeline").toString
     val corpus = s"$root/corpus.json"
     val inDir = new java.io.File(s"$root/in"); inDir.mkdirs()
     Files.writeString(java.nio.file.Path.of(corpus),

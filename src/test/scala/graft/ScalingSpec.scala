@@ -16,7 +16,7 @@ class ScalingSpec extends SparkSpec {
   private val src = "/root/testdata/sf0.001"
 
   test("amplify multiplies rows AND key cardinality, never verbatim dups") {
-    val dst = Files.createTempDirectory("graft-scale-spec").toString
+    val dst = tempDir("graft-scale-spec").toString
     val factor = 3
     Scaling.amplify(spark, src, dst, factor)
     for (t <- Seq("documents", "events", "lineitem")) {

@@ -6,6 +6,11 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for all specs (one JVM — Test/fork := true). */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** A fresh directory under java.io.tmpdir, deleted with its contents
+    * when the test JVM exits. Specs make their temp dirs only here. */
+  def tempDir(prefix: String): java.nio.file.Path =
+    graft.queries.Tables.tempDir(prefix)
 }
 
 object SparkSpec {
@@ -17,7 +22,7 @@ object SparkSpec {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+        graft.queries.Tables.tempDir("graft-warehouse").toString)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

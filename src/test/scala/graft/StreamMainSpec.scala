@@ -22,7 +22,7 @@ class StreamMainSpec extends SparkSpec {
   }
 
   test("StreamMain.run streams JSON envelopes through model inference into the parquet sink") {
-    val root = Files.createTempDirectory("graft-streammain").toString
+    val root = tempDir("graft-streammain").toString
     val corpus = s"$root/corpus.json"
     val modelDir = s"$root/model"
     val inDir = new java.io.File(s"$root/in"); inDir.mkdirs()

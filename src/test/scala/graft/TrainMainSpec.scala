@@ -22,7 +22,7 @@ class TrainMainSpec extends SparkSpec {
   }
 
   test("TrainMain.run fits and saves the full pipeline from a multiLine JSON corpus") {
-    val dir = Files.createTempDirectory("graft-train")
+    val dir = tempDir("graft-train")
     val corpus = dir.resolve("corpus.json")
     Files.writeString(corpus, jsonCorpus(60))
     val modelOut = dir.resolve("model").toString
@@ -45,7 +45,7 @@ class TrainMainSpec extends SparkSpec {
   }
 
   test("readCorpus keeps the reference schema (no inference pass)") {
-    val dir = Files.createTempDirectory("graft-train-schema")
+    val dir = tempDir("graft-train-schema")
     val corpus = dir.resolve("corpus.json")
     Files.writeString(corpus, jsonCorpus(3))
     val df = TrainMain.readCorpus(spark, corpus.toString)

@@ -1,7 +1,5 @@
 package graft.gov
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -21,7 +19,7 @@ class ForgetPipelineSpec extends SparkSpec {
   private lazy val corpus = emb.where(col("vec_id") >= 5)
 
   private def tmp(prefix: String) =
-    Files.createTempDirectory(prefix).toString + "/x"
+    tempDir(prefix).toString + "/x"
 
   test("one request reaches every store; ledger commits after all acks") {
     val ivf = new graft.sim.IvfIndex(spark, tmp("fp_ivf"))

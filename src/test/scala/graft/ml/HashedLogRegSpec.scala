@@ -73,8 +73,7 @@ class HashedLogRegSpec extends SparkSpec {
       labels.where(!isVal), buckets = 257, iters = 30, lr = 5.0)
     assert(trained.w.length <= HashedLogReg.LiteralMaxBuckets) // literal path
     // Persist + reload: the stored weights ARE the trained weights.
-    val store = java.nio.file.Files
-      .createTempDirectory("graft-hlr-model").toString + "/m"
+    val store = tempDir("graft-hlr-model").toString + "/m"
     HashedLogReg.save(trained, store)
     val loaded = HashedLogReg.load(spark, store)
     assert(loaded.buckets == trained.buckets)
@@ -111,8 +110,7 @@ class HashedLogRegSpec extends SparkSpec {
 
   test("load rejects a torn store that lost its HIGHEST buckets") {
     val m = HashedLogReg.Model(4, 0.5, Array(0.1, 0.2, 0.3, 0.4))
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-hlr-torn").toString
+    val base = tempDir("graft-hlr-torn").toString
     HashedLogReg.save(m, base + "/full")
     // Round-trip sanity under the explicit-width format.
     assert(HashedLogReg.load(spark, base + "/full").w.length == 4)

@@ -22,7 +22,7 @@ class ModelReloaderSpec extends SparkSpec {
   }
 
   test("reload happens exactly when the saved model changes; bad overwrite keeps serving") {
-    val root = Files.createTempDirectory("graft-reload").toString
+    val root = tempDir("graft-reload").toString
     val modelDir = s"$root/model"
     Files.writeString(java.nio.file.Path.of(s"$root/c1.json"), corpus(60, 0))
     TrainMain.run(spark, s"$root/c1.json", modelDir)
@@ -65,7 +65,7 @@ class ModelReloaderSpec extends SparkSpec {
     * rewriting the metadata part file with same-length bytes and pinning
     * the mtime back to its previous value. */
   test("fingerprint changes on a same-size same-mtime metadata rewrite") {
-    val root = Files.createTempDirectory("graft-reload-fp").toString
+    val root = tempDir("graft-reload-fp").toString
     val meta = new java.io.File(s"$root/model/metadata"); meta.mkdirs()
     val part = meta.toPath.resolve("part-00000")
     Files.writeString(part, """{"uid":"pipeline_aaaa","timestamp":1111}""")

@@ -1,7 +1,5 @@
 package graft.ml
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions.col
 
 import graft.SparkSpec
@@ -19,7 +17,7 @@ class NgramLmSpec extends SparkSpec {
     graft.queries.Tables.t(spark, dir, "documents"), "doc_id")
 
   private def fitOnTrain(): NgramLm.Model = {
-    val d = Files.createTempDirectory("nglm").toString + "/lm"
+    val d = tempDir("nglm").toString + "/lm"
     NgramLm.fit(split.where(col("split") === "train"), "text", d)
     NgramLm.load(spark, d)
   }
@@ -34,7 +32,7 @@ class NgramLmSpec extends SparkSpec {
   }
 
   test("loading twice serves identical scores (deterministic store)") {
-    val d = Files.createTempDirectory("nglm-det").toString + "/lm"
+    val d = tempDir("nglm-det").toString + "/lm"
     NgramLm.fit(split.where(col("split") === "train"), "text", d)
     val valDocs = split.where(col("split") === "val")
     val a = NgramLm.load(spark, d).score(valDocs, "doc_id", "text")
@@ -57,7 +55,7 @@ class NgramLmSpec extends SparkSpec {
     // trains on the FULL corpus and scores it against itself; a store
     // fitted on the same corpus must serve the identical statistic.
     val full = graft.queries.Tables.t(spark, dir, "documents")
-    val d = Files.createTempDirectory("nglm-bi").toString + "/lm"
+    val d = tempDir("nglm-bi").toString + "/lm"
     NgramLm.fit(full, "text", d)
     val served = NgramLm.load(spark, d)
       .scoreBigrams(full, "doc_id", "text")
@@ -70,10 +68,10 @@ class NgramLmSpec extends SparkSpec {
   test("bigram append is exact: base+delta == from-scratch fit (order 2)") {
     val full = graft.queries.Tables.t(spark, dir, "documents")
     val half = 250
-    val d = Files.createTempDirectory("nglm-biapp").toString + "/lm"
+    val d = tempDir("nglm-biapp").toString + "/lm"
     NgramLm.fit(full.where(col("doc_id") < half), "text", d)
     NgramLm.load(spark, d).append(full.where(col("doc_id") >= half), "text")
-    val ref = Files.createTempDirectory("nglm-biapp2").toString + "/lm"
+    val ref = tempDir("nglm-biapp2").toString + "/lm"
     NgramLm.fit(full, "text", ref)
     val m = NgramLm.load(spark, d)
     val r = NgramLm.load(spark, ref)
@@ -88,10 +86,10 @@ class NgramLmSpec extends SparkSpec {
   test("bigram forget == a fit on the redacted corpus (order 2)") {
     val full = graft.queries.Tables.t(spark, dir, "documents")
     val victims = full.orderBy("doc_id").limit(50)
-    val d = Files.createTempDirectory("nglm-bifgt").toString + "/lm"
+    val d = tempDir("nglm-bifgt").toString + "/lm"
     NgramLm.fit(full, "text", d)
     NgramLm.load(spark, d).forget(victims, "text")
-    val redacted = Files.createTempDirectory("nglm-bifgt2").toString + "/lm"
+    val redacted = tempDir("nglm-bifgt2").toString + "/lm"
     val victimIds = victims.select("doc_id").as[Long].collect().toSet
     NgramLm.fit(full.where(!col("doc_id").isin(victimIds.toSeq: _*)),
       "text", redacted)
@@ -109,7 +107,7 @@ class NgramLmSpec extends SparkSpec {
   test("store-served TRIGRAM KN scores equal the inline graded query " +
       "bit-for-bit (order 3)") {
     val full = graft.queries.Tables.t(spark, dir, "documents")
-    val d = Files.createTempDirectory("nglm-tri").toString + "/lm"
+    val d = tempDir("nglm-tri").toString + "/lm"
     NgramLm.fit(full, "text", d)
     val served = NgramLm.load(spark, d)
       .scoreKneserNey3(full, "doc_id", "text")
@@ -124,10 +122,10 @@ class NgramLmSpec extends SparkSpec {
     val full = graft.queries.Tables.t(spark, dir, "documents")
     val half = 250
     // APPEND: base+delta == from-scratch on the trigram table.
-    val d = Files.createTempDirectory("nglm-triapp").toString + "/lm"
+    val d = tempDir("nglm-triapp").toString + "/lm"
     NgramLm.fit(full.where(col("doc_id") < half), "text", d)
     NgramLm.load(spark, d).append(full.where(col("doc_id") >= half), "text")
-    val ref = Files.createTempDirectory("nglm-triapp2").toString + "/lm"
+    val ref = tempDir("nglm-triapp2").toString + "/lm"
     NgramLm.fit(full, "text", ref)
     def tri(p: String) = NgramLm.load(spark, p).trigrams()
       .orderBy("w1", "w2", "w3").collect().toSeq
@@ -138,7 +136,7 @@ class NgramLmSpec extends SparkSpec {
     NgramLm.load(spark, d).forget(victims, "text")
     val victimIds = victims.select("doc_id").as[Long].collect().toSet
     val keep = full.where(!col("doc_id").isin(victimIds.toSeq: _*))
-    val redacted = Files.createTempDirectory("nglm-trifgt").toString + "/lm"
+    val redacted = tempDir("nglm-trifgt").toString + "/lm"
     NgramLm.fit(keep, "text", redacted)
     assert(tri(d) == tri(redacted))
     assert(NgramLm.load(spark, d).scoreKneserNey3(keep, "doc_id", "text")
@@ -157,7 +155,7 @@ class NgramLmSpec extends SparkSpec {
 
   test("two-token docs contribute bigrams but no trigrams; scored " +
       "short docs yield no order-3 row") {
-    val d = Files.createTempDirectory("nglm-two").toString + "/lm"
+    val d = tempDir("nglm-two").toString + "/lm"
     NgramLm.fit(Seq((1L, "alpha beta"), (2L, "beta gamma delta"))
       .toDF("doc_id", "text"), "text", d)
     val m = NgramLm.load(spark, d)
@@ -169,7 +167,7 @@ class NgramLmSpec extends SparkSpec {
   }
 
   test("single-token docs contribute unigrams but no bigrams") {
-    val d = Files.createTempDirectory("nglm-one").toString + "/lm"
+    val d = tempDir("nglm-one").toString + "/lm"
     NgramLm.fit(Seq((1L, "alpha"), (2L, "beta gamma")).toDF("doc_id", "text"),
       "text", d)
     val m = NgramLm.load(spark, d)
@@ -183,7 +181,7 @@ class NgramLmSpec extends SparkSpec {
   }
 
   test("a torn store (lost vocab part-file) fails load loudly") {
-    val d = Files.createTempDirectory("nglm-torn").toString + "/lm"
+    val d = tempDir("nglm-torn").toString + "/lm"
     NgramLm.fit(split.where(col("split") === "train"), "text", d)
     NgramLm.load(spark, d) // intact store loads
     // Re-lay the vocab across two files (a small fit coalesces to one),
@@ -205,10 +203,10 @@ class NgramLmSpec extends SparkSpec {
     val train = split.where(col("split") === "train")
     val valDocs = split.where(col("split") === "val")
     val half = 250
-    val d = Files.createTempDirectory("nglm-app").toString + "/lm"
+    val d = tempDir("nglm-app").toString + "/lm"
     NgramLm.fit(train.where(col("doc_id") < half), "text", d)
     NgramLm.load(spark, d).append(train.where(col("doc_id") >= half), "text")
-    val full = Files.createTempDirectory("nglm-app2").toString + "/lm"
+    val full = tempDir("nglm-app2").toString + "/lm"
     NgramLm.fit(train, "text", full)
     assert(NgramLm.load(spark, d).score(valDocs, "doc_id", "text")
         .orderBy("doc_id").collect().toSeq ==
@@ -220,10 +218,10 @@ class NgramLmSpec extends SparkSpec {
     val train = split.where(col("split") === "train")
     val valDocs = split.where(col("split") === "val")
     val victims = train.orderBy("doc_id").limit(50)
-    val d = Files.createTempDirectory("nglm-fgt").toString + "/lm"
+    val d = tempDir("nglm-fgt").toString + "/lm"
     NgramLm.fit(train, "text", d)
     NgramLm.load(spark, d).forget(victims, "text")
-    val redacted = Files.createTempDirectory("nglm-fgt2").toString + "/lm"
+    val redacted = tempDir("nglm-fgt2").toString + "/lm"
     val victimIds = victims.select("doc_id").as[Long].collect().toSet
     NgramLm.fit(train.where(!col("doc_id").isin(victimIds.toSeq: _*)),
       "text", redacted)
@@ -242,7 +240,7 @@ class NgramLmSpec extends SparkSpec {
   test("compact folds append+forget segments; answers unchanged") {
     val train = split.where(col("split") === "train")
     val valDocs = split.where(col("split") === "val")
-    val d = Files.createTempDirectory("nglm-cpt").toString + "/lm"
+    val d = tempDir("nglm-cpt").toString + "/lm"
     NgramLm.fit(train.where(col("doc_id") < 250), "text", d)
     val m0 = NgramLm.load(spark, d)
     m0.append(train.where(col("doc_id") >= 250), "text")
@@ -261,7 +259,7 @@ class NgramLmSpec extends SparkSpec {
   }
 
   test("a broken forget contract (never-ingested text) fails loudly") {
-    val d = Files.createTempDirectory("nglm-neg").toString + "/lm"
+    val d = tempDir("nglm-neg").toString + "/lm"
     NgramLm.fit(Seq((1L, "alpha beta alpha")).toDF("doc_id", "text"),
       "text", d)
     val m = NgramLm.load(spark, d)
@@ -276,7 +274,7 @@ class NgramLmSpec extends SparkSpec {
   }
 
   test("OOV terms score the single unseen-term surprisal") {
-    val d = Files.createTempDirectory("nglm-oov").toString + "/lm"
+    val d = tempDir("nglm-oov").toString + "/lm"
     // Tiny fit corpus: T = 4 tokens, V = 3 types.
     NgramLm.fit(Seq((1L, "alpha beta alpha gamma")).toDF("doc_id", "text"),
       "text", d)
@@ -317,7 +315,7 @@ class NgramLmSpec extends SparkSpec {
     // as serving for years); unigram scoring works, bigram scoring
     // finds no known transitions (the documented NULL/absent
     // semantics), and the first compact() rewrites the full format.
-    val base = Files.createTempDirectory("nglm-legacy").toString + "/lm"
+    val base = tempDir("nglm-legacy").toString + "/lm"
     val docs = graft.queries.Tables.t(spark, dir, "documents")
       .where(col("doc_id") < 100)
     // Build a fresh store, then surgically strip it to the legacy form.
@@ -353,7 +351,7 @@ class NgramLmSpec extends SparkSpec {
     assert(m.bigrams().count() > 0, "compact did not realize order 2")
     // The migrated store's bigram table equals a fresh order-2 fit on
     // the appended slice alone (the legacy slice contributed none).
-    val ref = Files.createTempDirectory("nglm-legacy-ref").toString + "/lm"
+    val ref = tempDir("nglm-legacy-ref").toString + "/lm"
     NgramLm.fit(graft.queries.Tables.t(spark, dir, "documents")
       .where(col("doc_id") >= 100 && col("doc_id") < 200), "text", ref)
     assert(m.bigrams().orderBy("w1", "w2").collect().toSeq ==
@@ -376,7 +374,7 @@ class NgramLmSpec extends SparkSpec {
     val newer = all.where(col("doc_id") >= 100 && col("doc_id") < 200)
     val victims = all.where(col("doc_id") >= 100 && col("doc_id") < 130)
       .localCheckpoint(true)
-    val base = Files.createTempDirectory("nglm-trileg").toString + "/lm"
+    val base = tempDir("nglm-trileg").toString + "/lm"
     NgramLm.fit(old, "text", base)
     // Strip the segment to the order-2 vintage: no tri/, 4-column meta.
     val segDir = new java.io.File(s"$base/segments").listFiles()
@@ -403,7 +401,7 @@ class NgramLmSpec extends SparkSpec {
     // Orders 1-2 equal a refit on the redacted corpus, bit-for-bit.
     val redacted = old.unionByName(
       all.where(col("doc_id") >= 130 && col("doc_id") < 200))
-    val ref = Files.createTempDirectory("nglm-trileg-ref").toString + "/lm"
+    val ref = tempDir("nglm-trileg-ref").toString + "/lm"
     NgramLm.fit(redacted, "text", ref)
     val refM = NgramLm.load(spark, ref)
     assert(served.vocab().orderBy("term").collect().toSeq ==
@@ -428,7 +426,7 @@ class NgramLmSpec extends SparkSpec {
     val redacted2 = old.unionByName(
       all.where(col("doc_id") >= 140 && col("doc_id") < 200))
     NgramLm.fit(redacted2, "text", base)
-    val ref2 = Files.createTempDirectory("nglm-trileg-ref2").toString + "/lm"
+    val ref2 = tempDir("nglm-trileg-ref2").toString + "/lm"
     NgramLm.fit(redacted2, "text", ref2)
     assert(NgramLm.load(spark, base).trigrams()
         .orderBy("w1", "w2", "w3").collect().toSeq ==
@@ -450,7 +448,7 @@ class NgramLmSpec extends SparkSpec {
     // partial trigram ingest folded into one segment leaves behind.
     val all = graft.queries.Tables.t(spark, dir, "documents")
       .where(col("doc_id") < 200)
-    val base = Files.createTempDirectory("nglm-preinc").toString + "/lm"
+    val base = tempDir("nglm-preinc").toString + "/lm"
     NgramLm.fit(all, "text", base)
     val segDir = new java.io.File(s"$base/segments").listFiles()
       .filter(_.getName.startsWith("seg-")).head
@@ -488,7 +486,7 @@ class NgramLmSpec extends SparkSpec {
       "totals audit missed the pre-marker-compacted legacy store")
     // A healthy store trips nothing (the zero-false-positive contract
     // that lets the audit sit inside every forget).
-    val refH = Files.createTempDirectory("nglm-preinc-h").toString + "/lm"
+    val refH = tempDir("nglm-preinc-h").toString + "/lm"
     NgramLm.fit(all, "text", refH)
     assert(NgramLm.load(spark, refH).auditVintage().isEmpty)
 
@@ -497,7 +495,7 @@ class NgramLmSpec extends SparkSpec {
     val victims = all.where(col("doc_id") < 30).localCheckpoint(true)
     hazard.forgetBatch(victims, "text", "req-preinc-1")
     val served = NgramLm.load(spark, base)
-    val ref = Files.createTempDirectory("nglm-preinc-ref").toString + "/lm"
+    val ref = tempDir("nglm-preinc-ref").toString + "/lm"
     NgramLm.fit(all.where(col("doc_id") >= 30), "text", ref)
     val refM = NgramLm.load(spark, ref)
     assert(served.vocab().orderBy("term").collect().toSeq ==
@@ -518,7 +516,7 @@ class NgramLmSpec extends SparkSpec {
     // bi negatives against the partial bi table — the brick.
     val all = graft.queries.Tables.t(spark, dir, "documents")
       .where(col("doc_id") < 200)
-    val base = Files.createTempDirectory("nglm-bipart").toString + "/lm"
+    val base = tempDir("nglm-bipart").toString + "/lm"
     NgramLm.fit(all, "text", base)
     val segDir = new java.io.File(s"$base/segments").listFiles()
       .filter(_.getName.startsWith("seg-")).head
@@ -556,7 +554,7 @@ class NgramLmSpec extends SparkSpec {
       all.where(col("doc_id") < 20).localCheckpoint(true),
       "text", "req-bipart-1")
     val served = NgramLm.load(spark, base)
-    val ref = Files.createTempDirectory("nglm-bipart-ref").toString + "/lm"
+    val ref = tempDir("nglm-bipart-ref").toString + "/lm"
     NgramLm.fit(all.where(col("doc_id") >= 20), "text", ref)
     assert(served.vocab().orderBy("term").collect().toSeq ==
       NgramLm.load(spark, ref).vocab().orderBy("term").collect().toSeq)
@@ -573,7 +571,7 @@ class NgramLmSpec extends SparkSpec {
     // post-upgrade forget.
     val docs = graft.queries.Tables.t(spark, dir, "documents")
       .where(col("doc_id") < 100)
-    val base = Files.createTempDirectory("nglm-gate").toString + "/lm"
+    val base = tempDir("nglm-gate").toString + "/lm"
     NgramLm.fit(docs, "text", base)
     val m = NgramLm.load(spark, base)
     val v1 = m.gateOrders(Set("tri"))
@@ -585,7 +583,7 @@ class NgramLmSpec extends SparkSpec {
     NgramLm.load(spark, base).forgetBatch(
       docs.where(col("doc_id") < 10).localCheckpoint(true),
       "text", "req-gate-1")
-    val ref = Files.createTempDirectory("nglm-gate-ref").toString + "/lm"
+    val ref = tempDir("nglm-gate-ref").toString + "/lm"
     NgramLm.fit(docs.where(col("doc_id") >= 10), "text", ref)
     assert(NgramLm.load(spark, base).vocab().orderBy("term")
         .collect().toSeq ==
@@ -604,7 +602,7 @@ class NgramLmSpec extends SparkSpec {
     // would silently adopt a concurrent refit mid-stream.
     val all = graft.queries.Tables.t(spark, dir, "documents")
     val oldDocs = all.where(col("doc_id") < 100)
-    val d = Files.createTempDirectory("nglm-pin").toString + "/lm"
+    val d = tempDir("nglm-pin").toString + "/lm"
     NgramLm.fit(oldDocs, "text", d)
     val pinnedM = NgramLm.loadPinned(spark, d)
     val v0 = pinnedM.vocab().orderBy("term").collect().toSeq
@@ -639,7 +637,7 @@ class NgramLmSpec extends SparkSpec {
     // SAME handle — once scoreBigrams had run, later mutations silently
     // served stale scores, breaking "append sequence == fit on union".
     val full = graft.queries.Tables.t(spark, dir, "documents")
-    val d = Files.createTempDirectory("nglm-cache").toString + "/lm"
+    val d = tempDir("nglm-cache").toString + "/lm"
     NgramLm.fit(full.where(col("doc_id") < 250), "text", d)
     val m = NgramLm.load(spark, d)
     val before = m.scoreBigrams(full, "doc_id", "text")
@@ -647,7 +645,7 @@ class NgramLmSpec extends SparkSpec {
     m.append(full.where(col("doc_id") >= 250), "text")
     val after = m.scoreBigrams(full, "doc_id", "text")
       .orderBy("doc_id").collect().toSeq
-    val ref = Files.createTempDirectory("nglm-cache2").toString + "/lm"
+    val ref = tempDir("nglm-cache2").toString + "/lm"
     NgramLm.fit(full, "text", ref)
     val fresh = NgramLm.load(spark, ref)
       .scoreBigrams(full, "doc_id", "text")
@@ -662,7 +660,7 @@ class NgramLmSpec extends SparkSpec {
     // replays it after a crash; the request-keyed form must not.
     val full = graft.queries.Tables.t(spark, dir, "documents")
     val victims = full.where(col("doc_id") < 50).localCheckpoint(true)
-    val d = Files.createTempDirectory("nglm-fgtb").toString + "/lm"
+    val d = tempDir("nglm-fgtb").toString + "/lm"
     NgramLm.fit(full, "text", d)
     val m = NgramLm.load(spark, d)
     val v1 = m.forgetBatch(victims, "text", "req-001")
@@ -675,7 +673,7 @@ class NgramLmSpec extends SparkSpec {
       .orderBy("term").collect().toSeq == once,
       "a replayed forgetBatch double-subtracted")
     // And the result equals a fit on the redacted corpus, like forget.
-    val ref = Files.createTempDirectory("nglm-fgtb2").toString + "/lm"
+    val ref = tempDir("nglm-fgtb2").toString + "/lm"
     NgramLm.fit(full.where(col("doc_id") >= 50), "text", ref)
     assert(once == NgramLm.load(spark, ref).vocab()
       .orderBy("term").collect().toSeq)
@@ -699,11 +697,11 @@ class NgramLmSpec extends SparkSpec {
     // whole store family rides).
     val inSrc = full.agg(org.apache.spark.sql.functions.min("source"))
       .head().getString(0)
-    val gHalf = Files.createTempDirectory("nglm-mlg").toString + "/lm"
+    val gHalf = tempDir("nglm-mlg").toString + "/lm"
     NgramLm.fit(full.where(col("doc_id") < 250), "text", gHalf)
     NgramLm.load(spark, gHalf)
       .append(full.where(col("doc_id") >= 250), "text")
-    val iDom = Files.createTempDirectory("nglm-mli").toString + "/lm"
+    val iDom = tempDir("nglm-mli").toString + "/lm"
     NgramLm.fit(full.where(col("source") === inSrc), "text", iDom)
     val viaAppend = NgramLm.mooreLewis(
         NgramLm.load(spark, gHalf), NgramLm.load(spark, iDom),
@@ -722,7 +720,7 @@ class NgramLmSpec extends SparkSpec {
     // ledger must survive the fold.
     val full = graft.queries.Tables.t(spark, dir, "documents")
     val victims = full.where(col("doc_id") < 50).localCheckpoint(true)
-    val d = Files.createTempDirectory("nglm-fgtc").toString + "/lm"
+    val d = tempDir("nglm-fgtc").toString + "/lm"
     NgramLm.fit(full.where(col("doc_id") < 250), "text", d)
     val m = NgramLm.load(spark, d)
     m.append(full.where(col("doc_id") >= 250), "text")
@@ -738,7 +736,7 @@ class NgramLmSpec extends SparkSpec {
       .orderBy("term").collect().toSeq == once,
       "a post-compaction forgetBatch replay double-subtracted")
     // The compacted + replayed store still equals the redacted fit.
-    val ref = Files.createTempDirectory("nglm-fgtc2").toString + "/lm"
+    val ref = tempDir("nglm-fgtc2").toString + "/lm"
     NgramLm.fit(full.where(col("doc_id") >= 50), "text", ref)
     assert(once == NgramLm.load(spark, ref).vocab()
       .orderBy("term").collect().toSeq)
@@ -747,7 +745,7 @@ class NgramLmSpec extends SparkSpec {
     val more = full.where(col("doc_id") >= 50 && col("doc_id") < 60)
       .localCheckpoint(true)
     m.forgetBatch(more, "text", "req-008")
-    val ref2 = Files.createTempDirectory("nglm-fgtc3").toString + "/lm"
+    val ref2 = tempDir("nglm-fgtc3").toString + "/lm"
     NgramLm.fit(full.where(col("doc_id") >= 60), "text", ref2)
     assert(NgramLm.load(spark, d).vocab()
         .orderBy("term").collect().toSeq ==
@@ -761,7 +759,7 @@ class NgramLmSpec extends SparkSpec {
     // checkpoint blocks (truncated lineage cannot recompute). One
     // retired generation now stays alive until a SECOND mutation.
     val full = graft.queries.Tables.t(spark, dir, "documents")
-    val d = Files.createTempDirectory("nglm-hold").toString + "/lm"
+    val d = tempDir("nglm-hold").toString + "/lm"
     NgramLm.fit(full.where(col("doc_id") < 250), "text", d)
     val m = NgramLm.load(spark, d)
     val held = m.scoreBigrams(full, "doc_id", "text")
@@ -786,7 +784,7 @@ class NgramLmSpec extends SparkSpec {
     // the KN scores must equal a from-scratch fit on the union (the
     // continuation counts are derived from the rolled bigram table, so
     // additivity carries through them too).
-    val d = Files.createTempDirectory("nglm-kn").toString + "/lm"
+    val d = tempDir("nglm-kn").toString + "/lm"
     NgramLm.fit(full.where(col("doc_id") < 250), "text", d)
     val m = NgramLm.load(spark, d)
     m.append(full.where(col("doc_id") >= 250), "text")

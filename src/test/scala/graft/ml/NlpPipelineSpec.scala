@@ -130,7 +130,7 @@ class NlpPipelineSpec extends SparkSpec {
   }
 
   test("a save/loaded model serves the same rows as its own stage fold") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-served").toString
+    val dir = tempDir("graft-served").toString
     NlpPipeline.save(model, dir)
     val loaded = NlpPipeline.load(dir)
     assertServedEqualsOracle(loaded, edges)
@@ -278,7 +278,7 @@ class NlpPipelineSpec extends SparkSpec {
   }
 
   test("save/load round-trips the whole pipeline (S3/S11)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-model").toString
+    val dir = tempDir("graft-model").toString
     // Stamped save: the fit-horizon sidecar must neither disturb the
     // ML reader nor get lost (the gov/FitHorizon audit seam — these
     // models are lossy corpus summaries with no per-store forget, so

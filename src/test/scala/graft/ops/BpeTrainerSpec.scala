@@ -64,7 +64,7 @@ class BpeTrainerSpec extends SparkSpec {
   test("train -> persist -> serve loop: loaded list identical; " +
       "replace-chain serving counts match segment on the vocabulary") {
     val (merges, _) = BpeTrainer.train(toyVocab, nMerges = 3)
-    val dir = java.nio.file.Files.createTempDirectory("bpe_model_")
+    val dir = tempDir("bpe_model_")
       .toString + "/merges"
     BpeTrainer.save(merges, dir)
     val loaded = BpeTrainer.load(spark, dir)
@@ -89,7 +89,7 @@ class BpeTrainerSpec extends SparkSpec {
 
   test("load rejects a torn merge store that lost its tail") {
     val (merges, _) = BpeTrainer.train(toyVocab, nMerges = 3)
-    val base = java.nio.file.Files.createTempDirectory("bpe_torn_").toString
+    val base = tempDir("bpe_torn_").toString
     BpeTrainer.save(merges, base + "/full")
     // Simulate a torn store: drop the LAST merge row but keep the count
     // row — max-step inference would accept this as a shorter tokenizer.

@@ -42,7 +42,7 @@ class BucketingSpec extends SparkSpec {
     * a lang- or date-partitioned corpus where per-partition queries read
     * only their slice. */
   test("partitionBy layout prunes partitions at the scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_part").toString
+    val dir = tempDir("graft_part").toString
     graft.queries.Tables.t(spark, "/root/testdata/sf0.001", "documents")
       .write.mode("overwrite").partitionBy("lang").parquet(dir)
     val scan = spark.read.parquet(dir).where($"lang" === "en")

@@ -1,6 +1,5 @@
 package graft.ops
 
-import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicBoolean
 
@@ -24,7 +23,7 @@ class CheckpointReleaseSpec extends SparkSpec {
   test("concurrent foreign checkpoints survive; neither call leaves " +
       "blocks of its own behind") {
     val sc = spark.sparkContext
-    val dir = Files.createTempDirectory("ckrel").toString + "/store"
+    val dir = tempDir("ckrel").toString + "/store"
     (0L until 3L).foreach { b =>
       MicroBatchIngest.writeBatchPartition(
         Seq(b * 10 + 1, b * 10 + 2).toDF("id"), dir, b)

@@ -16,7 +16,7 @@ import graft.SparkSpec
 class SegmentStoreSpec extends SparkSpec {
 
   private def tmpDir(prefix: String) =
-    Files.createTempDirectory(prefix).toString + "/store"
+    tempDir(prefix).toString + "/store"
 
   private def text(dir: String, name: String): String =
     new String(Files.readAllBytes(Paths.get(dir, name)), StandardCharsets.UTF_8)

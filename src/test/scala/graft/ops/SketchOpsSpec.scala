@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -21,7 +19,7 @@ class SketchOpsSpec extends SparkSpec {
 
     // Build per-(event_type) slice sketches, round-trip through parquet
     // (the persistence the incremental architecture depends on).
-    val store = Files.createTempDirectory("sketch-store").toString + "/slices"
+    val store = tempDir("sketch-store").toString + "/slices"
     SketchOps.sliceSketches(ev, "user_id", "event_type")
       .write.parquet(store)
     val slices = spark.read.parquet(store)

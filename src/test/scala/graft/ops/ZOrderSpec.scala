@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -36,7 +34,7 @@ class ZOrderSpec extends SparkSpec {
   }
 
   test("z-sorted files have materially narrower 2-D bounding boxes") {
-    val base = Files.createTempDirectory("zorder").toString
+    val base = tempDir("zorder").toString
     def write(sortCol: String, sub: String): String = {
       val out = s"$base/$sub"
       bucketed.repartitionByRange(4, col(sortCol))

@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -48,7 +46,7 @@ class KmeansModelSpec extends SparkSpec {
 
   test("incremental assign: a batch scores against frozen centroids " +
       "exactly as the corpus segment recorded it") {
-    val d = Files.createTempDirectory("graft-kmm-inc").toString
+    val d = tempDir("graft-kmm-inc").toString
     val m = new KmeansModel(spark, d)
     m.fit(corpus, "vec_id", "v", k = 4)
     val batchIds = corpus.select("vec_id").as[Long].collect().sorted.take(7).toSet
@@ -63,7 +61,7 @@ class KmeansModelSpec extends SparkSpec {
   }
 
   test("append adds a segment under the frozen codebook; standing rows untouched") {
-    val d = Files.createTempDirectory("graft-kmm-app").toString
+    val d = tempDir("graft-kmm-app").toString
     val m = new KmeansModel(spark, d)
     val v0 = m.fit(corpus, "vec_id", "v", k = 4)
     val before = m.assignments().as[(Long, Long, Long)].collect().toSet
@@ -82,7 +80,7 @@ class KmeansModelSpec extends SparkSpec {
   }
 
   test("compact merges append segments; assignments row-identical") {
-    val d = Files.createTempDirectory("graft-kmm-cpt").toString
+    val d = tempDir("graft-kmm-cpt").toString
     val m = new KmeansModel(spark, d)
     m.fit(corpus, "vec_id", "v", k = 4)
     m.append(corpus.limit(3)
@@ -97,7 +95,7 @@ class KmeansModelSpec extends SparkSpec {
   }
 
   test("refit publishes a new version; the old manifest stays readable") {
-    val d = Files.createTempDirectory("graft-kmm-refit").toString
+    val d = tempDir("graft-kmm-refit").toString
     val m = new KmeansModel(spark, d)
     val v0 = m.fit(corpus, "vec_id", "v", k = 2)
     val old = m.assignments().count()
@@ -110,7 +108,7 @@ class KmeansModelSpec extends SparkSpec {
 
   test("forget removes exactly the victims; survivors bit-unchanged; " +
       "codebook frozen") {
-    val d = Files.createTempDirectory("graft-kmm-forget").toString
+    val d = tempDir("graft-kmm-forget").toString
     val m = new KmeansModel(spark, d)
     val v0 = m.fit(corpus, "vec_id", "v", k = 4)
     val before = m.assignments().as[(Long, Long, Long)].collect().toSet
@@ -130,7 +128,7 @@ class KmeansModelSpec extends SparkSpec {
   }
 
   test("vacuum keeps the live version serving and reclaims the old one") {
-    val d = Files.createTempDirectory("graft-kmm-vac").toString
+    val d = tempDir("graft-kmm-vac").toString
     val m = new KmeansModel(spark, d)
     m.fit(corpus, "vec_id", "v", k = 2)
     m.refit(corpus, "vec_id", "v", k = 4)
@@ -149,7 +147,7 @@ class KmeansModelSpec extends SparkSpec {
   }
 
   test("two-level assignment: exact at full probes, beats random pruning under them") {
-    val d = Files.createTempDirectory("graft-kmm-2l").toString
+    val d = tempDir("graft-kmm-2l").toString
     val m = new KmeansModel(spark, d)
     val k = 9 // K2 = 3 coarse cells
     m.fit(corpus, "vec_id", "v", k)

@@ -208,8 +208,7 @@ class PlanAuditSpec extends SparkSpec {
     * and scanning the lake. Exercises the write path too. */
   test("partition-column filters prune partitions at planning time") {
     import org.apache.spark.sql.functions.col
-    val out = java.nio.file.Files
-      .createTempDirectory("graft-ppart").toString + "/events"
+    val out = tempDir("graft-ppart").toString + "/events"
     Tables.t(spark, dir, "events")
       .write.partitionBy("event_type").parquet(out)
     val all = spark.read.parquet(out)

@@ -58,26 +58,38 @@ class SessionStoreSpec extends SparkSpec {
     Tables.deleteTree(roots.head) // already gone: logged, not thrown
   }
 
+  private def scan(root: Path, forbidden: Seq[String],
+      allowed: Set[String] = Set("Tables.scala")): Seq[String] = {
+    val stream = Files.walk(root)
+    try stream.iterator.asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        !allowed(p.getFileName.toString))
+      .toSeq.flatMap { p =>
+        Files.readAllLines(p, StandardCharsets.UTF_8).asScala
+          .zipWithIndex.collect {
+            case (line, i) if forbidden.exists(line.contains(_)) =>
+              s"$p:${i + 1}: ${line.trim}"
+          }
+      }
+    finally stream.close()
+  }
+
   test("no file in graft.queries but Tables.scala makes a store dir or an " +
       "application-id key, and no file in src/main deletes a tree") {
-    def scan(root: Path, forbidden: Seq[String]): Seq[String] = {
-      val stream = Files.walk(root)
-      try stream.iterator.asScala
-        .filter(p => p.toString.endsWith(".scala") &&
-          p.getFileName.toString != "Tables.scala")
-        .toSeq.flatMap { p =>
-          Files.readAllLines(p, StandardCharsets.UTF_8).asScala
-            .zipWithIndex.collect {
-              case (line, i) if forbidden.exists(line.contains(_)) =>
-                s"$p:${i + 1}: ${line.trim}"
-            }
-        }
-      finally stream.close()
-    }
     val queries = Paths.get("src/main/scala/graft/queries")
     assert(Files.exists(queries.resolve("Tables.scala")))
     val hits = scan(queries, Seq("createTempDirectory", "applicationId")) ++
       scan(Paths.get("src/main/scala"), Seq("deleteIfExists"))
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("only Tables.tempDir makes a temp dir in src/main, and specs make " +
+      "theirs through SparkSpec.tempDir") {
+    assert(Files.exists(Paths.get("src/test/scala/graft/SparkSpec.scala")))
+    val hits = scan(Paths.get("src/main/scala"), Seq("createTempDirectory")) ++
+      // This spec's own deleteTree fixture tests deletion itself.
+      scan(Paths.get("src/test/scala"), Seq("createTempDirectory"),
+        Set("SessionStoreSpec.scala"))
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 }

@@ -1,7 +1,5 @@
 package graft.sim
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -23,7 +21,7 @@ class BqIndexSpec extends SparkSpec {
   private lazy val corpus = emb.where(col("vec_id") >= NumQueries)
 
   private def newIdx(): BqIndex =
-    new BqIndex(spark, Files.createTempDirectory("bq").toString + "/index")
+    new BqIndex(spark, tempDir("bq").toString + "/index")
 
   test("build packs every vector once; codes equal the shared rule") {
     val idx = newIdx()

@@ -27,7 +27,7 @@ class IvfIndexSpec extends SparkSpec {
     * version the resolver serves. */
   private lazy val idx: IvfIndex = {
     val i = new IvfIndex(spark,
-      Files.createTempDirectory("ivf").toString + "/index")
+      tempDir("ivf").toString + "/index")
     i.build(corpus, "vec_id", "embedding", "label")
     i
   }
@@ -63,7 +63,7 @@ class IvfIndexSpec extends SparkSpec {
     * build() publishes through ([[graft.ops.SegmentStore]]). */
   test("of two interleaved builds exactly one publishes; the loser never corrupts") {
     val raceIdx = new IvfIndex(spark,
-      Files.createTempDirectory("ivf-race").toString + "/index")
+      tempDir("ivf-race").toString + "/index")
     // Builder A wins: publishes m=0.
     assert(raceIdx.build(corpus, "vec_id", "embedding", "label") == 0L)
     val winnerManifest = java.nio.file.Files.readAllBytes(
@@ -92,7 +92,7 @@ class IvfIndexSpec extends SparkSpec {
 
   test("append under the frozen codebook equals one-shot assignment") {
     val appIdx = new IvfIndex(spark,
-      Files.createTempDirectory("ivf-append").toString + "/index")
+      tempDir("ivf-append").toString + "/index")
     val half = corpus.where(col("vec_id") % 2 === 0)
     val rest = corpus.where(col("vec_id") % 2 =!= 0)
     appIdx.build(half, "vec_id", "embedding", "label")
@@ -130,7 +130,7 @@ class IvfIndexSpec extends SparkSpec {
 
   test("forget: post-forget search == pre-forget search minus the victims") {
     val i = new IvfIndex(spark,
-      Files.createTempDirectory("ivf-forget").toString + "/index")
+      tempDir("ivf-forget").toString + "/index")
     i.build(corpus, "vec_id", "embedding", "label")
     val before = i.search(queries, "vec_id", "embedding", k = 5, probes = 3)
       .select("qid", "cid", "rnk").collect()
@@ -154,7 +154,7 @@ class IvfIndexSpec extends SparkSpec {
     // Private index: vacuum deletes files, and the shared `idx` is read
     // by later tests.
     val i = new IvfIndex(spark,
-      Files.createTempDirectory("ivf-vac").toString + "/index")
+      tempDir("ivf-vac").toString + "/index")
     i.build(corpus, "vec_id", "embedding", "label")
     val delta = corpus.limit(4)
       .select((col("vec_id") + 700000L).as("vec_id"), col("embedding"),

@@ -1,7 +1,5 @@
 package graft.sim
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions.col
 
 import graft.SparkSpec
@@ -26,7 +24,7 @@ class LexIndexSpec extends SparkSpec {
 
   private lazy val idx: LexIndex = {
     val i = new LexIndex(spark,
-      Files.createTempDirectory("lex").toString + "/index")
+      tempDir("lex").toString + "/index")
     i.build(docs, "doc_id", "text")
     i
   }
@@ -37,7 +35,7 @@ class LexIndexSpec extends SparkSpec {
 
   test("incremental appends are exact: base+delta == from-scratch build") {
     val i = new LexIndex(spark,
-      Files.createTempDirectory("lex-app").toString + "/index")
+      tempDir("lex-app").toString + "/index")
     val v0 = i.build(docs.where(col("doc_id") < 250), "doc_id", "text")
     val v1 = i.append(docs.where(col("doc_id") >= 250), "doc_id", "text")
     assert(v1 == v0 + 1 && i.liveSegments().size == 2)
@@ -48,7 +46,7 @@ class LexIndexSpec extends SparkSpec {
 
   test("compaction merges to one segment and preserves answers") {
     val i = new LexIndex(spark,
-      Files.createTempDirectory("lex-cpt").toString + "/index")
+      tempDir("lex-cpt").toString + "/index")
     i.build(docs.where(col("doc_id") < 250), "doc_id", "text")
     i.append(docs.where(col("doc_id") >= 250), "doc_id", "text")
     val before = i.search(terms, topK).collect().toSeq
@@ -60,14 +58,14 @@ class LexIndexSpec extends SparkSpec {
 
   test("forget == a from-scratch build on the redacted corpus, bit-for-bit") {
     val i = new LexIndex(spark,
-      Files.createTempDirectory("lex-fgt").toString + "/index")
+      tempDir("lex-fgt").toString + "/index")
     i.build(docs, "doc_id", "text")
     // Forget the current top hit so rankings must actually change.
     val victims = i.search(terms, 2).collect().map(_.getLong(0)).toSeq
     val v = i.forget(victims)
     assert(i.currentVersion().contains(v) && i.liveSegments().size == 1)
     val redacted = new LexIndex(spark,
-      Files.createTempDirectory("lex-fgt2").toString + "/index")
+      tempDir("lex-fgt2").toString + "/index")
     redacted.build(docs.where(!col("doc_id").isin(victims: _*)),
       "doc_id", "text")
     // BM25 statistics are fully derivable from postings, so the
@@ -82,7 +80,7 @@ class LexIndexSpec extends SparkSpec {
 
   test("compact-then-vacuum reclaims merged segments; answers unchanged") {
     val i = new LexIndex(spark,
-      Files.createTempDirectory("lex-vac").toString + "/index")
+      tempDir("lex-vac").toString + "/index")
     i.build(docs.where(col("doc_id") < 250), "doc_id", "text")
     i.append(docs.where(col("doc_id") >= 250), "doc_id", "text")
     i.compact() // v2 references one merged segment
@@ -117,7 +115,7 @@ class LexIndexSpec extends SparkSpec {
 
   test("search fails loudly when no complete version exists") {
     val empty = new LexIndex(spark,
-      Files.createTempDirectory("lex-empty").toString + "/index")
+      tempDir("lex-empty").toString + "/index")
     val e = intercept[IllegalStateException] { empty.search(terms, 5) }
     assert(e.getMessage.contains("no complete index"))
   }

@@ -1,7 +1,5 @@
 package graft.sim
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions.{col, lit}
 
 import graft.SparkSpec
@@ -19,7 +17,7 @@ class MinHashIndexSpec extends SparkSpec {
 
   private def newIdx(tag: String): MinHashIndex =
     new MinHashIndex(spark,
-      Files.createTempDirectory(s"mh-$tag").toString + "/index")
+      tempDir(s"mh-$tag").toString + "/index")
 
   /** Full-corpus index, shared by the read-only tests. */
   private lazy val idx: MinHashIndex = {

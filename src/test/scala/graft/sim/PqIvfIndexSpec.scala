@@ -1,7 +1,5 @@
 package graft.sim
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -27,7 +25,7 @@ class PqIvfIndexSpec extends SparkSpec {
 
   private def freshIndex(): PqIvfIndex = {
     val i = new PqIvfIndex(spark,
-      Files.createTempDirectory("ivfpq").toString + "/index")
+      tempDir("ivfpq").toString + "/index")
     i.build(corpus, "vec_id", "embedding", "label", m, dsub, pqK)
     i
   }

@@ -1,14 +1,12 @@
 package graft.sink
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 
 class CompactionSpec extends SparkSpec {
   import spark.implicits._
 
   test("compaction collapses a many-small-files table without changing rows") {
-    val base = Files.createTempDirectory("compaction").toString
+    val base = tempDir("compaction").toString
     val src = s"$base/src"; val dst = s"$base/dst"
     // 32 partitions of a small frame → 32 tiny files.
     (1 to 1000).toDF("n").repartition(32).write.parquet(src)
@@ -21,7 +19,7 @@ class CompactionSpec extends SparkSpec {
   }
 
   test("planned file count scales with the byte budget") {
-    val base = Files.createTempDirectory("compaction-plan").toString
+    val base = tempDir("compaction-plan").toString
     val src = s"$base/src"
     (1 to 50000).map(i => (i, s"padding-$i")).toDF("n", "s")
       .repartition(8).write.parquet(src)

@@ -1,7 +1,5 @@
 package graft.sink
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 
 /** The config-passthrough sink: the unconditional test drives the same
@@ -13,7 +11,7 @@ class FormatSinkSpec extends SparkSpec {
   import spark.implicits._
 
   test("format/options passthrough writes through a built-in connector with append semantics") {
-    val out = Files.createTempDirectory("graft-format-sink").toString + "/t"
+    val out = tempDir("graft-format-sink").toString + "/t"
     val sink = new FormatSink("parquet", Map("path" -> out))
     sink.write(Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
     sink.write(Seq((3L, "c")).toDF("id", "v")) // second batch must append

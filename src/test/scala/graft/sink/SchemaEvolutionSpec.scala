@@ -1,7 +1,5 @@
 package graft.sink
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions.col
 
 import graft.SparkSpec
@@ -14,7 +12,7 @@ class SchemaEvolutionSpec extends SparkSpec {
   import spark.implicits._
 
   test("mergeSchema read unions evolving batch schemas; old rows null-fill new columns") {
-    val dir = Files.createTempDirectory("graft-evolve").toString + "/t"
+    val dir = tempDir("graft-evolve").toString + "/t"
     Seq((1L, "alpha"), (2L, "beta")).toDF("id", "text")
       .write.mode("append").parquet(dir)
     Seq((3L, "gamma", "en")).toDF("id", "text", "lang")

@@ -1,7 +1,5 @@
 package graft.sink
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
@@ -19,7 +17,7 @@ class SourceFormatsSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   test("csv round-trip with explicit schema preserves values and nulls") {
-    val out = Files.createTempDirectory("graft-csv").toString + "/docs"
+    val out = tempDir("graft-csv").toString + "/docs"
     val src = Tables.t(spark, dir, "documents")
       .select("doc_id", "lang", "n_chars", "text")
     src.write.option("header", "true").option("escape", "\"").csv(out)
@@ -37,7 +35,7 @@ class SourceFormatsSpec extends SparkSpec {
   }
 
   test("orc round-trip pushes filters like parquet") {
-    val out = Files.createTempDirectory("graft-orc").toString + "/li"
+    val out = tempDir("graft-orc").toString + "/li"
     Tables.t(spark, dir, "lineitem")
       .select("l_orderkey", "l_linenumber", "l_quantity").write.orc(out)
     val back = spark.read.orc(out).where(col("l_quantity") > 25)
@@ -48,7 +46,7 @@ class SourceFormatsSpec extends SparkSpec {
   }
 
   test("parquet codec choice (zstd vs snappy) preserves data; both readable") {
-    val root = Files.createTempDirectory("graft-codec").toString
+    val root = tempDir("graft-codec").toString
     val src = Tables.t(spark, dir, "events").select("event_id", "value", "props")
     for (codec <- Seq("snappy", "zstd")) {
       src.write.option("compression", codec).parquet(s"$root/$codec")

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -14,7 +12,7 @@ class ParquetStatsSpec extends SparkSpec {
   import spark.implicits._
 
   private def writeLayout(sorted: Boolean): String = {
-    val dir = Files.createTempDirectory("pqstats").toString + "/t"
+    val dir = tempDir("pqstats").toString + "/t"
     val df = spark.range(10000).toDF("k")
       .withColumn("payload", concat(lit("row-"), col("k")))
     val out =
@@ -75,7 +73,7 @@ class ParquetStatsSpec extends SparkSpec {
   }
 
   test("all-null row groups count as prunable for a point probe") {
-    val dir = Files.createTempDirectory("pqstats-null").toString + "/t"
+    val dir = tempDir("pqstats-null").toString + "/t"
     // one file all-null in v, one file with values — a v=7 probe can
     // prune the null file on footer evidence (NULL never equals)
     spark.range(100).select(lit(null).cast("long").as("v")).coalesce(1)

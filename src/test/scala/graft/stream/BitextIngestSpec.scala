@@ -1,7 +1,5 @@
 package graft.stream
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -19,7 +17,7 @@ class BitextIngestSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   private def mk() = {
-    val base = Files.createTempDirectory("btx-ingest").toString
+    val base = tempDir("btx-ingest").toString
     // Target corpus: the 'fr'-predicted documents' embeddings (vec_id
     // aligns with doc_id in the testdata), indexed by label cells.
     val docs = Tables.t(spark, dir, "documents")

@@ -1,7 +1,5 @@
 package graft.stream
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -34,7 +32,7 @@ class BqIngestSpec extends SparkSpec {
       .as[(Long, Int, Long, Long)].collect().sorted.toSeq
 
   private def mk(): (BqIngest, BqIndex) = {
-    val d = Files.createTempDirectory("bq-ingest").toString + "/index"
+    val d = tempDir("bq-ingest").toString + "/index"
     val idx = new BqIndex(spark, d)
     idx.build(seed, "vec_id", "embedding", Dim)
     (new BqIngest(spark, d, "vec_id", "embedding", Dim), idx)
@@ -47,8 +45,10 @@ class BqIngestSpec extends SparkSpec {
     val v = idx.currentVersion()
     assert(ing.processBatch(delta(60, 80), 1L) == 20) // redelivery
     assert(idx.currentVersion() == v, "replay published a new manifest")
+    assert(ing.processBatch(delta(80, 80), 2L) == 0) // an empty batch
+    assert(idx.currentVersion() == v, "an empty batch published a manifest")
     val ref = new BqIndex(spark,
-      Files.createTempDirectory("bq-ref").toString + "/index")
+      tempDir("bq-ref").toString + "/index")
     ref.build(seed, "vec_id", "embedding", Dim)
     ref.append(delta(40, 80), "vec_id", "embedding", Dim)
     assert(searchOf(idx) == searchOf(ref),
@@ -69,7 +69,7 @@ class BqIngestSpec extends SparkSpec {
   }
 
   test("constructing against an unbuilt store fails loudly") {
-    val d = Files.createTempDirectory("bq-unbuilt").toString + "/index"
+    val d = tempDir("bq-unbuilt").toString + "/index"
     intercept[IllegalStateException] {
       new BqIngest(spark, d, "vec_id", "embedding", Dim)
     }
@@ -85,7 +85,7 @@ class BqIngestSpec extends SparkSpec {
     q.awaitTermination(60000)
     q.stop()
     val ref = new BqIndex(spark,
-      Files.createTempDirectory("bq-e2e-ref").toString + "/index")
+      tempDir("bq-e2e-ref").toString + "/index")
     ref.build(seed, "vec_id", "embedding", Dim)
     ref.append(delta(40, 60), "vec_id", "embedding", Dim)
     assert(searchOf(idx) == searchOf(ref))

@@ -1,7 +1,5 @@
 package graft.stream
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions.col
 
 import graft.SparkSpec
@@ -18,7 +16,7 @@ class CcnetScoreIngestSpec extends SparkSpec {
 
   /** Reference LM over common prose; cuts from its own score spread. */
   private def fitModel(): String = {
-    val d = Files.createTempDirectory("ccnet-lm").toString + "/lm"
+    val d = tempDir("ccnet-lm").toString + "/lm"
     val ref = Seq.tabulate(40)(i =>
       (i.toLong, "the quick brown fox jumps over the lazy dog again and again"))
       .toDF("doc_id", "text")
@@ -44,7 +42,7 @@ class CcnetScoreIngestSpec extends SparkSpec {
     assert(s(1L) < s(2L) && s(2L) < s(3L), s"no strict ordering: $s")
     // Cuts bracketing the three docs: 1 -> head, 2 -> middle, 3 -> tail.
     val (headMax, midMax) = (s(1L), s(2L))
-    val dir = Files.createTempDirectory("ccnet-score").toString + "/scored"
+    val dir = tempDir("ccnet-score").toString + "/scored"
     val ing = new CcnetScoreIngest(spark, "id", "text", lm, dir,
       headMax, midMax)
     assert(ing.processBatch(b, 0L) == 4)
@@ -65,7 +63,7 @@ class CcnetScoreIngestSpec extends SparkSpec {
     val lm = fitModel()
     val b = Seq((1L, inDist), (2L, gibberish)).toDF("id", "text")
     val s = scoresOf(lm, b)
-    val dir = Files.createTempDirectory("ccnet-rep").toString + "/scored"
+    val dir = tempDir("ccnet-rep").toString + "/scored"
     val ing = new CcnetScoreIngest(spark, "id", "text", lm, dir,
       s(1L), s(1L))
     assert(ing.processBatch(b, 0L) == 2)
@@ -83,13 +81,13 @@ class CcnetScoreIngestSpec extends SparkSpec {
 
   test("erasure propagates through ForgetPipeline's batchstore target") {
     val lm = fitModel()
-    val dir = Files.createTempDirectory("ccnet-fgt").toString + "/scored"
+    val dir = tempDir("ccnet-fgt").toString + "/scored"
     val ing = new CcnetScoreIngest(spark, "id", "text", lm, dir,
       100L, 200L)
     ing.processBatch(Seq((1L, inDist), (2L, mixed)).toDF("id", "text"), 0L)
     ing.processBatch(Seq((3L, gibberish), (4L, inDist)).toDF("id", "text"), 1L)
     val pipeline = new graft.gov.ForgetPipeline(spark,
-      Files.createTempDirectory("ccnet-ledger").toString + "/ledger")
+      tempDir("ccnet-ledger").toString + "/ledger")
     val victims = Seq(2L, 3L).toDF("id")
     val ledger = pipeline.executeVictims("req-ccnet-1", victims, Seq(
       "ccnet_scored" -> (v => MicroBatchIngest.forgetFromBatchStore(

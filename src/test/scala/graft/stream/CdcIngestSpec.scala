@@ -1,7 +1,5 @@
 package graft.stream
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 
@@ -11,7 +9,7 @@ class CdcIngestSpec extends SparkSpec {
   import spark.implicits._
 
   private def mkIngest() = {
-    val dir = Files.createTempDirectory("cdc-ingest").toString
+    val dir = tempDir("cdc-ingest").toString
     (new CdcIngest(spark, "k", "ts", "seq", "op", s"$dir/snap"), dir)
   }
 

@@ -1,7 +1,5 @@
 package graft.stream
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 
@@ -11,7 +9,7 @@ class DedupIngestSpec extends SparkSpec {
   import spark.implicits._
 
   private def mkIngest() = {
-    val base = Files.createTempDirectory("dedup-ingest").toString
+    val base = tempDir("dedup-ingest").toString
     (new DedupIngest(spark, "id", "text", s"$base/corpus", s"$base/index"), base)
   }
 

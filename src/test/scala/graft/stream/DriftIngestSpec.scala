@@ -1,7 +1,5 @@
 package graft.stream
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -16,7 +14,7 @@ class DriftIngestSpec extends SparkSpec {
     (0 until 5).flatMap(b => Seq.fill(4)(b * 50.0 + 1)): _*)
 
   private def mkIngest() = {
-    val dir = Files.createTempDirectory("drift-ingest").toString + "/store"
+    val dir = tempDir("drift-ingest").toString + "/store"
     (new DriftIngest(spark, "value", refFrame, dir), dir)
   }
 
@@ -116,7 +114,7 @@ class DriftIngestSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.streaming.Trigger
     val (ingest, dir) = mkIngest()
-    val ckpt = Files.createTempDirectory("drift-ckpt").toString
+    val ckpt = tempDir("drift-ckpt").toString
     val ms = MemoryStream[Double](spark, numPartitions = 2)
     def runAvailable(): Unit = {
       val q = ingest.start(ms.toDF().toDF("value"),
@@ -143,7 +141,7 @@ class DriftIngestSpec extends SparkSpec {
       assert(e.getMessage.contains("unsafe compaction horizon"))
     }
     // An empty/absent commits ledger proves nothing → refuse everything.
-    val fresh = Files.createTempDirectory("drift-ckpt-empty").toString
+    val fresh = tempDir("drift-ckpt-empty").toString
     assert(intercept[IllegalArgumentException] {
       MicroBatchIngest.compactBatches(spark, dir, 0L, Some(fresh))
     }.getMessage.contains("no committed batches"))

@@ -1,7 +1,5 @@
 package graft.stream
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 import graft.sink.MemorySink
 
@@ -14,7 +12,7 @@ class EpochLedgerSpec extends SparkSpec {
   import spark.implicits._
 
   test("a committed batch id is skipped on replay, also across engine restarts") {
-    val ledger = Files.createTempDirectory("graft-ledger").toString
+    val ledger = tempDir("graft-ledger").toString
     val sink = new MemorySink
     def engine(s: MemorySink) = new StreamEngine(
       transform = identity, primary = s, fallback = new MemorySink,
@@ -45,7 +43,7 @@ class EpochLedgerSpec extends SparkSpec {
     * newest `ledgerKeep` markers survive — and the skip guarantee holds
     * for every retained epoch. */
   test("ledger prunes markers beyond the keep-window; retained epochs still skip") {
-    val ledger = Files.createTempDirectory("graft-ledger-prune").toString
+    val ledger = tempDir("graft-ledger-prune").toString
     val sink = new MemorySink
     val e = new StreamEngine(identity, sink, new MemorySink,
       epochLedger = Some(ledger), ledgerKeep = 2)

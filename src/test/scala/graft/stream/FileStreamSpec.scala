@@ -1,7 +1,5 @@
 package graft.stream
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -15,7 +13,7 @@ class FileStreamSpec extends SparkSpec {
   import spark.implicits._
 
   test("events stream lands in the parquet sink with the sink projection") {
-    val root = Files.createTempDirectory("graft-stream").toString
+    val root = tempDir("graft-stream").toString
     val srcDir = s"$root/src"; val outDir = s"$root/out"; val ckpt = s"$root/ckpt"
 
     val events = graft.queries.Tables.t(spark, "/root/testdata/sf0.001", "events")
@@ -49,7 +47,7 @@ class FileStreamSpec extends SparkSpec {
   }
 
   test("failed primary diverts batches to the JSON-lines fallback (S5/S8)") {
-    val root = Files.createTempDirectory("graft-fallback").toString
+    val root = tempDir("graft-fallback").toString
     val srcDir = s"$root/src"; val fbDir = s"$root/fallback"
 
     graft.queries.Tables.t(spark, "/root/testdata/sf0.001", "events")

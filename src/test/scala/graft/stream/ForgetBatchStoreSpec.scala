@@ -21,7 +21,7 @@ class ForgetBatchStoreSpec extends SparkSpec {
     .withColumn("payload", concat(lit("p"), col("id")))
 
   private def mkStore(): (String, String) = {
-    val dir = Files.createTempDirectory("fbs").toString + "/store"
+    val dir = tempDir("fbs").toString + "/store"
     // Four batches; 0 and 1 will consolidate, 2 is committed, 3 is the
     // in-flight (uncommitted, still redeliverable) trigger.
     MicroBatchIngest.writeBatchPartition(rows(1, 2), dir, 0L)
@@ -32,7 +32,7 @@ class ForgetBatchStoreSpec extends SparkSpec {
     // A commits ledger in Structured Streaming's layout (plain-integer
     // file names under commits/; the engine writes one per completed
     // batch) — committed through batch 2.
-    val ckpt = Files.createTempDirectory("fbs-ckpt").toString
+    val ckpt = tempDir("fbs-ckpt").toString
     val commits = java.nio.file.Paths.get(ckpt, "commits")
     java.nio.file.Files.createDirectories(commits)
     Seq("0", "1", "2").foreach(n =>
@@ -41,8 +41,7 @@ class ForgetBatchStoreSpec extends SparkSpec {
   }
 
   private def ids(dir: String): Set[Long] =
-    MicroBatchIngest.storeOrElse(spark, dir,
-        spark.emptyDataFrame)
+    MicroBatchIngest.readStore(spark, dir, rows().schema)
       .select("id").as[Long].collect().toSet
 
   test("victims drop from the segment and committed partitions; " +
@@ -76,7 +75,7 @@ class ForgetBatchStoreSpec extends SparkSpec {
 
   test("a partition emptied by erasure is deleted whole; non-streaming " +
       "stores erase every partition") {
-    val dir = Files.createTempDirectory("fbs2").toString + "/store"
+    val dir = tempDir("fbs2").toString + "/store"
     MicroBatchIngest.writeBatchPartition(rows(10, 11), dir, 0L)
     MicroBatchIngest.writeBatchPartition(rows(12), dir, 1L)
     // checkpointLocation = None: the caller owns the horizon (batch
@@ -92,10 +91,10 @@ class ForgetBatchStoreSpec extends SparkSpec {
   }
 
   test("wired as a ForgetPipeline target alongside the index stores") {
-    val dir = Files.createTempDirectory("fbs3").toString + "/store"
+    val dir = tempDir("fbs3").toString + "/store"
     MicroBatchIngest.writeBatchPartition(rows(20, 21, 22), dir, 0L)
     val fp = new graft.gov.ForgetPipeline(spark,
-      Files.createTempDirectory("fbs3-led").toString + "/ledger")
+      tempDir("fbs3-led").toString + "/ledger")
     fp.execute("req-fbs", Seq(21L), Seq(
       "pairs" -> (ids => {
         MicroBatchIngest.forgetFromBatchStore(spark, dir,

@@ -1,7 +1,5 @@
 package graft.stream
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -25,7 +23,7 @@ class ForgetReplaySpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
   private def tmp(prefix: String) =
-    Files.createTempDirectory(prefix).toString
+    tempDir(prefix).toString
 
   test("MinHash: forget between triggers, then redeliver batch 0 — " +
       "victims stay gone, no re-publish") {

@@ -1,7 +1,5 @@
 package graft.stream
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
@@ -25,7 +23,7 @@ class IngestPipelineSpec extends SparkSpec {
       "join order batch batch batch stream spark window window"
 
   test("exact -> quality -> near-dup: each stage catches its own class") {
-    val base = Files.createTempDirectory("ingest-stack").toString
+    val base = tempDir("ingest-stack").toString
     // Reference LM learns the in-distribution vocabulary (incl. the
     // near-dup pair's words, so the gate passes them to the LSH stage).
     val lmDir = s"$base/lm"

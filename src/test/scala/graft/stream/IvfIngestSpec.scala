@@ -1,7 +1,5 @@
 package graft.stream
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -35,7 +33,7 @@ class IvfIngestSpec extends SparkSpec {
       .collect().sorted.toSeq
 
   private def mk(): (IvfIngest, IvfIndex) = {
-    val d = Files.createTempDirectory("ivf-ingest").toString + "/index"
+    val d = tempDir("ivf-ingest").toString + "/index"
     val idx = new IvfIndex(spark, d)
     idx.build(seed, "vec_id", "embedding", "label")
     (new IvfIngest(spark, d, "vec_id", "embedding"), idx)
@@ -48,11 +46,13 @@ class IvfIngestSpec extends SparkSpec {
     val v = idx.currentVersion()
     assert(ing.processBatch(delta(60, 80), 1L) == 20) // redelivery
     assert(idx.currentVersion() == v, "replay published a new manifest")
+    assert(ing.processBatch(delta(80, 80), 2L) == 0) // an empty batch
+    assert(idx.currentVersion() == v, "an empty batch published a manifest")
     // Oracle: the already-spec'd BATCH append path over the union delta,
     // against an index built from the same seed (same label-seeded
     // codebook training → same centroids → comparable cells).
     val refIdx = new IvfIndex(spark,
-      Files.createTempDirectory("ivf-ref").toString + "/index")
+      tempDir("ivf-ref").toString + "/index")
     refIdx.build(seed, "vec_id", "embedding", "label")
     refIdx.append(delta(40, 80), "vec_id", "embedding")
     assert(searchOf(idx) == searchOf(refIdx),
@@ -78,7 +78,7 @@ class IvfIngestSpec extends SparkSpec {
   }
 
   test("constructing against an unbuilt index fails loudly") {
-    val d = Files.createTempDirectory("ivf-unbuilt").toString + "/index"
+    val d = tempDir("ivf-unbuilt").toString + "/index"
     intercept[IllegalStateException] {
       new IvfIngest(spark, d, "vec_id", "embedding")
     }
@@ -95,7 +95,7 @@ class IvfIngestSpec extends SparkSpec {
     q.awaitTermination(60000)
     q.stop()
     val refIdx = new IvfIndex(spark,
-      Files.createTempDirectory("ivf-e2e-ref").toString + "/index")
+      tempDir("ivf-e2e-ref").toString + "/index")
     refIdx.build(seed, "vec_id", "embedding", "label")
     refIdx.append(delta(40, 60), "vec_id", "embedding")
     assert(searchOf(idx) == searchOf(refIdx))

@@ -1,7 +1,5 @@
 package graft.stream
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -42,7 +40,7 @@ class KafkaLiveSpec extends SparkSpec {
 
     // Consume through the reference-knobbed source (earliest offsets,
     // bounded per trigger, failOnDataLoss=false) and the shared decode.
-    val out = Files.createTempDirectory("graft-kafka-live")
+    val out = tempDir("graft-kafka-live")
     val q = StreamEngine
       .decodeEnvelope(
         StreamEngine.kafkaSource(spark, servers, topic, maxOffsetsPerTrigger = 50),

@@ -1,7 +1,5 @@
 package graft.stream
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -18,17 +16,20 @@ class KmeansIngestSpec extends SparkSpec {
       expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("embedding"))
 
   private def mkIngest() = {
-    val mdir = Files.createTempDirectory("kmi-model").toString
+    val mdir = tempDir("kmi-model").toString
     new KmeansModel(spark, mdir).fit(corpus, "vec_id", "embedding", k = 4)
-    val sdir = Files.createTempDirectory("kmi-store").toString + "/store"
+    val sdir = tempDir("kmi-store").toString + "/store"
     (new KmeansIngest(spark, mdir, "vec_id", "embedding", sdir), mdir, sdir)
   }
 
   test("streamed batches assign exactly as the frozen model would") {
-    val (ingest, mdir, _) = mkIngest()
+    val (ingest, mdir, sdir) = mkIngest()
     val batch = corpus.limit(6)
       .select((col("vec_id") + 500000L).as("vec_id"), col("embedding"))
     assert(ingest.processBatch(batch, 0L) == 6L)
+    assert(ingest.processBatch(batch.limit(0), 1L) == 0L) // an empty batch
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(sdir, "batch_id=1")),
+      "an empty batch wrote a partition")
     val streamed = ingest.store().select("id", "cid", "d2_ppm")
       .as[(Long, Long, Long)].collect().toSet
     val direct = new KmeansModel(spark, mdir)
@@ -54,7 +55,7 @@ class KmeansIngestSpec extends SparkSpec {
   test("construction pins a version and fails loudly with no fitted model") {
     val (ingest, _, _) = mkIngest()
     assert(ingest.servedVersion == 0L)
-    val empty = Files.createTempDirectory("kmi-none").toString
+    val empty = tempDir("kmi-none").toString
     intercept[IllegalStateException] {
       new KmeansIngest(spark, empty, "vec_id", "embedding", empty + "/s")
     }
@@ -82,7 +83,7 @@ class KmeansIngestSpec extends SparkSpec {
     // Hot mode over the same store dirs: a NEW ingest with hotReload
     // adopts version 1 at its first trigger; assignments match the
     // version-1 codebook (K=2 -> every cid < 2).
-    val sdir2 = Files.createTempDirectory("kmi-store2").toString + "/store"
+    val sdir2 = tempDir("kmi-store2").toString + "/store"
     val hot = new KmeansIngest(spark, mdir, "vec_id", "embedding", sdir2,
       hotReload = true)
     assert(hot.servedVersion == 1L, "hot ingest must resolve the live version")

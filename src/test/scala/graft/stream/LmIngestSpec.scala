@@ -1,6 +1,6 @@
 package graft.stream
 
-import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
@@ -12,7 +12,7 @@ class LmIngestSpec extends SparkSpec {
   import spark.implicits._
 
   private def mk() = {
-    val d = Files.createTempDirectory("lm-ingest").toString + "/lm"
+    val d = tempDir("lm-ingest").toString + "/lm"
     (new LmIngest(spark, "text", d), d)
   }
 
@@ -22,15 +22,25 @@ class LmIngestSpec extends SparkSpec {
     .score(valDocs.toDF("doc_id", "text"), "doc_id", "text")
     .orderBy("doc_id").collect().toSeq
 
+  private def storeFiles(d: String): Seq[String] = {
+    val s = java.nio.file.Files.walk(java.nio.file.Paths.get(d))
+    try s.iterator().asScala.map(_.toString).toSeq.sorted finally s.close()
+  }
+
   test("N ingested batches == one fit on everything, exactly") {
     val (ing, d) = mk()
     val b0 = Seq((1L, "alpha beta alpha"), (2L, "gamma delta"))
       .toDF("id", "text")
     val b1 = Seq((3L, "alpha epsilon zeta"), (4L, "beta beta"))
       .toDF("id", "text")
+    assert(ing.processBatch(b0.limit(0), 0L) == 0) // an empty first batch
+    assert(!NgramLm.storeExists(spark, d), "an empty first batch made a store")
     assert(ing.processBatch(b0, 0L) == 2)
     assert(ing.processBatch(b1, 1L) == 2)
-    val oneShot = Files.createTempDirectory("lm-oneshot").toString + "/lm"
+    val files = storeFiles(d)
+    assert(ing.processBatch(b0.limit(0), 2L) == 0) // an empty later batch
+    assert(storeFiles(d) == files, "an empty batch changed the store")
+    val oneShot = tempDir("lm-oneshot").toString + "/lm"
     NgramLm.fit(b0.unionByName(b1), "text", oneShot)
     assert(NgramLm.load(spark, d).vocab().orderBy("term").collect().toSeq ==
       NgramLm.load(spark, oneShot).vocab().orderBy("term").collect().toSeq)

@@ -1,7 +1,5 @@
 package graft.stream
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 
@@ -23,7 +21,7 @@ class MinHashIngestSpec extends SparkSpec {
       "join order batch batch batch stream spark window window"
 
   private def mk() = {
-    val base = Files.createTempDirectory("mh-ingest").toString
+    val base = tempDir("mh-ingest").toString
     (new MinHashIngest(spark, "id", "text", s"$base/corpus", s"$base/index"),
       base)
   }
@@ -187,7 +185,7 @@ class MinHashIngestSpec extends SparkSpec {
     // identity, incl. shingle-free docs) runs first; its survivors feed
     // the near screen. Cross-batch shingle-free exact dups are
     // MinHashIngest's blind spot; near-dups are DedupIngest's.
-    val base = Files.createTempDirectory("mh-compose").toString
+    val base = tempDir("mh-compose").toString
     val exact = new DedupIngest(spark, "id", "text",
       s"$base/exact-corpus", s"$base/fp-index")
     val near = new MinHashIngest(spark, "id", "text",

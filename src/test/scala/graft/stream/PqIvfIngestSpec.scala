@@ -1,7 +1,5 @@
 package graft.stream
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -36,7 +34,7 @@ class PqIvfIngestSpec extends SparkSpec {
       .collect().sorted.toSeq
 
   private def mk(): (PqIvfIngest, PqIvfIndex) = {
-    val d = Files.createTempDirectory("ivfpq-ingest").toString + "/index"
+    val d = tempDir("ivfpq-ingest").toString + "/index"
     val idx = new PqIvfIndex(spark, d)
     idx.build(seed, "vec_id", "embedding", "label", 8, 8, 16)
     (new PqIvfIngest(spark, d, "vec_id", "embedding"), idx)
@@ -49,8 +47,10 @@ class PqIvfIngestSpec extends SparkSpec {
     val v = idx.currentVersion()
     assert(ing.processBatch(delta(60, 80), 1L) == 20) // redelivery
     assert(idx.currentVersion() == v, "replay published a new manifest")
+    assert(ing.processBatch(delta(80, 80), 2L) == 0) // an empty batch
+    assert(idx.currentVersion() == v, "an empty batch published a manifest")
     val refIdx = new PqIvfIndex(spark,
-      Files.createTempDirectory("ivfpq-ref").toString + "/index")
+      tempDir("ivfpq-ref").toString + "/index")
     refIdx.build(seed, "vec_id", "embedding", "label", 8, 8, 16)
     refIdx.append(delta(40, 80), "vec_id", "embedding")
     assert(searchOf(idx) == searchOf(refIdx),
@@ -79,7 +79,7 @@ class PqIvfIngestSpec extends SparkSpec {
     q.awaitTermination(60000)
     q.stop()
     val refIdx = new PqIvfIndex(spark,
-      Files.createTempDirectory("ivfpq-e2e-ref").toString + "/index")
+      tempDir("ivfpq-e2e-ref").toString + "/index")
     refIdx.build(seed, "vec_id", "embedding", "label", 8, 8, 16)
     refIdx.append(delta(40, 60), "vec_id", "embedding")
     assert(searchOf(idx) == searchOf(refIdx))

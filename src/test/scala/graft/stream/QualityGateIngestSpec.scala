@@ -1,7 +1,5 @@
 package graft.stream
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.Trigger
@@ -15,7 +13,7 @@ class QualityGateIngestSpec extends SparkSpec {
   /** Reference corpus: common prose the LM learns; scored batches then
     * separate in-distribution text from gibberish. */
   private def fitModel(): String = {
-    val d = Files.createTempDirectory("qgate-lm").toString + "/lm"
+    val d = tempDir("qgate-lm").toString + "/lm"
     val ref = Seq.tabulate(40)(i =>
       (i.toLong, "the quick brown fox jumps over the lazy dog again and again"))
       .toDF("doc_id", "text")
@@ -38,7 +36,7 @@ class QualityGateIngestSpec extends SparkSpec {
     val s = scoresOf(lm, b.where(col("text") =!= ""))
     assert(s(1L) < s(2L), s"LM did not separate: $s") // in-dist < gibberish
     val thr = (s(1L) + s(2L)) / 2
-    val base = Files.createTempDirectory("qgate").toString
+    val base = tempDir("qgate").toString
     val ing = new QualityGateIngest(spark, "id", "text", lm,
       s"$base/corpus", s"$base/audit", thr)
     assert(ing.processBatch(b, 0L) == 1)
@@ -63,7 +61,7 @@ class QualityGateIngestSpec extends SparkSpec {
     val lm = fitModel()
     val b = Seq((1L, inDist), (2L, gibberish)).toDF("id", "text")
     val s = scoresOf(lm, b)
-    val base = Files.createTempDirectory("qgate-rep").toString
+    val base = tempDir("qgate-rep").toString
     val ing = new QualityGateIngest(spark, "id", "text", lm,
       s"$base/corpus", s"$base/audit", (s(1L) + s(2L)) / 2)
     assert(ing.processBatch(b, 0L) == 1)
@@ -81,7 +79,7 @@ class QualityGateIngestSpec extends SparkSpec {
     val s = scoresOf(lm, b)
     assert(s(1L) < s(2L) && s(2L) < s(3L), s"no strict ordering: $s")
     val thr = (s(1L) + s(2L)) / 2 // keeps exactly doc 1
-    val base = Files.createTempDirectory("qgate-thr").toString
+    val base = tempDir("qgate-thr").toString
     val ing = new QualityGateIngest(spark, "id", "text", lm,
       s"$base/corpus", s"$base/audit", thr)
     ing.processBatch(b, 0L)
@@ -94,7 +92,7 @@ class QualityGateIngestSpec extends SparkSpec {
     // Reference: one dominant transition chain + one rare permutation.
     // The two scored docs are UNIGRAM-IDENTICAL (same token multiset),
     // so the order-1 gate cannot separate them; the bigram leg must.
-    val d = Files.createTempDirectory("qgate-bi-lm").toString + "/lm"
+    val d = tempDir("qgate-bi-lm").toString + "/lm"
     val ref = (Seq.tabulate(40)(i => (i.toLong, "alpha beta gamma delta")) :+
       (99L, "alpha delta gamma beta")).toDF("doc_id", "text")
     NgramLm.fit(ref, "text", d)
@@ -108,7 +106,7 @@ class QualityGateIngestSpec extends SparkSpec {
     val bg = m.scoreBigrams(b, "id", "text")
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(bg(1L) < bg(2L), s"bigram LM did not separate: $bg")
-    val base = Files.createTempDirectory("qgate-bi").toString
+    val base = tempDir("qgate-bi").toString
     val ing = new QualityGateIngest(spark, "id", "text", d,
       s"$base/corpus", s"$base/audit", maxMb = Long.MaxValue,
       maxBigramMb = Some((bg(1L) + bg(2L)) / 2))
@@ -139,7 +137,7 @@ class QualityGateIngestSpec extends SparkSpec {
       .filter(f => f.getName.startsWith("part-") && f.length() > 0)
     assert(parts.length == 2)
     assert(parts.head.delete())
-    val base = Files.createTempDirectory("qgate-torn").toString
+    val base = tempDir("qgate-torn").toString
     val e = intercept[IllegalArgumentException] {
       new QualityGateIngest(spark, "id", "text", lm,
         s"$base/corpus", s"$base/audit", 2000L)
@@ -151,7 +149,7 @@ class QualityGateIngestSpec extends SparkSpec {
     val lm = fitModel()
     val probe = Seq((1L, inDist), (2L, gibberish)).toDF("id", "text")
     val s = scoresOf(lm, probe)
-    val base = Files.createTempDirectory("qgate-e2e").toString
+    val base = tempDir("qgate-e2e").toString
     val ing = new QualityGateIngest(spark, "id", "text", lm,
       s"$base/corpus", s"$base/audit", (s(1L) + s(2L)) / 2)
     val ms = MemoryStream[(Long, String)](spark, numPartitions = 2)

@@ -1,7 +1,5 @@
 package graft.stream
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -16,7 +14,7 @@ class SemanticDriftIngestSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
-  private def tmp(p: String) = Files.createTempDirectory(p).toString + "/x"
+  private def tmp(p: String) = tempDir(p).toString + "/x"
 
   private lazy val emb = Tables.t(spark, dir, "embeddings")
     .select(col("vec_id"),
@@ -75,14 +73,17 @@ class SemanticDriftIngestSpec extends SparkSpec {
     val model = new graft.sim.KmeansModel(spark, mdir)
     model.fit(emb, "vec_id", "v", k = 4, rounds = 2)
     val ref = emb.where(col("vec_id") % 2 === 0)
-    val ingest = new SemanticDriftIngest(spark, mdir, "vec_id", "v",
-      ref, tmp("semdrift_store2"))
+    val sdir = tmp("semdrift_store2")
+    val ingest = new SemanticDriftIngest(spark, mdir, "vec_id", "v", ref, sdir)
     assert(ingest.processBatch(emb.where(lit(false)), 0L) == 0L)
     assert(ingest.store().isEmpty)
     // Ingesting the reference slice itself: every cell's occupancy
     // ratio matches, so the smoothed PSI is ~0 (exactly 0 per cell —
     // identical counts make the log term ln(1) = 0).
     ingest.processBatch(ref, 1L)
+    assert(ingest.processBatch(emb.where(lit(false)), 2L) == 0L)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(sdir, "batch_id=2")),
+      "an empty batch after data wrote a partition")
     val rep = ingest.report().collect()
     assert(rep.nonEmpty)
     rep.foreach(r => assert(r.getLong(1) == r.getLong(2) &&

@@ -1,7 +1,5 @@
 package graft.stream
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -13,7 +11,7 @@ class SketchIngestSpec extends SparkSpec {
   import spark.implicits._
 
   private def mkIngest() = {
-    val dir = Files.createTempDirectory("sketch-ingest").toString + "/store"
+    val dir = tempDir("sketch-ingest").toString + "/store"
     (new SketchIngest(spark, "day", "user_id", "score", dir), dir)
   }
 
@@ -112,7 +110,7 @@ class SketchIngestSpec extends SparkSpec {
   }
 
   test("empty-store schema matches the post-data schema for non-Long slices") {
-    val dir = Files.createTempDirectory("sketch-ingest-str").toString + "/store"
+    val dir = tempDir("sketch-ingest-str").toString + "/store"
     val ingest = new SketchIngest(spark, "src", "user_id", "score", dir,
       sliceType = org.apache.spark.sql.types.StringType)
     val pre = ingest.store().schema

@@ -55,7 +55,7 @@ class StreamEngineSpec extends SparkSpec {
   }
 
   test("an empty micro-batch reaches neither onBatch nor a sink; the ledger still marks it") {
-    val ledger = java.nio.file.Files.createTempDirectory("graft-empty-ledger").toString
+    val ledger = tempDir("graft-empty-ledger").toString
     val (primary, fallback) = (new MemorySink, new MemorySink)
     var calls = 0
     val engine = new StreamEngine(

@@ -13,7 +13,7 @@ class TrendingTopKSpec extends SparkSpec {
   private val W2 = ts("2024-01-01 01:00:00").getTime / 1000
 
   test("merge keeps full counts across micro-batches; gold is per-window top-K") {
-    val dir = java.nio.file.Files.createTempDirectory("trend").toString
+    val dir = tempDir("trend").toString
     val ttk = new TrendingTopK("user", k = 2,
       silverDir = s"$dir/silver", goldDir = s"$dir/gold",
       trigger = Trigger.ProcessingTime(0))
@@ -49,7 +49,7 @@ class TrendingTopKSpec extends SparkSpec {
   }
 
   test("runs on a value-less stream (counts need nothing but ts and key)") {
-    val dir = java.nio.file.Files.createTempDirectory("trend-novalue").toString
+    val dir = tempDir("trend-novalue").toString
     val ttk = new TrendingTopK("topic", k = 1,
       silverDir = s"$dir/silver", goldDir = s"$dir/gold",
       trigger = Trigger.ProcessingTime(0))
@@ -67,14 +67,14 @@ class TrendingTopKSpec extends SparkSpec {
   }
 
   test("replayed micro-batch is idempotent: replace-merge, not delta-add") {
-    val dir = java.nio.file.Files.createTempDirectory("trend-replay").toString
+    val dir = tempDir("trend-replay").toString
     val ttk = new TrendingTopK("user", k = 3,
       silverDir = s"$dir/silver", goldDir = s"$dir/gold")
-    // Drive mergeBatch directly with the same full-count update twice —
+    // Drive processBatch directly with the same full-count update twice —
     // what a restarted query re-delivers under at-least-once.
     val updates = Seq((W1, "a", 3L), (W1, "b", 2L)).toDF("ws", "user", "n")
-    ttk.mergeBatch(updates)
-    ttk.mergeBatch(updates)
+    ttk.processBatch(updates, 0L)
+    ttk.processBatch(updates, 0L)
     val g = ttk.gold(spark).as[(Long, String, Long)].collect().toSet
     assert(g == Set((W1, "a", 3L), (W1, "b", 2L)))
   }

@@ -1,7 +1,5 @@
 package graft.stream
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -16,7 +14,7 @@ class WinnowIngestSpec extends SparkSpec {
   private val run = "kestrel quartz velvet marmot oboe zephyr tundra cobalt"
 
   private def mkIngest() = {
-    val base = Files.createTempDirectory("winnow-ingest").toString
+    val base = tempDir("winnow-ingest").toString
     (new WinnowIngest(spark, "id", "text", s"$base/index", s"$base/flags"), base)
   }
 
